@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -93,24 +91,4 @@ case class VectorDot(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): VectorDot =
     copy(left = newLeft, right = newRight)
-}
-
-object GraftFunctions {
-  /** Idempotently register graft's native functions on a session (the
-    * programmatic path; spark.sql.extensions=graft.plans.GraftExtensions is
-    * the config path). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("vector_dot"),
-      new ExpressionInfo(classOf[VectorDot].getName, "vector_dot"),
-      (children: Seq[Expression]) => VectorDot(children(0), children(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("morton_interleave"),
-      new ExpressionInfo(classOf[MortonInterleave].getName, "morton_interleave"),
-      (children: Seq[Expression]) => MortonInterleave(children(0), children(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("hamming_str"),
-      new ExpressionInfo(classOf[HammingStr].getName, "hamming_str"),
-      (children: Seq[Expression]) => HammingStr(children(0), children(1)))
-  }
 }

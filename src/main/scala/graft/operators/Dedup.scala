@@ -464,7 +464,6 @@ object Dedup {
     // native codegen scorer on the candidate hot path (HammingStr) —
     // the portable HOF form (aggregate over 64 substring pairs) is
     // interpreted and allocates two strings per position per pair
-    graft.functions.GraftFunctions.register(shingleSet.sparkSession)
     cand
       .withColumn("hamming", expr("hamming_str(ha, hb)"))
       .filter(col("hamming") <= lit(maxHamming))
@@ -506,14 +505,12 @@ object Dedup {
     * corpus's max pairwise cosine is ~0.48; a 0.95 threshold would be
     * trivially empty). */
   def embedCosine(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     embedCosineOn(
       embeddings(spark, dir).repartition(spark.sparkContext.defaultParallelism),
       0.4).orderBy("va", "vb")
   }
 
-  /** Generic form over any (vec_id, embedding ARRAY<FLOAT>) corpus; callers
-    * must have vector_dot registered (GraftFunctions.register). */
+  /** Generic form over any (vec_id, embedding ARRAY<FLOAT>) corpus. */
   def embedCosineOn(vectors: DataFrame, threshold: Double): DataFrame = {
     val e = vectors
       .select(col("vec_id"), col("embedding"),

@@ -61,8 +61,7 @@ object Similarity {
     * lambda frames/row — what matters at 100x corpus). A fully unrolled
     * 512-term expression remains ~8x slower (r1): expression COMPILATION
     * dominates; vector_dot compiles one loop per plane instead.
-    * Callers must have vector_dot registered (GraftFunctions.register —
-    * every current call site does). */
+    * vector_dot comes from GraftExtensions, installed by GraftSession. */
   def bucket(v: String): Column = {
     val parts = (0 until HyperplaneBits).map { h =>
       val w = (0 until Dim).map(i => s"${weight(h, i)}D").mkString("array(", ", ", ")")
@@ -91,7 +90,6 @@ object Similarity {
       s"|| (CASE WHEN $v[3] > 0 THEN '1' ELSE '0' END) || (CASE WHEN $v[4] > 0 THEN '1' ELSE '0' END)"
 
   private def corpus(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     embeddings(spark, dir)
       // single-file table => one input partition; fan out before per-row folds
       .repartition(spark.sparkContext.defaultParallelism)
@@ -770,7 +768,6 @@ object Similarity {
     * one groupBy over |corpus| x |labels| x dims partial products with
     * map-side combine; the scan side never self-joins. */
   def pq(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e0 = embeddings(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
       .select(col("vec_id"), col("label"), col("embedding"), norm("embedding").as("nrm"))
@@ -1386,7 +1383,6 @@ object Similarity {
     * (zoneMapIndex/bloomIndex read-side machinery); here the queries are
     * a bounded broadcast and the corpus pass stays one scan. */
   def filtered(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val c = embeddings(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
       .select(col("vec_id"), col("embedding"), norm("embedding").as("nrm"), col("label"))
@@ -1431,7 +1427,6 @@ object Similarity {
     * the bounded query set; fusion is a full-outer join of two
     * <= 20-row-per-query lists — negligible. */
   def hybrid(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import graft.sources.Tables
     val words = Tables.documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
@@ -1843,7 +1838,6 @@ object Similarity {
     * image side, one corpus scan), ranked per query — at scale the scan
     * side composes with the IVF tiers exactly like ann_recall does. */
   def mmAlign(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = embeddings(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
       .select(col("vec_id"), col("embedding"), col("label").cast("long").as("label"),

@@ -154,17 +154,11 @@ case class AsofJoinExec(
 object AsofJoinNative {
   /** Same contract as AsofJoin.asofOn: left carries (keyCol, timeCol),
     * right carries (keyCol, timeCol, attrs); returns left rows + asof_time
-    * + asof_<attr> columns. Registers the planner strategy on first use
-    * (GraftExtensions also injects it for extensions-configured sessions). */
+    * + asof_<attr> columns. Planned by AsofJoinStrategy, which
+    * GraftExtensions installs on every GraftSession. */
   def asof(left: DataFrame, right: DataFrame, keyCol: String, timeCol: String,
       rightAttrs: Seq[String]): DataFrame = {
     val spark = left.sparkSession
-    // synchronized: a racy check-then-append from two threads could lose
-    // one side's registration (strategies is a plain var on the session)
-    AsofJoinNative.synchronized {
-      if (!spark.experimental.extraStrategies.contains(AsofJoinStrategy))
-        spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ AsofJoinStrategy
-    }
     // re-alias every right column: fresh exprIds keep the two sides
     // disjoint even when both derive from the same scan (self-join shape)
     val rightPrep = right.select((Seq(keyCol, timeCol) ++ rightAttrs).map(c => col(c).as(c)): _*)

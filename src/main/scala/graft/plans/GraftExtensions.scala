@@ -5,13 +5,11 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{HammingStr, MortonInterleave, VectorDot}
 
-/** SparkSessionExtensions entry point: enable with
-  * `spark.sql.extensions=graft.plans.GraftExtensions`.
+/** SparkSessionExtensions entry point, installed on every session by
+  * GraftSession.builder (`spark.sql.extensions=graft.plans.GraftExtensions`).
   *
-  * Injects graft's native expressions into every session built with the
-  * config — the deployment path a cluster would use (the specs and query
-  * builders also register programmatically via GraftFunctions.register so
-  * a plain session works too).
+  * Injects graft's native expressions and planner strategies at session
+  * creation; sessions derived with newSession() inherit them.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -27,7 +25,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("hamming_str"),
       new ExpressionInfo(classOf[HammingStr].getName, "hamming_str"),
       (children: Seq[Expression]) => HammingStr(children(0), children(1))))
-    ext.injectOptimizerRule(_ => NativeDotRule)
     ext.injectPlannerStrategy(_ => AsofJoinStrategy)
     ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
   }

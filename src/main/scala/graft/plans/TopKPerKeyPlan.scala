@@ -203,10 +203,6 @@ object TopKPerKeyNative {
     * be BIGINT and `tieCol` unique per key for deterministic output. */
   def topK(df: DataFrame, keyCol: String, ordCol: String, tieCol: String, k: Int): DataFrame = {
     val spark = df.sparkSession
-    TopKPerKeyNative.synchronized {
-      if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
-        spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-    }
     require(k > 0, s"k must be positive, got $k")
     val plan = df.queryExecution.analyzed
     // fail fast on the LongType precondition: the strategy silently

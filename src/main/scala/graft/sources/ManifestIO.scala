@@ -330,7 +330,6 @@ object ManifestIO {
   def zorderQuery(spark: SparkSession, dir: String): DataFrame = {
     // native mask-spread expression (graft.functions.MortonInterleave);
     // bit-for-bit equal to the portable fold — ZOrderSpec asserts parity
-    graft.functions.GraftFunctions.register(spark)
     Tables.events(spark, dir)
       .select(col("event_id"),
         ((col("event_id") * lit(7919L)) % lit(36000L)).as("gx"),

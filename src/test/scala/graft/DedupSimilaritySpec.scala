@@ -87,7 +87,6 @@ class DedupSimilaritySpec extends SparkSpecBase {
   }
 
   test("LSH ANN results are a subset of brute-force top-50 per query") {
-    graft.functions.GraftFunctions.register(spark)
     val brute = {
       // recompute brute force with a deep k to measure containment
       val e = spark.read.parquet(s"$sfDir/embeddings.parquet")

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Dedup, Geo, Similarity}
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 /** The operators are a library, not a test harness: every core works on
@@ -106,7 +105,6 @@ class GenericApiSpec extends SparkSpecBase {
 
   test("ANN cores run on an arbitrary embedding frame") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // 5 unit-ish vectors in 64 dims, v1 ~ v2, v3 orthogonal-ish
     def vec(seed: Int): Array[Float] =
       Array.tabulate(64)(i => (math.sin(seed * 31 + i).toFloat))

@@ -30,7 +30,6 @@ class Round12Spec extends SparkSpecBase {
 
   test("nndescent: recall trace is monotone and converges on planted clusters") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // 3 planted clusters of 10 unit vectors, 1-degree apart within a
     // cluster, 120 degrees between clusters — every node's exact top-5
     // is intra-cluster. Random init knows nothing; the NoN rounds must

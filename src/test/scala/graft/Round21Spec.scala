@@ -16,7 +16,6 @@ import org.apache.spark.sql.functions._
 class Round21Spec extends SparkSpecBase {
 
   private def corpusFrame(dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.embeddings(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
       .select(col("vec_id"), col("embedding"), Similarity.norm("embedding").as("nrm"))

@@ -131,7 +131,6 @@ class Round9Spec extends SparkSpecBase {
 
   test("hamming_str: parity with the portable HOF fold, codegen, length check") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // 200 random-ish 64-char '0'/'1' pairs (md5-derived, deterministic)
     val pairs = spark.range(200).selectExpr(
       "concat_ws('', transform(sequence(0, 63), i -> " +

@@ -1,12 +1,10 @@
 package graft
 
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 class VectorDotSpec extends SparkSpecBase {
 
   test("vector_dot is bit-identical to the declarative zip_with fold") {
-    GraftFunctions.register(spark)
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet").limit(200)
       .withColumn("native", expr("vector_dot(embedding, embedding)"))
       .withColumn("fold", expr(
@@ -17,7 +15,6 @@ class VectorDotSpec extends SparkSpecBase {
   }
 
   test("vector_dot participates in whole-stage codegen") {
-    GraftFunctions.register(spark)
     val df = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .selectExpr("vector_dot(embedding, embedding) AS d")
     // formatted explain marks whole-stage-codegen stages with "codegen id"
@@ -28,7 +25,6 @@ class VectorDotSpec extends SparkSpecBase {
   }
 
   test("vector_dot over float x double arrays is bit-identical to the interpreted fold") {
-    GraftFunctions.register(spark)
     // the IVFPQ approx-pass shape: float query vector x double codebook
     // reconstruction (exact quotients) — the fold the native loop replaced
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet").limit(200)
@@ -49,7 +45,6 @@ class VectorDotSpec extends SparkSpecBase {
   }
 
   test("vector_dot is null-safe and rejects length mismatch") {
-    GraftFunctions.register(spark)
     val n = spark.sql(
       "SELECT vector_dot(CAST(NULL AS ARRAY<FLOAT>), array(CAST(1.0 AS FLOAT))) AS d")
       .collect()(0)
@@ -61,14 +56,17 @@ class VectorDotSpec extends SparkSpecBase {
       Option(err.getCause).exists(_.getMessage.contains("length mismatch")))
   }
 
-  test("extensions class registers the function on a fresh session config") {
-    val ext = new graft.plans.GraftExtensions()
-    // verify the injection wiring compiles + applies without error on the
-    // live session's extension point equivalent: use a cloned session
+  test("GraftSession installs native functions and strategies on every session") {
+    // a derived session with no registration call: everything below comes
+    // from spark.sql.extensions, set once in GraftSession.builder
     val s2 = spark.newSession()
-    graft.functions.GraftFunctions.register(s2)
-    assert(s2.sql("SELECT vector_dot(array(CAST(2.0 AS FLOAT)), array(CAST(3.0 AS FLOAT)))")
-      .collect()(0).getDouble(0) == 6.0)
-    assert(ext != null)
+    def one(sql: String) = s2.sql(s"SELECT $sql").collect()(0)
+    assert(one("vector_dot(array(CAST(2.0 AS FLOAT)), array(CAST(3.0 AS FLOAT)))")
+      .getDouble(0) == 6.0)
+    assert(one("morton_interleave(3L, 0L)").getLong(0) == 5L) // x on even bits
+    assert(one("hamming_str('0110', '0011')").getInt(0) == 2)
+    val strategies = s2.sessionState.planner.strategies
+    assert(strategies.contains(graft.plans.AsofJoinStrategy), strategies)
+    assert(strategies.contains(graft.plans.TopKPerKeyStrategy), strategies)
   }
 }

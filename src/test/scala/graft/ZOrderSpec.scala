@@ -33,7 +33,6 @@ class ZOrderSpec extends SparkSpecBase {
   }
 
   test("native morton_interleave expression is bit-for-bit equal to the fold") {
-    graft.functions.GraftFunctions.register(spark)
     val diff = keyed
       .withColumn("zn", expr("morton_interleave(gx, gy)"))
       .filter(col("zn") =!= col("zkey"))
