@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import scala.util.control.NonFatal
 
 /** Shared plumbing of the train-once/deploy-many model artifacts (BPE
   * merges, k-means codebooks, NN-Descent edges, the LPA chain, the
@@ -34,7 +35,7 @@ object ModelStore {
         Some(md.digest(s"$dir|$desc|$tag".getBytes("UTF-8"))
           .map("%02x".format(_)).mkString)
       }
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** Distributed parquet read of an artifact (never a driver collect —
     * artifacts are model-sized, but the read path must scale anyway). */
@@ -46,7 +47,7 @@ object ModelStore {
         val df = spark.read.parquet(d.getPath).select(cols.map(col): _*)
         if (df.isEmpty) None else Some(df)
       }
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** Commit an artifact. `singleFile = true` (default) is for model-sized
     * tables (codebooks, merge lists — KBs); pass `false` for
@@ -76,7 +77,7 @@ object ModelStore {
           } else rm(tmp)
         }
       }
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 
   private def rm(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))

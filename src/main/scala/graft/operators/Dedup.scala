@@ -334,25 +334,23 @@ object Dedup {
     bloomScreenOn(documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism))
 
-  /** Same operator over any (doc_id, source, text) frame — Round12Spec
-    * pins zero false negatives and a planted false positive. */
-  /** Bloom position j of the text-hash column `h` — one definition
-    * shared by the batch screen and StreamingJobs.bloomBits. */
-  private[graft] def bloomPosExpr(j: Int): String =
+  /** Bloom position j of the text-hash column `h`. */
+  private def bloomPosExpr(j: Int): String =
     s"CAST(conv(substring(md5(concat('bf$j:', h)), 1, 4), 16, 10) AS BIGINT) % $BloomScreenBits"
 
+  /** Same operator over any (doc_id, source, text) frame — Round12Spec
+    * pins zero false negatives and a planted false positive. */
   def bloomScreenOn(docs: DataFrame): DataFrame = {
-    def posExpr(j: Int) = bloomPosExpr(j)
     val hashed = docs.select(col("doc_id"), col("source"), md5(col("text")).as("h"))
       .localCheckpoint() // corpus insert + batch probe + truth join
     val corpusH = hashed.filter(col("doc_id") % 2 === 0).select("h").distinct()
       .localCheckpoint() // bit build + truth side
-    val bits = (0 until BloomScreenK).map(j => corpusH.select(expr(posExpr(j)).as("pos")))
+    val bits = (0 until BloomScreenK).map(j => corpusH.select(expr(bloomPosExpr(j)).as("pos")))
       .reduce(_ unionAll _).distinct()
       .withColumn("present", lit(1L))
     val batch = hashed.filter(col("doc_id") % 2 === 1)
     val probed = (0 until BloomScreenK).map(j =>
-        batch.select(col("doc_id"), expr(posExpr(j)).as("pos")))
+        batch.select(col("doc_id"), expr(bloomPosExpr(j)).as("pos")))
       .reduce(_ unionAll _)
       .join(broadcast(bits), Seq("pos"), "left_outer")
       .groupBy("doc_id")

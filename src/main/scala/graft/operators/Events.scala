@@ -7,10 +7,6 @@ import graft.sources.Tables._
 
 /** Event-stream analytics (SURVEY.md §2.G) over the `events` table.
   *
-  * The batch plans here are deliberately the same shapes the streaming
-  * module (graft.streaming.StreamingJobs) runs with readStream + watermark:
-  * tumbling-window aggregation and keyed stateful sessionization.
-  *
   * Timestamp discipline: events.ts is nanosecond parquet; Spark truncates
   * to microseconds on read while DuckDB keeps ns, so every output goes
   * through whole-second epoch (floor) or date_trunc — identical on both
@@ -19,7 +15,7 @@ import graft.sources.Tables._
 object Events {
 
   /** Tumbling 1-hour windows per event type — one shuffle on (hour, type),
-    * map-side partial aggs. Streaming twin uses window($"ts", "1 hour"). */
+    * map-side partial aggs. */
   def windowedAgg(spark: SparkSession, dir: String): DataFrame =
     events(spark, dir)
       .select(
@@ -636,9 +632,8 @@ object Events {
   /** CDC changelog → SCD2 dimension: treat each event as an upsert of
     * `value` for key (user_id, event_type) and materialize type-2 history
     * rows with [valid_from, valid_to) intervals; the open row (valid_to
-    * NULL) is the current snapshot — the batch form of MERGE INTO /
-    * foreachBatch upsert (StreamingJobs' keyed upsert holds only the
-    * latest row; this keeps full history).
+    * NULL) is the current snapshot — the batch form of a MERGE INTO
+    * upsert that keeps full history rather than only the latest row.
     *
     * One shuffle: a single window over the key ordered by the unique
     * (ts_sec, event_id) — per-key state at 100 TB is bounded by that key's
@@ -704,9 +699,8 @@ object Events {
     * exact `coverage`-quantile of the per-event lateness distribution.
     * Distributed part: one groupBy on late_sec (almost all mass sits at
     * 0, so the distinct-lateness table is tiny); the cumulative walk runs
-    * driver-side over that bounded table. Feed the result (plus margin)
-    * to withWatermark; the streaming jobs then drop at most
-    * (1 - coverage) of a like-distributed stream. */
+    * driver-side over that bounded table. A watermark of the result (plus
+    * margin) drops at most (1 - coverage) of a like-distributed stream. */
   def suggestedWatermarkSec(spark: SparkSession, dir: String, coverage: Double = 0.999): Long = {
     val dist = latenessPerEvent(spark, dir)
       .groupBy("late_sec").agg(count(lit(1)).as("n"))
@@ -737,10 +731,9 @@ object Events {
   val AbsenceTimeoutSec = 1800L
 
   /** CEP absence detection — the "A NOT followed by B within T" pattern
-    * (abandoned carts: a click with no purchase inside 30 min). The
-    * batch twin of the streaming stream-stream interval join
-    * (StreamingJobs): for each click, the first purchase by the same
-    * user in (ea, ea + T] — or its absence — rolled up per click hour.
+    * (abandoned carts: a click with no purchase inside 30 min): for each
+    * click, the first purchase by the same user in (ea, ea + T] — or its
+    * absence — rolled up per click hour.
     *
     * Scale: never an unbounded per-user theta join. The purchase side is
     * replicated to its OWN time bucket and the previous one
@@ -1128,15 +1121,14 @@ object Events {
   val CmsRows = 4
   val CmsWidth = 64L
 
-  /** Row-hash bucket of the CMS: deterministic md5 over (row, user) —
-    * shared by the batch sketch and StreamingJobs.cmsCells so parity is
-    * one definition. Expects columns `r` and `user_id` in scope. */
-  private[graft] val CmsBucketSql: String =
+  /** Row-hash bucket of the CMS: deterministic md5 over (row, user).
+    * Expects columns `r` and `user_id` in scope. */
+  private val CmsBucketSql: String =
     "CAST(conv(substring(md5(concat('cms', r, ':', " +
       s"CAST(user_id AS STRING))), 1, 4), 16, 10) AS BIGINT) % $CmsWidth"
 
   /** COUNT-MIN SKETCH heavy hitters (ev_heavy_hitters) — the bounded-state
-    * frequency sketch every streaming top-k deploys (Cormode & Muthu 2005):
+    * frequency sketch (Cormode & Muthu 2005):
     * d=4 md5 row-hashes map each user into one of w=64 buckets per row;
     * a cell is the sum of counts hashed into it; a user's estimate is the
     * MIN over its d cells — always >= the true count, with the over-count
@@ -1173,7 +1165,7 @@ object Events {
   /** 4-bit binary expansion of hex digit k of column `src` — CASE text
     * valid in BOTH Spark SQL and DuckDB (shared by ev_hll and its
     * oracle, so the bit arithmetic is one definition). */
-  private[graft] def hexBitsSql(src: String, k: Int): String =
+  private def hexBitsSql(src: String, k: Int): String =
     (0 until 16).map(v => s"WHEN '${v.toHexString}' THEN " +
         s"'${v.toBinaryString.reverse.padTo(4, '0').reverse}'")
       .mkString(s"(CASE substr($src, $k, 1) ", " ", " END)")

@@ -175,8 +175,8 @@ object Geo {
     * correctly-rounded double of K/100 — the SAME double the oracle's
     * CAST(SUM(DECIMAL(18,4)) AS DOUBLE) produces. Queries summing values
     * that are not fixed-point stay on the decimal path. */
-  private[graft] val valueCents: Column = round(col("value") * lit(100)).cast("long")
-  private[graft] def centsToDouble(centsSum: Column): Column =
+  private val valueCents: Column = round(col("value") * lit(100)).cast("long")
+  private def centsToDouble(centsSum: Column): Column =
     centsSum.cast("double") / lit(100.0)
 
   /** LEFT JOIN fidelity (stats.py:9-13): zones with zero intersecting

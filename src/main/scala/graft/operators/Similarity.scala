@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables._
+import scala.util.control.NonFatal
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2.D).
   *
@@ -435,7 +436,7 @@ object Similarity {
         val g = spark.read.parquet(d.getPath).select("src", "dst")
         if (g.head(1).isEmpty) None else Some(g)
       }
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   private def gsWriteGraph(spark: SparkSession, fp: String, g: DataFrame): Unit =
     graft.ModelStore.write(s"nnd_$fp",
@@ -910,7 +911,7 @@ object Similarity {
           .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSeq
         if (rows.isEmpty) None else Some(rows.toDF("c", "i", "cS", "n"))
       }
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   private def kmWriteCb(spark: SparkSession, fp: String, prefix: String, cb: DataFrame): Unit =
     graft.ModelStore.write(s"$prefix$fp",
@@ -956,7 +957,7 @@ object Similarity {
         }
         for (cb2 <- cb(2); cb3 <- cb(3)) yield (cb2, cb3)
       }
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   private def kmWriteModel(spark: SparkSession, fp: String,
       cb2: DataFrame, cb3: DataFrame): Unit =
@@ -1061,8 +1062,8 @@ object Similarity {
     * exactly how a disk-resident IVF index shards. Probe pairs are BOUNDED
     * at queries x P by construction — n_probed in the output proves it. */
   /** Trained codebook of the FINAL two-round-Lloyd assignment: (c, i, cS,
-    * n), k x 64 rows — the static side of both the batch multi-probe
-    * search and the streaming probe router (StreamingJobs.annProbeRoute). */
+    * n), k x 64 rows — the static side of the multi-probe search.
+    * KmeansModelSpec checks that a warm deploy equals the cold train. */
   def trainedCodebook(spark: SparkSession, dir: String): DataFrame =
     kmFingerprint(dir).flatMap(kmReadModel(spark, _)) match {
       case Some((_, cb3)) => cb3 // warm: zero Lloyd work, no corpus scan

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables._
+import scala.util.control.NonFatal
 
 /** Text analysis suite over the `documents` table (SURVEY.md §2.E).
   *
@@ -337,7 +338,7 @@ object TextAnalysis {
           Some(rows.toSeq.map(r => (r.getString(0), r.getString(1), r.getLong(2))))
         else None
       }
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   private def bpeWriteModel(spark: SparkSession, fp: String, pairs: Seq[(String, String, Long)]): Unit = {
     import spark.implicits._

@@ -34,9 +34,8 @@ object Tables {
     normalizeTs(t(spark, dir, "events"))
 
   /** Normalize whatever physical encoding events.ts shipped with to
-    * TimestampType. Also used by the streaming specs on readStream frames
-    * so batch and stream apply the identical branch. */
-  def normalizeTs(raw: DataFrame): DataFrame =
+    * TimestampType. */
+  private def normalizeTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         // nanos-as-long: ns -> µs with integer division (ns overflows a

@@ -181,23 +181,52 @@ class PlanAuditSpec extends SparkSpecBase {
     "pipe_export" -> "prefix-sum phase 2 over the n/100 range-total table",
     "ta_seq_pack" -> "prefix-sum phase 2 over the n/100 range-total table")
 
-  test("no constant-parallelism window over an unbounded frame") {
+  /** Offenders of the four full-registry gates, one list per gate. */
+  private case class RegistryAudit(
+    globalWindows: Seq[String],
+    cartesian: Seq[String],
+    nestedLoops: Seq[String],
+    unprunedLineitem: Seq[String])
+
+  /** One pass over the registry: each key is built once and its optimized
+    * plan and `plan()` text are computed once. Only offender strings are
+    * kept, never the DataFrames, so each key's localCheckpoint blocks can
+    * be freed before the next key is built. */
+  private lazy val registryAudit: util.Try[RegistryAudit] = util.Try {
     import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, Range => LRange, Window => LWindow}
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      if (allowGlobalWindow.contains(name)) Nil
-      else fn(spark, sfDir).queryExecution.optimizedPlan.collect {
-        case w: LWindow if w.partitionSpec.isEmpty || w.partitionSpec.forall(_.foldable) => w
-      }.filter { w =>
-        // bounded by construction: an upstream LIMIT (the TakeOrdered-
-        // then-rank idiom) or a <=1024-row literal Range spine (dense
-        // percentile/cut grids) caps the window's input rows
-        val capped = w.child.collectFirst {
-          case g: GlobalLimit => g
-          case r: LRange if r.numElements.isValidInt && r.numElements.toInt <= 1024 => r
-        }.isDefined
-        !capped
-      }.map(w => s"$name:\n$w")
+    val windows, cartesian, nestedLoops, unpruned = Seq.newBuilder[String]
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      val df = fn(spark, sfDir)
+      if (!allowGlobalWindow.contains(name))
+        windows ++= df.queryExecution.optimizedPlan.collect {
+          case w: LWindow if w.partitionSpec.isEmpty || w.partitionSpec.forall(_.foldable) => w
+        }.filter { w =>
+          // bounded by construction: an upstream LIMIT (the TakeOrdered-
+          // then-rank idiom) or a <=1024-row literal Range spine (dense
+          // percentile/cut grids) caps the window's input rows
+          val capped = w.child.collectFirst {
+            case g: GlobalLimit => g
+            case r: LRange if r.numElements.isValidInt && r.numElements.toInt <= 1024 => r
+          }.isDefined
+          !capped
+        }.map(w => s"$name:\n$w")
+      val p = plan(df)
+      if (p.contains("CartesianProduct")) cartesian += s"$name:\n$p"
+      if (!allowNestedLoop(name) && p.contains("BroadcastNestedLoopJoin"))
+        nestedLoops += s"$name:\n$p"
+      // lineitem is the wide fact table: no lineitem query needs every column
+      p.linesIterator.filter(_.contains("ReadSchema")).foreach { l =>
+        if ((l.contains("l_orderkey") || l.contains("l_quantity")) &&
+            l.contains("l_comment") && l.contains("l_tax") && l.contains("l_partkey") &&
+            l.contains("l_shipdate") && l.contains("l_suppkey"))
+          unpruned += s"$name scans too much of lineitem: $l"
+      }
     }
+    RegistryAudit(windows.result(), cartesian.result(), nestedLoops.result(), unpruned.result())
+  }
+
+  test("no constant-parallelism window over an unbounded frame") {
+    val offenders = registryAudit.get.globalWindows
     assert(offenders.isEmpty,
       s"constant-parallelism window over an unbounded frame (single-task sort " +
         s"at 100x — cap with orderBy().limit(K) first, use TopKPerKeyNative, or " +
@@ -205,19 +234,13 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("no query plans a cartesian product") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val p = plan(fn(spark, sfDir))
-      assert(!p.contains("CartesianProduct"), s"$name:\n$p")
-    }
+    val offenders = registryAudit.get.cartesian
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("only the sanctioned exact baseline uses a nested-loop join") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (!allowNestedLoop(name)) {
-        val p = plan(fn(spark, sfDir))
-        assert(!p.contains("BroadcastNestedLoopJoin"), s"$name:\n$p")
-      }
-    }
+    val offenders = registryAudit.get.nestedLoops
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("PQ approx scoring runs the native codegen dot, not an interpreted HOF fold") {
@@ -363,15 +386,7 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("every parquet scan prunes columns (no SELECT * scans of wide tables)") {
-    // lineitem is the wide fact table: no lineitem query needs every column
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val p = plan(fn(spark, sfDir))
-      p.linesIterator.filter(_.contains("ReadSchema")).foreach { l =>
-        if (l.contains("l_orderkey") || l.contains("l_quantity"))
-          assert(!(l.contains("l_comment") && l.contains("l_tax") && l.contains("l_partkey")
-            && l.contains("l_shipdate") && l.contains("l_suppkey")),
-            s"$name scans too much of lineitem: $l")
-      }
-    }
+    val offenders = registryAudit.get.unprunedLineitem
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

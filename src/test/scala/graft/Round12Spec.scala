@@ -50,40 +50,6 @@ class Round12Spec extends SparkSpecBase {
     assert(hits.last > hits.head)
   }
 
-  test("streaming CMS cells match the batch sketch and bound the estimate") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    implicit val sq = spark.sqlContext
-    // zipf-ish key mix split across two micro-batches to exercise
-    // incremental cell state
-    val users = (1L to 400L).map(i => i % 23 + 1L)
-    val stream = MemoryStream[Long]
-    val (a, b) = users.splitAt(150)
-    stream.addData(a)
-    stream.addData(b)
-    val streamed = graft.streaming.StreamingJobs.cmsCells(
-      stream.toDF().toDF("user_id"))
-    val got = graft.streaming.StreamingJobs
-      .runToMemory(spark, streamed, "cms_cells", OutputMode.Complete())
-    // parity: the same plan over the same rows as one batch
-    val expected = graft.streaming.StreamingJobs.cmsCells(users.toDF("user_id"))
-    assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
-    // probing the streamed cells reproduces the batch query's estimate
-    val cells = got.collect().map(r => ((r.getInt(0), r.getLong(1)), r.getLong(2))).toMap
-    val est = graft.operators.Events
-      .heavyHittersOn(users.toDF("user_id")
-        .groupBy("user_id").agg(count(lit(1)).as("true_c")), 23)
-      .collect().map(r => (r.getLong(0), r.getLong(2)))
-    val probed = users.toDF("user_id").distinct()
-      .select(col("user_id"), explode(expr("sequence(0, 3)")).as("r"))
-      .withColumn("bucket", expr(
-        "CAST(conv(substring(md5(concat('cms', r, ':', CAST(user_id AS STRING))), 1, 4), 16, 10) AS BIGINT) % 64"))
-      .collect().map(r => (r.getLong(0), (r.getInt(1), r.getLong(2))))
-      .groupBy(_._1).map { case (u, rs) => (u, rs.map(x => cells(x._2)).min) }
-    est.foreach { case (u, e) => assert(probed(u) == e, s"user $u") }
-  }
-
   test("q27: RANGE frame equals the explicit interval self-join") {
     import graft.sources.Tables
     // the RANGE frame must be gap-aware: re-derive every (cust, day)
@@ -384,28 +350,6 @@ class Round12Spec extends SparkSpecBase {
     assert(nfp == npos - ndup)    // accounting consistent
   }
 
-  test("streaming HLL registers match batch and survive replay") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    implicit val sq = spark.sqlContext
-    val pairs = (1L to 200L).map(u => (s"t${u % 3}", u % 41 + 1L))
-    val stream = MemoryStream[(String, Long)]
-    val (a, b) = pairs.splitAt(80)
-    stream.addData(a)
-    stream.addData(b)
-    stream.addData(a) // REPLAY batch 1: MAX is idempotent, registers must not move
-    val got = graft.streaming.StreamingJobs.runToMemory(spark,
-      graft.streaming.StreamingJobs.hllRegisters(
-        stream.toDF().toDF("event_type", "user_id")),
-      "hll_regs", OutputMode.Complete())
-    // batch twin: ev_hll's register build over the same distinct pairs
-    val expected = graft.operators.Events
-      .hllOn(pairs.toDF("event_type", "user_id"))
-      .select("event_type", "bucket", "register")
-    assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
-  }
-
   test("watershed: the walled channel is one sink basin, walls are singleton outlets") {
     import spark.implicits._
     // same grid as the flowaccum spec: channel x=1..9 at y=1 (n=21-x)
@@ -421,25 +365,6 @@ class Round12Spec extends SparkSpecBase {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
     assert(out.head == ((185857L, 9L, 144L, "sink")))
     assert(out.tail.forall(r => r._2 == 1L && r._3 == 30L && r._4 == "outlet"))
-  }
-
-  test("streaming bloom bits match the batch screen's bit table") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    implicit val sq = spark.sqlContext
-    val texts = (1 to 120).map(i => s"stream doc number ${i % 50} payload")
-    val stream = MemoryStream[String]
-    val (a, b) = texts.splitAt(50)
-    stream.addData(a)
-    stream.addData(b)
-    stream.addData(a) // replay: set-union is idempotent, no new emissions
-    val got = graft.streaming.StreamingJobs.runToMemory(spark,
-      graft.streaming.StreamingJobs.bloomBits(stream.toDF().toDF("text")),
-      "bloom_bits", OutputMode.Append())
-    val expected = graft.streaming.StreamingJobs.bloomBits(texts.toDF("text"))
-    assert(got.count() == got.distinct().count()) // each bit emitted once
-    assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
   }
 
   test("bot detect: metronome flagged by the exact inequality, jitter passes") {

@@ -49,37 +49,6 @@ class Round15Spec extends SparkSpecBase {
     assert(overlap >= 6, s"only $overlap/10 points shared with true LTTB")
   }
 
-  test("streaming SCD2 closes the same history as the batch operator under any batching") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import graft.streaming.StreamingJobs
-    import graft.streaming.StreamingJobs.Scd2Ev
-    import spark.implicits._
-    val feed = graft.sources.Tables.events(spark, sfDir)
-      .select(col("user_id"), col("event_type"), col("ts"), col("event_id"), col("value"))
-      .as[Scd2Ev].collect().sortBy(e => (e.ts.getTime, e.event_id)).toSeq
-    def run(name: String, splits: Seq[Seq[Scd2Ev]]): Set[(Long, String, Long, Double, Long, Long)] = {
-      implicit val sq = spark.sqlContext
-      val stream = MemoryStream[Scd2Ev]
-      val out = StreamingJobs.scd2Stream(stream.toDS())
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      splits.foreach { b => stream.addData(b); q.processAllAvailable() }
-      q.stop()
-      spark.table(name).as[(Long, String, Long, Double, Long, Long)].collect().toSet
-    }
-    val half = run("scd2_half", feed.grouped(math.max(feed.length / 2, 1)).toSeq)
-    val fine = run("scd2_fine", feed.grouped(math.max(feed.length / 7, 1)).toSeq)
-    assert(half == fine, "closed history must not depend on batch boundaries")
-    val batch = graft.operators.Events.cdcScd2(spark, sfDir)
-      .filter(!col("is_current"))
-      .select(col("user_id"), col("event_type"), col("version"), col("value"),
-        col("valid_from_sec"), col("valid_to_sec"))
-      .as[(Long, String, Long, Double, Long, Long)].collect().toSet
-    assert(half == batch,
-      s"stream closed ${half.size} vs batch non-current ${batch.size}")
-  }
-
   test("runtime bloom-filter join pruning: injected, and semantics-preserving") {
     // Catalyst's runtime row-level filter: a selective build side injects
     // bloom_filter_might_contain onto the probe-side scan of a shuffle

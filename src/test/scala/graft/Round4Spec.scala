@@ -30,36 +30,6 @@ class Round4Spec extends SparkSpecBase {
     assert(spark.read.parquet(path).count() > 0)
   }
 
-  test("foreachBatch upsert merges per key, replay is idempotent, stale ts never regresses") {
-    import graft.streaming.StreamingJobs
-    val path = s"/tmp/graft_upsert_${System.nanoTime()}"
-    def batch(rows: Seq[(Long, Long, Double)]) = {
-      import spark.implicits._
-      rows.toDF("user_id", "sec", "value")
-        .select(col("user_id"), timestamp_seconds(col("sec")).as("ts"), col("value"))
-    }
-    def state(): Map[Long, (Long, Double)] =
-      spark.read.parquet(path).collect()
-        .map(r => r.getAs[Long]("user_id") ->
-          (r.getAs[java.sql.Timestamp]("ts").getTime / 1000, r.getAs[Double]("value"))).toMap
-    // users 1 and 17 share bucket 1 (mod 16): the partition-level merge is keyed
-    StreamingJobs.upsertBatch(spark, batch(Seq((1L, 10L, 1.0), (2L, 10L, 2.0), (17L, 11L, 3.0))), path)
-    StreamingJobs.upsertBatch(spark, batch(Seq((1L, 20L, 9.0), (3L, 5L, 4.0))), path)
-    val expect = Map(1L -> (20L, 9.0), 2L -> (10L, 2.0), 17L -> (11L, 3.0), 3L -> (5L, 4.0))
-    assert(state() == expect)
-    // replaying a micro-batch (restart after sink-side crash) changes nothing
-    StreamingJobs.upsertBatch(spark, batch(Seq((1L, 20L, 9.0), (3L, 5L, 4.0))), path)
-    assert(state() == expect)
-    // a LATE update (older ts) must not regress the key
-    StreamingJobs.upsertBatch(spark, batch(Seq((1L, 15L, 5.0))), path)
-    assert(state() == expect)
-    // untouched buckets are not rewritten: bucket 2's file set is stable
-    val b2files = new java.io.File(path, "bucket=2").list().toSet
-    StreamingJobs.upsertBatch(spark, batch(Seq((1L, 30L, 7.0))), path)
-    assert(new java.io.File(path, "bucket=2").list().toSet == b2files)
-    assert(state() == expect + (1L -> (30L, 7.0)))
-  }
-
   test("zs_area_weighted matches a brute-force overlap recompute") {
     val cells = Geo.points(spark, sfDir).collect().groupBy { r =>
       (math.floor((r.getAs[Double]("lon") + 180.0) / 3.0).toLong,

@@ -19,10 +19,7 @@ trait SparkSpecBase extends AnyFunSuite {
 
 object SparkSpecBase {
   lazy val session: SparkSession = {
-    val s = GraftSession.builder("local[4]", 4)
-      .config("spark.sql.streaming.checkpointLocation",
-        s"/tmp/graft_ckpt_${System.nanoTime()}")
-      .getOrCreate()
+    val s = GraftSession.builder("local[4]", 4).getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

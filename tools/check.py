@@ -10,7 +10,7 @@ hash is type-sensitive, so DuckDB HUGEINT vs Spark BIGINT must FAIL here
 even when the printed values are identical), and cell values (sorted rows,
 columns in name order, floats rounded to 6 significant decimals).
 """
-import json, math, sys
+import json, math, os, sys
 
 import duckdb
 
@@ -19,10 +19,14 @@ sfdir, outdir = sys.argv[1], sys.argv[2]
 con = duckdb.connect()
 # The heavy unrolled-CTE oracles (ta_bpe_*) OOM DuckDB at sf0.1 under the
 # default all-cores config (32 threads x per-thread buffers exhaust the
-# allocator: "Failed to allocate block" at tiny sizes); 8 threads + an
-# explicit limit + a spill dir outside the repo (the default spilled 51 GB
-# into ./.tmp) runs the same oracle in ~30s.
-con.execute("SET threads=8")
+# allocator: "Failed to allocate block" at tiny sizes); at most 8 threads +
+# an explicit limit + a spill dir outside the repo (the default spilled
+# 51 GB into ./.tmp) runs the same oracle in ~30s. The thread cap follows
+# the host (no more threads than cpus). The memory limit does not: DuckDB's
+# buffer accounting for ta_unigram_em's unrolled CTE chain fills a limit of
+# 60% of a 16 GB host (8.7 GiB "used", OOM) while the process RSS stays at
+# ~1.7 GB under this limit, so a RAM-derived limit fails the oracle.
+con.execute(f"SET threads={min(8, os.cpu_count() or 1)}")
 con.execute("SET memory_limit='48GB'")
 con.execute("SET temp_directory='/tmp/graft_duck_spill'")
 for t in ("region nation customer supplier part orders lineitem "
@@ -36,15 +40,13 @@ oracle = json.load(open(f"{outdir}/oracle_sql.json"))
 # A filtered run is NOT the full gate — the summary line is tagged so it
 # can never be mistaken for one.
 only = None
-import os as _os
-if _os.environ.get("SPARK_GRAFT_ONLY"):
-    only = set(_os.environ["SPARK_GRAFT_ONLY"].split(","))
+if os.environ.get("SPARK_GRAFT_ONLY"):
+    only = set(os.environ["SPARK_GRAFT_ONLY"].split(","))
     oracle = {k: v for k, v in oracle.items() if k in only}
 
 # Registry completeness gate (ADVICE r6): every DECLARED query must have a
 # readable result, oracle-checked or not — a Spark-side failure that drops a
 # result directory must fail the gate, never shrink the denominator.
-import os
 registry_fails = []
 try:
     declared = json.load(open(f"{outdir}/queries.json"))
