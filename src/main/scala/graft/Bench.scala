@@ -58,15 +58,6 @@ object Bench {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     }
     for (_ <- 1 to 3) runPass(names)
-    // Optional noise-floor knob (SURVEY §6): the host's CPU-steal bursts put
-    // a ±20% floor on sub-3s queries even with min-of-3. SPARK_GRAFT_MIN5=1
-    // adds two more round-robin passes over only the sub-3s queries
-    // (min-of-5 for them) — default off so the driver's wall budget is
-    // unchanged; flip it on when auditing a suspected small-query drift.
-    if (sys.env.get("SPARK_GRAFT_MIN5").contains("1")) {
-      val fast = names.filter(n => samples.get(n).exists(_.min < 3.0))
-      for (_ <- 1 to 2) runPass(fast)
-    }
     val results = names.map(n => n -> samples.get(n).map(_.min).getOrElse(-1.0))
     // 3-decimal (ms) precision: full doubles made the ~80-query JSON line
     // big enough to overflow the driver's output-tail capture (BENCH_r03

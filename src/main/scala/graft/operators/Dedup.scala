@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ModelStore
 import graft.sources.Tables._
 
 /** Deduplication suite over the `documents` table (SURVEY.md §2.C).
@@ -1132,19 +1133,14 @@ object Dedup {
     * Parity + invalidation pinned in Round18Spec. */
   private def substringWitnessFor(spark: SparkSession, dir: String): DataFrame = {
     val cols = Seq("doc_id", "sp", "suf", "pdoc", "psp", "lcp")
-    val fp = graft.ModelStore.fingerprint(dir, "documents.parquet", "sdw1")
-    fp.flatMap(f => graft.ModelStore.read(spark, s"sdwit_$f", cols))
-      .map(_.localCheckpoint())
-      .getOrElse {
-        graft.ModelTelemetry.trains.incrementAndGet()
-        val w = substringWitnessOn(documents(spark, dir)
-            .repartition(spark.sparkContext.defaultParallelism), 16, 64)
-          .select(cols.map(col): _*)
-          .localCheckpoint() // consumer reads it twice (marks + report)
-        // witnesses are O(docs x windows) — never one write task
-        fp.foreach(f => graft.ModelStore.write(s"sdwit_$f", w, singleFile = false))
-        w
-      }
+    // witnesses are O(docs x windows) — never one write task
+    ModelStore.frame(spark, ModelStore.Source(dir, "documents.parquet", "sdw1"),
+        ModelStore.Table("sdwit", cols, singleFile = false), warm = _.localCheckpoint()) {
+      substringWitnessOn(documents(spark, dir)
+          .repartition(spark.sparkContext.defaultParallelism), 16, 64)
+        .select(cols.map(col): _*)
+        .localCheckpoint() // consumer reads it twice (marks + report)
+    }
   }
 
   private def substringDedupOnWitness(wit: DataFrame, topK: Int): DataFrame =

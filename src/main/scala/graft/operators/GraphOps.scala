@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.ModelStore
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -39,7 +40,6 @@ object GraphOps {
     var prevSum = labelSum(labels)
     var converged = false
     var rounds = 0
-    val dbg = sys.env.contains("GRAFT_DEBUG_ROUNDS")
     // <= : a graph of diameter EXACTLY maxRounds finishes changing on round
     // maxRounds and needs one extra no-change round to be DETECTED
     while (!converged && rounds <= maxRounds) {
@@ -53,7 +53,6 @@ object GraphOps {
       prevSum = s
       labels = next
       rounds += 1
-      if (dbg) System.err.println(s"[graphops] round $rounds sum=$s")
     }
     // a silent truncation would return a component split in two and fail
     // only at the (distant) oracle — refuse loudly instead
@@ -128,7 +127,6 @@ object GraphOps {
       .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
     var converged = false
     var rounds = 0
-    val dbg = sys.env.contains("GRAFT_DEBUG_ROUNDS")
     while (!converged && rounds < maxRounds) {
       // MEASURED r14 and reverted: materializing every TWO star pairs
       // (smallStar(largeStar(smallStar(largeStar(e))))) to halve the
@@ -150,7 +148,6 @@ object GraphOps {
           col("dst") === col("dst2"), "left_semi").isEmpty
       e = next
       rounds += 1
-      if (dbg) System.err.println(s"[graphops] doubling round $rounds edges=$cnt")
     }
     if (!converged) throw new IllegalStateException(
       s"pointer doubling did not converge in $maxRounds rounds")
@@ -203,54 +200,38 @@ object GraphOps {
       .select(col("x.user_id").as("a"), col("y.user_id").as("b"), col("x.hr").as("hr"))
   }
 
-  /** The co-activity graph as the FOURTH fingerprint-keyed model
-    * artifact (the lpaChain contract applied to the gr tier's other
-    * shared chain): the capped pair list (a, b, hr) and its distinct
-    * edge projection (a, b) re-derive identically inside TWELVE queries
-    * (triangles, pagerank, ppr, ppr_converge, common_neighbors,
-    * resource_alloc, khop, kcore, assort, local_cc from the edges;
-    * sssp, temporal_reach from the pairs), each paying the events scan +
-    * hub-cap + cell self-join per the each-query-standalone driver
-    * contract. The first consumer persists both frames keyed by a
-    * fingerprint of the events parquet; warm consumers pay one parquet
-    * scan. Deterministic by construction (a distinct pair SET — no
-    * float, no order sensitivity), so deployed results are bit-identical
-    * to the fold; any read anomaly or fingerprint mismatch falls back to
-    * the build and rewrites (CoactModelSpec pins parity + invalidation).
-    * Both writes keep their partitioning (pairs are O(cells x cap^2) —
-    * corpus-proportional, never one task). Frames come back
-    * localCheckpointed: every consumer reads its frame 2+ times (sym
+  /** The co-activity graph as two model artifacts keyed on events
+    * (coactpairs_, and coactedges_ built over it): the capped pair list
+    * (a, b, hr) and its distinct edge projection (a, b) re-derive
+    * identically inside TWELVE queries (triangles, pagerank, ppr,
+    * ppr_converge, common_neighbors, resource_alloc, khop, kcore, assort,
+    * local_cc from the edges; sssp, temporal_reach from the pairs), each
+    * paying the events scan + hub-cap + cell self-join per the
+    * each-query-standalone driver contract; a warm consumer pays one
+    * parquet scan. Deterministic by construction (a distinct pair SET —
+    * no float, no order sensitivity); CoactModelSpec pins parity +
+    * invalidation. Both commits keep their partitioning (pairs are
+    * O(cells x cap^2) — corpus-proportional, never one task). Frames come
+    * back localCheckpointed: every consumer reads its frame 2+ times (sym
     * union x2, degree + join sides). */
   private[graft] def coActivityPairs(
-      spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val fp = graft.ModelStore.fingerprint(dir, "events.parquet", "coact1")
-    fp.flatMap(f => graft.ModelStore.read(spark, s"coactpairs_$f", Seq("a", "b", "hr")))
-      .map(_.localCheckpoint())
-      .getOrElse {
-        graft.ModelTelemetry.trains.incrementAndGet()
-        val pairs = buildCoActivityPairs(spark, dir)
-          .localCheckpoint() // consumers group/join it more than once
-        fp.foreach(f =>
-          graft.ModelStore.write(s"coactpairs_$f", pairs, singleFile = false))
-        pairs
-      }
-  }
+      spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    ModelStore.frame(spark, ModelStore.Source(dir, "events.parquet", "coact1"),
+        ModelStore.Table("coactpairs", Seq("a", "b", "hr"), singleFile = false),
+        warm = _.localCheckpoint()) {
+      buildCoActivityPairs(spark, dir)
+        .localCheckpoint() // consumers group/join it more than once
+    }
 
   private[graft] def coActivityEdges(
-      spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val fp = graft.ModelStore.fingerprint(dir, "events.parquet", "coact1")
-    fp.flatMap(f => graft.ModelStore.read(spark, s"coactedges_$f", Seq("a", "b")))
-      .map(_.localCheckpoint())
-      .getOrElse {
-        // cold: derive from the pairs artifact (which trains + persists
-        // itself if needed — the one ModelTelemetry count for the chain)
-        val edges = coActivityPairs(spark, dir).select("a", "b").distinct()
-          .localCheckpoint() // degree + self-join sides downstream
-        fp.foreach(f =>
-          graft.ModelStore.write(s"coactedges_$f", edges, singleFile = false))
-        edges
-      }
-  }
+      spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    ModelStore.frame(spark, ModelStore.Source(dir, "events.parquet", "coact1"),
+        ModelStore.Table("coactedges", Seq("a", "b"), singleFile = false),
+        warm = _.localCheckpoint()) {
+      // cold: derive from the pairs artifact (deployed, or built by its own call)
+      coActivityPairs(spark, dir).select("a", "b").distinct()
+        .localCheckpoint() // degree + self-join sides downstream
+    }
 
   def triangleStats(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val edges = coActivityEdges(spark, dir)
@@ -943,32 +924,24 @@ object GraphOps {
   /** The full co-purchase pair-count projection (p1, p2, n_cust) as a
     * model artifact: the incidence build + customer-keyed self-join is
     * the whole cost of gr_copurchase (the single slowest query at r10),
-    * and the projection is a deterministic count table — the lpaChain
-    * contract, keyed on BOTH source tables (orders x lineitem). Warm
+    * and the projection is a deterministic count table, keyed on BOTH
+    * source tables (orders x lineitem). Warm
     * path: one parquet scan straight into the top-K (no checkpoint —
     * single consumer, let the scan feed the TopK directly). */
   private[graft] def copurchasePairCounts(
-      spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val fp = for {
-      a <- graft.ModelStore.fingerprint(dir, "orders.parquet", "copur1")
-      b <- graft.ModelStore.fingerprint(dir, "lineitem.parquet", "copur1")
-    } yield a.substring(0, 16) + b.substring(0, 16)
-    fp.flatMap(f => graft.ModelStore.read(spark, s"copur_$f", Seq("p1", "p2", "n_cust")))
-      .getOrElse {
-        graft.ModelTelemetry.trains.incrementAndGet()
-        val pc = copurchasePairCountsOn(
-          graft.sources.Tables.orders(spark, dir)
-            .select(col("o_orderkey"), col("o_custkey"))
-            .join(graft.sources.Tables.lineitem(spark, dir)
-                .select(col("l_orderkey"), col("l_partkey")),
-              col("o_orderkey") === col("l_orderkey"))
-            .select(col("o_custkey").as("cust"), col("l_partkey").as("part")))
-          .localCheckpoint() // isEmpty probe + write + topK all read it
-        fp.foreach(f =>
-          graft.ModelStore.write(s"copur_$f", pc, singleFile = false))
-        pc
-      }
-  }
+      spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    ModelStore.frame(spark,
+        ModelStore.Source(dir, Seq("orders.parquet", "lineitem.parquet"), "copur1"),
+        ModelStore.Table("copur", Seq("p1", "p2", "n_cust"), singleFile = false)) {
+      copurchasePairCountsOn(
+        graft.sources.Tables.orders(spark, dir)
+          .select(col("o_orderkey"), col("o_custkey"))
+          .join(graft.sources.Tables.lineitem(spark, dir)
+              .select(col("l_orderkey"), col("l_partkey")),
+            col("o_orderkey") === col("l_orderkey"))
+          .select(col("o_custkey").as("cust"), col("l_partkey").as("part")))
+        .localCheckpoint() // isEmpty probe + write + topK all read it
+    }
 
   /** Basket cap of gr_copurchase: customers with more than this many
     * distinct parts are dropped BEFORE pair generation — pair fan-out is
@@ -1035,6 +1008,38 @@ object GraphOps {
     * collapses it to ONE community — measured, not guessed. */
   val LpaMinShared = 2L
 
+  /** (edges, labels) of the capped co-order graph, as one model
+    * artifact (lpaedges_ + lpalbl_, keyed on lineitem, deployed only as
+    * a pair): the edge list and the final LPA labels re-derive
+    * identically inside gr_lpa, gr_modularity and gr_louvain_move, so a
+    * warm consumer skips the incidence self-join AND all LpaRounds
+    * propagation rounds (LpaModelSpec pins parity + invalidation). Both
+    * tables are O(parts)/O(co-purchase pairs) — catalog-sized. Both
+    * frames come back localCheckpointed — every consumer reads each side
+    * more than once (sym union x2, lookups). */
+  private[graft] def lpaChain(spark: org.apache.spark.sql.SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
+    ModelStore.frames(spark, ModelStore.Source(dir, "lineitem.parquet", "lpa1"),
+        Seq(ModelStore.Table("lpaedges", Seq("a", "b")),
+          ModelStore.Table("lpalbl", Seq("u", "lbl"))), warm = _.localCheckpoint()) {
+      val inc = capOrders(graft.sources.Tables.lineitem(spark, dir)
+          .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
+          .distinct())
+        .localCheckpoint() // self-join sides must not recompute (house rule)
+      val edges = inc.as("x").join(inc.as("y"),
+          col("x.o") === col("y.o") && col("x.p") < col("y.p"))
+        .groupBy(col("x.p").as("a"), col("y.p").as("b")).agg(count(lit(1)).as("ns"))
+        .filter(col("ns") >= LpaMinShared)
+        .select("a", "b")
+        .localCheckpoint() // m + intra lookups + both sym directions
+      val sym = edges.select((col("a") + lit(0L)).as("src"), (col("b") + lit(0L)).as("dst"))
+        .unionByName(edges.select((col("b") + lit(0L)).as("src"), (col("a") + lit(0L)).as("dst")))
+      val labels = lpaLabelsOn(sym)
+        .localCheckpoint() // every consumer reads labels 2-4 times
+      Seq(edges, labels)
+    } match { case Seq(edges, labels) => (edges, labels) }
+  }
+
   /** LABEL PROPAGATION COMMUNITIES (gr_lpa) — Raghavan et al. 2007, the
     * near-linear community detector (the Louvain-lite every graph stack
     * ships), on the part co-order graph (parts adjacent iff bought
@@ -1057,55 +1062,6 @@ object GraphOps {
     * whose partition fan-in is bounded by that node's degree — the same
     * per-round traffic as distributed PageRank; rounds localCheckpointed
     * (lineage house rule). Hot hubs are skewed dst keys — AQE splits. */
-  /** Model-artifact store for the shared LPA chain — the
-    * bpeMergesFor/kmTrain train-once/deploy-many pattern applied to the
-    * graph tier: the capped co-order EDGE LIST and the final LPA LABEL
-    * table re-derive identically inside gr_lpa, gr_modularity and
-    * gr_louvain_move (each-query-standalone driver contract), so the
-    * first consumer persists both as parquet under /tmp/graft_models
-    * keyed by a fingerprint of the lineitem parquet files (path + size
-    * + mtime); warm consumers skip the incidence self-join AND all
-    * LpaRounds propagation rounds. Any read anomaly or fingerprint
-    * mismatch falls back to the build and rewrites (LpaModelSpec pins
-    * parity + invalidation). Both tables are O(parts)/O(co-purchase
-    * pairs) — catalog-sized, never corpus-sized — and the read path is
-    * a distributed parquet scan, not a driver collect. */
-  /** (edges, labels) of the capped co-order graph: deployed from the
-    * artifact when the fingerprint matches, else built (and persisted).
-    * Both frames come back localCheckpointed — every consumer reads each
-    * side more than once (sym union x2, lookups). */
-  private[graft] def lpaChain(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (DataFrame, DataFrame) = {
-    val fp = graft.ModelStore.fingerprint(dir, "lineitem.parquet", "lpa1")
-    val cached = for {
-      f <- fp
-      e <- graft.ModelStore.read(spark, s"lpaedges_$f", Seq("a", "b"))
-      l <- graft.ModelStore.read(spark, s"lpalbl_$f", Seq("u", "lbl"))
-    } yield (e.localCheckpoint(), l.localCheckpoint())
-    cached.getOrElse {
-      graft.ModelTelemetry.trains.incrementAndGet()
-      val inc = capOrders(graft.sources.Tables.lineitem(spark, dir)
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-          .distinct())
-        .localCheckpoint() // self-join sides must not recompute (house rule)
-      val edges = inc.as("x").join(inc.as("y"),
-          col("x.o") === col("y.o") && col("x.p") < col("y.p"))
-        .groupBy(col("x.p").as("a"), col("y.p").as("b")).agg(count(lit(1)).as("ns"))
-        .filter(col("ns") >= LpaMinShared)
-        .select("a", "b")
-        .localCheckpoint() // m + intra lookups + both sym directions
-      val sym = edges.select((col("a") + lit(0L)).as("src"), (col("b") + lit(0L)).as("dst"))
-        .unionByName(edges.select((col("b") + lit(0L)).as("src"), (col("a") + lit(0L)).as("dst")))
-      val labels = lpaLabelsOn(sym)
-        .localCheckpoint() // every consumer reads labels 2-4 times
-      fp.foreach { f =>
-        graft.ModelStore.write(s"lpaedges_$f", edges)
-        graft.ModelStore.write(s"lpalbl_$f", labels)
-      }
-      (edges, labels)
-    }
-  }
-
   def lpa(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val (_, labels) = lpaChain(spark, dir)
     labels.groupBy("lbl").agg(count(lit(1)).as("n_members"))

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.ModelStore
 import graft.sources.Tables._
-import scala.util.control.NonFatal
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2.D).
   *
@@ -424,38 +424,16 @@ object Similarity {
       .orderBy("tier")
   }
 
-  private def gsFingerprint(dir: String): Option[String] =
-    graft.ModelStore.fingerprint(dir, "embeddings.parquet",
-      s"nnd${NnDescentK}x$NnDescentRounds")
-
-  private def gsReadGraph(spark: SparkSession, fp: String): Option[DataFrame] =
-    try {
-      val d = new java.io.File(KmModelRoot, s"nnd_$fp")
-      if (!d.isDirectory) None
-      else {
-        val g = spark.read.parquet(d.getPath).select("src", "dst")
-        if (g.head(1).isEmpty) None else Some(g)
-      }
-    } catch { case NonFatal(_) => None }
-
-  private def gsWriteGraph(spark: SparkSession, fp: String, g: DataFrame): Unit =
-    graft.ModelStore.write(s"nnd_$fp",
-      g.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst")),
-      singleFile = false) // edge list is O(n*K) in corpus vectors
-
-  /** The refined kNN graph for the corpus at `dir`: deploy the persisted
-    * index when its fingerprint matches, else run the NN-Descent build
-    * and persist. */
+  /** The refined kNN graph for the corpus at `dir` (the nnd_ artifact):
+    * deployed, else the NN-Descent build. */
   private[graft] def refinedGraphFor(spark: SparkSession, dir: String,
-      c: DataFrame): DataFrame = {
-    val fp = gsFingerprint(dir)
-    fp.flatMap(gsReadGraph(spark, _)).getOrElse {
-      graft.ModelTelemetry.trains.incrementAndGet()
-      val g = nndGraphs(c).last // localCheckpointed by the build
-      fp.foreach(gsWriteGraph(spark, _, g))
-      g
+      c: DataFrame): DataFrame =
+    ModelStore.frame(spark,
+        ModelStore.Source(dir, "embeddings.parquet", s"nnd${NnDescentK}x$NnDescentRounds"),
+        ModelStore.Table("nnd", Seq("src", "dst"), singleFile = false, // O(n*K) edges
+          casts = Map("src" -> "long", "dst" -> "long"))) {
+      nndGraphs(c).last // localCheckpointed by the build
     }
-  }
 
   /** Hub modulus of the layered index: vec_id % GsHubMod == 0 promotes
     * ~1/GsHubMod of the corpus to layer 1 (HNSW assigns levels by a
@@ -562,28 +540,18 @@ object Similarity {
       .select("layer", "src", "dst")
   }
 
-  private def layeredFingerprint(dir: String): Option[String] =
-    graft.ModelStore.fingerprint(dir, "embeddings.parquet",
-      s"nndl${NnDescentK}x${NnDescentRounds}h${GsHubMod}k$GsOutK")
-
-  /** The layered index for the corpus at `dir`: deploy the persisted
-    * artifact when its fingerprint matches, else build (reusing the
-    * refined-graph artifact for layer 0 when IT is warm) and persist. */
+  /** The layered index for the corpus at `dir` (the nndl_ artifact):
+    * deployed, else built over the refined graph (itself deployed when
+    * warm). */
   private[graft] def layeredGraphFor(spark: SparkSession, dir: String,
-      c: DataFrame): DataFrame = {
-    val fp = layeredFingerprint(dir)
-    fp.flatMap(f => graft.ModelStore.read(spark, s"nndl_$f",
-        Seq("layer", "src", "dst"))).getOrElse {
-      graft.ModelTelemetry.trains.incrementAndGet()
-      val g = layeredEdgesOn(c, refinedGraphFor(spark, dir, c))
+      c: DataFrame): DataFrame =
+    ModelStore.frame(spark, ModelStore.Source(dir, "embeddings.parquet",
+          s"nndl${NnDescentK}x${NnDescentRounds}h${GsHubMod}k$GsOutK"),
+        ModelStore.Table("nndl", Seq("layer", "src", "dst"), singleFile = false, // O(n*K)
+          casts = Map("layer" -> "long", "src" -> "long", "dst" -> "long"))) {
+      layeredEdgesOn(c, refinedGraphFor(spark, dir, c))
         .localCheckpoint() // consumed by the write and both serve loops
-      fp.foreach(f => graft.ModelStore.write(s"nndl_$f",
-        g.select(col("layer").cast("long").as("layer"),
-          col("src").cast("long").as("src"), col("dst").cast("long").as("dst")),
-        singleFile = false)) // edge list is O(n*K) in corpus vectors
-      g
     }
-  }
 
   /** Generic exact top-k: any (vec_id, embedding, nrm) query set against a
     * corpus of the same shape — broadcast the queries, one parallel pass
@@ -871,129 +839,81 @@ object Similarity {
       .select("vec_id", "c", "p", "n")
   }
 
-  /** K-MEANS MODEL ARTIFACT (train-once / deploy-many) — the BPE-artifact
-    * pattern (TextAnalysis.bpeMergesFor) applied to the other train chain.
-    * Before this, every query in the ann family that deploys the trained
-    * quantizer (ann_kmeans/_recall, ann_multiprobe, ann_ivfpq,
-    * ann_recall_curve, pipe_ann, ann_tier_compare, plus ta_topics /
-    * dd_semdedup / mm wrappers) re-ran the two-Lloyd train inside its own
-    * plan. Now the first trainer persists BOTH codebooks as one tiny
-    * parquet (k x 64 x 2 rows of exact BIGINTs) under /tmp/graft_models,
-    * fingerprint-keyed on embeddings.parquet file metadata, and every
-    * later consumer deploys: assignments cost ONE probe pass
-    * (kmReassign over the stage-2 deploy codebook) and the serving
-    * codebook costs ZERO Lloyd work (the stage-3 rows read back).
-    * The artifact is a pure cache of a deterministic computation — every
-    * stored value is an exact BIGINT (centroids held as (sum, count),
-    * never divided), so a parquet roundtrip is bit-lossless and the
-    * deployed assignment is bit-identical to the fold's
-    * (KmeansModelSpec pins parity + fingerprint invalidation). Any read
-    * anomaly or fingerprint mismatch falls back to the fold and rewrites.
-    * Writes are atomic (unique tmp dir + rename), so overlapping runs
-    * only ever observe a complete model or none. */
-  private val KmModelRoot = graft.ModelStore.Root
+  /** A codebook table as the fold builds it: c long, i INT (the
+    * posexplode position — a coerced i would ripple into join plans),
+    * cS/n long; `lead` columns come first. */
+  private def kmTable(family: String, lead: Seq[String] = Nil): ModelStore.Table =
+    ModelStore.Table(family, lead ++ Seq("c", "i", "cS", "n"),
+      casts = Map("c" -> "long", "i" -> "int"))
 
-  private def kmFingerprintTag(dir: String, tag: String): Option[String] =
-    graft.ModelStore.fingerprint(dir, "embeddings.parquet", tag)
+  /** Codebook rows (c, i, cS, n from column `at` on) as a local bounded
+    * frame (k x 64 rows, broadcast-ready) with the fold's exact schema. */
+  private def kmLocalCb(spark: SparkSession, rows: Seq[Row], at: Int): DataFrame = {
+    import spark.implicits._
+    rows.map(r => (r.getLong(at), r.getInt(at + 1), r.getLong(at + 2), r.getLong(at + 3)))
+      .toDF("c", "i", "cS", "n")
+  }
 
-  private def kmFingerprint(dir: String): Option[String] = kmFingerprintTag(dir, "km2")
-
-  /** One codebook table read back as a local bounded frame with the
-    * fold's exact schema (c long, i int, cS/n long). */
-  private def kmReadCb(spark: SparkSession, fp: String, prefix: String): Option[DataFrame] =
-    try {
-      val d = new java.io.File(KmModelRoot, s"$prefix$fp")
-      if (!d.isDirectory) None
-      else {
-        import spark.implicits._
-        val rows = spark.read.parquet(d.getPath)
-          .select("c", "i", "cS", "n").collect()
-          .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSeq
-        if (rows.isEmpty) None else Some(rows.toDF("c", "i", "cS", "n"))
-      }
-    } catch { case NonFatal(_) => None }
-
-  private def kmWriteCb(spark: SparkSession, fp: String, prefix: String, cb: DataFrame): Unit =
-    graft.ModelStore.write(s"$prefix$fp",
-      cb.select(col("c").cast("long").as("c"), col("i").cast("int").as("i"),
-        col("cS"), col("n")))
-
-  /** Stale-snapshot codebook of ann_refresh (fingerprint tag km2stale) —
-    * the quantizer trained on the stale half (even vec_ids, label-seeded,
+  /** Stale-snapshot codebook of ann_refresh (the kms_ artifact) — the
+    * quantizer trained on the stale half (even vec_ids, label-seeded,
     * two Lloyd rounds) persists like the main codebooks: the refresh
     * gauge re-runs per bench/verify invocation, but "the index trained on
-    * the old snapshot" is by definition train-once. Exact BIGINTs, so the
-    * deployed aStale assignment is bit-identical to the fold's. */
-  private def staleCodebookFor(spark: SparkSession, dir: String, dims: DataFrame): DataFrame = {
-    val fp = kmFingerprintTag(dir, "km2stale")
-    fp.flatMap(kmReadCb(spark, _, "kms_")).getOrElse {
-      graft.ModelTelemetry.trains.incrementAndGet()
+    * the old snapshot" is by definition train-once. */
+  private def staleCodebookFor(spark: SparkSession, dir: String, dims: DataFrame): DataFrame =
+    ModelStore.collected[DataFrame](spark,
+        ModelStore.Source(dir, "embeddings.parquet", "km2stale"), kmTable("kms"),
+        rows => Some(kmLocalCb(spark, rows.toSeq, 0)), identity) {
       val stale = dims.filter(pmod(col("vec_id"), lit(StaleModulus)) === lit(0L))
       val seed = stale.select(col("vec_id"), col("label").cast("long").as("c")).distinct()
       val st1 = kmReassign(stale, kmCentroids(stale, seed))
       val st2 = kmReassign(stale, kmCentroids(stale, st1.select("vec_id", "c")))
-      val cb = kmCentroids(stale, st2.select("vec_id", "c")).localCheckpoint()
-      fp.foreach(kmWriteCb(spark, _, "kms_", cb))
-      cb
+      kmCentroids(stale, st2.select("vec_id", "c")).localCheckpoint()
     }
-  }
 
-  /** (deploy codebook cb2, serving codebook cb3) rebuilt from the
-    * persisted rows — local bounded frames (k x 64 each), broadcast-ready. */
-  private def kmReadModel(spark: SparkSession, fp: String): Option[(DataFrame, DataFrame)] =
-    try {
-      val d = new java.io.File(KmModelRoot, s"km_$fp")
-      if (!d.isDirectory) None
-      else {
-        import spark.implicits._
-        // schema must match the fold's exactly: c long, i INT (posexplode
-        // position), cS/n long — a coerced i would ripple into join plans
-        val rows = spark.read.parquet(d.getPath)
-          .select("stage", "c", "i", "cS", "n").collect()
-          .map(r => (r.getInt(0), r.getLong(1), r.getInt(2), r.getLong(3), r.getLong(4)))
-        def cb(stage: Int): Option[DataFrame] = {
-          val s = rows.filter(_._1 == stage).map(t => (t._2, t._3, t._4, t._5)).toSeq
-          if (s.isEmpty) None else Some(s.toDF("c", "i", "cS", "n"))
-        }
-        for (cb2 <- cb(2); cb3 <- cb(3)) yield (cb2, cb3)
-      }
-    } catch { case NonFatal(_) => None }
-
-  private def kmWriteModel(spark: SparkSession, fp: String,
-      cb2: DataFrame, cb3: DataFrame): Unit =
-    graft.ModelStore.write(s"km_$fp",
-      cb2.withColumn("stage", lit(2))
-        .unionByName(cb3.withColumn("stage", lit(3)))
-        .select(col("stage"), col("c").cast("long").as("c"),
-          col("i").cast("int").as("i"), col("cS"), col("n")))
-
-  /** Cold path: run the label-seeded two-Lloyd fold over dims, persist the
-    * codebooks, return (cb2, cb3, assignFull) — each eagerly checkpointed
-    * (cb2 feeds the write + the final reassign; assignFull feeds the write's
-    * cb3 build + the caller; cb3 feeds the write + serving consumers). */
-  private def kmTrain(spark: SparkSession, dir: String,
-      dims: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    graft.ModelTelemetry.trains.incrementAndGet()
-    val seed = dims.select(col("vec_id"), col("label").cast("long").as("c")).distinct()
-    val as1 = kmReassign(dims, kmCentroids(dims, seed))
-    val cb2 = kmCentroids(dims, as1.select("vec_id", "c")).localCheckpoint()
-    val assignFull = kmReassign(dims, cb2).localCheckpoint()
-    val cb3 = kmCentroids(dims, assignFull.select("vec_id", "c")).localCheckpoint()
-    kmFingerprint(dir).foreach(kmWriteModel(spark, _, cb2, cb3))
-    (cb2, cb3, assignFull)
-  }
+  /** K-MEANS MODEL (the km_ artifact): (deploy codebook cb2, serving
+    * codebook cb3, the fold's final assignment — None when deployed).
+    * Every ann-family query that deploys the trained quantizer
+    * (ann_kmeans/_recall, ann_multiprobe, ann_ivfpq, ann_recall_curve,
+    * pipe_ann, ann_tier_compare, plus ta_topics / dd_semdedup / mm
+    * wrappers) shares it: the first trainer persists BOTH codebooks as
+    * one tiny table (k x 64 x 2 rows, tagged by `stage`), and a warm
+    * consumer pays ONE probe pass for assignments (kmReassign over cb2)
+    * and ZERO Lloyd work for the serving codebook. Every stored value is
+    * an exact BIGINT (centroids held as (sum, count), never divided), so
+    * the deployed assignment is bit-identical to the fold's
+    * (KmeansModelSpec pins parity + fingerprint invalidation). Cold: the
+    * label-seeded two-Lloyd fold over `dims`, each result eagerly
+    * checkpointed (cb2 feeds the write + the final reassign; assignFull
+    * feeds cb3's build + the caller; cb3 feeds the write + serving). */
+  private def kmModel(spark: SparkSession, dir: String,
+      dims: => DataFrame): (DataFrame, DataFrame, Option[DataFrame]) =
+    ModelStore.collected[(DataFrame, DataFrame, Option[DataFrame])](spark,
+        ModelStore.Source(dir, "embeddings.parquet", "km2"), kmTable("km", Seq("stage")),
+        rows => {
+          def cb(stage: Int): Option[DataFrame] =
+            Some(rows.toSeq.filter(_.getInt(0) == stage)).filter(_.nonEmpty)
+              .map(kmLocalCb(spark, _, 1))
+          for (cb2 <- cb(2); cb3 <- cb(3)) yield (cb2, cb3, None)
+        },
+        { case (cb2, cb3, _) =>
+          cb2.withColumn("stage", lit(2)).unionByName(cb3.withColumn("stage", lit(3)))
+        }) {
+      val d = dims
+      val seed = d.select(col("vec_id"), col("label").cast("long").as("c")).distinct()
+      val as1 = kmReassign(d, kmCentroids(d, seed))
+      val cb2 = kmCentroids(d, as1.select("vec_id", "c")).localCheckpoint()
+      val assignFull = kmReassign(d, cb2).localCheckpoint()
+      val cb3 = kmCentroids(d, assignFull.select("vec_id", "c")).localCheckpoint()
+      (cb2, cb3, Some(assignFull))
+    }
 
   /** (dims, final assignment, serving codebook) — artifact-backed: warm
     * consumers pay one probe pass for assignments and nothing for the
     * serving codebook. */
   private def kmeansFull(spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
     val dims = kmDims(spark, dir)
-    kmFingerprint(dir).flatMap(kmReadModel(spark, _)) match {
-      case Some((cb2, cb3)) => (dims, kmReassign(dims, cb2), cb3)
-      case None =>
-        val (_, cb3, assignFull) = kmTrain(spark, dir, dims)
-        (dims, assignFull, cb3)
-    }
+    val (cb2, cb3, fold) = kmModel(spark, dir, dims)
+    (dims, fold.getOrElse(kmReassign(dims, cb2)), cb3)
   }
 
   /** (dims, final assignment) — the two-Lloyd chain every quantizer
@@ -1046,29 +966,11 @@ object Similarity {
     * checks the bound, and in SimilaritySpec. */
   val MultiProbeP = 6
 
-  /** Multi-probe IVF search (the fix for ann_kmeans_recall's measured ~0.2
-    * recall@3 of single-cluster probing): rank ALL k trained centroids per
-    * query by the SAME exact-integer distance the Lloyd rounds use
-    * (p = sum_i (xq_i*n - S_i)^2, compare p/n^2 — one correctly-rounded
-    * double division, bit-portable), probe the closest MultiProbeP
-    * clusters, exact-cosine rerank within the probed union. The standard
-    * IVF nprobe>1 trade: ~P/k of the corpus scanned instead of 1/k, recall
-    * jumps from ~0.2 to ~0.9 (measured; spec-pinned >= 0.8 mean).
-    *
-    * At 100 TB: the codebook is k x 64 tiny rows (broadcast); centroid
-    * ranking is per-query O(k) behind that broadcast — no shuffle; the
-    * candidate scan partitions on the cluster key and reads only the P
-    * probed partitions per query (partition pruning on a clustered layout),
-    * exactly how a disk-resident IVF index shards. Probe pairs are BOUNDED
-    * at queries x P by construction — n_probed in the output proves it. */
   /** Trained codebook of the FINAL two-round-Lloyd assignment: (c, i, cS,
     * n), k x 64 rows — the static side of the multi-probe search.
     * KmeansModelSpec checks that a warm deploy equals the cold train. */
   def trainedCodebook(spark: SparkSession, dir: String): DataFrame =
-    kmFingerprint(dir).flatMap(kmReadModel(spark, _)) match {
-      case Some((_, cb3)) => cb3 // warm: zero Lloyd work, no corpus scan
-      case None => kmTrain(spark, dir, kmDims(spark, dir))._2
-    }
+    kmModel(spark, dir, kmDims(spark, dir))._2 // warm: no Lloyd work, no corpus scan
 
   /** TOPIC DISCOVERY (ta_topics) — the BERTopic-lite corpus-exploration
     * deliverable: cluster the embedded docs with the trained k-means
@@ -1174,6 +1076,21 @@ object Similarity {
       .orderBy("qid", "k")
   }
 
+  /** Multi-probe IVF search (the fix for ann_kmeans_recall's measured ~0.2
+    * recall@3 of single-cluster probing): rank ALL k trained centroids per
+    * query by the SAME exact-integer distance the Lloyd rounds use
+    * (p = sum_i (xq_i*n - S_i)^2, compare p/n^2 — one correctly-rounded
+    * double division, bit-portable), probe the closest MultiProbeP
+    * clusters, exact-cosine rerank within the probed union. The standard
+    * IVF nprobe>1 trade: ~P/k of the corpus scanned instead of 1/k, recall
+    * jumps from ~0.2 to ~0.9 (measured; spec-pinned >= 0.8 mean).
+    *
+    * At 100 TB: the codebook is k x 64 tiny rows (broadcast); centroid
+    * ranking is per-query O(k) behind that broadcast — no shuffle; the
+    * candidate scan partitions on the cluster key and reads only the P
+    * probed partitions per query (partition pruning on a clustered layout),
+    * exactly how a disk-resident IVF index shards. Probe pairs are BOUNDED
+    * at queries x P by construction — n_probed in the output proves it. */
   def multiprobe(spark: SparkSession, dir: String): DataFrame = {
     // cb = trained codebook of the FINAL assignment, (c, i, cS, n), k x 64
     // rows — the artifact-backed serving codebook (warm: read, not rebuilt)

@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.ModelStore
 import graft.sources.Tables._
-import scala.util.control.NonFatal
 
 /** Text analysis suite over the `documents` table (SURVEY.md §2.E).
   *
@@ -292,73 +292,41 @@ object TextAnalysis {
   def bpeTrain(spark: SparkSession, dir: String): DataFrame = {
     val docs = documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
-    val fp = bpeFingerprint(dir)
-    fp.flatMap(bpeReadModel(spark, _)) match {
-      case Some(pairsN) =>
-        // deployed-artifact path: merges are known literals, so the 4
-        // argmax barriers vanish; token counts still come from the data
-        bpeTrainAssemble(pairsN, bpeReplayFrames(docs, pairsN, off = 1))
-      case None =>
-        graft.ModelTelemetry.trains.incrementAndGet()
-        val (pairsN, frames) = bpeLearn(docs)
-        fp.foreach(bpeWriteModel(spark, _, pairsN))
-        bpeTrainAssemble(pairsN, frames)
+    var folded = Option.empty[Seq[DataFrame]] // the cold fold's round frames
+    val pairsN = bpeModel(spark, dir, BpeRounds) {
+      val (learned, frames) = bpeLearn(docs)
+      folded = Some(frames)
+      learned
     }
+    // deployed-artifact path: merges are known literals, so the 4 argmax
+    // barriers vanish; token counts still come from the data
+    bpeTrainAssemble(pairsN, folded.getOrElse(bpeReplayFrames(docs, pairsN, off = 1)))
   }
 
-  /** BPE MODEL ARTIFACT (train-once / deploy-many): the learned merge
-    * table persisted as parquet under /tmp/graft_models, keyed by a
-    * fingerprint of the corpus FILES (dir path + per-file size + mtime —
-    * pure filesystem metadata, no scan), mirroring ta_nb_train's
-    * model-as-output shape. Before this, ta_bpe_train / ta_bpe_encode /
-    * ta_fertility each re-ran the 4-argmax-barrier fold (~17s of a 210s
-    * bench); a deployment trains ONCE and ships the merge table.
-    * Whichever of the three queries runs first in a fresh environment
-    * trains and persists; the rest deploy. The artifact is a pure cache
-    * of a deterministic computation: a fingerprint mismatch (regenerated
-    * testdata) or ANY read anomaly falls back to the fold and rewrites —
-    * results are bit-identical either way (BpeModelSpec pins
-    * artifact/fold parity and fingerprint invalidation). Writes are
-    * atomic (unique tmp dir + rename), so a Bench overlapping a Verify
-    * can only ever observe a complete model or none. */
-  private val BpeModelRoot = graft.ModelStore.Root
-
-  private def bpeFingerprint(dir: String, rounds: Int = BpeRounds): Option[String] =
-    graft.ModelStore.fingerprint(dir, "documents.parquet", rounds.toString)
-
-  private def bpeReadModel(spark: SparkSession, fp: String,
-      rounds: Int = BpeRounds): Option[Seq[(String, String, Long)]] =
-    try {
-      val d = new java.io.File(BpeModelRoot, s"bpe_$fp")
-      if (!d.isDirectory) None
-      else {
-        val rows = spark.read.parquet(d.getPath).orderBy("round")
-          .select("bl", "br", "n_pair").collect()
-        if (rows.length == rounds)
-          Some(rows.toSeq.map(r => (r.getString(0), r.getString(1), r.getLong(2))))
-        else None
-      }
-    } catch { case NonFatal(_) => None }
-
-  private def bpeWriteModel(spark: SparkSession, fp: String, pairs: Seq[(String, String, Long)]): Unit = {
+  /** BPE MODEL (the bpe_ artifact): the learned merge table, one row
+    * per round, keyed on documents.parquet and the round count — the
+    * ta_nb_train model-as-output shape. ta_bpe_train / ta_bpe_encode /
+    * ta_fertility each re-ran the 4-argmax-barrier fold before it (~17s
+    * of a 210s bench); now whichever runs first trains and the rest
+    * deploy, bit-identical either way (BpeModelSpec pins artifact/fold
+    * parity and fingerprint invalidation). A deploy is one collect; a
+    * table of any other length than `rounds` is a miss. */
+  private def bpeModel(spark: SparkSession, dir: String, rounds: Int)(
+      learn: => Seq[(String, String, Long)]): Seq[(String, String, Long)] = {
     import spark.implicits._
-    graft.ModelStore.write(s"bpe_$fp",
-      pairs.zipWithIndex.map { case ((bl, br, n), i) => (i + 1L, bl, br, n) }
-        .toDF("round", "bl", "br", "n_pair"))
+    ModelStore.collected[Seq[(String, String, Long)]](spark,
+        ModelStore.Source(dir, "documents.parquet", rounds.toString),
+        ModelStore.Table("bpe", Seq("round", "bl", "br", "n_pair")),
+        rows => if (rows.length != rounds) None else Some(rows.sortBy(_.getLong(0)).toSeq
+          .map(r => (r.getString(1), r.getString(2), r.getLong(3)))),
+        _.zipWithIndex.map { case ((bl, br, n), i) => (i + 1L, bl, br, n) }
+          .toDF("round", "bl", "br", "n_pair"))(learn)
   }
 
-  /** Learned merges for the corpus at `dir`: deploy the persisted model
-    * when its fingerprint matches, else run the fold and persist. */
+  /** Learned merges for the corpus at `dir`: deployed, else the fold. */
   private[graft] def bpeMergesFor(spark: SparkSession, dir: String,
-      docs: => DataFrame, rounds: Int = BpeRounds): Seq[(String, String, Long)] = {
-    val fp = bpeFingerprint(dir, rounds)
-    fp.flatMap(bpeReadModel(spark, _, rounds)).getOrElse {
-      graft.ModelTelemetry.trains.incrementAndGet()
-      val (pairsN, _) = bpeLearn(docs, rounds)
-      fp.foreach(bpeWriteModel(spark, _, pairsN))
-      pairsN
-    }
-  }
+      docs: => DataFrame, rounds: Int = BpeRounds): Seq[(String, String, Long)] =
+    bpeModel(spark, dir, rounds)(bpeLearn(docs, rounds)._1)
 
   /** Replay known merges over the `off`-slice as one literal chain.
     * Returns frames for rounds 0..pairsN.length, the shape bpeLearn

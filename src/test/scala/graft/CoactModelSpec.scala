@@ -51,13 +51,14 @@ class CoactModelSpec extends SparkSpecBase {
     val dir = writeEventsCorpus()
     val t0 = ModelTelemetry.trains.get()
     val triCold = rows(GraphOps.triangleStats(spark, dir))
-    assert(ModelTelemetry.trains.get() == t0 + 1, "first consumer cold-trains once")
+    // two builds: the pairs, then the edges over them
+    assert(ModelTelemetry.trains.get() == t0 + 2, "first consumer cold-trains pairs + edges")
     // the cap dropped the 21-user cell; the duplicate edge collapsed
     assert(triCold == Seq(Seq(3L, 3L, 3L, 1L, 10000L)),
       s"expected the clean 3-node triangle census: $triCold")
     val prCold = rows(GraphOps.pagerank(spark, dir))
     val trCold = rows(GraphOps.temporalReach(spark, dir)) // pairs artifact
-    assert(ModelTelemetry.trains.get() == t0 + 1,
+    assert(ModelTelemetry.trains.get() == t0 + 2,
       "pagerank and temporalReach must deploy the persisted chain")
     assert(rows(GraphOps.triangleStats(spark, dir)) == triCold,
       "triangles: deploy diverged from build")

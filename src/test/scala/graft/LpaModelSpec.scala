@@ -4,7 +4,7 @@ import graft.operators.GraphOps
 import org.apache.spark.sql.DataFrame
 
 /** Pins the LPA-chain model artifact (train-once / deploy-many — the
-  * kmTrain pattern on the graph tier): the first of gr_lpa /
+  * kmModel pattern on the graph tier): the first of gr_lpa /
   * gr_modularity / gr_louvain_move persists the capped co-order edge
   * list and the final LPA labels keyed by a lineitem fingerprint, and
   * every deployed result must be bit-identical to the cold build — the

@@ -107,9 +107,15 @@ def type_class(t):
         return "string"
     return s
 
-def arrow_types(rel):
+def fetch(rel):
+    """Run `rel` once: its materialized Arrow table and its type classes."""
     tbl = rel.fetch_arrow_table()
-    return {f.name: type_class(f.type) for f in tbl.schema}
+    return tbl, {f.name: type_class(f.type) for f in tbl.schema}
+
+def sorted_rows(tbl, cols):
+    """Normalized rows of a fetched table, columns in `cols` order, sorted."""
+    sel = con.from_arrow(tbl).select(", ".join(f'"{c}"' for c in cols))
+    return sorted(tuple(norm(v) for v in row) for row in sel.fetchall())
 
 fails = []
 for name, sql in sorted(oracle.items()):
@@ -121,16 +127,13 @@ for name, sql in sorted(oracle.items()):
             fails.append(name)
             print(f"FAIL {name}: cols spark={scols} duck={dcols}")
             continue
-        stypes, dtypes = arrow_types(spark_rel), arrow_types(duck_rel)
+        (s_tbl, stypes), (d_tbl, dtypes) = fetch(spark_rel), fetch(duck_rel)
         badtypes = {c: (stypes[c], dtypes[c]) for c in scols if stypes[c] != dtypes[c]}
         if badtypes:
             fails.append(name)
             print(f"FAIL {name}: type mismatch (spark, duck): {badtypes}")
             continue
-        s_rows = sorted(tuple(norm(v) for v in row) for row in
-                        spark_rel.select(", ".join(f'"{c}"' for c in scols)).fetchall())
-        d_rows = sorted(tuple(norm(v) for v in row) for row in
-                        duck_rel.select(", ".join(f'"{c}"' for c in dcols)).fetchall())
+        s_rows, d_rows = sorted_rows(s_tbl, scols), sorted_rows(d_tbl, dcols)
         if s_rows != d_rows:
             fails.append(name)
             diff = [(a, b) for a, b in zip(s_rows, d_rows) if a != b]
