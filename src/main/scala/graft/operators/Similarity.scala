@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 import graft.ModelStore
 import graft.sources.Tables._
 
@@ -180,13 +182,7 @@ object Similarity {
     * refined-graph index artifact (ann_graph_refined). Every returned
     * frame is localCheckpointed (multi-consumer per round). */
   private[graft] def nndGraphs(c: DataFrame): Seq[DataFrame] = {
-    val nTot = c.agg(count(lit(1)).as("n"))
-    val g0 = c.select(col("vec_id").as("src")).crossJoin(broadcast(nTot))
-      .select(col("src"), col("n"), explode(expr("sequence(0, 4)")).as("j"))
-      .withColumn("h", expr("CAST(conv(substring(md5(concat('nnd:', " +
-        "CAST(src AS STRING), ':', CAST(j AS STRING))), 1, 6), 16, 10) AS BIGINT) % n"))
-      .withColumn("dst", expr("CASE WHEN h = src THEN (h + 1) % n ELSE h END"))
-      .select("src", "dst").distinct()
+    val g0 = kOutOn(c, "nnd", NnDescentK)
       .localCheckpoint() // consumers: sym sides, union, eval, next round
     val wRe = Window.partitionBy("u").orderBy(col("cos").desc, col("w").asc)
     def refine(g: DataFrame): DataFrame = {
@@ -250,25 +246,23 @@ object Similarity {
   /** GRAPH-BASED ANN SEARCH (ann_graph_search) — the SERVING pattern of
     * the HNSW/DiskANN family: beam search over a kNN graph. Per query,
     * keep a beam of the W best-scored nodes; each hop expands the beam
-    * through the symmetrized graph, exact-rescores the frontier on the
-    * native vector_dot, and re-trims to W (greedy best-first with a
-    * bounded frontier — Malkov & Yashunin's ef-search loop, hop-bounded
-    * by the repo's fixed-rounds rule). The graph here is the
-    * DETERMINISTIC random K-out init (the NN-Descent starting graph,
-    * 'gs:'-seeded) so the checked object is the SEARCH — the build is
-    * ann_nndescent's already-checked concern; on a random graph the
-    * beam's hop-by-hop climb is the visible behavior. Entry point is
-    * fixed (node 0; node 1 for query 0 — never self). Output: each
-    * query's final top-3 (rank, id, 4dp cosine).
+    * through the symmetrized graph, exact-rescores the frontier and
+    * re-trims to W (Malkov & Yashunin's ef-search loop, hop-bounded by
+    * the repo's fixed-rounds rule). The graph is the DETERMINISTIC
+    * random K-out init ('gs:'-seeded) so the checked object is the
+    * SEARCH, not the build. Entry point is fixed (node 0; node 1 for
+    * query 0 — never self). Output: each query's final top-3 (rank, id,
+    * 4dp cosine).
     *
-    * Scale: per hop ONE bounded join — beam rows (queries x W) against
-    * the ≤2K-out-degree symmetric adjacency — then a broadcast-query
-    * rescore and a per-query top-W window; nothing touches more than
-    * queries x W x 2K rows per hop, independent of corpus size. Beams
-    * localCheckpoint per hop (the iterative-algorithm rule). */
+    * Scale: the beam is bounded by construction (queries x W nodes with
+    * ≤2K symmetric neighbours each), so it lives on the driver (the
+    * ann_mmr rule). Per hop, two bounded lookup jobs — the beam nodes'
+    * edges in either direction, then the vectors not held yet — and
+    * local scoring, max merge and top-W trim; the graph is checkpointed
+    * once per serve, since every hop scans it. */
   def graphSearch(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
-      .localCheckpoint() // graph init + rescore lookups x hops + query side
+      .localCheckpoint() // graph init + vector lookups x hops + query side
     beamServe(c, gsBackboneOn(c))
   }
 
@@ -276,87 +270,109 @@ object Similarity {
     * ann_graph_search's serving graph, ann_graph_refined's anti-trap
     * backbone, and ann_graph_recall's random tier (one definition, three
     * consumers). */
-  private[graft] def gsBackboneOn(c: DataFrame): DataFrame = {
+  private[graft] def gsBackboneOn(c: DataFrame): DataFrame = kOutOn(c, "gs", GsOutK)
+
+  /** k md5-keyed ('<tag>:src:j') out-edges per dense corpus id, never a
+    * self edge — the NN-Descent init ('nnd') and the long-link backbone. */
+  private def kOutOn(c: DataFrame, tag: String, k: Int): DataFrame = {
     val nTot = c.agg(count(lit(1)).as("n"))
     c.select(col("vec_id").as("src")).crossJoin(broadcast(nTot))
-      .select(col("src"), col("n"), explode(expr(s"sequence(0, ${GsOutK - 1})")).as("j"))
-      .withColumn("h", expr("CAST(conv(substring(md5(concat('gs:', " +
+      .select(col("src"), col("n"), explode(expr(s"sequence(0, ${k - 1})")).as("j"))
+      .withColumn("h", expr(s"CAST(conv(substring(md5(concat('$tag:', " +
         "CAST(src AS STRING), ':', CAST(j AS STRING))), 1, 6), 16, 10) AS BIGINT) % n"))
       .withColumn("dst", expr("CASE WHEN h = src THEN (h + 1) % n ELSE h END"))
       .select("src", "dst").distinct()
   }
 
-  /** Bounded query set of the graph-serving family (vec_id < 10). */
-  private def beamQueries(c: DataFrame): DataFrame =
-    c.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("nrm").as("qn"))
-      .localCheckpoint() // rescore joins x hops
+  /** A corpus row on the driver: its embedding and Spark's `nrm`. */
+  private final case class BeamVec(v: Array[Float], nrm: Double)
 
-  /** Exact-rescore of a (qid, cid) candidate frame: broadcast queries,
-    * equi-join the corpus vectors, native vector_dot cosine. */
-  private def beamScore(c: DataFrame, q: DataFrame)(cand: DataFrame): DataFrame = cand
-    .join(broadcast(q), Seq("qid"))
-    .join(c.select(col("vec_id").as("cid"), col("embedding").as("cv"),
-      col("nrm").as("cn")), Seq("cid"))
-    .withColumn("cos", dot("qv", "cv") / (col("qn") * col("cn")))
-    .select("qid", "cid", "cos")
+  /** Per query id, the beam's candidate id -> cosine. */
+  private type Beam = Map[Long, Map[Long, Double]]
 
-  /** The hop loop itself: expand/rescore/re-trim `hops` times from an
-    * ALREADY-SCORED initial beam over base graph `g` (symmetrized here).
-    * Factored out so the layered serve can chain two loops (upper layer,
-    * then base layer seeded by the upper beam). Per-hop cost stays
-    * queries x W x out-degree; beams localCheckpoint per hop (the
-    * iterative-algorithm rule). */
-  private def beamLoop(c: DataFrame, q: DataFrame, g: DataFrame,
-      init: DataFrame, hops: Int): DataFrame =
-    beamLoopSym(c, q, beamSym(g), init, hops)
+  /** The first k in (cos desc, cid asc) row_number order, by Spark's
+    * double ordering (NaN greatest, -0.0 == 0.0). */
+  private def beamTop(b: Map[Long, Double], k: Int): Seq[(Long, Double)] =
+    b.toSeq.sortWith { case ((ca, a), (cb, bb)) =>
+      val o = SQLOrderingUtil.compareDoubles(bb, a)
+      if (o != 0) o < 0 else ca < cb
+    }.take(k)
 
-  /** Symmetrized, deduped, checkpointed adjacency of a (src, dst) graph —
-    * built once per serve even when two lanes share the base layer. */
-  private def beamSym(g: DataFrame): DataFrame =
-    g.select((col("src") + lit(0L)).as("src"), (col("dst") + lit(0L)).as("dst"))
-      .unionByName(g.select((col("dst") + lit(0L)).as("src"), (col("src") + lit(0L)).as("dst")))
-      .distinct()
-      .localCheckpoint() // one adjacency join per hop
-
-  private def beamLoopSym(c: DataFrame, q: DataFrame, sym: DataFrame,
-      init: DataFrame, hops: Int): DataFrame = {
-    val wB = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid").asc)
-    var beam = init
-    for (_ <- 1 to hops) {
-      val expand = beam.select(col("qid"), col("cid").as("src"))
-        .join(sym, Seq("src"))
-        .select(col("qid"), col("dst").as("cid"))
-        .filter(col("qid") =!= col("cid"))
-        .distinct()
-      beam = beamScore(c, q)(expand).unionByName(beam)
-        // a frontier node already in the beam scores identically — max dedups
-        .groupBy("qid", "cid").agg(max(col("cos")).as("cos"))
-        .withColumn("rn", row_number().over(wB)).filter(col("rn") <= GsBeam)
-        .select("qid", "cid", "cos")
-        .localCheckpoint() // next hop + final trim
+  /** `max(cos)` per cid, by Spark's double ordering. */
+  private def beamMerge(a: Map[Long, Double], b: Iterable[(Long, Double)]): Map[Long, Double] =
+    b.foldLeft(a) { case (m, (cid, cos)) =>
+      m.updated(cid, m.get(cid).filter(SQLOrderingUtil.compareDoubles(_, cos) >= 0).getOrElse(cos))
     }
-    beam
+
+  /** `dot(qv, cv) / (qn * cn)` as Spark evaluates it: VectorDot's left
+    * fold of float->double products over Spark's norms; a zero divisor
+    * raises, as the session's ANSI Divide does. */
+  private def beamCos(q: BeamVec, c: BeamVec): Double = {
+    require(q.v.length == c.v.length, s"vector_dot: length mismatch ${q.v.length} vs ${c.v.length}")
+    var acc = 0.0
+    for (i <- q.v.indices) acc += q.v(i).toDouble * c.v(i).toDouble
+    val d = q.nrm * c.nrm
+    if (d == 0.0) throw new ArithmeticException("[DIVIDE_BY_ZERO] Division by zero (beam cosine)")
+    acc / d
   }
 
-  /** Final per-query top-3 publish of a served beam. */
-  private def beamTrim(beam: DataFrame): DataFrame = {
-    val wB = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid").asc)
-    beam
-      .withColumn("rank", row_number().over(wB)).filter(col("rank") <= 3)
+  /** One bounded vector lookup job: the corpus rows matching `pred`. */
+  private def beamFetch(c: DataFrame, pred: Column): Map[Long, BeamVec] =
+    c.filter(pred).select("vec_id", "embedding", "nrm").collect()
+      .map(r => r.getLong(0) -> BeamVec(r.getSeq[Float](1).toArray, r.getDouble(2))).toMap
+
+  /** One lookup job for the queries (vec_id < 10) and their entries
+    * (`alt` for query 0, else 0 — never self): the scored entry beam
+    * (no beam when the entry is not in the corpus) and the vectors. */
+  private def beamSeed(c: DataFrame, alt: Long): (Beam, Map[Long, BeamVec]) = {
+    val got = beamFetch(c, col("vec_id") < 10 || col("vec_id").isin(0L, alt))
+    (got.filter(_._1 < 10).flatMap { case (qid, qv) =>
+      val e = if (qid == 0L) alt else 0L
+      got.get(e).map(v => qid -> Map(e -> beamCos(qv, v)))
+    }, got)
+  }
+
+  /** `hops` expand/rescore/re-trim rounds from a scored beam over edge
+    * list `g`; returns the beam and the vectors held after it. */
+  private def beamHops(c: DataFrame, g: DataFrame, init: Beam, vecs0: Map[Long, BeamVec],
+      hops: Int): (Beam, Map[Long, BeamVec]) =
+    (1 to hops).foldLeft((init, vecs0)) { case ((beam, known), _) =>
+      val ids = beam.valuesIterator.flatMap(_.keys).toSeq.distinct.sorted
+      val adj = g.filter(col("src").isin(ids: _*) || col("dst").isin(ids: _*))
+        .select("src", "dst").collect()
+        .flatMap(r => Seq(r.getLong(0) -> r.getLong(1), r.getLong(1) -> r.getLong(0)))
+        .groupMap(_._1)(_._2)
+      val cands = beam.map { case (qid, b) =>
+        qid -> (b.keySet.flatMap(adj.getOrElse(_, Array.empty[Long])) - qid)
+      }
+      val missing = (cands.valuesIterator.flatten.toSet -- known.keySet).toSeq.sorted
+      val vecs = if (missing.isEmpty) known else known ++ beamFetch(c, col("vec_id").isin(missing: _*))
+      // a frontier node already in the beam scores identically — max
+      // dedups; a cid the corpus lacks is dropped (the oracle's inner join)
+      (beam.map { case (qid, b) =>
+        qid -> beamTop(beamMerge(b, cands(qid).flatMap(cid =>
+          vecs.get(cid).map(v => cid -> beamCos(vecs(qid), v)))), GsBeam).toMap
+      }, vecs)
+    }
+
+  /** Per-query top-3 of a served beam as a local frame, r4 in Spark. */
+  private def beamPublish(spark: SparkSession, beam: Beam): DataFrame = {
+    val rows = beam.toSeq.flatMap { case (qid, b) =>
+      beamTop(b, 3).zipWithIndex.map { case ((cid, cos), i) => Row(qid, i + 1, cid, cos) }
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+        StructField("qid", LongType), StructField("rank", IntegerType, nullable = false),
+        StructField("cid", LongType), StructField("cos", DoubleType))))
       .select(col("qid"), col("rank"), col("cid"), r4(col("cos")).as("cos_sim"))
       .orderBy("qid", "rank")
   }
 
-  /** The ef-search loop over any (src, dst) base graph — shared by
-    * ann_graph_search (random init) and ann_graph_refined (the persisted
-    * NN-Descent index). Per-hop cost stays queries x W x out-degree. */
+  /** The ef-search serve over any (src, dst) graph — ann_graph_search,
+    * ann_graph_refined and ann_graph_recall's tiers. */
   private[graft] def beamServe(c: DataFrame, g0: DataFrame): DataFrame = {
-    val q = beamQueries(c)
-    val b0 = beamScore(c, q)(q.select(col("qid"))
-        .withColumn("cid", expr("CASE WHEN qid = 0 THEN 1L ELSE 0L END")))
-      .localCheckpoint()
-    beamTrim(beamLoop(c, q, g0, b0, GsHops))
+    val g = g0.select("src", "dst").localCheckpoint() // one edge lookup per hop
+    val (b0, vecs) = beamSeed(c, 1L)
+    beamPublish(c.sparkSession, beamHops(c, g, b0, vecs, GsHops)._1)
   }
 
   /** GRAPH-ANN INDEX ARTIFACT + SERVE (ann_graph_refined) — closes
@@ -371,13 +387,12 @@ object Similarity {
     * (hybrid) at sf0.01, the exact failure HNSW's layers / DiskANN's
     * alpha-pruned long edges exist to fix, and ann_graph_recall keeps
     * all three tiers visible. Warm consumers skip the entire build
-    * (3 refinement rounds); any read anomaly falls back and rewrites
-    * (the bpe/kmeans artifact contract — results bit-identical either
-    * way, edges being exact longs). The oracle replays build + serve as
+    * (ModelStore's deploy-or-build; edges are exact longs, so results
+    * are bit-identical either way). The oracle replays build + serve as
     * one chained-CTE program. */
   def graphRefined(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
-      .localCheckpoint() // build rescores x rounds + serve rescores x hops
+      .localCheckpoint() // build rescores x rounds + serve lookups x hops
     beamServe(c,
       refinedGraphFor(spark, dir, c).unionByName(gsBackboneOn(c)).distinct())
   }
@@ -389,13 +404,13 @@ object Similarity {
     * against the exact top-3 — the two-row table that justifies paying
     * the build. All counts exact integers; recall is the shared r4 form.
     *
-    * Scale: two beam serves (each bounded at queries x W x out-degree
-    * per hop) + one bounded-broadcast exact pass (the ann_recall
-    * sanctioned shape); the refined graph comes from the artifact, so a
-    * warm run pays no build. */
+    * Scale: three beam serves (two bounded lookups per hop, at most
+    * queries x W x out-degree rows) + one bounded-broadcast exact pass
+    * (the ann_recall sanctioned shape); the refined graph comes from the
+    * artifact, so a warm run pays no build. */
   def graphRecall(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
-      .localCheckpoint() // init + two serves' rescores + exact pass
+      .localCheckpoint() // init + three serves' vector lookups + exact pass
     // the random backbone, the exact baseline, and the refined-index
     // deploy/build are mutually independent consumers of the checkpointed
     // corpus — materialize them concurrently (guide §2.6)
@@ -415,7 +430,7 @@ object Similarity {
           r4(col("n_hits").cast("double") / col("n_exact")).as("recall_at_3"))
     // three independent serves over checkpointed parents (c, rand, exact;
     // refined is the artifact scan or the build's checkpoint) — concurrent
-    // submission overlaps their per-hop checkpoint jobs (guide §2.6)
+    // submission overlaps their per-hop lookup jobs (guide §2.6)
     Par.run(Seq(
       () => tierRow("1_random", rand),
       () => tierRow("2_refined", refined),
@@ -450,69 +465,52 @@ object Similarity {
     * in the entry's neighborhood (recall 0.17 refined-only vs 0.60
     * hybrid at sf0.01). The hybrid tier patched that by unioning random
     * long links into ONE flat graph; the layered index persists BOTH
-    * tiers as one edge list with a `layer` column — layer 1 = a sparse
-    * hub subset (vec_id % GsHubMod == 0) wired by md5-derived K-out long
-    * links hub-to-hub (each hop crosses ~GsHubMod times more of the id
-    * space than a base-layer hop), layer 0 = the persisted NN-Descent
-    * kNN edges merged with the flat long-link backbone (the DiskANN
-    * base-graph shape, so the base serve is exactly the hybrid tier's) —
-    * and serves TOP-DOWN: GsHops beam hops over layer 1 navigate
-    * coarsely to the query's region, then the surviving beam seeds a
-    * base-layer descent lane, published as the union-top-3 with the
-    * fixed-entry lane (see layeredServe for why two lanes — greedy beam
-    * search is not seed-monotone, and the entry lane is what makes the
-    * pinned recall floor structural rather than statistical). The spec
-    * pins recall(layered) >= recall(hybrid) on the measured corpus plus
-    * artifact/fold parity and fingerprint invalidation; the oracle
-    * replays build + both serve phases as one MATERIALIZED chained-CTE
-    * program.
+    * tiers as one edge list with a `layer` column (layeredEdgesOn: hub
+    * long links on layer 1, each hop crossing ~GsHubMod times more of the
+    * id space; refined kNN edges + the flat backbone on layer 0) and
+    * serves TOP-DOWN (layeredServe). The spec pins recall(layered) >=
+    * recall(hybrid) plus artifact/fold parity and fingerprint
+    * invalidation; the oracle replays build + both serve phases as one
+    * MATERIALIZED chained-CTE program.
     *
     * Scale: the upper layer has n/GsHubMod nodes with out-degree GsOutK
-    * (built by pure arithmetic on the one-row corpus count — no window,
-    * no shuffle beyond the distinct); serve cost is 2 x GsHops bounded
-    * hops (queries x W x 2K rows each, corpus-independent); the artifact
-    * write is partitioned (O(n*K) edges, never one task). */
+    * (pure arithmetic on the one-row corpus count — no window, no shuffle
+    * beyond the distinct); the serve is 3 x GsHops driver-side hops, each
+    * two bounded lookup jobs (queries x W x 2K rows, corpus-independent);
+    * the artifact write is partitioned (O(n*K) edges, never one task). */
   def graphLayered(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir).localCheckpoint()
-    val g = layeredGraphFor(spark, dir, c)
-      .localCheckpoint() // the serve filters it once per layer
-    layeredServe(c, g)
+    layeredServe(c, layeredGraphFor(spark, dir, c))
   }
 
   /** Top-down serve over a (layer, src, dst) index: entry at the fixed
-    * hub (vec_id 0; GsHubMod for query 0 — never self), upper loop over
-    * layer-1 long links, lower loop over layer-0 kNN edges seeded by the
-    * upper beam. Exposed for the recall-floor spec. */
-  private[graft] def layeredServe(c: DataFrame, g: DataFrame): DataFrame = {
-    val q = beamQueries(c)
-    val b0 = beamScore(c, q)(q.select(col("qid"))
-        .withColumn("cid", expr(s"CASE WHEN qid = 0 THEN ${GsHubMod}L ELSE 0L END")))
-      .localCheckpoint()
-    val sym0 = beamSym(g.filter(col("layer") === 0L).select("src", "dst"))
-    // Two base-layer lanes, published as the top-3 of their union:
-    // the DESCENT lane runs from the upper beam (the HNSW path — at
-    // scale the hub warm start is what finds the query's region), and
-    // the ENTRY lane replays the flat serve's exact trajectory from the
-    // fixed entry. Greedy beam search is not monotone in seed quality
-    // (a better-scored seed set can push out the node whose expansion
-    // held the answer), so seeding ONE lane with both was measured
-    // losing per-query coin flips vs the flat hybrid; keeping the entry
-    // lane intact makes the pinned floor recall(layered) >= recall(flat
-    // hybrid) structural — the layered candidate set contains the flat
-    // serve's, and a published exact-top-3 hit can only be displaced by
-    // another exact-top-3 member under the same (cos, cid) order.
-    // lane A is independent of the upper-layer loop — run it concurrently
-    // with [upper loop -> lane B] so the two hop-checkpoint chains overlap
-    // (guide §2.6); shared parents (sym0, b0, q, c, g) are all checkpointed
-    val (laneA, laneB) = Par.run2(
-      () => beamLoopSym(c, q, sym0, b0, GsHops),
+    * hub (vec_id 0; GsHubMod for query 0 — never self); GsHops hops over
+    * the layer-1 long links navigate coarsely to the query's region, then
+    * the surviving beam seeds a layer-0 descent lane. Exposed for the
+    * recall-floor spec. */
+  private[graft] def layeredServe(c: DataFrame, g0: DataFrame): DataFrame = {
+    val g = g0.select("layer", "src", "dst")
+      .localCheckpoint() // one edge lookup per hop, both layers
+    val base = g.filter(col("layer") === 0L)
+    val (b0, vecs) = beamSeed(c, GsHubMod)
+    // Two base-layer lanes, published as the top-3 of their union: the
+    // DESCENT lane (B) runs from the upper beam (the HNSW path), the
+    // ENTRY lane (A) replays the flat serve's trajectory from the fixed
+    // entry. Greedy beam search is not monotone in seed quality, so one
+    // lane seeded with both was measured losing per-query coin flips vs
+    // the flat hybrid; the intact entry lane makes recall(layered) >=
+    // recall(flat hybrid) structural. A runs concurrently with [upper ->
+    // B] so their lookup jobs overlap (guide §2.6); each lane grows its
+    // own copy of the seed's vectors, so the threads share no state.
+    val ((laneA, _), (laneB, _)) = Par.run2(
+      () => beamHops(c, base, b0, vecs, GsHops),
       () => {
-        val upper = beamLoop(c, q,
-          g.filter(col("layer") === 1L).select("src", "dst"), b0, GsHops)
-        beamLoopSym(c, q, sym0, upper, GsHops)
+        val (upper, v) = beamHops(c, g.filter(col("layer") === 1L), b0, vecs, GsHops)
+        beamHops(c, base, upper, v, GsHops)
       })
-    beamTrim(laneA.unionByName(laneB)
-      .groupBy("qid", "cid").agg(max(col("cos")).as("cos")))
+    beamPublish(c.sparkSession, laneA.map { case (qid, a) =>
+      qid -> beamMerge(a, laneB.getOrElse(qid, Map.empty))
+    })
   }
 
   /** The layered edge list for any corpus frame: layer-1 hub long links

@@ -24,18 +24,8 @@ class PlanAuditSpec extends SparkSpecBase {
   // never data-sized
   // mm_align runs the sanctioned bounded-broadcast exact pass (40 text
   // queries against the image side) — the ann_bruteforce shape
-  // ann_graph_search embeds the same one-row corpus-count cross join as
-  // ann_nndescent's graph init (bounded by construction); its eager
-  // localCheckpoints truncate the audited plan, but the allowlist entry
-  // records the sanction explicitly per the CLAUDE.md rule;
-  // ann_graph_refined runs the same init on its COLD build path (warm
-  // path reads the persisted edge list and has no cross join at all)
   private val allowNestedLoop = Set("ann_bruteforce", "ann_recall", "ann_sq", "ev_gap_fill",
-    "ev_changepoint", "ev_anomaly_mad", "mm_align", "ann_graph_search",
-    // ann_graph_refined runs the same init on its COLD build path;
-    // ann_graph_recall embeds the init AND the bounded-broadcast exact
-    // baseline (the ann_recall sanctioned shape)
-    "ann_graph_refined", "ann_graph_recall",
+    "ev_changepoint", "ev_anomaly_mad", "mm_align",
     "ann_mmr", "gr_triangles", "ann_pq",
     // ann_kmeans_recall, ann_multiprobe, and ann_recall_curve embed the
     // same bounded-broadcast exact baseline as ann_recall for their

@@ -1,0 +1,102 @@
+#!/usr/bin/env python3
+"""Compare two `graft.Explain` output directories, key by key.
+
+    python3 tools/plan_diff.py <dir_a> <dir_b> [--show N]
+
+Each directory holds one `<key>.txt` per registry key (the formatted
+physical plan `graft.Explain` writes). Before comparing, the parts of a plan
+that change from run to run of the same code are masked:
+
+- expression ids (`qid#265L` -> `qid#`) and exchange `plan_id`s;
+- RDD ids (`MapPartitionsRDD[407]`) and the `<File>.scala:<line>` call sites
+  that name a checkpoint's RDD;
+- the PID (and, for `graft_merge`, the nanoTime suffix) in
+  `/tmp/graft_*/run_<pid>_<hash>[_<nanos>]` output paths;
+- JVM lambda class names and addresses (`$$Lambda$6703/0x...@31e13256`);
+- the model-root directory in front of a deployed artifact
+  (`file:<root>/copur_<fingerprint>`), so two runs may use different
+  `SPARK_GRAFT_MODEL_DIR`s.
+
+Two keys cannot be compared this way: q7_distinct and io_col_stats order the
+distinct groups of their Expand by exprId hash, so a difference there is
+listed as "re-explain alone" (explain just that key on both sides) rather
+than as a plan diff.
+
+Compare runs that start from the same model-root state (cold with cold, warm
+with warm): a key can plan differently when its artifact is built in the
+same run than when it is deployed from disk.
+
+Prints one line per differing key (and the first N lines of each masked
+unified diff with --show N), then a summary. Exit status 1 when any key
+differs or exists on one side only (re-explain keys do not count).
+"""
+import argparse
+import difflib
+import os
+import re
+import sys
+
+RE_EXPLAIN_ALONE = {"q7_distinct", "io_col_stats"}
+
+MASKS = [
+    (re.compile(r"#\d+L?\b"), "#"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"(\w+\.scala):\d+"), r"\1:N"),
+    (re.compile(r"(/graft_\w+/run_)\d+_([0-9a-f]+)(_\d+)?"), r"\1PID_\2"),
+    (re.compile(r"\$\$Lambda[$\w]*/0x[0-9a-f]+(@[0-9a-f]+)?"), "$$Lambda"),
+    (re.compile(r"file:[^\s,\]]*/(\w+_[0-9a-f]{16,})"), r"file:<model-root>/\1"),
+]
+
+
+def masked(path):
+    with open(path, encoding="utf-8") as f:
+        text = f.read()
+    for pat, rep in MASKS:
+        text = pat.sub(rep, text)
+    return text.splitlines()
+
+
+def keys_of(d):
+    return {f[:-4] for f in os.listdir(d) if f.endswith(".txt")}
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("dir_a")
+    ap.add_argument("dir_b")
+    ap.add_argument("--show", type=int, default=0, metavar="N",
+                    help="print the first N lines of each masked diff")
+    args = ap.parse_args()
+
+    ka, kb = keys_of(args.dir_a), keys_of(args.dir_b)
+    only_a, only_b = sorted(ka - kb), sorted(kb - ka)
+    changed, re_explain = [], []
+    for k in sorted(ka & kb):
+        a = masked(os.path.join(args.dir_a, k + ".txt"))
+        b = masked(os.path.join(args.dir_b, k + ".txt"))
+        if a == b:
+            continue
+        (re_explain if k in RE_EXPLAIN_ALONE else changed).append(k)
+        if k not in RE_EXPLAIN_ALONE:
+            print(f"DIFF {k}")
+            if args.show:
+                diff = difflib.unified_diff(a, b, f"a/{k}", f"b/{k}", lineterm="", n=1)
+                for line in list(diff)[:args.show]:
+                    print("    " + line)
+    for k in only_a:
+        print(f"ONLY_A {k}")
+    for k in only_b:
+        print(f"ONLY_B {k}")
+    for k in re_explain:
+        print(f"RE-EXPLAIN ALONE {k} (Expand group order follows exprId hashing)")
+    n = len(ka & kb)
+    print(f"{n - len(changed) - len(re_explain)}/{n} identical after masking; "
+          f"{len(changed)} differ: {' '.join(changed) or '-'}; "
+          f"{len(re_explain)} to re-explain alone; "
+          f"{len(only_a)} only in a, {len(only_b)} only in b")
+    return 1 if changed or only_a or only_b else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())
