@@ -118,8 +118,8 @@ object Multimodal {
     * candidates share an (argmax-dim, length-bucket) signature — positive
     * vectors defeat sign-bucket LSH, so the coarse quantizer is the
     * dominant dimension plus a 256-byte length octave — exact fold-dot
-    * cosine + top-3 inside the bucket. Same plan as Similarity
-    * .bucketedAnnOn; the approximate RESULT is exact and oracle-checked
+    * cosine + top-3 inside the bucket. Same plan as Similarity's bucketed
+    * cosineTopK; the approximate RESULT is exact and oracle-checked
     * because both engines apply the identical bucketing. */
   def embedKnn(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

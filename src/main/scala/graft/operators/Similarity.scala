@@ -99,6 +99,84 @@ object Similarity {
       .select(col("vec_id"), col("embedding"), norm("embedding").as("nrm"))
   }
 
+  // ---- The ANN core: every determinism rule of the family lives here once:
+  // the exact-integer nearest-centroid rank, the cosine top-k (score,
+  // order, qid != cid) and the recall harness (SURVEY.md §2.D).
+
+  /** THE exact-integer nearest-centroid rank: each point (one row per
+    * `keys` + dim i, milli-unit coordinate xq) against every (sum cS,
+    * count n) centroid of codebook `cb` (broadcast, joined on the non-lead
+    * keys + i), at distance p/n² with p = Σ (xq·n − cS)². p and n² are
+    * exact BIGINTs, so the one division is the same correctly-rounded
+    * double on both engines; ties go to the lower `label`. Keeps the `top`
+    * nearest per point (1: the argmin, min(top, k) rows otherwise) as
+    * (keys, label, p, n, rn). Serves the Lloyd reassign, the multi-probe
+    * probes and the PQ encoders. */
+  private def nearestCentroids(dims: DataFrame, cb: DataFrame, keys: Seq[String],
+      label: String, top: Int): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(
+      (col("p").cast("double") / (col("n") * col("n")).cast("double")).asc,
+      col(label).asc)
+    dims.join(broadcast(cb), keys.tail :+ "i")
+      .withColumn("t", expr("xq * n - cS"))
+      .groupBy((keys :+ label).map(col): _*)
+      .agg(sum(expr("t * t")).as("p"), max(col("n")).as("n"))
+      .withColumn("rn", row_number().over(w))
+      .filter(if (top == 1) col("rn") === 1 else col("rn") <= top) // the argmin keeps its `=` plan
+  }
+
+  /** THE cosine of a pair: VectorDot's left fold of a·b over the product
+    * of Spark's norms. Every cosine in this file is this expression. */
+  private def cosine(a: String = "qv", b: String = "cv", na: String = "qn",
+      nb: String = "cn"): Column =
+    dot(a, b) / (col(na) * col(nb))
+
+  /** Every (query, candidate) pair of a scan, never a query with itself:
+    * the bounded query side (qid, qv, qn, ...) is broadcast against the
+    * corpus side (cid, cv, cn, ...) and equi-joined on column `on` when
+    * given (a bucket, cell, label or cluster — partition pruning on a
+    * layout clustered by it), else paired with every row. */
+  private def annPairs(q: DataFrame, corp: DataFrame, on: Option[String] = None): DataFrame =
+    on.fold(corp.join(broadcast(q), col("qid") =!= col("cid")))(k =>
+      corp.join(broadcast(q), Seq(k)).filter(col("qid") =!= col("cid")))
+
+  /** THE ranking: the first k rows per qid in (score desc, cid asc) order,
+    * numbered from 1 in column `rank` (INT, or BIGINT when `long`). cid is
+    * unique within a query, so the order is total on both engines. */
+  private def topK(score: String, k: Int, rank: String = "rank", long: Boolean = false)(
+      df: DataFrame): DataFrame = {
+    val rn = row_number().over(Window.partitionBy("qid").orderBy(col(score).desc, col("cid").asc))
+    df.withColumn(rank, if (long) rn.cast("long") else rn).filter(col(rank) <= k)
+  }
+
+  /** THE cosine top-k: annPairs scored as `cos`, kept by topK. */
+  private def cosineTopK(q: DataFrame, corp: DataFrame, on: Option[String], k: Int,
+      rank: String = "rank", long: Boolean = false): DataFrame =
+    annPairs(q, corp, on).withColumn("cos", cosine()).transform(topK("cos", k, rank, long))
+
+  /** cosineTopK over (vec_id, embedding, nrm [, on]) frames, published as
+    * (qid, rank, cid, cos_sim): exact when `on` is None, else bucketed. */
+  private def vecTopK(queries: DataFrame, corpusDf: DataFrame, on: Option[String],
+      k: Int): DataFrame = {
+    val key = on.toSeq.map(col)
+    cosineTopK(
+      queries.select(Seq(col("vec_id").as("qid"), col("embedding").as("qv"), col("nrm").as("qn")) ++ key: _*),
+      corpusDf.select(Seq(col("vec_id").as("cid"), col("embedding").as("cv"), col("nrm").as("cn")) ++ key: _*),
+      on, k)
+      .select(col("qid"), col("rank"), col("cid"), r4(col("cos")).as("cos_sim"))
+  }
+
+  /** THE recall harness: every exact (qid, cid) left-joined to the
+    * approximate result's (qid, cid) pairs and counted per `by` (one row
+    * when none) as n_exact and n_hits; `recallOf` is their 4dp ratio. */
+  private def hitCounts(exact: DataFrame, approx: DataFrame, by: String*): DataFrame =
+    exact.select(col("qid"), col("cid"))
+      .join(approx.select(col("qid"), col("cid"), lit(1L).as("hit")), Seq("qid", "cid"), "left_outer")
+      .groupBy(by.map(col): _*)
+      .agg(count(lit(1)).as("n_exact"), sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
+
+  private def recallOf: Column = r4(col("n_hits").cast("double") / col("n_exact"))
+
   /** Exact top-5 cosine neighbors for the bounded query set (vec_id < 10):
     * broadcast the queries, one parallel pass over the corpus, per-query
     * top-k via window (at scale: TakeOrdered per query partition). */
@@ -124,9 +202,8 @@ object Similarity {
     val c = corpus(spark, dir).localCheckpoint() // reused: query + corpus side
     val q = c.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("nrm").as("qn"))
-    c.select(col("vec_id").as("cid"), col("embedding").as("cv"), col("nrm").as("cn"))
-      .join(broadcast(q), col("qid") =!= col("cid"))
-      .withColumn("cos", dot("qv", "cv") / (col("qn") * col("cn")))
+    annPairs(q, c.select(col("vec_id").as("cid"), col("embedding").as("cv"), col("nrm").as("cn")))
+      .withColumn("cos", cosine())
       .filter(col("cos") >= 0.3)
       .select(col("qid"), col("cid"), r4(col("cos")).as("cos_sim"))
       .orderBy("qid", "cid")
@@ -202,7 +279,7 @@ object Similarity {
           col("nrm").as("un")), Seq("u"))
         .join(c.select(col("vec_id").as("w"), col("embedding").as("wv"),
           col("nrm").as("wn")), Seq("w"))
-        .withColumn("cos", dot("uv", "wv") / (col("un") * col("wn")))
+        .withColumn("cos", cosine("uv", "wv", "un", "wn"))
         .withColumn("rn", row_number().over(wRe))
         .filter(col("rn") <= NnDescentK)
         .select(col("u").as("src"), col("w").as("dst"))
@@ -225,15 +302,10 @@ object Similarity {
         .localCheckpoint()) // one eval join per round
     val trace = graphs.zipWithIndex.map { case (g, r) =>
       val ne = g.agg(count(lit(1)).as("n_edges"))
-      exact.join(g.filter(col("src") < 10)
-          .select(col("src").as("qid"), col("dst").as("cid"), lit(1L).as("hit")),
-          Seq("qid", "cid"), "left_outer")
-        .agg(count(lit(1)).as("n_exact"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
+      hitCounts(exact, g.filter(col("src") < 10).select(col("src").as("qid"), col("dst").as("cid")))
         .crossJoin(ne)
         .select(lit(r.toLong).as("round"), col("n_edges"), col("n_exact"),
-          col("n_hits"),
-          r4(col("n_hits").cast("double") / col("n_exact")).as("recall"))
+          col("n_hits"), recallOf.as("recall"))
     }
     trace.reduce(_ unionByName _).orderBy("round")
   }
@@ -364,6 +436,7 @@ object Similarity {
         StructField("qid", LongType), StructField("rank", IntegerType, nullable = false),
         StructField("cid", LongType), StructField("cos", DoubleType))))
       .select(col("qid"), col("rank"), col("cid"), r4(col("cos")).as("cos_sim"))
+      .coalesce(1) // ≤ 30 rows: sort in place, no range-partition sample + shuffle
       .orderBy("qid", "rank")
   }
 
@@ -422,12 +495,8 @@ object Similarity {
         .localCheckpoint(), // one hit join per tier
       () => refinedGraphFor(spark, dir, c)))
     def tierRow(name: String, g: DataFrame): DataFrame =
-      exact.join(beamServe(c, g).select(col("qid"), col("cid"), lit(1L).as("hit")),
-          Seq("qid", "cid"), "left_outer")
-        .agg(count(lit(1)).as("n_exact"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-        .select(lit(name).as("tier"), col("n_exact"), col("n_hits"),
-          r4(col("n_hits").cast("double") / col("n_exact")).as("recall_at_3"))
+      hitCounts(exact, beamServe(c, g))
+        .select(lit(name).as("tier"), col("n_exact"), col("n_hits"), recallOf.as("recall_at_3"))
     // three independent serves over checkpointed parents (c, rand, exact;
     // refined is the artifact scan or the build's checkpoint) — concurrent
     // submission overlaps their per-hop lookup jobs (guide §2.6)
@@ -554,41 +623,15 @@ object Similarity {
   /** Generic exact top-k: any (vec_id, embedding, nrm) query set against a
     * corpus of the same shape — broadcast the queries, one parallel pass
     * over the corpus, per-query top-k via window. */
-  def bruteforceOn(queries: DataFrame, corpusDf: DataFrame, k: Int): DataFrame = {
-    val q = queries
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("nrm").as("qn"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid").asc)
-    corpusDf
-      .select(col("vec_id").as("cid"), col("embedding").as("cv"), col("nrm").as("cn"))
-      .join(broadcast(q), col("qid") =!= col("cid"))
-      .withColumn("cos", dot("qv", "cv") / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("cid"), r4(col("cos")).as("cos_sim"))
-  }
+  def bruteforceOn(queries: DataFrame, corpusDf: DataFrame, k: Int): DataFrame =
+    vecTopK(queries, corpusDf, None, k)
 
   /** Random-hyperplane LSH ANN: candidates share the 8-bit sign bucket;
     * exact cosine + top-3 only within the bucket. */
   def lsh(spark: SparkSession, dir: String): DataFrame = {
     val e = corpus(spark, dir).withColumn("bucket", bucket("embedding"))
       .localCheckpoint() // bucket projections computed once for query + corpus sides
-    bucketedAnnOn(e.filter(col("vec_id") < 10), e, "bucket", 3).orderBy("qid", "rank")
-  }
-
-  /** Generic bucketed ANN: join on any precomputed bucket/cell column,
-    * exact cosine + top-k only within the bucket. */
-  def bucketedAnnOn(queries: DataFrame, corpusDf: DataFrame, bucketCol: String, k: Int): DataFrame = {
-    val q = queries.select(col("vec_id").as("qid"), col("embedding").as("qv"),
-      col("nrm").as("qn"), col(bucketCol))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid").asc)
-    corpusDf
-      .select(col("vec_id").as("cid"), col("embedding").as("cv"), col("nrm").as("cn"), col(bucketCol))
-      .join(broadcast(q), Seq(bucketCol))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("cos", dot("qv", "cv") / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("cid"), r4(col("cos")).as("cos_sim"))
+    vecTopK(e.filter(col("vec_id") < 10), e, Some("bucket"), 3).orderBy("qid", "rank")
   }
 
   /** IVF-style ANN: corpus partitioned into 16 coarse cells by the sign
@@ -596,7 +639,7 @@ object Similarity {
   def ivf(spark: SparkSession, dir: String): DataFrame = {
     val e = corpus(spark, dir).withColumn("cell", expr(cellExpr("embedding")))
       .localCheckpoint() // cell + norm computed once for query + corpus sides
-    bucketedAnnOn(e.filter(col("vec_id") < 10), e, "cell", 3).orderBy("qid", "rank")
+    vecTopK(e.filter(col("vec_id") < 10), e, Some("cell"), 3).orderBy("qid", "rank")
   }
 
   /** Recall@3 of the LSH index against the exact baseline — the evaluation
@@ -610,14 +653,8 @@ object Similarity {
     val c = corpus(spark, dir).withColumn("bucket", bucket("embedding"))
       .localCheckpoint() // shared by the exact pass + both bucketed sides
     val q = c.filter(col("vec_id") < 10)
-    val exact = bruteforceOn(q, c, 3).select(col("qid"), col("cid"))
-    val approx = bucketedAnnOn(q, c, "bucket", 3)
-      .select(col("qid"), col("cid"), lit(1L).as("hit"))
-    exact.join(approx, Seq("qid", "cid"), "left_outer")
-      .groupBy("qid")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .withColumn("recall_at_3", r4(col("n_hits").cast("double") / col("n_exact")))
+    hitCounts(bruteforceOn(q, c, 3), vecTopK(q, c, Some("bucket"), 3), "qid")
+      .withColumn("recall_at_3", recallOf)
       .orderBy("qid")
   }
 
@@ -648,17 +685,12 @@ object Similarity {
       .localCheckpoint() // codes + norms computed once for query + corpus sides
     val q = c.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("nrm").as("qn"))
-    val wA = Window.partitionBy("qid").orderBy(col("approx").desc, col("cid").asc)
-    val wE = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid").asc)
-    c.select(col("vec_id").as("cid"), col("embedding").as("cv"), col("nrm").as("cn"),
-        reconOf("codes").as("recon"))
-      .join(broadcast(q), col("qid") =!= col("cid"))
-      .withColumn("approx", dot("qv", "recon") / (col("qn") * col("cn")))
-      .withColumn("approx_rank", row_number().over(wA).cast("long"))
-      .filter(col("approx_rank") <= 10)
-      .withColumn("cos", dot("qv", "cv") / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(wE).cast("long"))
-      .filter(col("rank") <= 3)
+    annPairs(q, c.select(col("vec_id").as("cid"), col("embedding").as("cv"), col("nrm").as("cn"),
+        reconOf("codes").as("recon")))
+      .withColumn("approx", cosine(b = "recon"))
+      .transform(topK("approx", 10, "approx_rank", long = true))
+      .withColumn("cos", cosine())
+      .transform(topK("cos", 3, long = true))
       .select(col("qid"), col("rank"), col("cid"), r4(col("cos")).as("cos_sim"), col("approx_rank"))
       .orderBy("qid", "rank")
   }
@@ -684,13 +716,13 @@ object Similarity {
     val cands = c.filter(col("vec_id") =!= 0L)
       .crossJoin(broadcast(q))
       .select(col("vec_id"), col("embedding"), col("nrm"),
-        (dot("embedding", "qv") / (col("nrm") * col("qn"))).as("rel"))
+        cosine("embedding", "qv", "nrm", "qn").as("rel"))
       .orderBy(col("rel").desc, col("vec_id").asc).limit(nCand)
       .localCheckpoint() // reused by both pairwise-sim sides + the collect
     val rel = cands.select(col("vec_id"), col("rel")).as[(Long, Double)].collect().toMap
     val sim = cands.as("a").join(cands.as("b"), col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id"), col("b.vec_id"),
-        (dot("a.embedding", "b.embedding") / (col("a.nrm") * col("b.nrm"))).as("sim"))
+        cosine("a.embedding", "b.embedding", "a.nrm", "b.nrm").as("sim"))
       .as[(Long, Long, Double)].collect()
       .map { case (a, b, s) => (a, b) -> s }.toMap
     var selected = Vector.empty[(Long, Long, Double)] // (step, vec_id, score)
@@ -710,6 +742,28 @@ object Similarity {
     selected.toDF("step", "vec_id", "score")
       .select(col("step"), col("vec_id"), r4(col("score")).as("mmr_score"))
       .orderBy("step")
+  }
+
+  /** PQ subspace codebook of (vec_id, label, s, i, xq) dims: one (sum cS,
+    * count n) centroid per (label, 32-dim subspace s, dim i). */
+  private def pqCodebook(sdims: DataFrame): DataFrame =
+    sdims.groupBy(col("label").as("cb_label"), col("s"), col("i"))
+      .agg(sum("xq").as("cS"), count(lit(1)).as("n"))
+
+  /** PQ code + reconstruction (vec_id, rec): each subspace of each vector
+    * coded by its nearest codebook centroid (the exact-integer argmin),
+    * the 64-dim reconstruction built from the exact quotients cS/n. */
+  private def pqRecon(sdims: DataFrame, cb: DataFrame): DataFrame = {
+    val codes = nearestCentroids(sdims, cb, Seq("vec_id", "s"), "cb_label", 1)
+      .select(col("vec_id"), col("s"), col("cb_label").as("code"))
+    val recon = cb.groupBy("cb_label", "s")
+      .agg(expr("transform(array_sort(collect_list(struct(i, " +
+        "CAST(cS AS DOUBLE) / CAST(n AS DOUBLE) AS r))), e -> e.r)").as("rvec"))
+    codes.as("cd").join(recon.as("rc"),
+        col("cd.s") === col("rc.s") && col("cd.code") === col("rc.cb_label"))
+      .select(col("cd.vec_id").as("vec_id"), col("cd.s").as("s"), col("rc.rvec").as("rvec"))
+      .groupBy("vec_id")
+      .agg(expr("flatten(transform(array_sort(collect_list(struct(s, rvec))), e -> e.rvec))").as("rec"))
   }
 
   /** Product quantization + exact rerank — the remaining member of the
@@ -743,44 +797,21 @@ object Similarity {
         posexplode(col("embedding")).as(Seq("i", "x")))
       .withColumn("s", expr("i div 32"))
       .withColumn("xq", expr("CAST(floor(CAST(x AS DOUBLE) * 1000.0 + 0.5) AS BIGINT)"))
-    val cb = dims.groupBy(col("label").as("cb_label"), col("s"), col("i"))
-      .agg(sum("xq").as("cS"), count(lit(1)).as("n"))
-      .localCheckpoint() // labels x 64 rows; probed by every corpus dim
-    val assign = dims.join(broadcast(cb), Seq("s", "i"))
-      .withColumn("t", expr("xq * n - cS"))
-      .groupBy("vec_id", "s", "cb_label")
-      .agg(sum(expr("t * t")).as("p"), max(col("n")).as("n"))
-      .withColumn("d", col("p").cast("double") / (col("n") * col("n")).cast("double"))
-    val wAsg = Window.partitionBy("vec_id", "s").orderBy(col("d").asc, col("cb_label").asc)
-    val codes = assign.withColumn("rn", row_number().over(wAsg))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("s"), col("cb_label").as("code"))
-    val recon = cb.groupBy("cb_label", "s")
-      .agg(expr("transform(array_sort(collect_list(struct(i, " +
-        "CAST(cS AS DOUBLE) / CAST(n AS DOUBLE) AS r))), e -> e.r)").as("rvec"))
-    val rec = codes.as("cd").join(recon.as("rc"),
-        col("cd.s") === col("rc.s") && col("cd.code") === col("rc.cb_label"))
-      .select(col("cd.vec_id").as("vec_id"), col("cd.s").as("s"), col("rc.rvec").as("rvec"))
-      .groupBy("vec_id")
-      .agg(expr("flatten(transform(array_sort(collect_list(struct(s, rvec))), e -> e.rvec))").as("rec"))
+    val cb = pqCodebook(dims).localCheckpoint() // labels x 64 rows; probed by every corpus dim
+    val rec = pqRecon(dims, cb)
       .join(e0.select(col("vec_id"), col("nrm").as("cn")), Seq("vec_id"))
     val q = e0.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("nrm").as("qn"))
-    val wA = Window.partitionBy("qid").orderBy(col("approx").desc, col("cid").asc)
-    val firstPass = rec.withColumnRenamed("vec_id", "cid")
-      .join(broadcast(q), col("qid") =!= col("cid"))
+    val firstPass = annPairs(q, rec.withColumnRenamed("vec_id", "cid"))
       // native codegen fold (float qv x double rec) — bit-identical to the
       // declarative aggregate() it replaced (left-to-right double products).
-      .withColumn("approx", dot("qv", "rec") / (col("qn") * col("cn")))
-      .withColumn("approx_rank", row_number().over(wA).cast("long"))
-      .filter(col("approx_rank") <= 10)
-    val wE = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid").asc)
+      .withColumn("approx", cosine(b = "rec"))
+      .transform(topK("approx", 10, "approx_rank", long = true))
     firstPass
       .join(e0.select(col("vec_id").as("cid"), col("embedding").as("cv"),
         col("nrm").as("cn2")), Seq("cid"))
-      .withColumn("cos", dot("qv", "cv") / (col("qn") * col("cn2")))
-      .withColumn("rank", row_number().over(wE).cast("long"))
-      .filter(col("rank") <= 3)
+      .withColumn("cos", cosine(nb = "cn2"))
+      .transform(topK("cos", 3, long = true))
       .select(col("qid"), col("rank"), col("cid"), r4(col("cos")).as("cos_sim"),
         col("approx_rank"))
       .orderBy("qid", "rank")
@@ -824,18 +855,16 @@ object Similarity {
       .groupBy(col("c"), col("i"))
       .agg(sum("xq").as("cS"), count(lit(1)).as("n"))
 
-  private def kmReassign(dims: DataFrame, cb: DataFrame): DataFrame = {
-    val w = Window.partitionBy("vec_id").orderBy(
-      (col("p").cast("double") / (col("n") * col("n")).cast("double")).asc,
-      col("c").asc)
-    dims.join(broadcast(cb), Seq("i"))
-      .withColumn("t", expr("xq * n - cS"))
-      .groupBy("vec_id", "c")
-      .agg(sum(expr("t * t")).as("p"), max(col("n")).as("n"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select("vec_id", "c", "p", "n")
-  }
+  /** One Lloyd reassignment: each vector's nearest centroid of `cb`, as
+    * (vec_id, c, p, n). */
+  private[graft] def kmReassign(dims: DataFrame, cb: DataFrame): DataFrame =
+    nearestCentroids(dims, cb, Seq("vec_id"), "c", 1).select("vec_id", "c", "p", "n")
+
+  /** The multi-probe probe set: the MultiProbeP nearest trained centroids
+    * of each bounded query (vec_id < 10), as (qid, c). */
+  private[graft] def probesOf(dims: DataFrame, cb: DataFrame): DataFrame =
+    nearestCentroids(dims.filter(col("vec_id") < 10), cb, Seq("vec_id"), "c", MultiProbeP)
+      .select(col("vec_id").as("qid"), col("c"))
 
   /** A codebook table as the fold builds it: c long, i INT (the
     * posexplode position — a coerced i would ripple into join plans),
@@ -943,14 +972,8 @@ object Similarity {
       kmeansAssignments(spark, dir).select(col("vec_id"), col("c")), Seq("vec_id"))
       .localCheckpoint()
     val q = clustered.filter(col("vec_id") < 10)
-    val exact = bruteforceOn(q, c, 3).select(col("qid"), col("cid"))
-    val approx = bucketedAnnOn(q, clustered, "c", 3)
-      .select(col("qid"), col("cid"), lit(1L).as("hit"))
-    exact.join(approx, Seq("qid", "cid"), "left_outer")
-      .groupBy("qid")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .withColumn("recall_at_3", r4(col("n_hits").cast("double") / col("n_exact")))
+    hitCounts(bruteforceOn(q, c, 3), vecTopK(q, clustered, Some("c"), 3), "qid")
+      .withColumn("recall_at_3", recallOf)
       .orderBy("qid")
   }
 
@@ -1035,30 +1058,12 @@ object Similarity {
     val assign = assignFull.select(col("vec_id"), col("c")).localCheckpoint()
     val c = corpus(spark, dir).localCheckpoint() // exact pass + both probe sides
     val clustered = c.join(assign, Seq("vec_id")).localCheckpoint()
-    val wp = Window.partitionBy("vec_id").orderBy(
-      (col("p").cast("double") / (col("n") * col("n")).cast("double")).asc,
-      col("c").asc)
-    val probes = dims.filter(col("vec_id") < 10)
-      .join(broadcast(cb), Seq("i"))
-      .withColumn("t", expr("xq * n - cS"))
-      .groupBy("vec_id", "c")
-      .agg(sum(expr("t * t")).as("p"), max(col("n")).as("n"))
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= MultiProbeP)
-      .select(col("vec_id").as("qid"), col("c"))
     val q = clustered.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("nrm").as("qn"))
-      .join(probes, Seq("qid"))
-    val wr = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid").asc)
+      .join(probesOf(dims, cb), Seq("qid"))
     val kMax = RecallCurveKs.max
-    val approx = clustered
-      .select(col("vec_id").as("cid"), col("embedding").as("cv"),
-        col("nrm").as("cn"), col("c"))
-      .join(broadcast(q), Seq("c"))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("cos", dot("qv", "cv") / (col("qn") * col("cn")))
-      .withColumn("arank", row_number().over(wr))
-      .filter(col("arank") <= kMax)
+    val approx = cosineTopK(q, clustered.select(col("vec_id").as("cid"), col("embedding").as("cv"),
+        col("nrm").as("cn"), col("c")), Some("c"), kMax, "arank")
       .select(col("qid"), col("cid"), col("arank"))
     val exact = bruteforceOn(c.filter(col("vec_id") < 10), c, kMax)
       .select(col("qid"), col("cid"), col("rank").as("erank"))
@@ -1096,42 +1101,19 @@ object Similarity {
     val assign = assignFull.select(col("vec_id"), col("c")).localCheckpoint()
     val c = corpus(spark, dir).localCheckpoint() // exact pass + both probe sides
     val clustered = c.join(assign, Seq("vec_id")).localCheckpoint()
-    val wp = Window.partitionBy("vec_id").orderBy(
-      (col("p").cast("double") / (col("n") * col("n")).cast("double")).asc,
-      col("c").asc)
-    val probes = dims.filter(col("vec_id") < 10)
-      .join(broadcast(cb), Seq("i"))
-      .withColumn("t", expr("xq * n - cS"))
-      .groupBy("vec_id", "c")
-      .agg(sum(expr("t * t")).as("p"), max(col("n")).as("n"))
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= MultiProbeP)
-      .select(col("vec_id").as("qid"), col("c"))
+    val probes = probesOf(dims, cb)
     // (qid, qv, qn, c): MultiProbeP rows per query, still broadcast-sized
     val q = clustered.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("nrm").as("qn"))
       .join(probes, Seq("qid"))
     // every corpus vector lives in exactly one cluster, so a (qid, cid)
     // candidate pair appears at most once across the probed buckets
-    val wr = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid").asc)
-    val approx = clustered
-      .select(col("vec_id").as("cid"), col("embedding").as("cv"),
-        col("nrm").as("cn"), col("c"))
-      .join(broadcast(q), Seq("c"))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("cos", dot("qv", "cv") / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("cid"), lit(1L).as("hit"))
-    val exact = bruteforceOn(c.filter(col("vec_id") < 10), c, 3)
-      .select(col("qid"), col("cid"))
+    val approx = cosineTopK(q, clustered.select(col("vec_id").as("cid"), col("embedding").as("cv"),
+      col("nrm").as("cn"), col("c")), Some("c"), 3)
     val nProbed = probes.groupBy("qid").agg(count(lit(1)).as("n_probed"))
-    exact.join(approx, Seq("qid", "cid"), "left_outer")
-      .groupBy("qid")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
+    hitCounts(bruteforceOn(c.filter(col("vec_id") < 10), c, 3), approx, "qid")
       .join(nProbed, Seq("qid"))
-      .withColumn("recall_at_3", r4(col("n_hits").cast("double") / col("n_exact")))
+      .withColumn("recall_at_3", recallOf)
       .select("qid", "n_probed", "n_exact", "n_hits", "recall_at_3")
       .orderBy("qid")
   }
@@ -1184,67 +1166,32 @@ object Similarity {
     val Seq(assign, c, cbq) = Par.run(Seq[() => DataFrame](
       () => assignFull.select(col("vec_id"), col("c")).localCheckpoint(),
       () => corpus(spark, dir).localCheckpoint(), // queries + rerank + cand norms
-      () => sdims.groupBy(col("label").as("cb_label"), col("s"), col("i"))
-        .agg(sum("xq").as("cS"), count(lit(1)).as("n"))
+      () => pqCodebook(sdims)
         .localCheckpoint())) // labels x 64 rows; probed by every corpus dim
     // --- PQ tier: label-subspace codebook, codes, reconstruction (ann_pq) ---
-    val wAsg = Window.partitionBy("vec_id", "s").orderBy(
-      (col("p").cast("double") / (col("n") * col("n")).cast("double")).asc,
-      col("cb_label").asc)
-    val codes = sdims.join(broadcast(cbq), Seq("s", "i"))
-      .withColumn("t", expr("xq * n - cS"))
-      .groupBy("vec_id", "s", "cb_label")
-      .agg(sum(expr("t * t")).as("p"), max(col("n")).as("n"))
-      .withColumn("rn", row_number().over(wAsg))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("s"), col("cb_label").as("code"))
-    val recon = cbq.groupBy("cb_label", "s")
-      .agg(expr("transform(array_sort(collect_list(struct(i, " +
-        "CAST(cS AS DOUBLE) / CAST(n AS DOUBLE) AS r))), e -> e.r)").as("rvec"))
-    val rec = codes.as("cd").join(recon.as("rc"),
-        col("cd.s") === col("rc.s") && col("cd.code") === col("rc.cb_label"))
-      .select(col("cd.vec_id").as("vec_id"), col("cd.s").as("s"), col("rc.rvec").as("rvec"))
-      .groupBy("vec_id")
-      .agg(expr("flatten(transform(array_sort(collect_list(struct(s, rvec))), e -> e.rvec))").as("rec"))
+    val rec = pqRecon(sdims, cbq)
     // --- IVF tier: rank trained centroids per query, probe top-P (ann_multiprobe) ---
-    val wp = Window.partitionBy("vec_id").orderBy(
-      (col("p").cast("double") / (col("n") * col("n")).cast("double")).asc,
-      col("c").asc)
-    val probes = dims.filter(col("vec_id") < 10)
-      .join(broadcast(cbiv), Seq("i"))
-      .withColumn("t", expr("xq * n - cS"))
-      .groupBy("vec_id", "c")
-      .agg(sum(expr("t * t")).as("p"), max(col("n")).as("n"))
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= MultiProbeP)
-      .select(col("vec_id").as("qid"), col("c"))
     // (qid, qv, qn, c): MultiProbeP rows per query — broadcast-sized
     val q = c.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("nrm").as("qn"))
-      .join(probes, Seq("qid"))
+      .join(probesOf(dims, cbiv), Seq("qid"))
     // --- cascade: probed clusters -> PQ approx -> exact rerank ---
-    val cand = rec.join(assign, Seq("vec_id"))
-      .join(c.select(col("vec_id"), col("nrm").as("cn")), Seq("vec_id"))
-      .withColumnRenamed("vec_id", "cid")
-      .join(broadcast(q), Seq("c"))
-      .filter(col("qid") =!= col("cid"))
+    val cand = annPairs(q, rec.join(assign, Seq("vec_id"))
+        .join(c.select(col("vec_id"), col("nrm").as("cn")), Seq("vec_id"))
+        .withColumnRenamed("vec_id", "cid"), Some("c"))
       // native codegen fold (float qv x double rec) — same left-to-right
       // accumulation as the declarative aggregate() it replaced, but inside
       // whole-stage codegen: this scan over the probed corpus fraction IS
       // the dominant IVFPQ cost at scale.
-      .withColumn("approx", dot("qv", "rec") / (col("qn") * col("cn")))
+      .withColumn("approx", cosine(b = "rec"))
       .localCheckpoint() // feeds both the per-query count and the ranking
     val nc = cand.groupBy("qid").agg(count(lit(1)).as("n_cand"))
-    val wA = Window.partitionBy("qid").orderBy(col("approx").desc, col("cid").asc)
-    val wE = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid").asc)
     cand
-      .withColumn("approx_rank", row_number().over(wA).cast("long"))
-      .filter(col("approx_rank") <= 10)
+      .transform(topK("approx", 10, "approx_rank", long = true))
       .join(c.select(col("vec_id").as("cid"), col("embedding").as("cv"),
         col("nrm").as("cn2")), Seq("cid"))
-      .withColumn("cos", dot("qv", "cv") / (col("qn") * col("cn2")))
-      .withColumn("rank", row_number().over(wE).cast("long"))
-      .filter(col("rank") <= 3)
+      .withColumn("cos", cosine(nb = "cn2"))
+      .transform(topK("cos", 3, long = true))
       .join(nc, Seq("qid"))
       .select(col("qid"), col("rank"), col("cid"), r4(col("cos")).as("cos_sim"),
         col("approx_rank"), col("n_cand"))
@@ -1276,7 +1223,7 @@ object Similarity {
         col("x.c") === col("y.c") && col("x.vec_id") < col("y.vec_id"))
       .select(col("y.vec_id").as("vec_id"), col("x.vec_id").as("va"),
         col("x.c").as("cluster"),
-        (dot("x.embedding", "y.embedding") / (col("x.nrm") * col("y.nrm"))).as("cos"))
+        cosine("x.embedding", "y.embedding", "x.nrm", "y.nrm").as("cos"))
       .filter(col("cos") >= lit(0.4))
     pairs.groupBy("vec_id")
       .agg(min(struct(col("va"), col("cluster"), col("cos"))).as("k"))
@@ -1306,14 +1253,8 @@ object Similarity {
     val q = c.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"),
         col("nrm").as("qn"), col("label"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid").asc)
-    c.select(col("vec_id").as("cid"), col("embedding").as("cv"),
-        col("nrm").as("cn"), col("label"))
-      .join(broadcast(q), Seq("label"))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("cos", dot("qv", "cv") / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 3)
+    cosineTopK(q, c.select(col("vec_id").as("cid"), col("embedding").as("cv"),
+        col("nrm").as("cn"), col("label")), Some("label"), 3, long = true)
       .select(col("qid"), col("rank"), col("cid"), col("label"),
         r4(col("cos")).as("cos_sim"))
       .orderBy("qid", "rank")
@@ -1352,31 +1293,22 @@ object Similarity {
     val dfw = words.groupBy("w").agg(count(lit(1)).as("df"))
     val qw = words.filter(col("doc_id") < HybridKf)
       .select(col("doc_id").as("qid"), col("w"))
-    val wK = Window.partitionBy("qid")
     val kw = qw
       .join(words.withColumnRenamed("doc_id", "cid"), Seq("w"))
       .filter(col("qid") =!= col("cid"))
       .join(dfw, Seq("w"))
       .groupBy("qid", "cid").agg(sum(expr("100000 div df")).as("kw_score"))
-      .withColumn("rk", row_number()
-        .over(wK.orderBy(col("kw_score").desc, col("cid").asc)).cast("long"))
-      .filter(col("rk") <= HybridK)
+      .transform(topK("kw_score", HybridK, "rk", long = true))
     val c = corpus(spark, dir).localCheckpoint() // query + corpus side
     val vq = c.filter(col("vec_id") < HybridKf)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("nrm").as("qn"))
-    val vec = c.select(col("vec_id").as("cid"), col("embedding").as("cv"), col("nrm").as("cn"))
-      .join(broadcast(vq), col("qid") =!= col("cid"))
-      .withColumn("cos", dot("qv", "cv") / (col("qn") * col("cn")))
-      .withColumn("rv", row_number()
-        .over(wK.orderBy(col("cos").desc, col("cid").asc)).cast("long"))
-      .filter(col("rv") <= HybridK)
+    val vec = cosineTopK(vq, c.select(col("vec_id").as("cid"), col("embedding").as("cv"),
+      col("nrm").as("cn")), None, HybridK, "rv", long = true)
     kw.select(col("qid"), col("cid"), col("rk"))
       .join(vec.select(col("qid"), col("cid"), col("rv")), Seq("qid", "cid"), "full_outer")
       .withColumn("rrf_x10000", expr(
         "coalesce(10000 div (60 + rk), 0L) + coalesce(10000 div (60 + rv), 0L)"))
-      .withColumn("rank", row_number()
-        .over(wK.orderBy(col("rrf_x10000").desc, col("cid").asc)).cast("long"))
-      .filter(col("rank") <= HybridKf)
+      .transform(topK("rrf_x10000", HybridKf, long = true))
       .select(col("qid"), col("rank"), col("cid"), col("rrf_x10000"),
         coalesce(col("rk"), lit(0L)).as("kw_rank"),
         coalesce(col("rv"), lit(0L)).as("vec_rank"))
@@ -1423,37 +1355,21 @@ object Similarity {
       () => corpus(spark, dir).localCheckpoint()) // stage-1 count + exact pass + both probe sides
     val clustered = c.join(assign, Seq("vec_id"))
       .localCheckpoint() // stage-3 counts + candidate side + query side
-    val wp = Window.partitionBy("vec_id").orderBy(
-      (col("p").cast("double") / (col("n") * col("n")).cast("double")).asc,
-      col("c").asc)
-    val probes = dims.filter(col("vec_id") < 10)
-      .join(broadcast(cb), Seq("i"))
-      .withColumn("t", expr("xq * n - cS"))
-      .groupBy("vec_id", "c")
-      .agg(sum(expr("t * t")).as("p"), max(col("n")).as("n"))
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= MultiProbeP)
-      .select(col("vec_id").as("qid"), col("c"))
     val q = clustered.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("nrm").as("qn"))
-      .join(probes, Seq("qid"))
+      .join(probesOf(dims, cb), Seq("qid"))
     // §2.6 overlap: the serve lane (candidates -> ranked results, reads
     // clustered/dims/cb) and the exact-baseline pass (reads only c) are
     // independent eager chains — run them concurrently so the exact
     // scan back-fills the serve lane's stage tails
-    val wr = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid").asc)
     val ((cand, served), exact) = Par.run2(
       () => {
-        val cd = clustered
-          .select(col("vec_id").as("cid"), col("embedding").as("cv"),
-            col("nrm").as("cn"), col("c"))
-          .join(broadcast(q), Seq("c"))
-          .filter(col("qid") =!= col("cid"))
+        val cd = annPairs(q, clustered.select(col("vec_id").as("cid"), col("embedding").as("cv"),
+            col("nrm").as("cn"), col("c")), Some("c"))
           .localCheckpoint() // stage-4 count + serve ranking
         val sv = cd
-          .withColumn("cos", dot("qv", "cv") / (col("qn") * col("cn")))
-          .withColumn("rank", row_number().over(wr))
-          .filter(col("rank") <= 10)
+          .withColumn("cos", cosine())
+          .transform(topK("cos", 10))
           .select(col("qid"), col("cid"), col("rank"))
           .localCheckpoint() // stage-4 stat + eval join
         (cd, sv)
@@ -1512,13 +1428,11 @@ object Similarity {
     val nEx = exact.agg(count(lit(1)).as("n_exact")).localCheckpoint()
     val corp = c.select(col("vec_id").as("cid"), col("embedding").as("cv"),
       col("nrm").as("cn"), col("bucket"), col("cell"))
-    val wr = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid").asc)
     def tierRow(name: String, cand0: DataFrame): DataFrame = {
       val cand = cand0.localCheckpoint() // candidate count + ranking
       val top3 = cand
-        .withColumn("cos", dot("qv", "cv") / (col("qn") * col("cn")))
-        .withColumn("rank", row_number().over(wr))
-        .filter(col("rank") <= 3)
+        .withColumn("cos", cosine())
+        .transform(topK("cos", 3))
         .select(col("qid"), col("cid"))
         .localCheckpoint() // result count + hit join
       cand.agg(count(lit(1)).as("n_candidates"))
@@ -1528,42 +1442,21 @@ object Similarity {
         .select(lit(name).as("tier"), col("n_candidates"), col("n_results"),
           col("n_hits"), expr("(10000 * n_hits) div n_exact").as("recall_x10000"))
     }
-    val brute = corp.select(col("cid"), col("cv"), col("cn"))
-      .join(broadcast(qb.select(col("qid"), col("qv"), col("qn"))),
-        col("qid") =!= col("cid"))
-    val lshCand = corp.select(col("cid"), col("cv"), col("cn"), col("bucket"))
-      .join(broadcast(qb.select(col("qid"), col("qv"), col("qn"), col("bucket"))),
-        Seq("bucket"))
-      .filter(col("qid") =!= col("cid"))
-    val ivfCand = corp.select(col("cid"), col("cv"), col("cn"), col("cell"))
-      .join(broadcast(qb.select(col("qid"), col("qv"), col("qn"), col("cell"))),
-        Seq("cell"))
-      .filter(col("qid") =!= col("cid"))
-    val wp = Window.partitionBy("vec_id").orderBy(
-      (col("p").cast("double") / (col("n") * col("n")).cast("double")).asc,
-      col("c").asc)
-    val probes = dims.filter(col("vec_id") < 10)
-      .join(broadcast(cb), Seq("i"))
-      .withColumn("t", expr("xq * n - cS"))
-      .groupBy("vec_id", "c")
-      .agg(sum(expr("t * t")).as("p"), max(col("n")).as("n"))
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= MultiProbeP)
-      .select(col("vec_id").as("qid"), col("c"))
-    val mpCand = clustered
-      .select(col("vec_id").as("cid"), col("embedding").as("cv"),
-        col("nrm").as("cn"), col("c"))
-      .join(broadcast(qb.select(col("qid"), col("qv"), col("qn")).join(probes, Seq("qid"))),
-        Seq("c"))
-      .filter(col("qid") =!= col("cid"))
+    def keyed(k: String): DataFrame = annPairs(qb.select(col("qid"), col("qv"), col("qn"), col(k)),
+      corp.select(col("cid"), col("cv"), col("cn"), col(k)), Some(k))
+    val brute = annPairs(qb.select(col("qid"), col("qv"), col("qn")),
+      corp.select(col("cid"), col("cv"), col("cn")))
+    val mpCand = annPairs(qb.select(col("qid"), col("qv"), col("qn")).join(probesOf(dims, cb), Seq("qid")),
+      clustered.select(col("vec_id").as("cid"), col("embedding").as("cv"), col("nrm").as("cn"), col("c")),
+      Some("c"))
     // the four tiers are independent eager pipelines over checkpointed
     // parents (c, clustered, qb, exact, nEx) — submit them concurrently so
     // each tier's checkpoint jobs back-fill the others' tails (guide §2.6);
     // rows and union order are unchanged
     Par.run(Seq(
       () => tierRow("1_brute", brute),
-      () => tierRow("2_lsh", lshCand),
-      () => tierRow("3_ivf", ivfCand),
+      () => tierRow("2_lsh", keyed("bucket")),
+      () => tierRow("3_ivf", keyed("cell")),
       () => tierRow("4_multiprobe", mpCand)))
       .reduce(_ unionByName _)
       .orderBy("tier")
@@ -1606,16 +1499,10 @@ object Similarity {
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"),
         col("nrm").as("qn"), col("cell"))
-    val wr = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid").asc)
-    def serve(index: DataFrame): DataFrame = index
-      .select(col("vec_id").as("cid"), col("embedding").as("cv"),
-        col("cn"), col("cell"))
-      .join(broadcast(q), Seq("cell"))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("cos", dot("qv", "cv") / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(wr).cast("long"))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("rank"), col("cid"), col("cell"))
+    def serve(index: DataFrame): DataFrame =
+      cosineTopK(q, index.select(col("vec_id").as("cid"), col("embedding").as("cv"),
+          col("cn"), col("cell")), Some("cell"), 3, long = true)
+        .select(col("qid"), col("rank"), col("cid"), col("cell"))
     // phase 1: tombstones filtered at serve time, full index scanned
     val pre = serve(e.withColumnRenamed("nrm", "cn").filter(!col("tomb")))
     // phase 2: compacted index — dead rows physically rewritten away
@@ -1718,19 +1605,14 @@ object Similarity {
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"),
         col("nrm").as("qn"), col("cell"))
-    val cand = e
-      .select(col("vec_id").as("cid"), col("embedding").as("cv"),
-        col("nrm").as("cn"), col("cell"))
-      .join(broadcast(q), Seq("cell"))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("cos", dot("qv", "cv") / (col("qn") * col("cn")))
+    val cand = annPairs(q, e.select(col("vec_id").as("cid"), col("embedding").as("cv"),
+        col("nrm").as("cn"), col("cell")), Some("cell"))
+      .withColumn("cos", cosine())
       .localCheckpoint() // exclusion count + ranked keep both read it
     val excluded = cand.filter(col("cos") >= lit(HardNegCos))
       .groupBy("qid").agg(count(lit(1)).as("n_excluded"))
-    val wr = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid").asc)
     cand.filter(col("cos") < lit(HardNegCos))
-      .withColumn("rank", row_number().over(wr).cast("long"))
-      .filter(col("rank") <= 3)
+      .transform(topK("cos", 3, long = true))
       .join(excluded, Seq("qid"), "left_outer")
       .select(col("qid"), col("rank"), col("cid"),
         coalesce(col("n_excluded"), lit(0L)).as("n_excluded"))
@@ -1764,11 +1646,7 @@ object Similarity {
         col("nrm").as("qn"), col("label"))
     val img = e.filter(col("vec_id") % 2 === 1)
       .select(col("vec_id").as("cid"), col("embedding").as("cv"), col("nrm").as("cn"))
-    val wr = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid").asc)
-    val ranked = img.join(broadcast(q), col("qid") =!= col("cid"))
-      .withColumn("cos", dot("qv", "cv") / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(wr).cast("long"))
-      .filter(col("rank") <= 5)
+    val ranked = cosineTopK(q, img, None, 5, long = true)
       .withColumn("pair_rank", when(col("cid") === col("qid") + 1L, col("rank")))
       .groupBy("qid", "label")
       .agg(min(col("pair_rank")).as("pr")) // null if the pair missed top-5

@@ -1,14 +1,19 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Minimal bridge into `private[sql]` surface: building a DataFrame from a
-  * custom LogicalPlan requires `Dataset.ofRows`, which Spark scopes to the
-  * `org.apache.spark.sql` package — this object lives in a subpackage for
-  * exactly that one call. Nothing else from the private API is touched. */
+/** Minimal bridge into Spark's package-private surface, from a subpackage
+  * of `org.apache.spark.sql` for exactly two calls: building a DataFrame
+  * from a custom LogicalPlan (`Dataset.ofRows`, `private[sql]`) and
+  * draining the listener bus (`private[spark]`). Nothing else from the
+  * private API is touched. */
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** Blocks until every posted listener event has been delivered. */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

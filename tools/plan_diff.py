@@ -4,18 +4,26 @@
     python3 tools/plan_diff.py <dir_a> <dir_b> [--show N]
 
 Each directory holds one `<key>.txt` per registry key (the formatted
-physical plan `graft.Explain` writes). Before comparing, the parts of a plan
-that change from run to run of the same code are masked:
+physical plan `graft.Explain` writes) and, when present, `<key>.prefix.txt`:
+the executed plan of every action the key's build ran (eager
+localCheckpoints, collects, artifact writes; an adaptive plan as its initial
+plan), one block per action headed `>>> action <name>`. Par lanes finish in any order, so the prefix blocks are
+compared as an order-free multiset of masked plans. Before comparing, the
+parts of a plan that change from run to run of the same code are masked:
 
 - expression ids (`qid#265L` -> `qid#`) and exchange `plan_id`s;
 - RDD ids (`MapPartitionsRDD[407]`) and the `<File>.scala:<line>` call sites
   that name a checkpoint's RDD;
 - the PID (and, for `graft_merge`, the nanoTime suffix) in
-  `/tmp/graft_*/run_<pid>_<hash>[_<nanos>]` output paths;
+  `/tmp/graft_*/run_<pid>_<hash>[_<nanos>]` output paths, and the nanoTime
+  suffix of `/tmp/graft_io/<name>_<hash>_<nanos>` ones;
 - JVM lambda class names and addresses (`$$Lambda$6703/0x...@31e13256`);
-- the model-root directory in front of a deployed artifact
-  (`file:<root>/copur_<fingerprint>`), so two runs may use different
-  `SPARK_GRAFT_MODEL_DIR`s.
+- the model-root directory in front of a deployed or written artifact
+  (`file:<root>/copur_<fingerprint>`, `path=<root>/...`), so two runs may
+  use different `SPARK_GRAFT_MODEL_DIR`s, and the nanoTime suffix of an
+  artifact's commit directory (`tmp_<family>_<fingerprint>_<nanos>`);
+- in prefix plans only, the `[codegen id : N]` marks, which follow the
+  order in which the run materialized its stages.
 
 Two keys cannot be compared this way: q7_distinct and io_col_stats order the
 distinct groups of their Expand by exprId hash, so a difference there is
@@ -26,15 +34,17 @@ Compare runs that start from the same model-root state (cold with cold, warm
 with warm): a key can plan differently when its artifact is built in the
 same run than when it is deployed from disk.
 
-Prints one line per differing key (and the first N lines of each masked
-unified diff with --show N), then a summary. Exit status 1 when any key
-differs or exists on one side only (re-explain keys do not count).
+Prints one line per differing key (`DIFF` for the final plan, `DIFF-PREFIX`
+with the count of unmatched action plans on each side), the first N lines of
+each masked unified diff with --show N, then a summary. Exit status 1 when
+any key differs or exists on one side only (re-explain keys do not count).
 """
 import argparse
 import difflib
 import os
 import re
 import sys
+from collections import Counter
 
 RE_EXPLAIN_ALONE = {"q7_distinct", "io_col_stats"}
 
@@ -45,20 +55,44 @@ MASKS = [
     (re.compile(r"(\w+\.scala):\d+"), r"\1:N"),
     (re.compile(r"(/graft_\w+/run_)\d+_([0-9a-f]+)(_\d+)?"), r"\1PID_\2"),
     (re.compile(r"\$\$Lambda[$\w]*/0x[0-9a-f]+(@[0-9a-f]+)?"), "$$Lambda"),
-    (re.compile(r"file:[^\s,\]]*/(\w+_[0-9a-f]{16,})"), r"file:<model-root>/\1"),
+    (re.compile(r"(/graft_\w+/[a-z]+_[0-9a-f]+)_\d{8,}"), r"\1_N"),
+    (re.compile(r"(tmp_[a-z]+_[0-9a-f]{16,})_\d+"), r"\1_N"),
+    (re.compile(r"(file:|path=)[^\s,\]]*/(\w+_[0-9a-f]{16,})"), r"\1<model-root>/\2"),
 ]
+
+ACTION = ">>> action "
+PREFIX_MASKS = [(re.compile(r" \[codegen id : \d+\]"), "")]
+
+
+def mask(text, masks=MASKS):
+    for pat, rep in masks:
+        text = pat.sub(rep, text)
+    return text
 
 
 def masked(path):
     with open(path, encoding="utf-8") as f:
-        text = f.read()
-    for pat, rep in MASKS:
-        text = pat.sub(rep, text)
-    return text.splitlines()
+        return mask(f.read()).splitlines()
+
+
+def prefix_plans(path):
+    """The masked action blocks of a `<key>.prefix.txt` (empty if absent)."""
+    if not os.path.exists(path):
+        return []
+    with open(path, encoding="utf-8") as f:
+        blocks = ("\n" + f.read()).split("\n" + ACTION)[1:]
+    return [mask(ACTION + b.rstrip("\n"), MASKS + PREFIX_MASKS) for b in blocks]
 
 
 def keys_of(d):
-    return {f[:-4] for f in os.listdir(d) if f.endswith(".txt")}
+    return {f[:-4] for f in os.listdir(d)
+            if f.endswith(".txt") and not f.endswith(".prefix.txt")}
+
+
+def show(a, b, k, n):
+    diff = difflib.unified_diff(a, b, f"a/{k}", f"b/{k}", lineterm="", n=1)
+    for line in list(diff)[:n]:
+        print("    " + line)
 
 
 def main():
@@ -75,15 +109,23 @@ def main():
     for k in sorted(ka & kb):
         a = masked(os.path.join(args.dir_a, k + ".txt"))
         b = masked(os.path.join(args.dir_b, k + ".txt"))
-        if a == b:
+        pa = Counter(prefix_plans(os.path.join(args.dir_a, k + ".prefix.txt")))
+        pb = Counter(prefix_plans(os.path.join(args.dir_b, k + ".prefix.txt")))
+        if a == b and pa == pb:
             continue
         (re_explain if k in RE_EXPLAIN_ALONE else changed).append(k)
-        if k not in RE_EXPLAIN_ALONE:
+        if k in RE_EXPLAIN_ALONE:
+            continue
+        if a != b:
             print(f"DIFF {k}")
             if args.show:
-                diff = difflib.unified_diff(a, b, f"a/{k}", f"b/{k}", lineterm="", n=1)
-                for line in list(diff)[:args.show]:
-                    print("    " + line)
+                show(a, b, k, args.show)
+        if pa != pb:
+            ua, ub = sorted((pa - pb).elements()), sorted((pb - pa).elements())
+            print(f"DIFF-PREFIX {k} ({sum(pa.values())} vs {sum(pb.values())} actions; "
+                  f"{len(ua)} only in a, {len(ub)} only in b)")
+            if args.show and ua and ub:
+                show(ua[0].splitlines(), ub[0].splitlines(), k + ".prefix", args.show)
     for k in only_a:
         print(f"ONLY_A {k}")
     for k in only_b:
