@@ -405,10 +405,7 @@ object Dedup {
       .withColumn("agree", matches.cast("long"))
       .filter(col("agree") >= 9L)
       .select(col("da"), col("db"))
-    // both directions (+0L re-aliases: the swapped-column union trips
-    // Spark's Union constraint rewrite otherwise — the GraphOps.sym rule)
-    val pr = ver.select((col("da") + lit(0L)).as("d"), (col("db") + lit(0L)).as("p"))
-      .unionByName(ver.select((col("db") + lit(0L)).as("d"), (col("da") + lit(0L)).as("p")))
+    val pr = GraphOps.sym(ver, "da", "db", "d", "p")
     val m = pr.filter(col("d") % 2 === 1)
       .groupBy("d")
       .agg(

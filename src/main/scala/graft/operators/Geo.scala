@@ -430,10 +430,8 @@ object Geo {
       .localCheckpoint() // edge build + node set + the final join back
     val edges = sel.filter(col("eff") > 0 && col("nn") > 0)
       .select(col("id").as("src"), col("tid").as("dst"))
-    val sym = edges.select((col("src") + lit(0L)).as("src"), (col("dst") + lit(0L)).as("dst"))
-      .unionByName(edges.select((col("dst") + lit(0L)).as("src"), (col("src") + lit(0L)).as("dst")))
-    val comp = graft.operators.GraphOps
-      .minLabelComponentsDoubling(sel.select(col("id")), sym)
+    val comp = GraphOps.minLabelComponentsDoubling(sel.select(col("id")),
+      GraphOps.sym(edges, "src", "dst"))
     sel.join(comp, Seq("id"))
   }
 

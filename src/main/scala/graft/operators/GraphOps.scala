@@ -1,22 +1,50 @@
 package graft.operators
 
 import graft.ModelStore
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Iterative min-label propagation — hash-min connected components — shared
-  * by raster polygonization (region merge) and near-dup clustering.
+/** The graph operators: the 24 `gr_*` registry keys, the connected-
+  * components loops that raster polygonization, basin labelling and
+  * near-dup clustering ride, and the graph core every one of them is
+  * built from. Each building block has ONE copy here, so each
+  * determinism rule is a one-place edit:
   *
-  * Each round is ONE shuffle of O(#nodes) label rows plus an equi-join with
-  * the edge list; localCheckpoint cuts lineage so round N's plan does not
-  * replay rounds 1..N-1. Rounds needed = component graph diameter; the
-  * converged labeling (per-component min node id) is independent of
-  * iteration order — deterministic, so oracle-checkable against a
-  * recursive-CTE transitive closure. For adversarially deep components swap
-  * in large-star/small-star pointer doubling (O(log d) rounds); the
-  * per-round shape is identical.
+  *  - `sym`: an edge frame in both directions (the Union-rewrite rule);
+  *  - `cappedWedges`: the hub-capped wedge self-join of the link
+  *    predictors (weights ride the wedge row);
+  *  - `triangles`: degree-ordered orientation + triangle closure;
+  *  - `relaxHistogram`: bounded frontier relaxation + distance histogram
+  *    (gr_khop, gr_sssp);
+  *  - the Louvain family: `communityStats` (per-community degree sum,
+  *    members, intra edges), `louvainQRow` (the exact DECIMAL(38,0) Q),
+  *    `guardedMove` (the BIGINT insert gain, argmax and Grappolo guard),
+  *    `louvainContract` + `coarseDegrees` (the level-1 super-graph) and
+  *    `louvainWeightedLevel` (one weighted level; gr_louvain_level2 is one
+  *    call of it, gr_louvain_full loops it).
   */
 object GraphOps {
+
+  /** Both directions of an edge frame: (a, b) as (src, dst) unioned with
+    * (b, a) as (src, dst), any `carry` columns riding unchanged. The ONE
+    * copy of the Union-rewrite rule: both endpoints are re-aliased through
+    * `+ 0L`, because unioning a frame with its own column-swapped
+    * projection trips Spark's Union constraint rewrite (its attribute map
+    * misses the swapped exprIds). Lazy — callers checkpoint it where it
+    * has more than one consumer. */
+  private[graft] def sym(e: DataFrame, a: String, b: String, src: String = "src",
+      dst: String = "dst", carry: Seq[String] = Nil): DataFrame = {
+    def side(x: String, y: String): DataFrame = e.select(
+      Seq((col(x) + lit(0L)).as(src), (col(y) + lit(0L)).as(dst)) ++ carry.map(col): _*)
+    side(a, b).unionByName(side(b, a))
+  }
+
+  /** The symmetric co-activity graph (src, dst), checkpointed: every
+    * consumer joins it once per round and derives degrees from it. */
+  private def coActivitySym(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    sym(coActivityEdges(spark, dir), "a", "b")
+      .localCheckpoint() // degree + one join per round
 
   /** Invocation counters, test-only observability: specs pin WHICH loop a
     * consumer (polygonize, dd_cluster) rides without parsing plans — the
@@ -24,7 +52,18 @@ object GraphOps {
   private[graft] val hashMinCalls = new java.util.concurrent.atomic.AtomicLong
   private[graft] val doublingCalls = new java.util.concurrent.atomic.AtomicLong
 
-  /** `nodes`: one row per node with a unique LONG `id`; `edges`: directed
+  /** Iterative min-label propagation — hash-min connected components. No
+    * registry key runs it: it is the reference GenericApiSpec's parity
+    * test drives minLabelComponentsDoubling against.
+    *
+    * Each round is ONE shuffle of O(#nodes) label rows plus an equi-join
+    * with the edge list; localCheckpoint cuts lineage so round N's plan
+    * does not replay rounds 1..N-1. Rounds needed = component graph
+    * diameter; the converged labeling (per-component min node id) is
+    * independent of iteration order — deterministic, so oracle-checkable
+    * against a recursive-CTE transitive closure.
+    *
+    * `nodes`: one row per node with a unique LONG `id`; `edges`: directed
     * (src, dst) pairs — pass both directions for undirected graphs.
     * Returns (id, comp) where comp = min node id reachable. */
   def minLabelComponents(nodes: DataFrame, edges: DataFrame, maxRounds: Int = 64): DataFrame = {
@@ -90,20 +129,13 @@ object GraphOps {
       maxRounds: Int = 32): DataFrame = {
     doublingCalls.incrementAndGet()
     import org.apache.spark.sql.functions.{col, countDistinct, least, lit, min}
-    // full symmetric neighbor multiset of a downward edge set; dup-free by
-    // disjointness (fwd: dst<src, rev: dst>src). Fresh +0L aliases: unioning
-    // a frame with its own column-swapped projection trips Union's
-    // constraint rewrite (attribute map misses the swapped exprIds).
-    def nbrs(e: DataFrame): DataFrame = {
-      val fwd = e.select((col("src") + lit(0L)).as("src"), (col("dst") + lit(0L)).as("dst"))
-      val rev = e.select((col("dst") + lit(0L)).as("src"), (col("src") + lit(0L)).as("dst"))
-      fwd.unionByName(rev)
-    }
     // large-star: every high neighbor of w links to m(w) = min(Γ(w) ∪ {w}).
     // With e downward, the (high neighbor, w) pairs are exactly e itself
     // (src is the high endpoint), so the emit side needs no symmetric frame.
+    // The full neighbor multiset sym(e) is dup-free by disjointness
+    // (fwd: dst<src, rev: dst>src).
     def largeStar(e: DataFrame): DataFrame = {
-      val mins = nbrs(e).groupBy("src").agg(min("dst").as("mn"))
+      val mins = sym(e, "src", "dst").groupBy("src").agg(min("dst").as("mn"))
         .select(col("src").as("w"), least(col("mn"), col("src")).as("m"))
       e.join(mins, col("dst") === col("w"))
         .select(col("src"), col("m").as("dst"))
@@ -160,26 +192,6 @@ object GraphOps {
         org.apache.spark.sql.functions.coalesce(col("m"), col("id")).as("comp"))
   }
 
-  /** Triangle counting + global clustering coefficient over the user
-    * co-activity graph (users active in the same (event_type, hour)
-    * bucket are connected). The canonical ordered-edge algorithm: edges
-    * kept as a < b once (distinct), length-2 paths a<b<c from the b=a'
-    * self-join, closed by an equi-join on the (a, c) edge — every
-    * triangle counted exactly once, never a per-node neighborhood
-    * materialization. Buckets over 20 users are dropped BEFORE pair
-    * generation (the same hot-bucket cap as the dedup indexes — pair
-    * fan-out is quadratic in bucket size). gcc = 3 * triangles / wedges
-    * in exact scaled integers.
-    *
-    * At 100 TB: edge generation shuffles on the bucket key, the triangle
-    * closure on edge endpoints — both AQE-skew-splittable; degree-ordered
-    * orientation (point each edge at the higher-degree endpoint) is the
-    * standard next step if degree skew appears. The final stat assembly
-    * cross-joins four ONE-ROW aggregates (bounded, audit-sanctioned). */
-  /** The user co-activity edge set (users active in the same (event_type,
-    * hour) bucket, buckets over 20 users dropped before pair generation —
-    * the quadratic-fan-out cap shared with the dedup indexes): undirected,
-    * kept once as a < b. Shared by gr_triangles and gr_pagerank. */
   /** Raw co-activity pairs — one row per (a < b, type, hour) cell
     * co-occurrence after the ≤20-per-cell hub cap. The ONE copy of the
     * capped pair build; coActivityEdges (distinct pairs), sssp (pair
@@ -203,9 +215,8 @@ object GraphOps {
   /** The co-activity graph as two model artifacts keyed on events
     * (coactpairs_, and coactedges_ built over it): the capped pair list
     * (a, b, hr) and its distinct edge projection (a, b) re-derive
-    * identically inside TWELVE queries (triangles, pagerank, ppr,
-    * ppr_converge, common_neighbors, resource_alloc, khop, kcore, assort,
-    * local_cc from the edges; sssp, temporal_reach from the pairs), each
+    * identically inside SIXTEEN queries (the fourteen coActivityEdges
+    * names from the edges; sssp, temporal_reach from the pairs), each
     * paying the events scan + hub-cap + cell self-join per the
     * each-query-standalone driver contract; a warm consumer pays one
     * parquet scan. Deterministic by construction (a distinct pair SET —
@@ -223,6 +234,14 @@ object GraphOps {
         .localCheckpoint() // consumers group/join it more than once
     }
 
+  /** The user co-activity edge set (users active in the same (event_type,
+    * hour) bucket, buckets over 20 users dropped before pair generation —
+    * the quadratic-fan-out cap shared with the dedup indexes): undirected,
+    * kept once as a < b — the coactedges_ artifact. Fourteen keys read
+    * it: gr_assort, gr_betweenness, gr_common_neighbors, gr_components,
+    * gr_kcore, gr_khop, gr_linkpred_eval, gr_local_cc, gr_pagerank,
+    * gr_ppr, gr_ppr_converge, gr_resource_alloc, gr_rich_club and
+    * gr_triangles. */
   private[graft] def coActivityEdges(
       spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     ModelStore.frame(spark, ModelStore.Source(dir, "events.parquet", "coact1"),
@@ -233,24 +252,25 @@ object GraphOps {
         .localCheckpoint() // degree + self-join sides downstream
     }
 
-  def triangleStats(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val edges = coActivityEdges(spark, dir)
-      .localCheckpoint() // reused by degree + all three triangle sides
+  /** Triangle enumeration over an undirected edge set kept once as a < b,
+    * shared by gr_triangles and gr_local_cc. Returns the checkpointed
+    * edges, their degrees (u, d) and one (n0, tv, tw) row per triangle.
+    *
+    * DEGREE-ORDERED orientation: each edge points at its higher-(degree,
+    * id) endpoint, so path enumeration fans out from the LOWER-degree
+    * endpoint only — out-degrees are O(sqrt(m)) (arboricity bound) and a
+    * hub's quadratic wedge blowup cannot occur, which is what keeps the
+    * closure join bounded under degree skew at scale. Each triangle
+    * materializes exactly once: it has one source n0 whose two partners
+    * (tv, tw) both outrank it, closed by an equi-join on the (tv, tw)
+    * edge. */
+  private def triangles(edgesIn: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val edges = edgesIn
+      .localCheckpoint() // degree + orientation builds + the caller's stats
     val deg = edges.select(col("a").as("u"))
       .unionAll(edges.select(col("b").as("u")))
       .groupBy("u").agg(count(lit(1)).as("d"))
-      .localCheckpoint() // reused: stats + both orientation lookups
-    val nodesWedges = deg.agg(
-      count(lit(1)).as("n_nodes"),
-      sum(expr("d * (d - 1) div 2")).as("n_wedges"))
-    val nEdges = edges.agg(count(lit(1)).as("n_edges"))
-    // DEGREE-ORDERED orientation: point each edge at its higher-(degree,
-    // id) endpoint, so path enumeration fans out from the LOWER-degree
-    // endpoint only — out-degrees are O(sqrt(m)) (arboricity bound) and a
-    // hub's quadratic wedge blowup cannot occur, which is what keeps the
-    // closure join bounded under degree skew at scale. Total is identical
-    // to the naive a<b closure (each triangle has exactly one source
-    // whose two partners both outrank it).
+      .localCheckpoint() // both orientation lookups + the caller's stats
     val o = edges
       .join(deg.select(col("u").as("a"), col("d").as("da")), Seq("a"))
       .join(deg.select(col("u").as("b"), col("d").as("db")), Seq("b"))
@@ -265,9 +285,29 @@ object GraphOps {
       .join(o.as("e2"), col("e1.src") === col("e2.src")
         && (col("e1.dd") < col("e2.dd")
           || (col("e1.dd") === col("e2.dd") && col("e1.dst") < col("e2.dst"))))
-      .select(col("e1.dst").as("tv"), col("e2.dst").as("tw"))
+      .select(col("e1.src").as("n0"), col("e1.dst").as("tv"), col("e2.dst").as("tw"))
       .join(o.as("e3"), col("tv") === col("e3.src") && col("tw") === col("e3.dst"))
-      .agg(count(lit(1)).as("n_triangles"))
+    (edges, deg, tri)
+  }
+
+  /** Triangle counting + global clustering coefficient (gr_triangles)
+    * over the user co-activity graph (users active in the same
+    * (event_type, hour) bucket are connected), enumerated by `triangles`
+    * — every triangle counted exactly once, never a per-node neighborhood
+    * materialization. gcc = 3 * triangles / wedges in exact scaled
+    * integers.
+    *
+    * At 100 TB: edge generation shuffles on the bucket key, the triangle
+    * closure on edge endpoints — both AQE-skew-splittable. The final stat
+    * assembly cross-joins four ONE-ROW aggregates (bounded,
+    * audit-sanctioned). */
+  def triangleStats(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
+    val (edges, deg, triRows) = triangles(coActivityEdges(spark, dir))
+    val nodesWedges = deg.agg(
+      count(lit(1)).as("n_nodes"),
+      sum(expr("d * (d - 1) div 2")).as("n_wedges"))
+    val nEdges = edges.agg(count(lit(1)).as("n_edges"))
+    val tri = triRows.agg(count(lit(1)).as("n_triangles"))
     nodesWedges.crossJoin(nEdges).crossJoin(tri)
       .select(col("n_nodes"), col("n_edges"), col("n_wedges"), col("n_triangles"))
       // wedge-free graph: gcc is 0 by convention, not a division error
@@ -288,14 +328,9 @@ object GraphOps {
     * The graph is symmetric (every node has degree >= 1 by construction)
     * so there is no dangling mass. Per round: one co-partitioned
     * (edges x ranks) join + one groupBy on dst — the standard distributed
-    * PageRank shuffle pair; rounds are a fixed small constant. The +0L
-    * re-aliases on the symmetric union avoid Spark's swapped-exprId
-    * Union constraint rewrite (the nbrs pattern above). */
+    * PageRank shuffle pair; rounds are a fixed small constant. */
   def pagerank(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val ed = coActivityEdges(spark, dir)
-    val sym = ed.select((col("a") + lit(0L)).as("src"), (col("b") + lit(0L)).as("dst"))
-      .unionByName(ed.select((col("b") + lit(0L)).as("src"), (col("a") + lit(0L)).as("dst")))
-      .localCheckpoint() // reused: degree + both iteration joins
+    val sym = coActivitySym(spark, dir)
     val deg = sym.groupBy("src").agg(count(lit(1)).as("d"))
     val r0 = deg.select(col("src").as("u"), lit(1000000000000L).as("r"))
     def step(r: DataFrame): DataFrame =
@@ -310,29 +345,12 @@ object GraphOps {
       .orderBy(col("rank_x1e12").desc, col("user_id"))
   }
 
-  /** PERSONALIZED PAGERANK (gr_ppr) — random-walk-with-restart relevance
-    * from a seed set (the recommendation / related-items primitive;
-    * Haveliwala 2002): same damped power iteration as gr_pagerank, but
-    * restart mass returns to the 5 lowest-id seed users instead of
-    * spreading uniformly, so scores measure proximity TO THE SEEDS.
-    * Two unrolled steps in the same 1e12 scaled-integer arithmetic
-    * (every operation is BIGINT div/mult — bit-identical cross-engine,
-    * the gr_pagerank discipline). Mass only flows along edges from
-    * already-reached nodes, so the rank frame stays sparse: after two
-    * steps it covers exactly the 2-hop ball around the seeds.
-    *
-    * Scale: identical plan shape to gr_pagerank (degree join + message
-    * groupBy per step on the shared checkpointed symmetric edge list);
-    * the seed table is 5 rows, the restart join a broadcast. */
   /** The shared PPR machinery: checkpointed symmetric edges, degrees, the
     * 5 lowest-id seeds, and one damped restart step — gr_ppr and
     * gr_ppr_converge run the SAME arithmetic by construction. */
   private def pprGraph(spark: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val ed = coActivityEdges(spark, dir)
-    val sym = ed.select((col("a") + lit(0L)).as("src"), (col("b") + lit(0L)).as("dst"))
-      .unionByName(ed.select((col("b") + lit(0L)).as("src"), (col("a") + lit(0L)).as("dst")))
-      .localCheckpoint() // reused: degree + every iteration join
+    val sym = coActivitySym(spark, dir)
     val deg = sym.groupBy("src").agg(count(lit(1)).as("d"))
     val seeds = deg.select(col("src").as("u")).orderBy("u").limit(5)
       .localCheckpoint() // consumers: r0 + every restart join
@@ -355,6 +373,20 @@ object GraphOps {
     if (checkpoint) next.localCheckpoint() else next
   }
 
+  /** PERSONALIZED PAGERANK (gr_ppr) — random-walk-with-restart relevance
+    * from a seed set (the recommendation / related-items primitive;
+    * Haveliwala 2002): same damped power iteration as gr_pagerank, but
+    * restart mass returns to the 5 lowest-id seed users instead of
+    * spreading uniformly, so scores measure proximity TO THE SEEDS.
+    * Two unrolled steps in the same 1e12 scaled-integer arithmetic
+    * (every operation is BIGINT div/mult — bit-identical cross-engine,
+    * the gr_pagerank discipline). Mass only flows along edges from
+    * already-reached nodes, so the rank frame stays sparse: after two
+    * steps it covers exactly the 2-hop ball around the seeds.
+    *
+    * Scale: identical plan shape to gr_pagerank (degree join + message
+    * groupBy per step on the shared checkpointed symmetric edge list);
+    * the seed table is 5 rows, the restart join a broadcast. */
   def ppr(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val (sym, deg, seeds) = pprGraph(spark, dir)
     val step = pprStep(sym, deg, seeds) _
@@ -402,6 +434,30 @@ object GraphOps {
     * oracle). */
   val CnDegCap = 256L
 
+  /** The capped wedge self-join shared by gr_common_neighbors,
+    * gr_resource_alloc and gr_linkpred_eval, over an undirected (a, b)
+    * edge set kept once as a < b: every center u of degree <= CnDegCap
+    * emits one (a, b) row per pair of its neighbors a < b, centers above
+    * the cap are dropped BEFORE pair generation. Each `weights` column is
+    * computed per center from its degree `d` and rides ON the wedge row
+    * under its name, so scoring is one map-side-combinable sum — no join
+    * after the wedge. Returns the checkpointed degrees (u, d) and the
+    * wedge rows (a, b, weights…). */
+  private def cappedWedges(edges: DataFrame, weights: (String, Column)*)
+      : (DataFrame, DataFrame) = {
+    val s = sym(edges, "a", "b", "u", "v")
+      .localCheckpoint() // consumers: deg, capped wedge self-join (both sides)
+    val deg = s.groupBy("u").agg(count(lit(1)).as("d"))
+      .localCheckpoint() // consumers: center cap (+ the caller's score lookups)
+    val okc = s.join(deg.filter(col("d") <= CnDegCap)
+      .select(col("u") +: weights.map { case (n, w) => w.as(n) }: _*), Seq("u"))
+    val wedges = okc.as("x").join(okc.as("y"),
+        col("x.u") === col("y.u") && col("x.v") < col("y.v"))
+      .select(Seq(col("x.v").as("a"), col("y.v").as("b")) ++
+        weights.map { case (n, _) => col(s"x.$n").as(n) }: _*)
+    (deg, wedges)
+  }
+
   /** Common-neighbor / Jaccard link prediction over the co-activity
     * graph — the classic "who should be connected" candidate generator
     * (Liben-Nowell & Kleinberg 2003): for every NON-adjacent pair (a, b)
@@ -428,16 +484,8 @@ object GraphOps {
   def commonNeighborsOn(edgesIn: DataFrame): DataFrame = {
     val edges = edgesIn
       .localCheckpoint() // consumers: sym (x2 branches), anti-join side
-    val sym = edges.select((col("a") + lit(0L)).as("u"), (col("b") + lit(0L)).as("v"))
-      .unionByName(edges.select((col("b") + lit(0L)).as("u"), (col("a") + lit(0L)).as("v")))
-      .localCheckpoint() // consumers: deg, capped wedge self-join (both sides)
-    val deg = sym.groupBy("u").agg(count(lit(1)).as("d"))
-      .localCheckpoint() // consumers: center cap + two score lookups
-    val okc = sym.join(deg.filter(col("d") <= CnDegCap).select("u"), Seq("u"))
-    val cand = okc.as("x").join(okc.as("y"),
-        col("x.u") === col("y.u") && col("x.v") < col("y.v"))
-      .select(col("x.v").as("a"), col("y.v").as("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("n_common"))
+    val (deg, wedges) = cappedWedges(edges)
+    val cand = wedges.groupBy("a", "b").agg(count(lit(1)).as("n_common"))
     cand
       .join(edges, Seq("a", "b"), "left_anti")
       .join(deg.select(col("u").as("a"), col("d").as("deg_a")), Seq("a"))
@@ -472,17 +520,9 @@ object GraphOps {
   def resourceAllocOn(edgesIn: DataFrame): DataFrame = {
     val edges = edgesIn
       .localCheckpoint() // consumers: sym (x2 branches), anti-join side
-    val sym = edges.select((col("a") + lit(0L)).as("u"), (col("b") + lit(0L)).as("v"))
-      .unionByName(edges.select((col("b") + lit(0L)).as("u"), (col("a") + lit(0L)).as("v")))
-      .localCheckpoint() // consumers: deg, capped wedge self-join (both sides)
-    val deg = sym.groupBy("u").agg(count(lit(1)).as("d"))
-      .localCheckpoint() // consumers: center cap + weight lookup
-    val okc = sym
-      .join(deg.filter(col("d") <= CnDegCap)
-        .select(col("u"), expr("CAST(1000000000 AS BIGINT) div d").as("w_center")), Seq("u"))
-    val cand = okc.as("x").join(okc.as("y"),
-        col("x.u") === col("y.u") && col("x.v") < col("y.v"))
-      .select(col("x.v").as("a"), col("y.v").as("b"), col("x.w_center").as("w_center"))
+    val (_, wedges) = cappedWedges(edges,
+      "w_center" -> expr("CAST(1000000000 AS BIGINT) div d"))
+    val cand = wedges
       .groupBy("a", "b")
       .agg(count(lit(1)).as("n_common"), sum(col("w_center")).as("ra_x1e9"))
     cand
@@ -537,19 +577,10 @@ object GraphOps {
       .localCheckpoint() // consumers: train side (x4) + holdout side (x2)
     val train = keyed.filter(!col("ho")).select("a", "b")
     val holdout = keyed.filter(col("ho")).select("a", "b")
-    val sym = train.select((col("a") + lit(0L)).as("u"), (col("b") + lit(0L)).as("v"))
-      .unionByName(train.select((col("b") + lit(0L)).as("u"), (col("a") + lit(0L)).as("v")))
-      .localCheckpoint() // consumers: deg + capped wedge self-join (both sides)
-    val deg = sym.groupBy("u").agg(count(lit(1)).as("d"))
-      .localCheckpoint() // both wedge self-join sides re-derive it otherwise
-    val okc = sym.join(deg.filter(col("d") <= CnDegCap)
-      .select(col("u"),
-        expr("CAST(1000000000 AS BIGINT) div d").as("w_ra"),
-        expr("CAST(1000000000 AS BIGINT) div length(bin(d))").as("w_aa")), Seq("u"))
-    val cand = okc.as("x").join(okc.as("y"),
-        col("x.u") === col("y.u") && col("x.v") < col("y.v"))
-      .select(col("x.v").as("a"), col("y.v").as("b"),
-        col("x.w_ra").as("w_ra"), col("x.w_aa").as("w_aa"))
+    val (_, wedges) = cappedWedges(train,
+      "w_ra" -> expr("CAST(1000000000 AS BIGINT) div d"),
+      "w_aa" -> expr("CAST(1000000000 AS BIGINT) div length(bin(d))"))
+    val cand = wedges
       .groupBy("a", "b")
       .agg(count(lit(1)).as("cn"), sum("w_ra").as("ra"), sum("w_aa").as("aa"))
       .join(train, Seq("a", "b"), "left_anti")
@@ -636,9 +667,7 @@ object GraphOps {
     * a < b — Round20Spec pins phi on a hand-worked hub graph. */
   def richClubOn(edgesIn: DataFrame): DataFrame = {
     val edges = edgesIn.localCheckpoint() // deg union sides + tagged pass
-    val sym = edges.select((col("a") + lit(0L)).as("u"))
-      .unionByName(edges.select((col("b") + lit(0L)).as("u")))
-    val deg = sym.groupBy("u").agg(count(lit(1)).as("d"))
+    val deg = sym(edges, "a", "b", "u", "v").groupBy("u").agg(count(lit(1)).as("d"))
       .localCheckpoint() // consumers: two edge-tag sides + node histogram
     val mdeg = edges
       .join(deg.select(col("u").as("a"), col("d").as("da")), Seq("a"))
@@ -679,13 +708,8 @@ object GraphOps {
     * round; each round's label frame is localCheckpointed (consumed by
     * the next round's join AND union — the shared-frame rule). Frontier
     * size is bounded by the node set, never edges. */
-  def khop(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val ed = coActivityEdges(spark, dir)
-    val sym = ed.select((col("a") + lit(0L)).as("src"), (col("b") + lit(0L)).as("dst"))
-      .unionByName(ed.select((col("b") + lit(0L)).as("src"), (col("a") + lit(0L)).as("dst")))
-      .localCheckpoint() // one join per round
-    khopOn(sym)
-  }
+  def khop(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    khopOn(coActivitySym(spark, dir))
 
   /** Sources / BFS depth / published rows of gr_betweenness. */
   val BrandesSources = 8
@@ -719,13 +743,8 @@ object GraphOps {
     * co-activity graph — orders of magnitude under the 10^17 DECIMAL
     * rule line (and the spec plants a dense clique to check the worst
     * local blowup). */
-  def betweenness(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val ed = coActivityEdges(spark, dir)
-    val sym = ed.select((col("a") + lit(0L)).as("src"), (col("b") + lit(0L)).as("dst"))
-      .unionByName(ed.select((col("b") + lit(0L)).as("src"), (col("a") + lit(0L)).as("dst")))
-      .localCheckpoint() // one join per forward round + one per backward
-    betweennessOn(sym)
-  }
+  def betweenness(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    betweennessOn(coActivitySym(spark, dir))
 
   /** Same operator over any symmetric (src, dst) edge frame — Round21Spec
     * replays sigma/P by hand on a diamond-plus-tail graph and a clique. */
@@ -790,15 +809,23 @@ object GraphOps {
   /** Same operator over any symmetric (src, dst) edge frame — Round9Spec
     * pins hop distances and the unreached bucket on a hand-worked path
     * graph. */
-  def khopOn(sym: DataFrame): DataFrame = {
+  def khopOn(sym: DataFrame): DataFrame = relaxHistogram(sym, KhopRounds, lit(1L))
+
+  /** Bounded frontier relaxation + distance histogram over a symmetric
+    * (src, dst, …) edge frame, shared by gr_khop (`step` 1: hop count)
+    * and gr_sssp (`step` the edge weight w): every node u % 100 == 0
+    * seeds at d = 0, each of `rounds` rounds relaxes d(v) = min(d(v),
+    * min over incoming (d(u) + step)), and the output is the exact
+    * (d, n_users) histogram with unreached nodes at d = -1. */
+  private def relaxHistogram(sym: DataFrame, rounds: Int, step: Column): DataFrame = {
     val nodes = sym.select(col("src").as("u")).distinct()
       .localCheckpoint() // consumers: seed filter + final left join
     var dist = nodes.filter(col("u") % 100 === 0)
       .select(col("u"), lit(0L).as("d"))
       .localCheckpoint()
-    for (_ <- 1 to KhopRounds) {
+    for (_ <- 1 to rounds) {
       dist = dist.join(sym, col("u") === col("src"))
-        .select(col("dst").as("u"), (col("d") + 1L).as("d"))
+        .select(col("dst").as("u"), (col("d") + step).as("d"))
         .unionByName(dist.select(col("u"), col("d")))
         .groupBy("u").agg(min(col("d")).as("d"))
         .localCheckpoint() // consumed by next round's join AND union
@@ -831,31 +858,12 @@ object GraphOps {
       .groupBy("a", "b")
       .agg(count(lit(1)).as("n"))
       .select(col("a"), col("b"), greatest(lit(1L), lit(11L) - col("n")).as("w"))
-    val sym = we.select(col("a").as("src"), col("b").as("dst"), col("w"))
-      .unionByName(we.select(col("b").as("src"), col("a").as("dst"), col("w")))
-      .localCheckpoint() // one join per round
-    ssspOn(sym)
+    ssspOn(sym(we, "a", "b", carry = Seq("w"))
+      .localCheckpoint()) // one join per round
   }
 
   /** Same operator over any symmetric (src, dst, w) edge frame. */
-  def ssspOn(sym: DataFrame): DataFrame = {
-    val nodes = sym.select(col("src").as("u")).distinct()
-      .localCheckpoint() // consumers: seed filter + final left join
-    var dist = nodes.filter(col("u") % 100 === 0)
-      .select(col("u"), lit(0L).as("d"))
-      .localCheckpoint()
-    for (_ <- 1 to SsspRounds) {
-      dist = dist.join(sym, col("u") === col("src"))
-        .select(col("dst").as("u"), (col("d") + col("w")).as("d"))
-        .unionByName(dist.select(col("u"), col("d")))
-        .groupBy("u").agg(min(col("d")).as("d"))
-        .localCheckpoint() // consumed by next round's join AND union
-    }
-    nodes.join(dist, Seq("u"), "left")
-      .select(col("u"), coalesce(col("d"), lit(-1L)).as("d"))
-      .groupBy("d").agg(count(lit(1)).as("n_users"))
-      .orderBy("d")
-  }
+  def ssspOn(sym: DataFrame): DataFrame = relaxHistogram(sym, SsspRounds, col("w"))
 
   /** Peeling rounds / core threshold of gr_kcore. */
   val KcoreRounds = 4
@@ -873,13 +881,8 @@ object GraphOps {
     * join of the edge list against the surviving-node set on each
     * endpoint — never a pairwise product; per-round frames
     * localCheckpoint (loop-carried, multiply consumed). */
-  def kcore(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val ed = coActivityEdges(spark, dir)
-    val sym = ed.select((col("a") + lit(0L)).as("src"), (col("b") + lit(0L)).as("dst"))
-      .unionByName(ed.select((col("b") + lit(0L)).as("src"), (col("a") + lit(0L)).as("dst")))
-      .localCheckpoint()
-    kcoreOn(sym)
-  }
+  def kcore(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    kcoreOn(coActivitySym(spark, dir))
 
   /** Same operator over any symmetric (src, dst) edge frame. */
   def kcoreOn(sym0: DataFrame): DataFrame = {
@@ -1032,9 +1035,7 @@ object GraphOps {
         .filter(col("ns") >= LpaMinShared)
         .select("a", "b")
         .localCheckpoint() // m + intra lookups + both sym directions
-      val sym = edges.select((col("a") + lit(0L)).as("src"), (col("b") + lit(0L)).as("dst"))
-        .unionByName(edges.select((col("b") + lit(0L)).as("src"), (col("a") + lit(0L)).as("dst")))
-      val labels = lpaLabelsOn(sym)
+      val labels = lpaLabelsOn(sym(edges, "a", "b"))
         .localCheckpoint() // every consumer reads labels 2-4 times
       Seq(edges, labels)
     } match { case Seq(edges, labels) => (edges, labels) }
@@ -1169,35 +1170,115 @@ object GraphOps {
     * only one-row frames. */
   def modularity(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val (edges, labels) = lpaChain(spark, dir)
-    val sym = edges.select((col("a") + lit(0L)).as("src"), (col("b") + lit(0L)).as("dst"))
-      .unionByName(edges.select((col("b") + lit(0L)).as("src"), (col("a") + lit(0L)).as("dst")))
-    val deg = sym.groupBy(col("src").as("u")).agg(count(lit(1)).as("d"))
-    val ds = deg.join(labels, Seq("u"))
-      .groupBy("lbl")
-      .agg(sum("d").as("degree_sum"), count(lit(1)).as("n_members"))
-    val intra = edges
-      .join(labels.select(col("u").as("a"), col("lbl").as("la")), Seq("a"))
-      .join(labels.select(col("u").as("b"), col("lbl").as("lb")), Seq("b"))
-      .filter(col("la") === col("lb"))
-      .groupBy(col("la").as("lbl")).agg(count(lit(1)).as("intra_edges"))
-    val per = ds.join(intra, Seq("lbl"), "left_outer")
-      .select(col("lbl"), col("n_members"), col("degree_sum"),
-        coalesce(col("intra_edges"), lit(0L)).as("intra_edges"))
+    val deg = sym(edges, "a", "b").groupBy(col("src").as("u")).agg(count(lit(1)).as("d"))
+    val per = communityStats(edges, deg, labels)
       .localCheckpoint() // global Q sums + published top rows read it
-    val glob = per.agg(
-      sum(col("intra_edges")).as("smc"),
-      sum(expr("CAST(degree_sum AS DECIMAL(19,0)) * CAST(degree_sum AS DECIMAL(19,0))"))
-        .as("sd2"))
-    val mrow = edges.agg(count(lit(1)).as("m"))
-    val q = glob.crossJoin(mrow).select(expr(
-      "CAST((CAST(10000 AS DECIMAL(38,0)) * " +
-        "(CAST(4 AS DECIMAL(38,0)) * m * smc - sd2 + CAST(4 AS DECIMAL(38,0)) * m * m)) " +
-        "div (CAST(4 AS DECIMAL(38,0)) * m * m) - 10000 AS BIGINT)").as("q_x10000"))
+    val q = louvainQRow(per, edges.agg(count(lit(1)).as("m")), "q_x10000",
+      "intra_edges", "degree_sum")
     per.crossJoin(broadcast(q)) // one-row global score onto the top rows
       .select(col("lbl").as("community"), col("n_members"), col("degree_sum"),
         col("intra_edges"), col("q_x10000"))
       .orderBy(col("n_members").desc, col("community"))
       .limit(12)
+  }
+
+  /** Per-community stats of a (u, lbl) partition over the (a, b) edge
+    * list and its node degrees (u, d): (lbl, n_members, degree_sum,
+    * intra_edges), intra_edges counting the edges with both endpoints in
+    * the community (0 when there are none). Shared by gr_modularity and
+    * both Q sides of gr_louvain_move. Lazy. */
+  private def communityStats(edges: DataFrame, deg: DataFrame, lab: DataFrame): DataFrame = {
+    val ds = deg.join(lab, Seq("u"))
+      .groupBy("lbl").agg(sum("d").as("degree_sum"), count(lit(1)).as("n_members"))
+    val intra = edges
+      .join(lab.select(col("u").as("a"), col("lbl").as("la")), Seq("a"))
+      .join(lab.select(col("u").as("b"), col("lbl").as("lb")), Seq("b"))
+      .filter(col("la") === col("lb"))
+      .groupBy(col("la").as("lbl")).agg(count(lit(1)).as("intra_edges"))
+    ds.join(intra, Seq("lbl"), "left_outer")
+      .select(col("lbl"), col("n_members"), col("degree_sum"),
+        coalesce(col("intra_edges"), lit(0L)).as("intra_edges"))
+  }
+
+  /** One-row Newman-Girvan Q of a per-community frame under the one-row
+    * edge mass `mrow` (m): Q = (4m·Σintra − Σdeg²) / (4m²), computed
+    * entirely in DECIMAL(38,0) (deg² is the gr_assort wrap class —
+    * operands cast BEFORE the multiply) and published as `name` = Q·10⁴
+    * via the nonneg-shift integer division (numer ≥ −4m² always, so
+    * shifting by 4m²·10⁴ keeps Spark `div` = DuckDB `//`). `intra` and
+    * `deg` name the per-community internal mass and degree columns. The
+    * one copy of the Q arithmetic: every Q the graph keys publish is this
+    * row. */
+  private def louvainQRow(per: DataFrame, mrow: DataFrame, name: String,
+      intra: String = "intra_w", deg: String = "deg_w"): DataFrame =
+    per.agg(
+        sum(col(intra)).as("smc"),
+        sum(expr(s"CAST($deg AS DECIMAL(19,0)) * CAST($deg AS DECIMAL(19,0))")).as("sd2"))
+      .crossJoin(mrow)
+      .select(expr(
+        "CAST((CAST(10000 AS DECIMAL(38,0)) * " +
+          "(CAST(4 AS DECIMAL(38,0)) * m * smc - sd2 + CAST(4 AS DECIMAL(38,0)) * m * m)) " +
+          s"div (CAST(4 AS DECIMAL(38,0)) * m * m) - 10000 AS BIGINT)").as(name))
+
+  /** The guarded synchronous move of every Louvain level. `scored` holds
+    * one row per (node, candidate community lc) with kin (the node's edge
+    * weight into lc), the node's degree `deg`, lc's Σtot `stot`, the
+    * node's own community `own` and the one-row mass m. The INSERT-gain
+    * numerator g = 2m·k_in − k_i·(Σtot − [lc = own]·k_i) is an exact
+    * BIGINT (every operand a count or a sum of counts); each node takes
+    * its argmax on (g desc, lc asc) and MOVES only under the Grappolo
+    * guard — strict improvement (g(best) > g(own)) AND a lower target
+    * label (lc < own). Returns (node, out), checkpointed. */
+  private def guardedMove(scored: DataFrame, node: String, own: String, deg: String,
+      out: String): DataFrame = {
+    val gains = scored
+      .withColumn("g", lit(2L) * col("m") * col("kin")
+        - col(deg) * (col("stot") - when(col("lc") === col(own), col(deg)).otherwise(lit(0L))))
+      .select((Seq(node, "lc", own).distinct :+ "g").map(col): _*)
+      .localCheckpoint() // argmax window + own-gain lookup
+    val wMove = Window.partitionBy(node).orderBy(col("g").desc, col("lc").asc)
+    val best = gains.withColumn("rn", row_number().over(wMove)).filter(col("rn") === 1)
+    val ownGain = gains.filter(col("lc") === col(own)).select(col(node), col("g").as("gown"))
+    best.join(ownGain, Seq(node))
+      .select(col(node),
+        when(col("g") > col("gown") && col("lc") < col(own), col("lc"))
+          .otherwise(col(own)).as(out))
+      .localCheckpoint() // the caller's rollups and lookups
+  }
+
+  /** Shared phase-1 core: (deg, mrow, newlab) over the artifact chain's
+    * (edges, labels) — the guarded synchronous sweep documented on
+    * gr_louvain_move, from the LPA partition, consumed by the move
+    * report, the coarsening and both multi-level keys. mrow is the
+    * one-row edge mass m every level of the same graph shares
+    * (contraction preserves it). */
+  private def louvainMoveParts(edges: DataFrame, labels: DataFrame)
+      : (DataFrame, DataFrame, DataFrame) = {
+    // §2.6 overlap: sym and mrow are independent reads of the
+    // (checkpointed) edges — submit concurrently so the one-row edge
+    // count rides sym's materialization instead of queueing behind it
+    val (s, mrow) = Par.run2(
+      () => sym(edges, "a", "b")
+        .localCheckpoint(), // deg + k_in sides
+      () => edges.agg(count(lit(1)).as("m"))
+        .localCheckpoint()) // gain expr + Q rows
+    val deg = s.groupBy(col("src").as("u")).agg(count(lit(1)).as("d"))
+      .localCheckpoint() // stot + gain join + after stats
+    val stot = deg.join(labels, Seq("u"))
+      .groupBy(col("lbl").as("lc")).agg(sum("d").as("stot"))
+    val kiin = s.select(col("src").as("u"), col("dst").as("v"))
+      .join(labels.select(col("u").as("v"), col("lbl").as("lc")), Seq("v"))
+      .groupBy("u", "lc").agg(count(lit(1)).as("kin"))
+    // the own community is always a candidate, even with zero intra edges
+    val cand = kiin
+      .unionByName(labels.select(col("u"), col("lbl").as("lc"), lit(0L).as("kin")))
+      .groupBy("u", "lc").agg(max(col("kin")).as("kin"))
+    val newlab = guardedMove(cand
+        .join(deg, Seq("u"))
+        .join(labels.select(col("u"), col("lbl").as("la")), Seq("u"))
+        .join(stot, Seq("lc"))
+        .crossJoin(broadcast(mrow)), "u", "la", "d", "nl")
+    (deg, mrow, newlab)
   }
 
   /** LOUVAIN MOVE PHASE (gr_louvain_move) — one synchronous sweep of the
@@ -1226,87 +1307,61 @@ object GraphOps {
     * in degree-bounded rows; m and both Q rows are one-row broadcasts.
     * g stays under 2^63 through ~sf100 on this graph (2m·k_in ~ e·d);
     * past that the gr_assort DECIMAL switch applies. */
-  /** Shared phase-1 core: (sym, deg, mrow, newlab) over the artifact
-    * chain's (edges, labels) — the guarded synchronous sweep documented
-    * on gr_louvain_move, consumed by the move report AND the phase-2
-    * coarsening. All shapes/bounds as documented there. */
-  private[graft] def louvainMoveParts(edges: DataFrame, labels: DataFrame)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    // §2.6 overlap: sym and mrow are independent reads of the
-    // (checkpointed) edges — submit concurrently so the one-row edge
-    // count rides sym's materialization instead of queueing behind it
-    val (sym, mrow) = Par.run2(
-      () => edges.select((col("a") + lit(0L)).as("src"), (col("b") + lit(0L)).as("dst"))
-        .unionByName(edges.select((col("b") + lit(0L)).as("src"), (col("a") + lit(0L)).as("dst")))
-        .localCheckpoint(), // deg + k_in sides
-      () => edges.agg(count(lit(1)).as("m"))
-        .localCheckpoint()) // gain expr + two Q rows
-    val deg = sym.groupBy(col("src").as("u")).agg(count(lit(1)).as("d"))
-      .localCheckpoint() // stot + gain join + after stats
-    val stot = deg.join(labels, Seq("u"))
-      .groupBy(col("lbl").as("lc")).agg(sum("d").as("stot"))
-    val kiin = sym.select(col("src").as("u"), col("dst").as("v"))
-      .join(labels.select(col("u").as("v"), col("lbl").as("lc")), Seq("v"))
-      .groupBy("u", "lc").agg(count(lit(1)).as("kin"))
-    // the own community is always a candidate, even with zero intra edges
-    val cand = kiin
-      .unionByName(labels.select(col("u"), col("lbl").as("lc"), lit(0L).as("kin")))
-      .groupBy("u", "lc").agg(max(col("kin")).as("kin"))
-    val wMove = Window.partitionBy("u").orderBy(col("g").desc, col("lc").asc)
-    val gains = cand
-      .join(deg, Seq("u"))
-      .join(labels.select(col("u"), col("lbl").as("la")), Seq("u"))
-      .join(stot, Seq("lc"))
-      .crossJoin(broadcast(mrow))
-      .withColumn("g", lit(2L) * col("m") * col("kin")
-        - col("d") * (col("stot") - when(col("lc") === col("la"), col("d")).otherwise(lit(0L))))
-      .select("u", "lc", "la", "g")
-      .localCheckpoint() // argmax window + own-gain lookup
-    val best = gains.withColumn("rn", row_number().over(wMove)).filter(col("rn") === 1)
-    val own = gains.filter(col("lc") === col("la")).select(col("u"), col("g").as("gown"))
-    val newlab = best.join(own, Seq("u"))
-      .select(col("u"),
-        when(col("g") > col("gown") && col("lc") < col("la"), col("lc"))
-          .otherwise(col("la")).as("nl"))
-      .localCheckpoint() // after stats + after intra lookup
-    (sym, deg, mrow, newlab)
-  }
-
   def louvainMove(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val (edges, labels) = lpaChain(spark, dir)
-    val (_, deg, mrow, newlab) = louvainMoveParts(edges, labels)
-    def perStats(lab: DataFrame): DataFrame = {
-      val ds = deg.join(lab, Seq("u"))
-        .groupBy("lbl").agg(sum("d").as("degree_sum"), count(lit(1)).as("n_members"))
-      val ia = edges
-        .join(lab.select(col("u").as("a"), col("lbl").as("la2")), Seq("a"))
-        .join(lab.select(col("u").as("b"), col("lbl").as("lb2")), Seq("b"))
-        .filter(col("la2") === col("lb2"))
-        .groupBy(col("la2").as("lbl")).agg(count(lit(1)).as("intra_edges"))
-      ds.join(ia, Seq("lbl"), "left_outer")
-        .select(col("lbl"), col("n_members"), col("degree_sum"),
-          coalesce(col("intra_edges"), lit(0L)).as("intra_edges"))
-    }
-    def qRow(per: DataFrame, name: String): DataFrame =
-      per.agg(
-          sum(col("intra_edges")).as("smc"),
-          sum(expr("CAST(degree_sum AS DECIMAL(19,0)) * CAST(degree_sum AS DECIMAL(19,0))"))
-            .as("sd2"))
-        .crossJoin(mrow)
-        .select(expr(
-          "CAST((CAST(10000 AS DECIMAL(38,0)) * " +
-            "(CAST(4 AS DECIMAL(38,0)) * m * smc - sd2 + CAST(4 AS DECIMAL(38,0)) * m * m)) " +
-            s"div (CAST(4 AS DECIMAL(38,0)) * m * m) - 10000 AS BIGINT)").as(name))
-    val perAfter = perStats(newlab.select(col("u"), col("nl").as("lbl")))
+    val (deg, mrow, newlab) = louvainMoveParts(edges, labels)
+    val perAfter = communityStats(edges, deg, newlab.select(col("u"), col("nl").as("lbl")))
       .localCheckpoint() // Q sums + published top rows
+    def q(per: DataFrame, name: String): DataFrame =
+      broadcast(louvainQRow(per, mrow, name, "intra_edges", "degree_sum"))
     perAfter
-      .crossJoin(broadcast(qRow(perStats(labels), "q_before_x10000")))
-      .crossJoin(broadcast(qRow(perAfter, "q_after_x10000")))
+      .crossJoin(q(communityStats(edges, deg, labels), "q_before_x10000"))
+      .crossJoin(q(perAfter, "q_after_x10000"))
       .select(col("lbl").as("community"), col("n_members"), col("degree_sum"),
         col("intra_edges"), col("q_before_x10000"), col("q_after_x10000"))
       .orderBy(col("n_members").desc, col("community"))
       .limit(12)
+  }
+
+  /** Level-1 contraction (Blondel et al. phase 2): fold the post-move
+    * partition newlab (u, nl) over the (a, b) edges into a super-graph —
+    * self-loop weights selfs (c, self_w), inter-community weights inter
+    * (c1 < c2, w) and original-node mass (c, n_nodes). ea (every edge
+    * with both endpoint communities) is checkpointed, since two rollups
+    * read it; the three rollups come back lazy, for each caller to
+    * checkpoint as its consumers need. */
+  private def louvainContract(edges: DataFrame, newlab: DataFrame)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val ea = edges
+      .join(newlab.select(col("u").as("a"), col("nl").as("ca")), Seq("a"))
+      .join(newlab.select(col("u").as("b"), col("nl").as("cb")), Seq("b"))
+      .localCheckpoint() // self-loop + inter branches
+    (ea.filter(col("ca") === col("cb"))
+        .groupBy(col("ca").as("c")).agg(count(lit(1)).as("self_w")),
+      ea.filter(col("ca") =!= col("cb"))
+        .select(least(col("ca"), col("cb")).as("c1"), greatest(col("ca"), col("cb")).as("c2"))
+        .groupBy("c1", "c2").agg(count(lit(1)).as("w")),
+      newlab.groupBy(col("nl").as("c")).agg(count(lit(1)).as("n_nodes")))
+  }
+
+  /** Per super-node degrees of a coarse graph (selfs, inter, mass):
+    * (c, n_nodes, self_w, ext_w, deg_w), deg_w = 2·self_w + ext_w — the
+    * super-graph's own degree (a self-loop counts at both ends). Every
+    * super-node in mass has a row, an edge-less one reading 0. Under the
+    * singleton partition these rows ARE the per-community (intra, degree)
+    * stats, so their Q is the Q of the partition that was contracted.
+    * Lazy. */
+  private def coarseDegrees(selfs: DataFrame, inter: DataFrame, mass: DataFrame): DataFrame = {
+    val ext = inter.select(col("c1").as("c"), col("w"))
+      .unionByName(inter.select(col("c2").as("c"), col("w")))
+      .groupBy("c").agg(sum(col("w")).as("ext_w"))
+    mass
+      .join(selfs, Seq("c"), "left_outer")
+      .join(ext, Seq("c"), "left_outer")
+      .select(col("c"), col("n_nodes"),
+        coalesce(col("self_w"), lit(0L)).as("self_w"),
+        coalesce(col("ext_w"), lit(0L)).as("ext_w"))
+      .withColumn("deg_w", lit(2L) * col("self_w") + col("ext_w"))
   }
 
   /** LOUVAIN COARSENING (gr_louvain_coarsen) — phase 2 of Blondel et
@@ -1329,166 +1384,122 @@ object GraphOps {
     * than the input by construction. */
   def louvainCoarsen(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val (edges, labels) = lpaChain(spark, dir)
-    val (_, deg, mrow, newlab) = louvainMoveParts(edges, labels)
-    val ea = edges
-      .join(newlab.select(col("u").as("a"), col("nl").as("ca")), Seq("a"))
-      .join(newlab.select(col("u").as("b"), col("nl").as("cb")), Seq("b"))
-      .localCheckpoint() // self-loop + inter branches
-    val selfs = ea.filter(col("ca") === col("cb"))
-      .groupBy(col("ca").as("community")).agg(count(lit(1)).as("self_loops"))
-    val inter = ea.filter(col("ca") =!= col("cb"))
-      .select(least(col("ca"), col("cb")).as("c1"), greatest(col("ca"), col("cb")).as("c2"))
-      .groupBy("c1", "c2").agg(count(lit(1)).as("w"))
+    val (deg, mrow, newlab) = louvainMoveParts(edges, labels)
+    val (selfs, interL, mass) = louvainContract(edges, newlab)
+    val inter = interL
       .localCheckpoint() // n_super_edges + both per-side ext rollups
-    val ext = inter.select(col("c1").as("community"), col("w"))
-      .unionByName(inter.select(col("c2").as("community"), col("w")))
-      .groupBy("community").agg(sum(col("w")).as("ext_w"))
-    val per = newlab.groupBy(col("nl").as("community")).agg(count(lit(1)).as("n_members"))
-      .join(selfs, Seq("community"), "left_outer")
-      .join(ext, Seq("community"), "left_outer")
-      .select(col("community"), col("n_members"),
-        coalesce(col("self_loops"), lit(0L)).as("self_loops"),
-        coalesce(col("ext_w"), lit(0L)).as("ext_w"))
-      .withColumn("deg_w", lit(2L) * col("self_loops") + col("ext_w"))
+    val per = coarseDegrees(selfs, inter, mass)
       .localCheckpoint() // coarse-Q sums + published rows
-    def q(src: DataFrame, degCol: String, name: String): DataFrame =
-      src.agg(
-          sum(col("self_loops")).as("smc"),
-          sum(expr(s"CAST($degCol AS DECIMAL(19,0)) * CAST($degCol AS DECIMAL(19,0))"))
-            .as("sd2"))
-        .crossJoin(mrow)
-        .select(expr(
-          "CAST((CAST(10000 AS DECIMAL(38,0)) * " +
-            "(CAST(4 AS DECIMAL(38,0)) * m * smc - sd2 + CAST(4 AS DECIMAL(38,0)) * m * m)) " +
-            s"div (CAST(4 AS DECIMAL(38,0)) * m * m) - 10000 AS BIGINT)").as(name))
     // node-grain twin: per-community degree as the sum of member degrees
     val nodeGrain = deg.join(newlab, Seq("u"))
-      .groupBy(col("nl").as("community")).agg(sum(col("d")).as("deg_n"))
-      .join(per.select("community", "self_loops"), Seq("community"))
+      .groupBy(col("nl").as("c")).agg(sum(col("d")).as("deg_n"))
+      .join(per.select("c", "self_w"), Seq("c"))
     val gRow = per.agg(count(lit(1)).as("n_super_nodes"))
       .crossJoin(inter.agg(count(lit(1)).as("n_super_edges")))
-      .crossJoin(q(per, "deg_w", "q_coarse_x10000"))
-      .crossJoin(q(nodeGrain, "deg_n", "q_after_x10000"))
+      .crossJoin(louvainQRow(per, mrow, "q_coarse_x10000", "self_w"))
+      .crossJoin(louvainQRow(nodeGrain, mrow, "q_after_x10000", "self_w", "deg_n"))
     per.crossJoin(broadcast(gRow))
-      .select(col("community"), col("n_members"), col("self_loops"), col("ext_w"),
+      .select(col("c").as("community"), col("n_nodes").as("n_members"),
+        col("self_w").as("self_loops"), col("ext_w"),
         col("deg_w"), col("n_super_nodes"), col("n_super_edges"),
         col("q_after_x10000"), col("q_coarse_x10000"))
       .orderBy(col("n_members").desc, col("community"))
       .limit(12)
   }
 
+  /** One weighted Louvain level on a coarse graph, with its contraction:
+    * the body of gr_louvain_level2 and of every gr_louvain_full level.
+    * `kdeg`: the level's super-nodes (coarseDegrees; their Q is the
+    * previous partition's); `per`: the post-move communities (l2,
+    * n_super, n_nodes, intra_w, deg_w); `inter`/`selfs`/`mass`: the
+    * contracted graph the next level runs on. */
+  private case class WeightedLevel(kdeg: DataFrame, per: DataFrame, inter: DataFrame,
+      selfs: DataFrame, mass: DataFrame)
+
+  /** The weighted move phase on a coarse graph (inter: c1 < c2
+    * inter-community weights, selfs: self-loop weights, mass:
+    * original-node mass per super-node): super-nodes start as singleton
+    * communities and run guardedMove with every count replaced by a
+    * WEIGHT — k_in sums super-edge weights into B, k_i = Σw + 2·self (the
+    * self-loop rides with the node, contributing to its degree but never
+    * to another community's k_in), Σtot(B) = k(B). m is the GLOBAL edge
+    * mass (contraction preserves total mass, so level 1's one-row m
+    * serves every level). Then the contraction: new self weight = the
+    * community's intra mass; inter weights re-key on the surviving
+    * labels; node mass rolls up. Every frame here is
+    * O(communities)/O(super-edges) — strictly shrinking by level.
+    *
+    * inter arrives CHECKPOINTED (the caller's level-1 rollup / the loop's
+    * overlapped checkpoint); selfs, mass and sym(inter) are cheap
+    * projections of checkpointed parents, so re-materializing them would
+    * cost a blocking job per level for nothing — they stay lazy. */
+  private def louvainWeightedLevel(inter: DataFrame, selfs: DataFrame, mass: DataFrame,
+      mrow: DataFrame): WeightedLevel = {
+    val kdeg = coarseDegrees(selfs, inter, mass)
+      .localCheckpoint() // gain join + stot lookup + per rollup + singleton Q
+    val kiin = sym(inter, "c1", "c2", "c", "lc", Seq("w"))
+      .groupBy("c", "lc").agg(sum(col("w")).as("kin"))
+    // singleton start: own community = the node itself
+    val cand = kiin
+      .unionByName(kdeg.select(col("c"), col("c").as("lc"), lit(0L).as("kin")))
+      .groupBy("c", "lc").agg(max(col("kin")).as("kin"))
+    val newlab = guardedMove(cand
+        .join(kdeg, Seq("c"))
+        .join(kdeg.select(col("c").as("lc"), col("deg_w").as("stot")), Seq("lc"))
+        .crossJoin(broadcast(mrow)), "c", "c", "deg_w", "l2")
+    // inter edges keyed by both endpoints' new communities: the internal
+    // ones add to intra mass, the rest re-key the contracted graph
+    val ia = inter
+      .join(newlab.select(col("c").as("c1"), col("l2").as("la2")), Seq("c1"))
+      .join(newlab.select(col("c").as("c2"), col("l2").as("lb2")), Seq("c2"))
+    val iin = ia.filter(col("la2") === col("lb2"))
+      .groupBy(col("la2").as("l2")).agg(sum(col("w")).as("iw2"))
+    val per = newlab.join(kdeg, Seq("c"))
+      .groupBy("l2").agg(count(lit(1)).as("n_super"), sum(col("n_nodes")).as("n_nodes"),
+        sum(col("self_w")).as("sw2"), sum(col("deg_w")).as("deg_w"))
+      .join(iin, Seq("l2"), "left_outer")
+      .select(col("l2"), col("n_super"), col("n_nodes"),
+        (col("sw2") + coalesce(col("iw2"), lit(0L))).as("intra_w"), col("deg_w"))
+      .localCheckpoint() // stats + Q sums + published rows + next-level selfs/mass
+    WeightedLevel(kdeg, per,
+      inter = ia.filter(col("la2") =!= col("lb2"))
+        .select(least(col("la2"), col("lb2")).as("c1"),
+          greatest(col("la2"), col("lb2")).as("c2"), col("w"))
+        .groupBy("c1", "c2").agg(sum(col("w")).as("w")),
+      selfs = per.select(col("l2").as("c"), col("intra_w").as("self_w")),
+      mass = per.select(col("l2").as("c"), col("n_nodes")))
+  }
+
   /** LOUVAIN LEVEL 2 (gr_louvain_level2) — the weighted move phase on
     * the COARSENED graph, closing the multi-level loop (Blondel et al.:
-    * move, contract, move again on the super-graph): super-nodes start
-    * as singleton communities and evaluate the SAME insert-gain
-    * g(B) = 2m·k_in(B) − k_i·Σtot(B∖{i}) with every count replaced by a
-    * WEIGHT — k_in sums super-edge weights into B, k_i = Σw + 2·self
-    * (the self-loop rides with the node, contributing to its degree but
-    * never to another community's k_in — the standard convention), m =
-    * total weight including self-loops. Same synchronous sweep, same
-    * Grappolo guard, all BIGINT (weights are counts of original edges).
-    * Output per level-2 community: merged super-nodes, ORIGINAL node
-    * mass, internal weight and weighted degree, plus Q on the coarse
-    * graph under the singleton partition (q1 — equal to level 1's
-    * q_after by the coarsening invariant) and under the post-move
-    * partition (q2) — the multi-level climb, exact.
+    * move, contract, move again on the super-graph): one
+    * louvainWeightedLevel — super-nodes start as singleton communities
+    * and evaluate the SAME insert gain with every count replaced by a
+    * weight, same synchronous sweep, same Grappolo guard, all BIGINT
+    * (weights are counts of original edges). Output per level-2
+    * community: merged super-nodes, ORIGINAL node mass, internal weight
+    * and weighted degree, plus Q on the coarse graph under the singleton
+    * partition (q1 — equal to level 1's q_after by the coarsening
+    * invariant, and gr_louvain_full's level-1 row) and under the
+    * post-move partition (q2 — gr_louvain_full's level-2 row) — the
+    * multi-level climb, exact.
     *
     * Scale: every frame here is O(communities)/O(super-edges) —
     * strictly smaller than level 1's input by construction; the gain
     * join fans in a super-node's distinct neighbor-community count. */
   def louvainLevel2(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val (edges, labels) = lpaChain(spark, dir)
-    val (_, _, _, newlab) = louvainMoveParts(edges, labels)
-    val ea = edges
-      .join(newlab.select(col("u").as("a"), col("nl").as("ca")), Seq("a"))
-      .join(newlab.select(col("u").as("b"), col("nl").as("cb")), Seq("b"))
-      .localCheckpoint() // self-loop + inter branches
-    val selfs = ea.filter(col("ca") === col("cb"))
-      .groupBy(col("ca").as("c")).agg(count(lit(1)).as("self_w"))
+    val (_, mrow, newlab) = louvainMoveParts(edges, labels)
+    val (selfs, interL, massL) = louvainContract(edges, newlab)
     // §2.6 overlap: inter (reads ea) and mass (reads newlab) are
     // independent rollups of checkpointed parents — submit concurrently
     val (inter, mass) = Par.run2(
-      () => ea.filter(col("ca") =!= col("cb"))
-        .select(least(col("ca"), col("cb")).as("c1"), greatest(col("ca"), col("cb")).as("c2"))
-        .groupBy("c1", "c2").agg(count(lit(1)).as("w"))
-        .localCheckpoint(), // both sym directions + m + intra2 lookup
-      () => newlab.groupBy(col("nl").as("c")).agg(count(lit(1)).as("n_nodes"))
-        .localCheckpoint()) // node set + published mass + self join
-    val symw = inter.select(col("c1").as("c"), col("c2").as("d"), col("w"))
-      .unionByName(inter.select(col("c2").as("c"), col("c1").as("d"), col("w")))
-      .localCheckpoint() // kdeg + k_in sides
-    // §2.6 overlap: kdeg (symw+mass+selfs) and the one-row m (inter+selfs)
-    // are independent given the checkpoints above; selfs stays a lazy
-    // rollup over checkpointed ea, recomputed per consumer exactly as the
-    // sequential code did
-    val (kdeg, mrow) = Par.run2(
-      () => mass.select("c")
-        .join(symw.groupBy("c").agg(sum(col("w")).as("wsum")), Seq("c"), "left_outer")
-        .join(selfs, Seq("c"), "left_outer")
-        .select(col("c"), (coalesce(col("wsum"), lit(0L))
-          + lit(2L) * coalesce(col("self_w"), lit(0L))).as("k"))
-        .localCheckpoint(), // gain join + stot (identity) + both Q rows
-      () => inter.agg(sum(col("w")).as("iw"))
-        .crossJoin(selfs.agg(coalesce(sum(col("self_w")), lit(0L)).as("sw")))
-        .select((coalesce(col("iw"), lit(0L)) + col("sw")).as("m"))
-        .localCheckpoint()) // gain expr + two Q rows
-    // singleton start: Σtot(B) = k(B); own community = the node itself
-    val kiin = symw.select(col("c"), col("d").as("lc"), col("w"))
-      .groupBy("c", "lc").agg(sum(col("w")).as("kin"))
-    val cand = kiin
-      .unionByName(kdeg.select(col("c"), col("c").as("lc"), lit(0L).as("kin")))
-      .groupBy("c", "lc").agg(max(col("kin")).as("kin"))
-    val wMove = Window.partitionBy("c").orderBy(col("g").desc, col("lc").asc)
-    val gains = cand
-      .join(kdeg, Seq("c"))
-      .join(kdeg.select(col("c").as("lc"), col("k").as("stot")), Seq("lc"))
-      .crossJoin(broadcast(mrow))
-      .withColumn("g", lit(2L) * col("m") * col("kin")
-        - col("k") * (col("stot") - when(col("lc") === col("c"), col("k")).otherwise(lit(0L))))
-      .select("c", "lc", "g")
-      .localCheckpoint() // argmax window + own-gain lookup
-    val best = gains.withColumn("rn", row_number().over(wMove)).filter(col("rn") === 1)
-    val own = gains.filter(col("lc") === col("c")).select(col("c"), col("g").as("gown"))
-    val newlab2 = best.join(own, Seq("c"))
-      .select(col("c"),
-        when(col("g") > col("gown") && col("lc") < col("c"), col("lc"))
-          .otherwise(col("c")).as("l2"))
-      .localCheckpoint() // per2 rollup + intra2 double lookup + deg2
-    def qRow(per: DataFrame, name: String): DataFrame =
-      per.agg(
-          sum(col("intra_w")).as("smc"),
-          sum(expr("CAST(deg_w AS DECIMAL(19,0)) * CAST(deg_w AS DECIMAL(19,0))")).as("sd2"))
-        .crossJoin(mrow)
-        .select(expr(
-          "CAST((CAST(10000 AS DECIMAL(38,0)) * " +
-            "(CAST(4 AS DECIMAL(38,0)) * m * smc - sd2 + CAST(4 AS DECIMAL(38,0)) * m * m)) " +
-            s"div (CAST(4 AS DECIMAL(38,0)) * m * m) - 10000 AS BIGINT)").as(name))
-    // singleton partition stats (q1 — the level-1 continuity anchor)
-    val per1 = kdeg.join(selfs, Seq("c"), "left_outer")
-      .select(coalesce(col("self_w"), lit(0L)).as("intra_w"), col("k").as("deg_w"))
-    // post-move stats: internal weight = member self-loops + inter edges
-    // whose BOTH super-endpoints share the new community
-    val selfIn2 = newlab2.join(selfs, Seq("c"), "left_outer")
-      .groupBy(col("l2")).agg(coalesce(sum(col("self_w")), lit(0L)).as("sw2"))
-    val interIn2 = inter
-      .join(newlab2.select(col("c").as("c1"), col("l2").as("la2")), Seq("c1"))
-      .join(newlab2.select(col("c").as("c2"), col("l2").as("lb2")), Seq("c2"))
-      .filter(col("la2") === col("lb2"))
-      .groupBy(col("la2").as("l2")).agg(sum(col("w")).as("iw2"))
-    val deg2 = newlab2.join(kdeg, Seq("c"))
-      .groupBy("l2").agg(sum(col("k")).as("deg_w"), count(lit(1)).as("n_super"))
-    val per2 = deg2
-      .join(selfIn2, Seq("l2"))
-      .join(interIn2, Seq("l2"), "left_outer")
-      .select(col("l2"), col("n_super"), col("deg_w"),
-        (col("sw2") + coalesce(col("iw2"), lit(0L))).as("intra_w"))
-      .localCheckpoint() // Q sums + published rows
-    val nodeMass = newlab2.join(mass, Seq("c"))
-      .groupBy("l2").agg(sum(col("n_nodes")).as("n_nodes"))
-    per2.join(nodeMass, Seq("l2"))
-      .crossJoin(broadcast(qRow(per1, "q1_x10000")))
-      .crossJoin(broadcast(qRow(per2.select(col("intra_w"), col("deg_w")), "q2_x10000")))
+      () => interL.localCheckpoint(), // both sym directions + the level's lookups
+      () => massL.localCheckpoint()) // the level's node set + mass rollup
+    val lv = louvainWeightedLevel(inter, selfs, mass, mrow)
+    lv.per
+      .crossJoin(broadcast(louvainQRow(lv.kdeg, mrow, "q1_x10000", "self_w")))
+      .crossJoin(broadcast(louvainQRow(lv.per, mrow, "q2_x10000")))
       .select(col("l2").as("community"), col("n_super"), col("n_nodes"),
         col("intra_w"), col("deg_w"), col("q1_x10000"), col("q2_x10000"))
       .orderBy(col("n_nodes").desc, col("community"))
@@ -1499,103 +1510,6 @@ object GraphOps {
     * (Blondel et al. converge in a handful of levels on real graphs;
     * a level that fails to improve Q stops the loop earlier). */
   val LouvainMaxLevels = 4
-
-  /** One-row Q of a per-community (intra_w, deg_w) frame under total
-    * edge mass m — the gr_modularity formula on weighted quantities,
-    * DECIMAL(38,0) end-to-end with the nonneg-shift integer division. */
-  private def louvainQRow(per: DataFrame, mrow: DataFrame, name: String): DataFrame =
-    per.agg(
-        sum(col("intra_w")).as("smc"),
-        sum(expr("CAST(deg_w AS DECIMAL(19,0)) * CAST(deg_w AS DECIMAL(19,0))")).as("sd2"))
-      .crossJoin(mrow)
-      .select(expr(
-        "CAST((CAST(10000 AS DECIMAL(38,0)) * " +
-          "(CAST(4 AS DECIMAL(38,0)) * m * smc - sd2 + CAST(4 AS DECIMAL(38,0)) * m * m)) " +
-          s"div (CAST(4 AS DECIMAL(38,0)) * m * m) - 10000 AS BIGINT)").as(name))
-
-  /** The level-k body of gr_louvain_full: one singleton-start guarded
-    * weighted move (louvainLevel2's arithmetic exactly — same insert
-    * gain, same Grappolo guard, all BIGINT) followed by the contraction,
-    * on a coarse graph (inter: c1 < c2 inter-community weights, selfs:
-    * self-loop weights, mass: original-node mass per super-node). m is
-    * the GLOBAL edge mass (contraction preserves total mass, so level
-    * 1's one-row m serves every level). Returns the contracted
-    * (inter', selfs', mass') plus the level's one-row
-    * (n_super_nodes, q_x10000) stats. Every frame here is
-    * O(communities)/O(super-edges) — strictly shrinking by level. */
-  private def louvainWeightedLevel(inter0: DataFrame, selfs0: DataFrame,
-      mass0: DataFrame, mrow: DataFrame)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    // inter0 arrives CHECKPOINTED (level 1's Par rollup / the loop's
-    // overlapped i2 checkpoint) — the r13 per-level re-checkpoint here
-    // was a redundant blocking job
-    val inter = inter0 // sym x2 + intra2 lookup + inter2
-    // selfs/mass/symw are cheap projections of checkpointed parents
-    // (the caller's frames or `inter` above) — re-materializing them
-    // costs a blocking job per level for nothing; leave them lazy
-    val selfs = selfs0
-    val mass = mass0
-    val symw = inter.select(col("c1").as("c"), col("c2").as("d"), col("w"))
-      .unionByName(inter.select(col("c2").as("c"), col("c1").as("d"), col("w")))
-    val kdeg = mass.select("c")
-      .join(symw.groupBy("c").agg(sum(col("w")).as("wsum")), Seq("c"), "left_outer")
-      .join(selfs, Seq("c"), "left_outer")
-      .select(col("c"), (coalesce(col("wsum"), lit(0L))
-        + lit(2L) * coalesce(col("self_w"), lit(0L))).as("k"))
-      .localCheckpoint() // gain join + stot lookup + deg2
-    val kiin = symw.select(col("c"), col("d").as("lc"), col("w"))
-      .groupBy("c", "lc").agg(sum(col("w")).as("kin"))
-    val cand = kiin
-      .unionByName(kdeg.select(col("c"), col("c").as("lc"), lit(0L).as("kin")))
-      .groupBy("c", "lc").agg(max(col("kin")).as("kin"))
-    val wMove = Window.partitionBy("c").orderBy(col("g").desc, col("lc").asc)
-    val gains = cand
-      .join(kdeg, Seq("c"))
-      .join(kdeg.select(col("c").as("lc"), col("k").as("stot")), Seq("lc"))
-      .crossJoin(broadcast(mrow))
-      .withColumn("g", lit(2L) * col("m") * col("kin")
-        - col("k") * (col("stot") - when(col("lc") === col("c"), col("k")).otherwise(lit(0L))))
-      .select("c", "lc", "g")
-      .localCheckpoint() // argmax window + own-gain lookup
-    val best = gains.withColumn("rn", row_number().over(wMove)).filter(col("rn") === 1)
-    val own = gains.filter(col("lc") === col("c")).select(col("c"), col("g").as("gown"))
-    val newlab = best.join(own, Seq("c"))
-      .select(col("c"),
-        when(col("g") > col("gown") && col("lc") < col("c"), col("lc"))
-          .otherwise(col("c")).as("l2"))
-      .localCheckpoint() // per2 rollup + intra double lookup + mass2
-    val selfIn2 = newlab.join(selfs, Seq("c"), "left_outer")
-      .groupBy(col("l2")).agg(coalesce(sum(col("self_w")), lit(0L)).as("sw2"))
-    val interIn2 = inter
-      .join(newlab.select(col("c").as("c1"), col("l2").as("la2")), Seq("c1"))
-      .join(newlab.select(col("c").as("c2"), col("l2").as("lb2")), Seq("c2"))
-      .filter(col("la2") === col("lb2"))
-      .groupBy(col("la2").as("l2")).agg(sum(col("w")).as("iw2"))
-    val per2 = newlab.join(kdeg, Seq("c"))
-      .groupBy("l2").agg(sum(col("k")).as("deg_w"))
-      .join(selfIn2, Seq("l2"))
-      .join(interIn2, Seq("l2"), "left_outer")
-      .select(col("l2"),
-        (col("sw2") + coalesce(col("iw2"), lit(0L))).as("intra_w"), col("deg_w"))
-      .localCheckpoint() // stats count + Q sums + next-level selfs
-    val stats = per2.agg(count(lit(1)).as("n_super_nodes"))
-      .crossJoin(louvainQRow(per2, mrow, "q_x10000"))
-    // contraction: new self weight = the community's intra mass; inter
-    // weights re-key on the surviving labels; node mass rolls up
-    val selfs2 = per2.select(col("l2").as("c"), col("intra_w").as("self_w"))
-    val inter2 = inter
-      .join(newlab.select(col("c").as("c1"), col("l2").as("la2")), Seq("c1"))
-      .join(newlab.select(col("c").as("c2"), col("l2").as("lb2")), Seq("c2"))
-      .filter(col("la2") =!= col("lb2"))
-      .select(least(col("la2"), col("lb2")).as("c1"),
-        greatest(col("la2"), col("lb2")).as("c2"), col("w"))
-      .groupBy("c1", "c2").agg(sum(col("w")).as("w"))
-    val mass2 = newlab.join(mass, Seq("c"))
-      .groupBy(col("l2")).agg(sum(col("n_nodes")).as("n_nodes"))
-      .select(col("l2").as("c"), col("n_nodes"))
-    (inter2, selfs2, mass2, stats)
-  }
 
   /** FULL MULTI-LEVEL LOUVAIN (gr_louvain_full) — the composed loop the
     * three phase queries prove piecewise (Blondel, Guillaume, Lambiotte
@@ -1625,62 +1539,47 @@ object GraphOps {
     * (u, lbl) labels — Round19Spec pins a hand-worked two-level graph. */
   private[graft] def louvainFullOn(spark: org.apache.spark.sql.SparkSession,
       edges: DataFrame, labels: DataFrame): DataFrame = {
-    val (_, _, mrow, newlab) = louvainMoveParts(edges, labels)
-    // mrow comes back already checkpointed from louvainMoveParts — the r13
-    // second localCheckpoint here was one redundant blocking job
-    val ea = edges
-      .join(newlab.select(col("u").as("a"), col("nl").as("ca")), Seq("a"))
-      .join(newlab.select(col("u").as("b"), col("nl").as("cb")), Seq("b"))
-      .localCheckpoint() // self-loop + inter branches
+    val (_, mrow, newlab) = louvainMoveParts(edges, labels)
+    val (selfsL, interL, massL) = louvainContract(edges, newlab)
     // §2.6 overlap: the three level-1 rollups read only the checkpointed
     // ea/newlab — three independent small jobs, submitted concurrently
-    val Seq(selfs1, inter1, mass1) = Par.run(Seq[() => DataFrame](
-      () => ea.filter(col("ca") === col("cb"))
-        .groupBy(col("ca").as("c")).agg(count(lit(1)).as("self_w"))
-        .localCheckpoint(), // per1 + level-2 inputs
-      () => ea.filter(col("ca") =!= col("cb"))
-        .select(least(col("ca"), col("cb")).as("c1"), greatest(col("ca"), col("cb")).as("c2"))
-        .groupBy("c1", "c2").agg(count(lit(1)).as("w"))
-        .localCheckpoint(), // ext rollup + level-2 inputs
-      () => newlab.groupBy(col("nl").as("c")).agg(count(lit(1)).as("n_nodes"))
-        .localCheckpoint())) // per1 keys + level-2 inputs
-    val ext1 = inter1.select(col("c1").as("c"), col("w"))
-      .unionByName(inter1.select(col("c2").as("c"), col("w")))
-      .groupBy("c").agg(sum(col("w")).as("ext_w"))
-    val per1 = mass1.select("c")
-      .join(selfs1, Seq("c"), "left_outer")
-      .join(ext1, Seq("c"), "left_outer")
-      .select(col("c"), coalesce(col("self_w"), lit(0L)).as("intra_w"),
-        (lit(2L) * coalesce(col("self_w"), lit(0L))
-          + coalesce(col("ext_w"), lit(0L))).as("deg_w"))
-      .localCheckpoint() // count + Q sums
-    val st1 = per1.agg(count(lit(1)).as("n_super_nodes"))
-      .crossJoin(louvainQRow(per1, mrow, "q_x10000"))
-      .head() // ONE row — the bounded driver-side convergence read
+    val Seq(selfs, inter, mass) = Par.run(Seq[() => DataFrame](
+      () => selfsL.localCheckpoint(), // level-2 degrees + self rollup
+      () => interL.localCheckpoint(), // level-2 ext, k_in and re-key
+      () => massL.localCheckpoint())) // level-2 node set + mass rollup
+    // one row per level: (n_super_nodes, q_x10000) of a per-community frame
+    def stats(per: DataFrame, intra: String): DataFrame =
+      per.agg(count(lit(1)).as("n_super_nodes"))
+        .crossJoin(louvainQRow(per, mrow, "q_x10000", intra))
+    var lv = louvainWeightedLevel(inter, selfs, mass, mrow)
+    // level 1 = the level-2 super-nodes under the singleton partition;
+    // ONE row — the bounded driver-side convergence read
+    val st1 = stats(lv.kdeg, "self_w").head()
     val levels = scala.collection.mutable.ListBuffer(
       (1L, st1.getLong(0), st1.getLong(1)))
-    var (inter, selfs, mass) = (inter1, selfs1, mass1)
     var prevQ = st1.getLong(1)
     var lvl = 2
     var stop = false
     while (lvl <= LouvainMaxLevels && !stop) {
-      val (i2, s2, m2, statsF) = louvainWeightedLevel(inter, selfs, mass, mrow)
       // §2.6 overlap: the level's one-row stats read and the NEXT level's
       // inter checkpoint both consume only this level's checkpointed
       // frames — submit concurrently. On the final (plateau) level the
       // speculative checkpoint is one wasted small job that rides the
       // stats job instead of adding wall time.
-      val (st, i2c) = Par.run2(
-        () => statsF.head(), // one row per level, <= LouvainMaxLevels reads
-        () => i2.localCheckpoint())
+      val (st, interC) = Par.run2(
+        () => stats(lv.per, "intra_w").head(), // one row per level, <= LouvainMaxLevels reads
+        () => lv.inter.localCheckpoint())
       levels += ((lvl.toLong, st.getLong(0), st.getLong(1)))
       if (st.getLong(1) <= prevQ) stop = true // plateau published, loop ends
       prevQ = st.getLong(1)
-      inter = i2c; selfs = s2; mass = m2
       lvl += 1
+      if (lvl <= LouvainMaxLevels && !stop)
+        lv = louvainWeightedLevel(interC, lv.selfs, lv.mass, mrow)
     }
     import spark.implicits._
-    levels.toSeq.toDF("level", "n_super_nodes", "q_x10000").orderBy("level")
+    levels.toSeq.toDF("level", "n_super_nodes", "q_x10000")
+      .coalesce(1) // ≤ LouvainMaxLevels rows: sort in place, no range-partition sample + shuffle
+      .orderBy("level")
   }
 
   /** DEGREE ASSORTATIVITY (gr_assort) — Newman's r on the co-activity
@@ -1738,8 +1637,6 @@ object GraphOps {
       .orderBy("n_edges")
   }
 
-  /** Shared LPA oracle CTE chain (inc → edges → sym → l0..lN) — used by
-    * gr_lpa's rollup and gr_modularity's Q computation. */
   /** The guarded synchronous move sweep as chained CTEs (lab → newlab),
     * shared by the gr_louvain_move and gr_louvain_coarsen oracles —
     * mirrors louvainMoveParts exactly. */
@@ -1862,6 +1759,8 @@ object GraphOps {
        |)""".stripMargin
   }
 
+  // Shared LPA oracle CTE chain (inc → edges → sym → l0..lN) — used by
+  // gr_lpa's rollup and gr_modularity's Q computation.
   // Every multi-referenced CTE is MATERIALIZED: DuckDB inlines plain CTEs,
   // so sym (referenced once per LPA round) would re-execute the whole
   // edge build per round, and l$LpaRounds (referenced 2-3x by the
@@ -1948,8 +1847,7 @@ object GraphOps {
     * Round16Spec plants a path whose edge times DECREASE and pins that
     * static reachability does not leak through it. */
   def temporalReachOn(e: DataFrame, seedBelow: Long = 5L): DataFrame = {
-    val sym = e.select((col("a") + lit(0L)).as("u"), (col("b") + lit(0L)).as("v"), col("hs"))
-      .unionByName(e.select((col("b") + lit(0L)).as("u"), (col("a") + lit(0L)).as("v"), col("hs")))
+    val sym = GraphOps.sym(e, "a", "b", "u", "v", Seq("hs"))
       .localCheckpoint() // one join per round
     var arr = sym.select(col("u")).filter(col("u") < seedBelow).distinct()
       .select(col("u").as("root"), col("u").as("node"), lit(-1L).as("arr"))
@@ -1975,9 +1873,9 @@ object GraphOps {
     * gcc dropped to node granularity (Watts-Strogatz 1998): per node,
     * lcc = 2·t(v) / (d(v)·(d(v)−1)) — how close each ego-net is to a
     * clique, the per-node cohesion score community detection and bot
-    * heuristics both read. Triangle enumeration reuses the degree-
-    * ordered orientation (each triangle materializes ONCE, out-degrees
-    * bounded by arboricity — no hub wedge blowup), then every triangle
+    * heuristics both read. Triangle enumeration is gr_triangles'
+    * `triangles` (each triangle materializes ONCE, out-degrees bounded
+    * by arboricity — no hub wedge blowup), then every triangle
     * credits its three corners via explode and a map-side-combinable
     * count. lcc stays exact as (20000·t) div (d·(d−1)) on nonnegatives;
     * d ≥ 2 filter keeps the denominator positive on both engines.
@@ -1992,28 +1890,8 @@ object GraphOps {
   /** Same operator over any undirected a<b edge set — Round16Spec pins a
     * planted clique + a bridge node. */
   def localClusteringOn(edgesIn: DataFrame): DataFrame = {
-    val edges = edgesIn
-      .localCheckpoint() // degree + orientation builds
-    val deg = edges.select(col("a").as("u"))
-      .unionAll(edges.select(col("b").as("u")))
-      .groupBy("u").agg(count(lit(1)).as("d"))
-      .localCheckpoint() // orientation lookups + final join
-    val o = edges
-      .join(deg.select(col("u").as("a"), col("d").as("da")), Seq("a"))
-      .join(deg.select(col("u").as("b"), col("d").as("db")), Seq("b"))
-      .select(
-        when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
-          struct(col("a").as("src"), col("b").as("dst"), col("db").as("dd")))
-          .otherwise(struct(col("b").as("src"), col("a").as("dst"), col("da").as("dd")))
-          .as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"), col("e.dd").as("dd"))
-      .localCheckpoint() // three join sides
-    val triCorners = o.as("e1")
-      .join(o.as("e2"), col("e1.src") === col("e2.src")
-        && (col("e1.dd") < col("e2.dd")
-          || (col("e1.dd") === col("e2.dd") && col("e1.dst") < col("e2.dst"))))
-      .select(col("e1.src").as("n0"), col("e1.dst").as("tv"), col("e2.dst").as("tw"))
-      .join(o.as("e3"), col("tv") === col("e3.src") && col("tw") === col("e3.dst"))
+    val (_, deg, tri) = triangles(edgesIn)
+    val triCorners = tri
       .select(explode(array(col("n0"), col("tv"), col("tw"))).as("u"))
       .groupBy("u").agg(count(lit(1)).as("t"))
     deg.filter(col("d") >= 2)

@@ -263,10 +263,7 @@ object Similarity {
       .localCheckpoint() // consumers: sym sides, union, eval, next round
     val wRe = Window.partitionBy("u").orderBy(col("cos").desc, col("w").asc)
     def refine(g: DataFrame): DataFrame = {
-      // +0L re-aliases: the swapped-column union trips Spark's Union
-      // constraint rewrite otherwise (the GraphOps.sym rule)
-      val sym = g.select((col("src") + lit(0L)).as("src"), (col("dst") + lit(0L)).as("dst"))
-        .unionByName(g.select((col("dst") + lit(0L)).as("src"), (col("src") + lit(0L)).as("dst")))
+      val sym = GraphOps.sym(g, "src", "dst")
         .distinct()
         .localCheckpoint() // both sides of the two-hop self-join
       sym.select(col("src").as("u"), col("dst").as("v"))
@@ -741,6 +738,7 @@ object Similarity {
     }
     selected.toDF("step", "vec_id", "score")
       .select(col("step"), col("vec_id"), r4(col("score")).as("mmr_score"))
+      .coalesce(1) // ≤ k rows: sort in place, no range-partition sample + shuffle
       .orderBy("step")
   }
 

@@ -215,6 +215,14 @@ class Round18Spec extends SparkSpecBase {
     // the guarded weighted sweep never loses modularity
     assert(l2.head.getLong(6) >= l2.head.getLong(5),
       s"level-2 sweep lost modularity: ${l2.head}")
+    // one shared level: gr_louvain_level2 is gr_louvain_full's level 2, so
+    // its q1 / q2 are full's level-1 / level-2 q_x10000 rows exactly
+    val full = GraphOps.louvainFull(spark, sfDir).collect()
+      .map(r => r.getLong(0) -> r.getLong(2)).toMap
+    assert(full.get(1L).contains(l2.head.getLong(5)),
+      s"q1 ${l2.head.getLong(5)} != gr_louvain_full level 1 ${full.get(1L)}")
+    assert(full.get(2L).contains(l2.head.getLong(6)),
+      s"q2 ${l2.head.getLong(6)} != gr_louvain_full level 2 ${full.get(2L)}")
   }
 
   test("Louvain coarsening preserves modularity: coarse-grain Q == node-grain Q") {

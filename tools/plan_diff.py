@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Compare two `graft.Explain` output directories, key by key.
 
-    python3 tools/plan_diff.py <dir_a> <dir_b> [--show N]
+    python3 tools/plan_diff.py <dir_a> <dir_b> [--show N] [--counts]
 
 Each directory holds one `<key>.txt` per registry key (the formatted
 physical plan `graft.Explain` writes) and, when present, `<key>.prefix.txt`:
@@ -38,6 +38,13 @@ Prints one line per differing key (`DIFF` for the final plan, `DIFF-PREFIX`
 with the count of unmatched action plans on each side), the first N lines of
 each masked unified diff with --show N, then a summary. Exit status 1 when
 any key differs or exists on one side only (re-explain keys do not count).
+
+With --counts it also prints, for EVERY key, the number of actions its build
+ran on each side (`COUNTS <key> <a> <b>`, with the difference when they
+differ) and the totals, before the summary. The counts come from the initial
+plans Explain records, so unlike a job-counting listener they do not drift
+between runs of the same code (AQE re-planning under Par lanes moves
+listener job counts by 1-4).
 """
 import argparse
 import difflib
@@ -101,6 +108,8 @@ def main():
     ap.add_argument("dir_b")
     ap.add_argument("--show", type=int, default=0, metavar="N",
                     help="print the first N lines of each masked diff")
+    ap.add_argument("--counts", action="store_true",
+                    help="print every key's action count on both sides")
     args = ap.parse_args()
 
     ka, kb = keys_of(args.dir_a), keys_of(args.dir_b)
@@ -132,6 +141,14 @@ def main():
         print(f"ONLY_B {k}")
     for k in re_explain:
         print(f"RE-EXPLAIN ALONE {k} (Expand group order follows exprId hashing)")
+    if args.counts:
+        ta = tb = 0
+        for k in sorted(ka | kb):
+            na = len(prefix_plans(os.path.join(args.dir_a, k + ".prefix.txt")))
+            nb = len(prefix_plans(os.path.join(args.dir_b, k + ".prefix.txt")))
+            ta, tb = ta + na, tb + nb
+            print(f"COUNTS {k} {na} {nb}" + (f" ({nb - na:+d})" if na != nb else ""))
+        print(f"COUNTS total {ta} {tb}" + (f" ({tb - ta:+d})" if ta != tb else ""))
     n = len(ka & kb)
     print(f"{n - len(changed) - len(re_explain)}/{n} identical after masking; "
           f"{len(changed)} differ: {' '.join(changed) or '-'}; "
