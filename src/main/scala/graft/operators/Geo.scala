@@ -21,12 +21,12 @@ import graft.sources.Tables._
   * grid-cell polygons the reference gets from ST_DumpAsPolygons
   * (pipeline/processing/inputs.py:7-17).
   *
-  * Scale design: the point-in-zone join is NOT a nested-loop scan. Zones
-  * are exploded onto a coarse grid (cell = max zone extent, 20x10 deg) and
-  * the join is an equi-join on the cell key plus the exact containment
-  * predicate — the standard shard-able spatial-join plan: at 100 TB both
-  * sides hash-partition by cell, here the zone side is small enough that
-  * Catalyst broadcasts it.
+  * Scale design: the point-in-zone join is NOT a nested-loop scan. Points
+  * pre-aggregate into 1-degree cell partials (`cellPartials`, INT keys),
+  * zones explode onto the unit cells they cover, and the join is an
+  * equi-join on (fx, fy) — the standard shard-able spatial-join plan: at
+  * 100 TB both sides hash-partition by cell, here the cell table is small
+  * enough that `sizeGated` broadcasts it (`alignedZonal`).
   */
 object Geo {
 
@@ -84,10 +84,10 @@ object Geo {
     * the fan-out factor fits the broadcast threshold. A corpus-sized side
     * fails the gate and hash-partitions instead — measured: the ungated
     * hint broke at 100x (round-1 verdict), the unhinted SMJ on ~126 cell
-    * keys was 4-25x slower at sf0.1 (round-2 bench). */
-  /** Gate threshold is a runtime conf so a deployment (or the parity spec)
-    * can force the hash-partitioned path: graft.broadcastGateBytes=0 turns
-    * every size-gated hint off. */
+    * keys was 4-25x slower at sf0.1 (round-2 bench). The gate threshold is
+    * a runtime conf so a deployment (or the parity spec) can force the
+    * hash-partitioned path: graft.broadcastGateBytes=0 turns every
+    * size-gated hint off. */
   private val BroadcastGateBytes = 64L * 1024 * 1024
   private[graft] def sizeGated(base: DataFrame, derived: DataFrame, fanout: Long = 4L): DataFrame = {
     val gate = base.sparkSession.conf
@@ -97,7 +97,10 @@ object Geo {
   }
 
   /** Generic form: any points DataFrame with (lon, lat) columns against any
-    * zones DataFrame with (xmin, ymin, xmax, ymax) box columns. */
+    * zones DataFrame with (xmin, ymin, xmax, ymax) box columns — the
+    * raw-point path, for boxes that need not be integer-aligned. No
+    * registry key reaches it (the keys run `alignedZonal`); it stays as the
+    * reference the specs compare the aligned core against. */
   def pointZoneJoinOn(points: DataFrame, zones: DataFrame): DataFrame = {
     val z = zones
       .withColumn("cx", explode(expr(
@@ -156,15 +159,6 @@ object Geo {
         (col("lat") * lit(2.0) - lit(5.0)).as("y_proj"))
       .orderBy("event_id")
 
-  /** Zonal statistics: the reference's core query (stats.py query_1),
-    * generalized from AVG to the full suite. */
-  /** Zonal stats over the synthetic layers, via the aligned fast path: the
-    * zones here are integer-degree boxes, so points pre-aggregate exactly
-    * into 1-degree cells (a cell is entirely inside or outside any zone)
-    * and the spatial join moves ~4x fewer rows of decimal PARTIALS instead
-    * of raw points — the raster-block trick (gdal block stats). Decimal
-    * sums / min / max / count re-aggregate associatively, so the result is
-    * bit-identical to the naive plan the oracle runs. */
   /** Exact long-cents accumulator: `value` is 2-decimal fixed-point, so
     * round(value*100) is its exact integer numerator (the *100 can be 1 ulp
     * off an integer; round snaps it — never a .5 tie). Long sums are
@@ -179,7 +173,63 @@ object Geo {
   private def centsToDouble(centsSum: Column): Column =
     centsSum.cast("double") / lit(100.0)
 
-  /** LEFT JOIN fidelity (stats.py:9-13): zones with zero intersecting
+  /** A point's 1-degree cell as INT (fx, fy). INT, not BIGINT: two INT join
+    * keys pack into one long, so a broadcast cell table builds a
+    * LongHashedRelation — with BIGINT keys it is an UnsafeHashedRelation
+    * and the explode-and-probe stage measured ~3x the CPU. */
+  private def cellKeys(pts: DataFrame): DataFrame =
+    pts.withColumn("fx", floor(col("lon")).cast("int"))
+      .withColumn("fy", floor(col("lat")).cast("int"))
+
+  /** The ONE point -> 1-degree cell partials rule: (fx, fy, cell_n,
+    * cell_cents[, cell_min, cell_max]) per occupied cell. Counts, cents
+    * sums, min and max re-aggregate associatively, so any union of whole
+    * cells rolls up to exactly the raw-point aggregate. The table is
+    * geometry-bounded (<= one row per occupied cell of the clip band,
+    * 360x70) but its optimizer estimate follows the points input, so
+    * callers gate its broadcast on that: `sizeGated(pts, cellPartials(pts), 1L)`. */
+  private def cellPartials(pts: DataFrame, minMax: Boolean = false): DataFrame = {
+    val aggs = Seq(count(lit(1)).as("cell_n"), sum(valueCents).as("cell_cents")) ++
+      (if (minMax) Seq(min(col("value")).as("cell_min"), max(col("value")).as("cell_max"))
+       else Nil)
+    cellKeys(pts).groupBy("fx", "fy").agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The aligned zonal core (zs_zonal_stats, zs_vector_enrich,
+    * Pipeline.enrichLayer): per-zone (zone_id, xmin, ymin, n_points,
+    * mean_value[, min_value, max_value]) over integer-degree box zones
+    * of positive extent (`sequence` counts down when xmax - 1 < xmin).
+    *
+    * The zones are integer-aligned, so a 1-degree cell lies wholly inside
+    * or wholly outside each zone: a cell belongs to a zone exactly when
+    * (fx, fy) is in [xmin, xmax) x [ymin, ymax). Each zone explodes onto
+    * its unit cells and probes the cell-partials table on (fx, fy): no
+    * theta predicate, 200 INT-keyed probes per 20x10 zone. The join is
+    * LEFT OUTER and the aggregate runs once per zone, so every
+    * zone is kept (n_points 0, NULL stats — stats.py:9-13 / vector.py:6-13)
+    * without a second join back onto the zones.
+    *
+    * The zone side is spread with a round-robin `repartition` first: AQE
+    * coalesces a small post-aggregate shuffle into one partition, which
+    * would otherwise run the whole explode-and-probe stage as one task. */
+  private[graft] def alignedZonal(pts: DataFrame, zs: DataFrame, minMax: Boolean): DataFrame = {
+    val stats = Seq(
+      coalesce(sum(col("cell_n")), lit(0L)).as("n_points"),
+      (centsToDouble(sum(col("cell_cents"))) / sum(col("cell_n"))).as("mean_value")) ++
+      (if (minMax) Seq(min(col("cell_min")).as("min_value"), max(col("cell_max")).as("max_value"))
+       else Nil)
+    zs.repartition(zs.sparkSession.sparkContext.defaultParallelism)
+      .withColumn("fx", explode(expr("sequence(CAST(xmin AS INT), CAST(xmax AS INT) - 1)")))
+      .withColumn("fy", explode(expr("sequence(CAST(ymin AS INT), CAST(ymax AS INT) - 1)")))
+      .join(sizeGated(pts, cellPartials(pts, minMax), 1L), Seq("fx", "fy"), "left_outer")
+      .groupBy("zone_id", "xmin", "ymin")
+      .agg(stats.head, stats.tail: _*)
+  }
+
+  /** Zonal statistics: the reference's core query (stats.py query_1),
+    * generalized from AVG to the full suite, via the aligned core.
+    *
+    * LEFT JOIN fidelity (stats.py:9-13): zones with zero intersecting
     * points stay in the output (n_points 0, NULL stats). The part-derived
     * zones always land inside the point band, so a deterministic off-band
     * sentinel zone (zone_id -1, lat 40..50 — above the reference's -35..35
@@ -190,29 +240,8 @@ object Geo {
       spark.range(1).select(lit(-1L).as("zone_id"),
         lit(-170.0).as("xmin"), lit(40.0).as("ymin"),
         lit(-150.0).as("xmax"), lit(50.0).as("ymax")))
-    val cellPartials = points(spark, dir)
-      .withColumn("fx", floor(col("lon")).cast("long"))
-      .withColumn("fy", floor(col("lat")).cast("long"))
-      .groupBy("fx", "fy")
-      .agg(
-        count(lit(1)).as("cell_n"),
-        sum(valueCents).as("cell_cents"),
-        min(col("value")).as("cell_min"),
-        max(col("value")).as("cell_max"))
-      // pseudo-point at the cell center: contained in an integer-aligned
-      // zone iff the whole cell is
-      .withColumn("lon", col("fx").cast("double") + lit(0.5))
-      .withColumn("lat", col("fy").cast("double") + lit(0.5))
-    val stats = pointZoneJoinOn(cellPartials, z)
-      .groupBy("zone_id")
-      .agg(
-        sum(col("cell_n")).as("n_points"),
-        (centsToDouble(sum(col("cell_cents"))) / sum(col("cell_n"))).as("mean_value"),
-        min(col("cell_min")).as("min_value"),
-        max(col("cell_max")).as("max_value"))
-    z.select("zone_id").join(stats, Seq("zone_id"), "left")
-      .select(col("zone_id"), coalesce(col("n_points"), lit(0L)).as("n_points"),
-        col("mean_value"), col("min_value"), col("max_value"))
+    alignedZonal(points(spark, dir), z, minMax = true)
+      .select("zone_id", "n_points", "mean_value", "min_value", "max_value")
       .orderBy("zone_id")
   }
 
@@ -539,33 +568,16 @@ object Geo {
   }
 
   /** Stats joined back onto every zone feature (vector.py query_1 is a LEFT
-    * JOIN so empty zones keep their geometry, stats NULL). Same aligned
-    * fast path as zonalStats: zones are integer-degree boxes, so the
-    * spatial join moves one decimal PARTIAL row per occupied 1-degree cell
-    * instead of raw points (~13x fewer probe pairs at sf0.1, measured
-    * 21s -> ~2s), and partial sums re-aggregate to bit-identical means. */
+    * JOIN so empty zones keep their geometry, stats NULL): the aligned core
+    * already keeps every zone, so the enrich is its projection. */
   def vectorEnrich(spark: SparkSession, dir: String): DataFrame =
     vectorEnrichOn(points(spark, dir), zones(spark, dir)).orderBy("zone_id")
 
   /** Generic form: any (lon, lat, value) points frame against any
-    * integer-aligned box zones frame — the ONE place the aligned-fast-path
-    * reasoning lives (Pipeline.enrichLayer reuses it per layer). */
-  def vectorEnrichOn(pts: DataFrame, zs: DataFrame): DataFrame = {
-    val cellPartials = pts
-      .withColumn("fx", floor(col("lon")).cast("long"))
-      .withColumn("fy", floor(col("lat")).cast("long"))
-      .groupBy("fx", "fy")
-      .agg(count(lit(1)).as("cell_n"), sum(valueCents).as("cell_cents"))
-      .withColumn("lon", col("fx").cast("double") + lit(0.5))
-      .withColumn("lat", col("fy").cast("double") + lit(0.5))
-    val stats = pointZoneJoinOn(cellPartials, zs)
-      .groupBy("zone_id")
-      .agg(sum(col("cell_n")).as("n_points"),
-        (centsToDouble(sum(col("cell_cents"))) / sum(col("cell_n"))).as("mean_value"))
-    zs.join(stats, Seq("zone_id"), "left_outer")
-      .select(col("zone_id"), col("xmin"), col("ymin"),
-        coalesce(col("n_points"), lit(0L)).as("n_points"), col("mean_value"))
-  }
+    * integer-aligned box zones frame (Pipeline.enrichLayer reuses it per
+    * layer). */
+  def vectorEnrichOn(pts: DataFrame, zs: DataFrame): DataFrame =
+    alignedZonal(pts, zs, minMax = false)
 
   // -- tiling (tippecanoe re-expression, plate-carree XYZ grid: 2^z x 2^z,
   //    pure arithmetic => bitwise portable; a Web-Mercator variant lives in
@@ -611,25 +623,31 @@ object Geo {
   def tileAssign(spark: SparkSession, dir: String): DataFrame =
     tileAssignOn(points(spark, dir)).orderBy("tx", "ty")
 
+  /** The z10 base both pyramids roll up: (tx, ty, cents, n) per occupied
+    * tile, value summed as exact long cents (`valueCents`), so every level
+    * above re-aggregates long sums and `centsToDouble` gives the same
+    * correctly rounded double a DECIMAL(18,4) sum cast to double does. */
+  private def tileBase(spark: SparkSession, dir: String): DataFrame = {
+    val (tx, ty) = tileCols(Zoom)
+    points(spark, dir)
+      .withColumn("tx", tx).withColumn("ty", ty)
+      .groupBy("tx", "ty")
+      .agg(sum(valueCents).as("cents"), count(lit(1)).as("n"))
+  }
+
   /** Tile pyramid rollup z10 -> z6: parent key is a bit shift of the child
     * key, so each level is one shuffle over pre-aggregated partials
     * (tippecanoe's per-zoom generation, --maximum-zoom=10). */
-  def tilePyramid(spark: SparkSession, dir: String): DataFrame = {
-    val (tx, ty) = tileCols(Zoom)
-    val z10 = points(spark, dir)
-      .withColumn("tx", tx).withColumn("ty", ty)
-      .groupBy("tx", "ty")
-      .agg(sum(col("value").cast(DecimalType(18, 4))).as("sum_dec"), count(lit(1)).as("n"))
-    z10
+  def tilePyramid(spark: SparkSession, dir: String): DataFrame =
+    tileBase(spark, dir)
       .withColumn("tx6", shiftright(col("tx"), 4))
       .withColumn("ty6", shiftright(col("ty"), 4))
       .groupBy("tx6", "ty6")
       .agg(
         count(lit(1)).as("n_child_tiles"),
         sum(col("n")).as("n_features"),
-        sum(col("sum_dec")).cast("double").as("sum_value"))
+        centsToDouble(sum(col("cents"))).as("sum_value"))
       .orderBy("tx6", "ty6")
-  }
 
   /** Densest-feature dropping (tippecanoe --drop-densest-as-needed): keep
     * the top-10 features per z6 tile by value; rank ties broken by id so
@@ -784,12 +802,12 @@ object Geo {
     *   - OUTSIDE   iff its near corner fails:  h*(fx-ax)   + w*(fy-ay)   >  w*h
     *   - BOUNDARY  otherwise (hypotenuse crosses the cell — O(w+h) of them).
     * All classification arithmetic is pure integers — exact. Interior cells
-    * contribute pre-aggregated decimal partials (one row per cell instead of
+    * contribute pre-aggregated `cellPartials` rows (one row per cell instead of
     * one exact test per point); only boundary cells run the per-point sign
     * test, which is the identical double expression the oracle runs, and a
     * point in an interior cell clears the hypotenuse by >= 0.01*h — far
     * above double rounding — so membership agrees bit-for-bit with the
-    * oracle's per-point test. Decimal partials re-aggregate associatively:
+    * oracle's per-point test. Cents partials re-aggregate associatively:
     * the final mean is bit-identical to the naive plan.
     * Measured at sf0.1: 3.5s (exact test on all candidates) -> ~1s. */
   def triZonalStats(spark: SparkSession, dir: String): DataFrame = {
@@ -799,31 +817,24 @@ object Geo {
       // containment but lives in the next cell; the near-corner filter
       // prunes everything else in that extra row/column
       .withColumn("fx", explode(expr(
-        "sequence(CAST(ax AS LONG), CAST(ax + w AS LONG))")))
+        "sequence(CAST(ax AS INT), CAST(ax + w AS INT))")))
       .withColumn("fy", explode(expr(
-        "sequence(CAST(ay AS LONG), CAST(ay + h AS LONG))")))
+        "sequence(CAST(ay AS INT), CAST(ay + h AS INT))")))
       .withColumn("far", col("h") * (col("fx") + 1 - col("ax")) + col("w") * (col("fy") + 1 - col("ay")))
       .withColumn("near", col("h") * (col("fx") - col("ax")) + col("w") * (col("fy") - col("ay")))
       .filter(col("near") <= col("w") * col("h"))
       .withColumn("interior", col("far") <= col("w") * col("h"))
     val pts = points(spark, dir)
-      .withColumn("fx", floor(col("lon")).cast("long"))
-      .withColumn("fy", floor(col("lat")).cast("long"))
-    // interior path: cell-level decimal partials, no per-point test. The
-    // partial table is GEOMETRY-bounded (<= one row per occupied 1-degree
-    // cell of the clip band, 360x70) but its optimizer estimate follows the
-    // points input, so the gate keys on that: broadcast at test SFs,
-    // hash-partition at corpus scale (where 25k rows shuffle trivially).
-    val cellPartials = pts
-      .groupBy("fx", "fy")
-      .agg(count(lit(1)).as("n"), sum(valueCents).as("cents"))
+    // interior path: cell-level partials, no per-point test; the gate keys
+    // on the points input (see cellPartials): broadcast at test SFs,
+    // hash-partition at corpus scale (where 25k rows shuffle trivially)
     val interiorPart = zc.filter(col("interior"))
       .select("zone_id", "fx", "fy")
-      .join(sizeGated(points(spark, dir), cellPartials, 1L), Seq("fx", "fy"))
-      .select("zone_id", "n", "cents")
+      .join(sizeGated(pts, cellPartials(pts), 1L), Seq("fx", "fy"))
+      .select(col("zone_id"), col("cell_n").as("n"), col("cell_cents").as("cents"))
     // boundary path: exact sign test, same expression as the oracle; the
     // boundary cell set is O(zones x perimeter) — gate with that fan-out
-    val boundaryPart = pts
+    val boundaryPart = cellKeys(pts)
       .join(sizeGated(triZones(spark, dir),
         zc.filter(!col("interior")).select("zone_id", "fx", "fy", "ax", "ay", "w", "h"),
         32L), Seq("fx", "fy"))
@@ -897,7 +908,7 @@ object Geo {
     * This is the reference's ST_Intersects plan — coarse spatial index,
     * then exact geometry — with the raster-block trick: 1-degree bbox cells
     * are classified against the polygon so interior cells contribute
-    * pre-aggregated decimal partials and ONLY boundary cells run a
+    * pre-aggregated `cellPartials` rows and ONLY boundary cells run a
     * per-point test (the all-candidates pnpoly ran 13M interpreted
     * higher-order-function calls at sf0.1 — 122s; this plan is ~100x less
     * exact-test work and the remaining test is codegen'd arithmetic).
@@ -928,8 +939,8 @@ object Geo {
     *   boundary  otherwise — per-point exact integer f1/f2 test. */
   def polyZonalStats(spark: SparkSession, dir: String): DataFrame = {
     val zc = polyZones(spark, dir)
-      .withColumn("fx", explode(expr("sequence(CAST(ax AS LONG), CAST(ax + w - 1 AS LONG))")))
-      .withColumn("fy", explode(expr("sequence(CAST(ay AS LONG), CAST(ay + h - 1 AS LONG))")))
+      .withColumn("fx", explode(expr("sequence(CAST(ax AS INT), CAST(ax + w - 1 AS INT))")))
+      .withColumn("fy", explode(expr("sequence(CAST(ay AS INT), CAST(ay + h - 1 AS INT))")))
       .withColumn("f1max",
         (col("fy") + 1 - col("ay") - col("h")) * col("hx") + col("nd") * (col("fx") + 1 - col("ax")))
       .withColumn("f2max",
@@ -943,17 +954,12 @@ object Geo {
       .filter(!(col("f1min") >= 0 && col("f2min") > 0))
       .withColumn("interior", col("f1max") < 0 || col("f2max") <= 0)
     val pts = points(spark, dir)
-      .withColumn("fx", floor(col("lon")).cast("long"))
-      .withColumn("fy", floor(col("lat")).cast("long"))
-    val cellPartials = pts
-      .groupBy("fx", "fy")
-      .agg(count(lit(1)).as("n"), sum(valueCents).as("cents"),
-        min(col("value")).as("min_v"), max(col("value")).as("max_v"))
     val interiorPart = zc.filter(col("interior"))
       .select("zone_id", "fx", "fy")
-      .join(sizeGated(points(spark, dir), cellPartials, 1L), Seq("fx", "fy"))
-      .select("zone_id", "n", "cents", "min_v", "max_v")
-    val boundaryPart = pts
+      .join(sizeGated(pts, cellPartials(pts, minMax = true), 1L), Seq("fx", "fy"))
+      .select(col("zone_id"), col("cell_n").as("n"), col("cell_cents").as("cents"),
+        col("cell_min").as("min_v"), col("cell_max").as("max_v"))
+    val boundaryPart = cellKeys(pts)
       .withColumn("a", round(col("lon") * lit(100)).cast("long"))
       .withColumn("b", round(col("lat") * lit(100)).cast("long"))
       .join(sizeGated(part(spark, dir),
@@ -986,28 +992,23 @@ object Geo {
   /** Full pyramid z10 -> z0 in step-2 levels (tippecanoe generates every
     * zoom from max down to --minimum-zoom). Each level aggregates the
     * PREVIOUS level's partials — one shuffle per level on the parent key,
-    * never re-reading the base data; the per-level decimal partial sums
+    * never re-reading the base data; the per-level long-cents partial sums
     * carry up exactly. */
   def tilePyramidFull(spark: SparkSession, dir: String): DataFrame = {
-    val (tx, ty) = tileCols(Zoom)
-    val base = points(spark, dir)
-      .withColumn("tx", tx).withColumn("ty", ty)
-      .groupBy("tx", "ty")
-      .agg(sum(col("value").cast(DecimalType(18, 4))).as("sum_dec"), count(lit(1)).as("n"))
-      .withColumn("zoom", lit(Zoom))
+    val base = tileBase(spark, dir).withColumn("zoom", lit(Zoom))
     val levels = Iterator.iterate((base, Zoom)) { case (prev, z) =>
       val nz = z - 2
       (prev
         .withColumn("ptx", shiftright(col("tx"), 2))
         .withColumn("pty", shiftright(col("ty"), 2))
         .groupBy("ptx", "pty")
-        .agg(sum(col("sum_dec")).as("sum_dec"), sum(col("n")).as("n"))
+        .agg(sum(col("cents")).as("cents"), sum(col("n")).as("n"))
         .withColumnRenamed("ptx", "tx").withColumnRenamed("pty", "ty")
         .withColumn("zoom", lit(nz)), nz)
     }.takeWhile(_._2 >= 0).map(_._1).toSeq
     levels.reduce(_ unionByName _)
       .select(col("zoom"), col("tx"), col("ty"), col("n").as("n_features"),
-        col("sum_dec").cast("double").as("sum_value"))
+        centsToDouble(col("cents")).as("sum_value"))
       .orderBy("zoom", "tx", "ty")
   }
 

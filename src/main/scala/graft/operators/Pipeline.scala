@@ -40,8 +40,8 @@ object Pipeline {
 
   /** Stages 1-3: standardized points of one event class -> zonal stats ->
     * stats merged onto every zone feature (vector.py:6-13 LEFT JOIN keeps
-    * empty zones with NULL stats). Same aligned cell-partials fast path as
-    * Geo.vectorEnrich: the spatial join moves one exact-cents partial per
+    * empty zones with NULL stats). Same aligned zonal core as
+    * Geo.vectorEnrich: each zone probes one exact-cents partial per
     * occupied 1-degree cell of the layer, not raw points. */
   def enrichLayer(spark: SparkSession, dir: String, spec: LayerSpec): DataFrame =
     Geo.vectorEnrichOn(

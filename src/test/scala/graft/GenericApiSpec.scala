@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, Geo, Similarity}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** The operators are a library, not a test harness: every core works on
@@ -87,6 +88,36 @@ class GenericApiSpec extends SparkSpecBase {
     assert(out(100L) == (2L, Some(15.0)))
     assert(out(200L) == (1L, Some(30.0)))
     assert(out(300L) == (0L, None)) // LEFT JOIN keeps the empty zone, stats NULL
+  }
+
+  test("aligned zonal core equals the raw-point zonal stats on edge-case frames") {
+    import spark.implicits._
+    // zone 100 spans negative coordinates and overlaps zone 200 on
+    // [0,2) x [0,3); zone 300 holds no point
+    val zs = Seq((100L, -3.0, -2.0, 2.0, 3.0), (200L, 0.0, 0.0, 5.0, 4.0),
+      (300L, 10.0, 10.0, 12.0, 12.0))
+      .toDF("zone_id", "xmin", "ymin", "xmax", "ymax")
+    val pts = Seq(
+      (-3.0, 0.5, 1.25),    // on 100's xmin: in 100
+      (2.0, 1.0, 2.5),      // on 100's xmax: out of 100, in 200
+      (-0.01, -1.99, 3.75), // negative cell (-1, -2): in 100
+      (1.5, 1.5, 4.1),      // in both overlapping zones
+      (0.0, 0.0, 0.3),      // on 200's xmin and ymin: in 100 and 200
+      (5.0, 2.0, 7.0),      // on 200's xmax: in no zone
+      (-2.5, 3.0, 9.9),     // on 100's ymax: in no zone
+      (4.99, 3.99, 0.01))   // in 200's last cell
+      .toDF("lon", "lat", "value")
+    val reference = Geo.zonalStatsOn(pts, zs).orderBy("zone_id").collect().toSeq
+    assert(reference.map(r => r.getLong(0) -> r.getLong(1)) ==
+      Seq(100L -> 4L, 200L -> 4L, 300L -> 0L), reference.mkString(","))
+    val minMax = Geo.alignedZonal(pts, zs, minMax = true)
+      .select("zone_id", "n_points", "mean_value", "min_value", "max_value")
+      .orderBy("zone_id").collect().toSeq
+    assert(minMax == reference, s"$minMax != $reference")
+    val enrich = Geo.vectorEnrichOn(pts, zs)
+      .select("zone_id", "n_points", "mean_value").orderBy("zone_id").collect().toSeq
+    assert(enrich == reference.map(r => Row(r.get(0), r.get(1), r.get(2))),
+      s"$enrich != $reference")
   }
 
   test("r4 deterministic rounding: exact 5-decimal midpoints round half-up in both engines") {

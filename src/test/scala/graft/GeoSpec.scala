@@ -22,6 +22,25 @@ class GeoSpec extends SparkSpecBase {
     assert(p.contains("BroadcastHashJoin"), p)
   }
 
+  test("aligned zonal keys end in one LeftOuter broadcast join and no sort-merge join") {
+    import org.apache.spark.sql.catalyst.plans.LeftOuter
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    // the aligned core keeps every zone through its LEFT OUTER probe of the
+    // broadcast cell table, so the final plan holds that one join and no
+    // join back onto the zones (a second join, broadcast or sort-merge)
+    val aqe = new AdaptiveSparkPlanHelper {}
+    Seq("zs_zonal_stats", "zs_vector_enrich").foreach { key =>
+      val df = SparkEntry.queries(key)(spark, sfDir)
+      df.collect()
+      val fin = df.queryExecution.executedPlan
+      val joins = aqe.collect(fin) { case j: BaseJoinExec => j }
+      assert(joins.size == 1, s"$key:\n$fin")
+      assert(joins.head.isInstanceOf[BroadcastHashJoinExec] && joins.head.joinType == LeftOuter,
+        s"$key:\n$fin")
+    }
+  }
+
   test("quadkey encodes tile coordinates (invertible)") {
     val rows = Geo.tileAssign(spark, sfDir)
       .select("tx", "ty", "quadkey").limit(50).collect()

@@ -3,10 +3,12 @@ package graft
 import graft.operators.Geo
 import org.apache.spark.sql.functions._
 
-/** Proves the zonal join's 100 TB shuffle path survives key skew: a real
-  * corpus concentrates points in a few geographic cells (cities), and the
-  * cell-keyed sort-merge join then hangs one straggler task on the hot
-  * cell unless AQE's skew-join split fires. SURVEY §5 claims AQE handles
+/** Proves the raw-point spatial join's (`Geo.pointZoneJoinOn`) 100 TB
+  * shuffle path survives key skew: a real corpus concentrates points in a
+  * few geographic cells (cities), and the cell-keyed sort-merge join then
+  * hangs one straggler task on the hot cell unless AQE's skew-join split
+  * fires. The aligned zonal core (`Geo.alignedZonal`) has no such hot key:
+  * a city's points are one cell-partials row before any join. SURVEY §5 claims AQE handles
   * this — this spec makes the claim checkable: force the shuffle path
   * (gate off, no auto-broadcast), lower the skew thresholds to test-data
   * scale, synthesize a ~1000x hot cell, and assert BOTH that the final
