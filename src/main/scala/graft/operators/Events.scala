@@ -674,9 +674,7 @@ object Events {
     * Spark div truncates where DuckDB // floors, so a negative arrival
     * position would diverge) simulates the bounded reordering a real
     * ingest shows and populates every lateness bucket. */
-  /** Per-event lateness against the arrival-chunk high-water mark — the
-    * shared core of the ev_lateness report and suggestedWatermarkSec. */
-  private def latenessPerEvent(spark: SparkSession, dir: String): DataFrame = {
+  def lateness(spark: SparkSession, dir: String): DataFrame = {
     val e = events(spark, dir).select(
       col("event_type"),
       unix_timestamp(col("ts")).as("ts_sec"),
@@ -692,31 +690,6 @@ object Events {
     // single-task prefix window stays trivial)
     e.join(prefix, Seq("chunk"))
       .withColumn("late_sec", greatest(coalesce(col("hwm") - col("ts_sec"), lit(0L)), lit(0L)))
-  }
-
-  /** Watermark auto-tuning: the smallest horizon (in seconds) that would
-    * have admitted at least `coverage` of the observed events — i.e. the
-    * exact `coverage`-quantile of the per-event lateness distribution.
-    * Distributed part: one groupBy on late_sec (almost all mass sits at
-    * 0, so the distinct-lateness table is tiny); the cumulative walk runs
-    * driver-side over that bounded table. A watermark of the result (plus
-    * margin) drops at most (1 - coverage) of a like-distributed stream. */
-  def suggestedWatermarkSec(spark: SparkSession, dir: String, coverage: Double = 0.999): Long = {
-    val dist = latenessPerEvent(spark, dir)
-      .groupBy("late_sec").agg(count(lit(1)).as("n"))
-      .orderBy("late_sec")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val total = dist.map(_._2).sum
-    var cum = 0L
-    for ((late, n) <- dist) {
-      cum += n
-      if (cum.toDouble / total >= coverage) return late
-    }
-    dist.last._1
-  }
-
-  def lateness(spark: SparkSession, dir: String): DataFrame =
-    latenessPerEvent(spark, dir)
       .withColumn("bucket",
         when(col("late_sec") === 0L, "0_on_time")
           .when(col("late_sec") < 60L, "1_under_1m")
@@ -726,6 +699,7 @@ object Events {
       .groupBy("event_type", "bucket")
       .agg(count(lit(1)).as("n_events"), max(col("late_sec")).as("max_late_sec"))
       .orderBy("event_type", "bucket")
+  }
 
   /** Absence-pattern timeout of ev_absence, seconds. */
   val AbsenceTimeoutSec = 1800L

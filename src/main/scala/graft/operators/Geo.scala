@@ -115,9 +115,6 @@ object Geo {
         && col("lat") >= col("ymin") && col("lat") < col("ymax"))
   }
 
-  def pointZoneJoin(spark: SparkSession, dir: String): DataFrame =
-    pointZoneJoinOn(points(spark, dir), zones(spark, dir))
-
   /** Generic zonal statistics over any point/zone DataFrames. LEFT JOIN
     * shape like the reference (stats.py:9-13): a zone with no intersecting
     * points still emits a row (n_points 0, NULL stats) — sparse rasters
@@ -880,28 +877,6 @@ object Geo {
         struct((col("ax") + col("hx")).as("x"), (col("ay") + col("h") - col("nd")).as("y")),
         struct(col("ax").as("x"), (col("ay") + col("h")).as("y"))))
       .select("zone_id", "ax", "ay", "w", "h", "hx", "nd", "verts")
-
-  /** General point-in-polygon: ray-cast (pnpoly) over an array<struct<x,y>>
-    * vertex list via higher-order functions — works for ANY simple polygon,
-    * convex or not, any vertex count. This is the GENERIC float API; note
-    * that for points lying mathematically ON an edge the verdict depends on
-    * double rounding of the crossing comparison (2-decimal coords are not
-    * exact doubles), so the oracle-checked zs_poly_zonal uses the exact
-    * integer half-plane formulation instead. Two engines running THIS SAME
-    * expression shape still agree bit-for-bit. */
-  def polyContains(verts: Column, px: Column, py: Column): Column = {
-    val n = size(verts)
-    val crossed = filter(sequence(lit(1), n), i => {
-      val a = element_at(verts, i)
-      val b = element_at(verts, when(i === n, lit(1)).otherwise(i + lit(1)))
-      val dy = b("y") - a("y")
-      val lhs = (px - a("x")) * dy
-      val rhs = (b("x") - a("x")) * (py - a("y"))
-      ((a("y") > py) =!= (b("y") > py)) &&
-        (((dy > lit(0)) && (lhs < rhs)) || ((dy < lit(0)) && (lhs > rhs)))
-    })
-    size(crossed) % lit(2) === lit(1)
-  }
 
   /** Zonal statistics over ARBITRARY polygons, interior/boundary cell split.
     *

@@ -1241,8 +1241,8 @@ object Similarity {
     *
     * Scale: the label predicate composes with the bucketed index tiers —
     * on a (label, cell)-clustered layout the filter IS partition pruning
-    * (zoneMapIndex/bloomIndex read-side machinery); here the queries are
-    * a bounded broadcast and the corpus pass stays one scan. */
+    * (parquet min/max statistics); here the queries are a bounded
+    * broadcast and the corpus pass stays one scan. */
   def filtered(spark: SparkSession, dir: String): DataFrame = {
     val c = embeddings(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)

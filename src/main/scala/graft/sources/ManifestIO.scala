@@ -88,111 +88,6 @@ object ManifestIO {
     } finally fresh.unpersist()
   }
 
-  /** Small-file compaction — the maintenance pass every long-running
-    * ingest needs: a directory accumulated from many micro-batch appends
-    * scans as thousands of tiny tasks; rewrite it into files of roughly
-    * `targetBytes` each. The output file count derives from the CURRENT
-    * on-disk byte size (not a guess): repartition(n) is one round-robin
-    * shuffle and preserves every row. Returns (filesBefore, filesAfter).
-    * At 100 TB this runs per partition directory, not globally — pass the
-    * partition path. */
-  def compact(spark: SparkSession, path: String, targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val listing = fs.listStatus(p)
-    val parts = listing.filter(f => f.getPath.getName.endsWith(".parquet"))
-    // guard: a Hive-partitioned ROOT (subdirectories, no top-level .parquet)
-    // would read as totalBytes=0 -> n=1 and the rewrite would FLATTEN the
-    // partition layout into one unpartitioned file — fail fast instead; the
-    // contract is "pass the leaf partition directory"
-    val subdirs = listing.filter(_.isDirectory).map(_.getPath.getName)
-      .filterNot(n => n.startsWith("_") || n.startsWith("."))
-    require(subdirs.isEmpty,
-      s"compact($path): contains subdirectories ${subdirs.mkString(",")} — " +
-        "pass a leaf partition directory, compacting a partitioned root would flatten it")
-    require(parts.nonEmpty, s"compact($path): no .parquet files to compact")
-    val totalBytes = parts.map(_.getLen).sum
-    val n = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val df = spark.read.parquet(path)
-    // rewrite via a temp dir then swap: a direct overwrite of the dir we
-    // are reading would delete the input under the scan. The swap keeps the
-    // old data as a BACKUP until the new data is in place (rename old aside,
-    // rename tmp in, then drop the backup) — a crash between steps leaves
-    // either the original or the compacted copy at a recoverable path,
-    // never an empty canonical path; every rename is checked (rename
-    // returns false e.g. across filesystems) and aborts loudly.
-    val tmp = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "_compact_tmp")
-    val old = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "_compact_old")
-    df.repartition(n).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    if (fs.exists(old)) fs.delete(old, true) // leftover from a prior crash
-    require(fs.rename(p, old), s"compact($path): rename to backup $old failed")
-    if (!fs.rename(tmp, p)) {
-      fs.rename(old, p) // restore; best-effort — the backup stays if this fails
-      throw new IllegalStateException(s"compact($path): rename $tmp into place failed; original restored")
-    }
-    require(fs.delete(old, true), s"compact($path): backup cleanup $old failed")
-    val after = fs.listStatus(p).count(f => f.getPath.getName.endsWith(".parquet"))
-    (parts.length, after)
-  }
-
-  /** SHALLOW CLONE (the Delta/Iceberg CLONE primitive, completing the
-    * lakehouse lifecycle next to time travel / CDF / VACUUM / compact):
-    * the clone is a MANIFEST of the source's current data files —
-    * absolute paths + sizes, zero data bytes copied — and reads resolve
-    * through that manifest, so the clone PINS the snapshot: files the
-    * source adds later are invisible to it (spec-proven: post-clone
-    * appends change the source read, not the clone read, and the clone
-    * directory contains no parquet). A production clone also pins
-    * removed files via the retention contract — that interaction is
-    * io_vacuum's reclaim rule, documented there. Returns the file
-    * count. */
-  def shallowClone(spark: SparkSession, sourcePath: String, clonePath: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(sourcePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(p)
-      .filter(f => f.getPath.getName.endsWith(".parquet"))
-      .map(f => (f.getPath.toString, f.getLen))
-      .sortBy(_._1)
-    require(files.nonEmpty, s"shallowClone($sourcePath): no .parquet files")
-    import spark.implicits._
-    files.toSeq.toDF("path", "bytes")
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .option("header", "true")
-      .csv(s"${clonePath.stripSuffix("/")}/clone_manifest")
-    files.length
-  }
-
-  /** Orphan-file report — storage hygiene's other half next to
-    * io_vacuum's logical reclaim: .parquet files present on disk but
-    * absent from the registered manifest (failed-write debris, killed
-    * speculative tasks, aborted compactions). Returns the orphan list
-    * sorted; DELETION is deliberately the caller's policy decision (a
-    * real cleaner also applies a modification-time retention horizon so
-    * an in-flight write is never swept — that horizon is config, the
-    * detection below is the mechanism). Spec-proven against a clone
-    * manifest with planted debris. */
-  def orphanFiles(spark: SparkSession, dataPath: String,
-      registered: Seq[String]): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(dataPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val reg = registered.map(r =>
-      new org.apache.hadoop.fs.Path(r).toUri.getPath).toSet
-    fs.listStatus(p)
-      .filter(f => f.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath)
-      .filterNot(f => reg.contains(f.toUri.getPath))
-      .map(_.toString).sorted.toSeq
-  }
-
-  /** Read a shallow clone strictly through its pinned file list. */
-  def readClone(spark: SparkSession, clonePath: String): org.apache.spark.sql.DataFrame = {
-    val manifest = spark.read.option("header", "true")
-      .csv(s"${clonePath.stripSuffix("/")}/clone_manifest")
-      .select("path").collect().map(_.getString(0))
-    spark.read.parquet(manifest: _*)
-  }
-
   /** CSV manifest round-trip as a query: part -> csv manifest -> schema'd
     * read -> per-brand aggregate. The oracle aggregates the parquet
     * directly, so the round-trip must be value-lossless (doubles survive
@@ -547,43 +442,6 @@ object ManifestIO {
       .orderBy("table_name", "constraint")
   }
 
-  /** Bloom-filter data skipping — the point-lookup complement to z-order
-    * min/max range pruning: one Bloom filter per data file over a lookup
-    * key, consulted BEFORE scheduling the scan so non-matching files are
-    * never opened. High-cardinality keys with no clustering defeat
-    * min/max statistics (every file's range straddles every key); Bloom
-    * membership does not care about ordering, so at 100 TB a point
-    * lookup touches ~1 file instead of all of them. The index is
-    * (path, serialized filter) — O(#files) entries, the bounded
-    * file-manifest rule, so building and probing it driver-side is the
-    * same sanctioned shape as compact()/zorderMaintain's file listings. */
-  def bloomIndex(spark: SparkSession, layoutPath: String, keyCol: String,
-      expectedPerFile: Long = 100000L, fpp: Double = 0.01): Seq[(String, Array[Byte])] = {
-    val files = spark.read.parquet(layoutPath)
-      .select(input_file_name().as("path")).distinct()
-      .collect().map(_.getString(0)).sorted // bounded by file count
-    files.toSeq.map { p =>
-      val bf = spark.read.parquet(p).stat.bloomFilter(keyCol, expectedPerFile, fpp)
-      val bos = new java.io.ByteArrayOutputStream()
-      bf.writeTo(bos)
-      (p, bos.toByteArray)
-    }
-  }
-
-  /** Scan only the files whose Bloom filter might contain `key`; returns
-    * the pruned scan and how many files it reads (the skip proof). */
-  def bloomSkipScan(spark: SparkSession, index: Seq[(String, Array[Byte])],
-      keyCol: String, key: Long): (DataFrame, Int) = {
-    val hit = index.filter { case (_, bytes) =>
-      org.apache.spark.util.sketch.BloomFilter
-        .readFrom(new java.io.ByteArrayInputStream(bytes)).mightContainLong(key)
-    }.map(_._1)
-    val df =
-      if (hit.isEmpty) spark.read.parquet(index.head._1).filter(lit(false))
-      else spark.read.parquet(hit: _*).filter(col(keyCol) === key)
-    (df, hit.size)
-  }
-
   /** ANALYZE-shape column statistics report — the stats collection that
     * feeds a cost-based optimizer (row counts drive join-side choice,
     * null fractions drive filter selectivity, exact NDVs drive broadcast
@@ -644,8 +502,7 @@ object ManifestIO {
     * status dirs and filter late — the scan-amplification gauge this
     * query outputs per (generation, status): rows the layout forces the
     * scan to read vs rows actually matched. That measured gap is the
-    * case for running a layout rewrite (io_zorder / compact) after an
-    * evolution.
+    * case for running a layout rewrite (io_zorder) after an evolution.
     *
     * Round14Spec pins the physical contract: the gen-2 plan carries the
     * priority in PartitionFilters; the gen-1 plan pushes it only as a
@@ -735,41 +592,6 @@ object ManifestIO {
       .orderBy("bucket")
   }
 
-  /** Min/max zone-map data skipping — the RANGE complement to
-    * bloomIndex's point lookups: one (min, max) interval per data file
-    * over a clustering key, consulted before scheduling so files whose
-    * interval misses the predicate range are never opened. This is what
-    * the io_zorder/compact maintenance path buys at read time — zone
-    * maps only prune when the layout is clustered on the key (an
-    * unclustered layout makes every file straddle every range, which is
-    * exactly the case bloomIndex covers instead). Index is O(#files)
-    * driver-side rows — the bounded file-manifest rule. Each per-file
-    * stat scan reads ONLY the key column (parquet column pruning). */
-  def zoneMapIndex(spark: SparkSession, layoutPath: String,
-      keyCol: String): Seq[(String, Long, Long)] = {
-    val files = spark.read.parquet(layoutPath)
-      .select(input_file_name().as("path")).distinct()
-      .collect().map(_.getString(0)).sorted // bounded by file count
-    files.toSeq.map { p =>
-      val r = spark.read.parquet(p)
-        .agg(min(col(keyCol)).as("mn"), max(col(keyCol)).as("mx"))
-        .collect()(0)
-      (p, r.getLong(0), r.getLong(1))
-    }
-  }
-
-  /** Scan only the files whose [min, max] interval overlaps [lo, hi];
-    * returns the pruned scan and how many files it reads (the skip
-    * proof). */
-  def zoneMapSkipScan(spark: SparkSession, index: Seq[(String, Long, Long)],
-      keyCol: String, lo: Long, hi: Long): (DataFrame, Int) = {
-    val hit = index.filter { case (_, mn, mx) => mx >= lo && mn <= hi }.map(_._1)
-    val df =
-      if (hit.isEmpty) spark.read.parquet(index.head._1).filter(lit(false))
-      else spark.read.parquet(hit: _*).filter(col(keyCol).between(lo, hi))
-    (df, hit.size)
-  }
-
   /** Catalog time travel (iceberg-lite on plain parquet): an append-only
     * log of (version, key, op, payload) rows — inserts/updates as 'u',
     * deletes as 'd' — reconstructs EVERY historical snapshot in one pass:
@@ -830,7 +652,7 @@ object ManifestIO {
 
   /** VACUUM dry-run report (io_vacuum) — the lakehouse data-lifecycle
     * step next to io_time_travel (snapshot reads), io_cdf (the change
-    * feed) and compact/zorderMaintain (layout): which log entries are
+    * feed) and io_zorder (layout): which log entries are
     * unreachable by every retained snapshot (>= VacuumRetainVersion)
     * and can be physically removed, per (version, op), with the
     * reclaimable price mass. Retained snapshots are byte-identical
@@ -961,71 +783,6 @@ object ManifestIO {
       .orderBy("grp")
   }
 
-  /** Incremental z-order maintenance (OPTIMIZE's incremental form): merge
-    * an incoming batch into a zkey-clustered table by rewriting ONLY the
-    * files whose key ranges the batch touches — the point of z-order
-    * locality is precisely that a localized batch overlaps few files.
-    *
-    * Selection runs to a FIXPOINT on the tiny per-file range list: the
-    * rewrite span grows to swallow any file it intersects, so after the
-    * swap the rewritten files' ranges cannot straddle an untouched file's
-    * range and global per-file disjointness is RESTORED, not just
-    * approximated (ZOrderMaintainSpec asserts it, plus byte-identical
-    * untouched files). Per-file min/max comes from a zkey-only column
-    * scan here; a production deployment reads parquet footer stats — the
-    * selection logic is identical.
-    *
-    * Crash safety: the merged rewrite lands in a temp dir first; after a
-    * complete write the new parts are renamed IN (each rename checked)
-    * and only then are the rewritten inputs deleted. A crash between
-    * rename and delete therefore leaves DUPLICATE rows (old + merged
-    * both visible) — detectable and repairable by re-running maintenance
-    * — never lost rows; a crash before the renames leaves the target
-    * untouched. Recover leftovers from _zmaint_tmp. */
-  def zorderMaintain(spark: SparkSession, path: String, newData: DataFrame,
-      filesPerRewrite: Int = 4): Unit = {
-    val ranges = spark.read.parquet(path)
-      .groupBy(input_file_name().as("f"))
-      .agg(min("zkey").as("lo"), max("zkey").as("hi"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    val bounds = newData.agg(min("zkey"), max("zkey")).collect()(0)
-    var lo = bounds.getLong(0)
-    var hi = bounds.getLong(1)
-    var selected = Set.empty[String]
-    var changed = true
-    while (changed) {
-      val s = ranges.filter { case (_, flo, fhi) => fhi >= lo && flo <= hi }
-      changed = s.map(_._1).toSet != selected
-      selected = s.map(_._1).toSet
-      if (s.nonEmpty) {
-        lo = math.min(lo, s.map(_._2).min)
-        hi = math.max(hi, s.map(_._3).max)
-      }
-    }
-    val merged =
-      if (selected.isEmpty) newData
-      else spark.read.parquet(selected.toSeq: _*).unionByName(newData)
-    val tmp = new org.apache.hadoop.fs.Path(path + "_zmaint_tmp")
-    val target = new org.apache.hadoop.fs.Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    merged.repartitionByRange(filesPerRewrite, col("zkey"))
-      .sortWithinPartitions("zkey")
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    // rename-first: make the merged parts visible BEFORE deleting their
-    // inputs, so a crash mid-swap duplicates rows instead of losing them
-    val stamp = System.nanoTime()
-    fs.listStatus(tmp).filter(_.getPath.getName.startsWith("part-")).zipWithIndex.foreach {
-      case (st, i) =>
-        val dest = new org.apache.hadoop.fs.Path(target, s"zmaint-$stamp-$i.parquet")
-        require(fs.rename(st.getPath, dest), s"failed to move ${st.getPath} to $dest")
-    }
-    selected.foreach { f =>
-      val p = new org.apache.hadoop.fs.Path(new java.net.URI(f).getPath)
-      require(fs.delete(p, false), s"failed to delete rewritten input $p")
-    }
-    fs.delete(tmp, true)
-  }
-
   /** KEY-SKEW PROFILE (io_skew_profile) — the "should I salt this join"
     * gauge run before any large shuffle lands in production: for each
     * candidate shuffle key, the exact key cardinality, the hottest key's
@@ -1094,7 +851,7 @@ object ManifestIO {
   val CompactTargetBytes = 131072L
   val CompactSmallBytes = 9000L
 
-  /** COMPACTION PLANNER (io_compact_plan) — the dry-run of `compact`:
+  /** COMPACTION PLANNER (io_compact_plan) — a compaction dry-run:
     * which small files coalesce into which rewrite task (Iceberg's
     * binpack strategy: sort candidates by size descending, fill bins
     * of CompactTargetBytes greedily; files at or above

@@ -20,7 +20,7 @@ class BpeModelSpec extends SparkSpecBase {
     * nontrivial rollup. */
   private def writeCorpus(): String = {
     import spark.implicits._
-    val dir = s"/tmp/graft_bpemodel_${System.nanoTime()}"
+    val dir = scratch("bpemodel")
     Seq(
       (1L, "en", "aaaa bb cc dd" + " " * 27 + "aabb aaaa cc"),
       (2L, "fr", "aaaa bb cc dd" + " " * 27 + "aabb aaaa cc"))

@@ -19,7 +19,7 @@ class CoactModelSpec extends SparkSpecBase {
     * and a 21-user hub cell the <= 20 cap must drop entirely. */
   private def writeEventsCorpus(): String = {
     import spark.implicits._
-    val dir = s"/tmp/graft_coactmodel_${System.nanoTime()}"
+    val dir = scratch("coactmodel")
     val h0 = java.sql.Timestamp.valueOf("2024-01-01 00:10:00")
     val h1 = java.sql.Timestamp.valueOf("2024-01-01 01:10:00")
     val h2 = java.sql.Timestamp.valueOf("2024-01-01 02:10:00")
@@ -36,7 +36,7 @@ class CoactModelSpec extends SparkSpecBase {
     * co-purchase pairs (10,20) x2 customers and (10,30)/(20,30) x1. */
   private def writePurchaseCorpus(): String = {
     import spark.implicits._
-    val dir = s"/tmp/graft_copurmodel_${System.nanoTime()}"
+    val dir = scratch("copurmodel")
     Seq((1L, 11L), (2L, 12L), (3L, 13L)).toDF("o_orderkey", "o_custkey")
       .coalesce(1).write.parquet(s"$dir/orders.parquet")
     Seq((1L, 10L), (1L, 20L), (2L, 10L), (2L, 20L), (3L, 10L), (3L, 30L), (3L, 20L))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class GeoSpec extends SparkSpecBase {
 
   test("cell-bucketed point-zone join equals the naive theta-join") {
-    val bucketed = Geo.pointZoneJoin(spark, sfDir)
+    val bucketed = Geo.pointZoneJoinOn(Geo.points(spark, sfDir), Geo.zones(spark, sfDir))
       .select("event_id", "zone_id")
     val p = Geo.points(spark, sfDir)
     val z = Geo.zones(spark, sfDir)
@@ -77,29 +77,6 @@ class GeoSpec extends SparkSpecBase {
       .orderBy("zone_id")
     assert(bucketed.exceptAll(naive).isEmpty && naive.exceptAll(bucketed).isEmpty)
     assert(bucketed.count() > 0)
-  }
-
-  test("polyContains is a true concave test: hull points in the notch are outside") {
-    import spark.implicits._
-    // pentagon: box (0,0)-(10,6) with a notch cut to (5,3) in the top edge
-    val verts = array(
-      struct(lit(0.0).as("x"), lit(0.0).as("y")),
-      struct(lit(10.0).as("x"), lit(0.0).as("y")),
-      struct(lit(10.0).as("x"), lit(6.0).as("y")),
-      struct(lit(5.0).as("x"), lit(3.0).as("y")),
-      struct(lit(0.0).as("x"), lit(6.0).as("y")))
-    val pts = Seq(
-      (5.0, 1.0, true),   // deep interior
-      (5.0, 4.0, false),  // inside the convex hull but in the notch
-      (1.0, 5.0, true),   // left lobe, above notch level
-      (9.0, 5.0, true),   // right lobe
-      (5.0, 3.5, false),  // just above the reflex vertex
-      (5.0, 2.9, true),   // just below the reflex vertex
-      (11.0, 3.0, false)  // outside the bbox entirely
-    ).toDF("px", "py", "expected")
-    val got = pts.withColumn("inside", Geo.polyContains(verts, col("px"), col("py"))).collect()
-    got.foreach(r => assert(r.getBoolean(3) == r.getBoolean(2),
-      s"(${r.getDouble(0)},${r.getDouble(1)}): got ${r.getBoolean(3)}"))
   }
 
   test("integer half-plane decomposition equals integer pnpoly on the FULL 0.01 grid") {
@@ -190,7 +167,7 @@ class GeoSpec extends SparkSpecBase {
   }
 
   test("tile directory sink writes the z/x/y layout and point reads prune to one leaf") {
-    val out = java.nio.file.Files.createTempDirectory("graft_tiles").toString + "/tiles"
+    val out = scratch("tiles")
     val pyr = Geo.tilePyramidFull(spark, sfDir).filter(col("zoom") <= 4)
     Geo.writeTileDirectory(pyr, out)
     // the z/x/y directory artifact: zoom 0 is the single world tile

@@ -20,7 +20,7 @@ class KmeansModelSpec extends SparkSpecBase {
     * rounds actually move assignments. */
   private def writeCorpus(): String = {
     import spark.implicits._
-    val dir = s"/tmp/graft_kmmodel_${System.nanoTime()}"
+    val dir = scratch("kmmodel")
     def v(xs: Double*): Array[Float] = xs.map(_.toFloat).toArray
     Seq(
       (0L, 0L, v(0.10, 0.11, 0.09, 0.10)), (1L, 0L, v(0.12, 0.10, 0.11, 0.09)),

@@ -18,7 +18,7 @@ class LpaModelSpec extends SparkSpecBase {
     * >= LpaMinShared orders so the edge filter keeps the structure. */
   private def writeCorpus(): String = {
     import spark.implicits._
-    val dir = s"/tmp/graft_lpamodel_${System.nanoTime()}"
+    val dir = scratch("lpamodel")
     val communityA = Seq(101L, 102L, 103L)
     val communityB = Seq(201L, 202L, 203L)
     val orders =

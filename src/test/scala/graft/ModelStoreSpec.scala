@@ -15,7 +15,7 @@ class ModelStoreSpec extends SparkSpecBase {
 
   /** A source dir holding one table file for the fingerprint to hash. */
   private def sourceDir(): String = {
-    val dir = new java.io.File(s"/tmp/graft_msspec_${System.nanoTime()}")
+    val dir = new java.io.File(scratch("msspec"))
     assert(dir.mkdirs())
     val w = new java.io.PrintWriter(new java.io.File(dir, "t.parquet"))
     w.println("corpus"); w.close()
@@ -69,7 +69,7 @@ class ModelStoreSpec extends SparkSpecBase {
 
   test("collected artifact: a BPE merge table with the wrong round count is a miss") {
     import spark.implicits._
-    val dir = s"/tmp/graft_msspec_bpe_${System.nanoTime()}"
+    val dir = scratch("msspec_bpe")
     Seq((1L, "en", "aaaa bb cc dd aabb aaaa cc"))
       .toDF("doc_id", "lang", "text")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")

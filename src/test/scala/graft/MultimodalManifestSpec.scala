@@ -3,7 +3,6 @@ package graft
 import graft.operators.Multimodal
 import graft.sources.{ManifestIO, Tables}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class MultimodalManifestSpec extends SparkSpecBase {
 
@@ -42,7 +41,7 @@ class MultimodalManifestSpec extends SparkSpecBase {
   }
 
   test("csv and json manifests round-trip schema and values") {
-    val dir = Files.createTempDirectory("graft_io_spec").toString
+    val dir = scratch("io_spec")
     val part = Tables.part(spark, sfDir)
     ManifestIO.writeCsv(part, s"$dir/csv")
     ManifestIO.writeJson(part, s"$dir/json")
@@ -54,7 +53,7 @@ class MultimodalManifestSpec extends SparkSpecBase {
   }
 
   test("appendMissing writes each key once (incremental skip)") {
-    val dir = Files.createTempDirectory("graft_cat_spec").toString + "/catalog"
+    val dir = scratch("catalog")
     val firstHalf = Tables.part(spark, sfDir).filter(col("p_partkey") < 100)
     val all = Tables.part(spark, sfDir)
     val n1 = ManifestIO.appendMissing(spark, firstHalf, dir, "p_partkey")
@@ -68,8 +67,21 @@ class MultimodalManifestSpec extends SparkSpecBase {
     assert(cat.select("p_partkey").distinct().count() == all.count())
   }
 
+  test("appendMissing fails loudly on a corrupt catalog instead of treating it as a first write") {
+    val dir = new java.io.File(scratch("corrupt_catalog"))
+    assert(dir.mkdirs())
+    val w = new java.io.PrintWriter(new java.io.File(dir, "part-00000.parquet"))
+    w.println("not parquet"); w.close()
+    def listing() = dir.listFiles().map(f => (f.getName, f.length)).sorted.toSeq
+    val before = listing()
+    intercept[org.apache.spark.SparkException] {
+      ManifestIO.appendMissing(spark, Tables.part(spark, sfDir), dir.getPath, "p_partkey")
+    }
+    assert(listing() == before)
+  }
+
   test("writePartitioned lays out one directory per partition value") {
-    val dir = Files.createTempDirectory("graft_part_spec").toString + "/out"
+    val dir = scratch("part_spec")
     ManifestIO.writePartitioned(Tables.orders(spark, sfDir), dir, "o_orderpriority", "o_orderkey")
     val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName)
     assert(dirs.count(_.startsWith("o_orderpriority=")) == 5, dirs.mkString(","))

@@ -1,13 +1,12 @@
 package graft
 
-import java.nio.file.Files
 import graft.operators.{Geo, Pipeline}
 import org.apache.spark.sql.functions._
 
 class PipelineSpec extends SparkSpecBase {
 
   test("incremental runner: first run writes all layers, re-run writes nothing") {
-    val out = Files.createTempDirectory("graft_pipe_spec").toString + "/root"
+    val out = scratch("pipe_spec")
     val first = Pipeline.runIncremental(spark, sfDir, out)
     assert(first.keySet == Set("clicks", "purchases"))
     assert(first.values.forall(_ > 0))
@@ -22,7 +21,7 @@ class PipelineSpec extends SparkSpecBase {
   }
 
   test("a NEW layer pair joins an existing catalog without recomputing old ones") {
-    val out = Files.createTempDirectory("graft_pipe_spec2").toString + "/root"
+    val out = scratch("pipe_spec2")
     val one = Seq(Pipeline.LayerSpec("clicks", "click"))
     val both = one :+ Pipeline.LayerSpec("errors", "error")
     assert(Pipeline.runIncremental(spark, sfDir, out, one).keySet == Set("clicks"))
@@ -34,7 +33,7 @@ class PipelineSpec extends SparkSpecBase {
   }
 
   test("pipeline stages conserve counts: tiles and enriched cover each layer's points") {
-    val out = Files.createTempDirectory("graft_pipe_spec3").toString + "/root"
+    val out = scratch("pipe_spec3")
     Pipeline.runIncremental(spark, sfDir, out)
     val zones = Geo.zones(spark, sfDir).count()
     val enriched = spark.read.parquet(s"$out/enriched")

@@ -255,7 +255,7 @@ class PlanAuditSpec extends SparkSpecBase {
     import org.apache.spark.sql.functions._
     val asg = graft.operators.Similarity.kmeansAssignments(spark, sfDir)
       .select(col("vec_id"), col("c"))
-    val layout = s"/tmp/graft_ivf_layout_${System.nanoTime()}"
+    val layout = scratch("ivf_layout")
     graft.sources.Tables.embeddings(spark, sfDir)
       .join(asg, Seq("vec_id")).write.partitionBy("c").parquet(layout)
     val probes = Seq(2L, 5L)
@@ -300,7 +300,7 @@ class PlanAuditSpec extends SparkSpecBase {
     assert(!gated.queryExecution.analyzed.toString.contains("ResolvedHint"),
       "oversized zone side must not be broadcast")
     // the real (dimension-sized) zone layer passes the gate and hints
-    val small = graft.operators.Geo.pointZoneJoin(spark, sfDir)
+    val small = graft.operators.Geo.pointZoneJoinOn(pts, graft.operators.Geo.zones(spark, sfDir))
     assert(small.queryExecution.analyzed.toString.contains("ResolvedHint"),
       "dimension-sized zone side should broadcast")
   }

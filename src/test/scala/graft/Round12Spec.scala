@@ -295,40 +295,6 @@ class Round12Spec extends SparkSpecBase {
     assert(to.toSeq == Seq((3L, 12L, 0.0)))
   }
 
-  test("shallow clone: zero data copied, snapshot pinned across source appends") {
-    import spark.implicits._
-    val base = s"/tmp/graft_clone_${System.nanoTime()}"
-    val src = s"$base/src"
-    val cl = s"$base/clone"
-    (1L to 100L).map(i => (i, i * 2)).toDF("k", "v")
-      .repartition(2).write.parquet(src)
-    val n = graft.sources.ManifestIO.shallowClone(spark, src, cl)
-    assert(n == 2)
-    // no data bytes copied: the clone dir holds only the manifest
-    val fs = new org.apache.hadoop.fs.Path(cl)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def parquetCount(d: String): Int = {
-      val p = new org.apache.hadoop.fs.Path(d)
-      if (!fs.exists(p)) 0
-      else fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
-    }
-    assert(parquetCount(cl) == 0)
-    // clone reads the source snapshot
-    val before = graft.sources.ManifestIO.readClone(spark, cl)
-    assert(before.count() == 100 && before.agg(sum("v")).collect()(0).getLong(0) == 10100L)
-    // source appends AFTER the clone: source read grows, clone read pinned
-    Seq((999L, 999L)).toDF("k", "v").write.mode("append").parquet(src)
-    assert(spark.read.parquet(src).count() == 101)
-    assert(graft.sources.ManifestIO.readClone(spark, cl).count() == 100)
-    // orphan detection: vs the clone manifest, exactly the appended
-    // file is unregistered debris
-    val registered = spark.read.option("header", "true")
-      .csv(s"$cl/clone_manifest").select("path").collect().map(_.getString(0))
-    val orphans = graft.sources.ManifestIO.orphanFiles(spark, src, registered.toSeq)
-    assert(orphans.size == 1)
-    assert(parquetCount(src) == 3)
-  }
-
   test("bloom screen: no false negatives, positives bound truth") {
     import spark.implicits._
     // 40 corpus docs (even ids), 40 batch docs (odd): 10 planted exact

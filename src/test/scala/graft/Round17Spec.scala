@@ -80,7 +80,7 @@ class Round17Spec extends SparkSpecBase {
 
   test("graph-ANN index artifact: cold build == warm deploy, one train event") {
     import spark.implicits._
-    val dir = s"/tmp/graft_gsmodel_${System.nanoTime()}"
+    val dir = scratch("gsmodel")
     def v(xs: Double*): Array[Float] = xs.map(_.toFloat).toArray
     // 12 dense-id vectors in three separated blobs (the KmeansModelSpec corpus)
     Seq(

@@ -116,7 +116,7 @@ class Round18Spec extends SparkSpecBase {
 
   test("substring witness artifact: cold build == warm deploy for both consumers") {
     import spark.implicits._
-    val dir = s"/tmp/graft_sdwmodel_${System.nanoTime()}"
+    val dir = scratch("sdwmodel")
     // the shared phrase must sit inside the FIRST sampled 64-char window
     // (strided offsets 1/161/...), so keep the distinct prefixes short
     val phrase = "the quick brown fox jumps over the lazy dog"

@@ -106,7 +106,7 @@ class Round21Spec extends SparkSpecBase {
     * hub. */
   private def writeCorpus(): String = {
     import spark.implicits._
-    val dir = s"/tmp/graft_nndlmodel_${System.nanoTime()}"
+    val dir = scratch("nndlmodel")
     def v(xs: Double*): Array[Float] = xs.map(_.toFloat).toArray
     val base = Seq(v(1.0, 0.1, 0.0, 0.0), v(0.0, 1.0, 0.1, 0.0), v(0.0, 0.1, 1.0, 0.3))
     (0L until 24L).map { i =>

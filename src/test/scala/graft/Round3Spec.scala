@@ -191,21 +191,6 @@ class Round3Spec extends SparkSpecBase {
     } finally saved.foreach { case (k, v) => conf.set(k, v) }
   }
 
-  test("io_compact rewrites many small files into the computed target count, lossless") {
-    import graft.sources.ManifestIO
-    val path = s"/tmp/graft_io/compact_spec_${System.nanoTime()}"
-    val src = spark.read.parquet(s"$sfDir/orders.parquet")
-    src.repartition(37).write.parquet(path) // deliberately fragmented
-    val before = src.count()
-    val (nBefore, nAfter) = ManifestIO.compact(spark, path, targetBytes = 256L * 1024)
-    assert(nBefore == 37, s"expected 37 input files, got $nBefore")
-    assert(nAfter < nBefore, s"compaction did not reduce files: $nBefore -> $nAfter")
-    val out = spark.read.parquet(path)
-    assert(out.count() == before)
-    // row-level losslessness, not just counts
-    assert(out.exceptAll(src).isEmpty && src.exceptAll(out).isEmpty)
-  }
-
   test("q23 exists/not-exists plans as semi+anti joins, never a subquery loop") {
     val p = plan(Relational.q23Exists(spark, sfDir))
     assert(p.contains("LeftSemi") || p.contains("ExistenceJoin"), p)

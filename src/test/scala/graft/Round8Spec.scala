@@ -14,7 +14,7 @@ class Round8Spec extends SparkSpecBase {
     // the events.ts lesson generalized: a regeneration may flip integer
     // widths or float widths; loaders must normalize the benign flips and
     // fail LOUDLY (never silently mis-analyze) on anything new
-    val dir = s"/tmp/graft_drift_${System.nanoTime()}"
+    val dir = scratch("drift")
     // int32 doc_id + double embedding of exact float values
     spark.range(4).selectExpr("CAST(id AS INT) AS doc_id",
         "'t' AS text", "'en' AS lang", "'s' AS source", "1L AS n_chars")
@@ -32,7 +32,7 @@ class Round8Spec extends SparkSpecBase {
       e.schema("embedding").dataType.asInstanceOf[ArrayType].elementType == FloatType)
     assert(e.selectExpr("element_at(embedding, 3)").collect()(0).getFloat(0) == 3.0f)
     // unknown encoding -> loud failure
-    val bad = s"/tmp/graft_drift_bad_${System.nanoTime()}"
+    val bad = scratch("drift_bad")
     spark.range(2).selectExpr("CAST(id AS STRING) AS doc_id", "'t' AS text",
         "'en' AS lang", "'s' AS source", "1L AS n_chars")
       .write.parquet(s"$bad/documents.parquet")
@@ -54,26 +54,6 @@ class Round8Spec extends SparkSpecBase {
     // the allowlist constraint REPORTS its violations (zh/es/de docs exist)
     val (nBad, passed) = rows(("documents", "lang_allowlist"))
     assert(nBad > 0L && !passed, s"expected surfaced violations, got ($nBad, $passed)")
-  }
-
-  test("bloom skip: a point lookup reads ~1 file of a multi-file layout, results exact") {
-    import graft.sources.ManifestIO
-    val layout = s"/tmp/graft_bloom_${System.nanoTime()}"
-    // 8 files with disjoint key ranges (range-partitioned write)
-    spark.range(0, 8000).selectExpr("id AS k", "id % 97 AS v")
-      .repartitionByRange(8, col("k"))
-      .write.parquet(layout)
-    val idx = ManifestIO.bloomIndex(spark, layout, "k", expectedPerFile = 2000L)
-    assert(idx.size == 8, s"expected 8 files, got ${idx.size}")
-    // present key: ~1 file read (allow 2 for false positives), exact row back
-    val (hitDf, nRead) = ManifestIO.bloomSkipScan(spark, idx, "k", 4242L)
-    assert(nRead >= 1 && nRead <= 2, s"bloom pruned to $nRead files, expected ~1")
-    val rows = hitDf.collect()
-    assert(rows.length == 1 && rows(0).getLong(0) == 4242L && rows(0).getLong(1) == 4242L % 97)
-    // absent key: false-positive files only, zero rows either way
-    val (missDf, nMiss) = ManifestIO.bloomSkipScan(spark, idx, "k", 999999L)
-    assert(nMiss <= 2, s"absent key still scheduled $nMiss files")
-    assert(missDf.count() == 0)
   }
 
   test("semdedup: drops point to a lower-id cluster-mate above threshold") {

@@ -213,27 +213,4 @@ class Round9Spec extends SparkSpecBase {
     assert(out.length == 1)
     assert((out(0).getLong(0), out(0).getLong(1), out(0).getLong(2)) == ((0L, 6L, 30000L)))
   }
-
-  test("zone map: a range probe reads only overlapping files, results exact") {
-    import graft.sources.ManifestIO
-    val layout = s"/tmp/graft_zm_${System.nanoTime()}"
-    // 8 files with disjoint key ranges (range-partitioned write)
-    spark.range(0, 8000).selectExpr("id AS k", "id % 97 AS v")
-      .repartitionByRange(8, col("k"))
-      .write.parquet(layout)
-    val idx = ManifestIO.zoneMapIndex(spark, layout, "k")
-    assert(idx.size == 8, s"expected 8 files, got ${idx.size}")
-    // a narrow in-file range: exactly 1 file scheduled, exact rows back
-    val mid = idx.sortBy(_._2).apply(3) // 4th file's interior
-    val (lo, hi) = (mid._2 + 1, mid._2 + 5)
-    val (df, nRead) = ManifestIO.zoneMapSkipScan(spark, idx, "k", lo, hi)
-    assert(nRead == 1, s"zone map scheduled $nRead files, expected 1")
-    assert(df.count() == hi - lo + 1)
-    // a straddling range: 2 files; an out-of-range probe: 0 files, 0 rows
-    val edge = idx.sortBy(_._2).apply(4)._2 // 5th file's min
-    val (_, nStraddle) = ManifestIO.zoneMapSkipScan(spark, idx, "k", edge - 2, edge + 2)
-    assert(nStraddle == 2, s"straddle scheduled $nStraddle files, expected 2")
-    val (missDf, nMiss) = ManifestIO.zoneMapSkipScan(spark, idx, "k", 100000L, 100010L)
-    assert(nMiss == 0 && missDf.count() == 0)
-  }
 }

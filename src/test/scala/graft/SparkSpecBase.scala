@@ -9,6 +9,11 @@ trait SparkSpecBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpecBase.session
   val sfDir = "/root/testdata/sf0.001"
 
+  /** A fresh, not yet created directory path named after `name`, under
+    * this JVM's one spec scratch root (deleted when the test JVM exits). */
+  def scratch(name: String): String = new java.io.File(SparkSpecBase.scratchRoot,
+    s"${name}_${SparkSpecBase.scratchSeq.incrementAndGet()}").getPath
+
   /** Formatted physical plan text of a query's DataFrame. */
   def plan(df: org.apache.spark.sql.DataFrame): String = {
     val out = new java.io.ByteArrayOutputStream()
@@ -23,4 +28,11 @@ object SparkSpecBase {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  private lazy val scratchRoot: java.io.File = {
+    val root = java.nio.file.Files.createTempDirectory("graft_spec_").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root))
+    root
+  }
+  private val scratchSeq = new java.util.concurrent.atomic.AtomicInteger()
 }

@@ -43,43 +43,8 @@ class ZOrderSpec extends SparkSpecBase {
     assert(p.contains("* Project"), p)
   }
 
-  test("incremental z-order maintenance rewrites only touched files, restores disjointness") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zmaint").toString
-    // initial clustered table: the high-key half of the corpus
-    val initial = keyed.filter(col("zkey") >= 1000000L)
-    initial.repartitionByRange(6, col("zkey")).sortWithinPartitions("zkey")
-      .write.mode("overwrite").parquet(dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def files() = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map(s => (s.getPath.getName, s.getLen, s.getModificationTime)).toSeq
-    val before = files()
-    // localized incoming batch: the LOW-key half — touches only the
-    // lowest-range file(s)
-    val batch = keyed.filter(col("zkey") < 1000000L)
-    graft.sources.ManifestIO.zorderMaintain(spark, dir, batch)
-    val after = files()
-    // some original files must have survived byte-identical (locality is
-    // the whole point), and the batch's files are new
-    val untouched = before.toSet.intersect(after.toSet)
-    assert(untouched.nonEmpty, s"maintenance rewrote everything:\nbefore=$before\nafter=$after")
-    assert(after.toSet != before.toSet)
-    // no rows lost or duplicated
-    val back = spark.read.parquet(dir)
-    assert(back.count() == keyed.count())
-    assert(back.select("event_id").exceptAll(keyed.select("event_id")).isEmpty)
-    // global per-file disjointness RESTORED across old + new files
-    val ranges = back.groupBy(input_file_name()).agg(min("zkey").as("lo"), max("zkey").as("hi"))
-      .collect().map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Array((_, hi1), (lo2, _)) => assert(hi1 <= lo2, s"overlap after maintain: $hi1 > $lo2")
-      case _ =>
-    }
-  }
-
   test("range-clustered write yields disjoint per-file zkey ranges and exact reads") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+    val dir = scratch("zorder")
     keyed
       .repartitionByRange(8, col("zkey"))
       .sortWithinPartitions("zkey")

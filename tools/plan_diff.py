@@ -25,10 +25,13 @@ parts of a plan that change from run to run of the same code are masked:
 - in prefix plans only, the `[codegen id : N]` marks, which follow the
   order in which the run materialized its stages.
 
-Two keys cannot be compared this way: q7_distinct and io_col_stats order the
-distinct groups of their Expand by exprId hash, so a difference there is
-listed as "re-explain alone" (explain just that key on both sides) rather
-than as a plan diff.
+Some keys cannot be compared this way, and `RE_EXPLAIN_ALONE` names each
+with its reason: q7_distinct and io_col_stats order the distinct groups of
+their Expand by exprId hash, and in gr_khop the broadcast build side of one
+checkpoint follows the size estimates the keys explained before it left
+behind. A difference in one of these keys is listed as "re-explain alone"
+(explain just that key on both sides, where the two agree) rather than as
+a plan diff.
 
 Compare runs that start from the same model-root state (cold with cold, warm
 with warm): a key can plan differently when its artifact is built in the
@@ -53,7 +56,12 @@ import re
 import sys
 from collections import Counter
 
-RE_EXPLAIN_ALONE = {"q7_distinct", "io_col_stats"}
+RE_EXPLAIN_ALONE = {
+    "q7_distinct": "Expand group order follows exprId hashing",
+    "io_col_stats": "Expand group order follows exprId hashing",
+    "gr_khop": "a checkpoint's broadcast build side follows the size "
+               "estimates left by earlier keys; explained alone, both sides agree",
+}
 
 MASKS = [
     (re.compile(r"#\d+L?\b"), "#"),
@@ -140,7 +148,7 @@ def main():
     for k in only_b:
         print(f"ONLY_B {k}")
     for k in re_explain:
-        print(f"RE-EXPLAIN ALONE {k} (Expand group order follows exprId hashing)")
+        print(f"RE-EXPLAIN ALONE {k} ({RE_EXPLAIN_ALONE[k]})")
     if args.counts:
         ta = tb = 0
         for k in sorted(ka | kb):
