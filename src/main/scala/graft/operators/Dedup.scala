@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ModelStore
 import graft.sources.Tables._
+import TextAnalysis.{windowText, wordWindows, words}
 
 /** Deduplication suite over the `documents` table (SURVEY.md §2.C).
   *
@@ -25,13 +26,15 @@ object Dedup {
     * single-space joined). Spark array indexing is 0-based (DuckDB's is
     * 1-based — the oracle SQL mirrors this with range(1, len-1)). */
   def shinglesOn(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    docs
-      .select(col(idCol).as("doc_id"), split(col(textCol), " ").as("ws"))
-      .filter(size(col("ws")) >= 3)
-      .select(col("doc_id"),
-        explode(array_distinct(expr(
-          "transform(sequence(0, size(ws)-3), i -> concat(ws[i], ' ', ws[i+1], ' ', ws[i+2]))")))
-          .as("sh"))
+    wordWindows(docs, Seq(col(idCol).as("doc_id")), 3, windowText(3), "sh", words(textCol),
+      distinct = true)
+
+  /** Distinct md5 hashes (doc_id, sh) of a corpus's word n-grams — the
+    * gram index of dd_contamination and pipe_eval's decontamination. */
+  private[operators] def gramHashes(docs: DataFrame, n: Int, idCol: String = "doc_id",
+      textCol: String = "text"): DataFrame =
+    wordWindows(docs, Seq(col(idCol).as("doc_id")), n, s"md5(${windowText(n)})", "sh",
+      words(textCol), distinct = true)
 
   private[graft] def shingles(spark: SparkSession, dir: String): DataFrame =
     shinglesOn(documents(spark, dir)
@@ -337,7 +340,7 @@ object Dedup {
 
   /** Bloom position j of the text-hash column `h`. */
   private def bloomPosExpr(j: Int): String =
-    s"CAST(conv(substring(md5(concat('bf$j:', h)), 1, 4), 16, 10) AS BIGINT) % $BloomScreenBits"
+    md5Int(s"concat('bf$j:', h)", 4) + s" % $BloomScreenBits"
 
   /** Same operator over any (doc_id, source, text) frame — Round12Spec
     * pins zero false negatives and a planted false positive. */
@@ -594,12 +597,8 @@ object Dedup {
     * applies; the df table is corpus-sized so it is NEVER broadcast. */
   def spanDedupOn(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", spanWords: Int = 10): DataFrame = {
-    val spans = docs
-      .select(col(idCol).as("doc_id"), split(col(textCol), " ").as("ws"))
-      .filter(size(col("ws")) >= spanWords)
-      .select(col("doc_id"), explode(expr(
-        s"transform(sequence(0, size(ws) div $spanWords - 1), " +
-          s"g -> md5(concat_ws(' ', slice(ws, g * $spanWords + 1, $spanWords))))")).as("h"))
+    val spans = wordWindows(docs, Seq(col(idCol).as("doc_id")), spanWords,
+        s"md5(${windowText(spanWords)})", "h", words(textCol), stride = spanWords)
       // referenced by both the df aggregate and the join probe side —
       // materialize so the corpus-wide split/slice/md5 explode runs once
       // (the two subtrees differ, so ReuseExchange cannot dedupe them)
@@ -635,13 +634,9 @@ object Dedup {
   def spanExtractOn(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", spanWords: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val spans = docs
-      .select(col(idCol).as("doc_id"), split(col(textCol), " ").as("ws"))
-      .filter(size(col("ws")) >= spanWords)
-      .select(col("doc_id"), explode(expr(
-        s"transform(sequence(0, size(ws) div $spanWords - 1), " +
-          s"g -> struct(cast(g as bigint) as g, " +
-          s"md5(concat_ws(' ', slice(ws, g * $spanWords + 1, $spanWords))) as h))")).as("s"))
+    val spans = wordWindows(docs, Seq(col(idCol).as("doc_id")), spanWords,
+        s"struct(cast(i div $spanWords as bigint) as g, md5(${windowText(spanWords)}) as h)",
+        "s", words(textCol), stride = spanWords)
       .select(col("doc_id"), col("s.g").as("g"), col("s.h").as("h"))
       .localCheckpoint() // consumers: df aggregate + join probe side
     val df = spans.groupBy("h").agg(count(lit(1)).as("df"))
@@ -682,15 +677,11 @@ object Dedup {
   def winnowOn(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", gramWords: Int = 4, winGrams: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val minWords = gramWords + winGrams - 1
-    val grams = docs
-      .select(col(idCol).as("doc_id"), split(col(textCol), " ").as("ws"))
-      .filter(size(col("ws")) >= minWords)
-      .select(col("doc_id"), explode(expr(
-        s"transform(sequence(0, size(ws) - $gramWords), p -> struct(" +
-          s"cast(p as bigint) as p, " +
-          s"concat(substring(md5(concat_ws(' ', slice(ws, p + 1, $gramWords))), 1, 8), " +
-          s"lpad(cast(999999 - p as string), 6, '0')) as key))")).as("g"))
+    val grams = wordWindows(docs, Seq(col(idCol).as("doc_id")), gramWords,
+        s"struct(cast(i as bigint) as p, " +
+          s"concat(substring(md5(${windowText(gramWords)}), 1, 8), " +
+          s"lpad(cast(999999 - i as string), 6, '0')) as key)",
+        "g", words(textCol), minWords = gramWords + winGrams - 1) // one full window of grams
       .select(col("doc_id"), col("g.p").as("p"), col("g.key").as("key"))
     val byDoc = Window.partitionBy("doc_id").orderBy(col("p").asc)
     val perDoc = Window.partitionBy("doc_id")
@@ -791,8 +782,7 @@ object Dedup {
       .join(ranks.select(col("doc_id").as("db"), col("rank").as("rb")), Seq("db"))
       .crossJoin(broadcast(nTot))
       .withColumn("h", expr(
-        "CAST(conv(substring(md5(concat('pm:', CAST(da AS STRING), ':', " +
-          "CAST(db AS STRING))), 1, 6), 16, 10) AS BIGINT)"))
+        md5Int("concat('pm:', CAST(da AS STRING), ':', CAST(db AS STRING))", 6)))
       .withColumn("k", expr("h % (n - 2) + 1"))
       .withColumn("k2", expr("k + (CASE WHEN k >= least(ra, rb) THEN 1 ELSE 0 END)"))
       .withColumn("nrank", expr("k2 + (CASE WHEN k2 >= greatest(ra, rb) THEN 1 ELSE 0 END)"))
@@ -880,12 +870,7 @@ object Dedup {
   def contaminationOn(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", benchMod: Int = 7, n: Int = 8,
       benchMaxId: Long = 100000L): DataFrame = {
-    val grams = docs
-      .select(col(idCol).as("doc_id"), split(col(textCol), " ").as("ws"))
-      .filter(size(col("ws")) >= n)
-      .select(col("doc_id"), explode(array_distinct(expr(
-        s"transform(sequence(0, size(ws) - $n), " +
-          s"i -> md5(concat_ws(' ', slice(ws, i + 1, $n))))"))).as("sh"))
+    val grams = gramHashes(docs, n, idCol, textCol)
     // the synthetic benchmark is the % benchMod slice CAPPED at a fixed id
     // ceiling: a real benchmark is a fixed artifact that does not grow with
     // the corpus, and only a genuinely bounded index may carry an

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables._
@@ -59,28 +59,33 @@ object Events {
         col("event_type"), col("n_events"), col("sum_value"))
       .orderBy("win_start", "event_type")
 
-  /** Gap-based sessionization (30-min inactivity): lag + cumulative flag —
-    * the classic two-window plan; both windows share the (user_id, ts)
-    * partitioning so Catalyst sorts once per user partition. */
-  /** Per-user 30-minute-gap sessions (the frame sessionize reports and
-    * ev_concurrency sweeps): one row per (user_id, session_idx). */
-  private[graft] def sessionFrame(spark: SparkSession, dir: String): DataFrame = {
+  /** THE session rule — per-user 30-minute-gap sessions: a lag plus a
+    * running sum of the new-session flag, both over one (user_id) window
+    * ordered by (ts_sec, event_id), so Catalyst sorts once per user
+    * partition. One row per (user_id, session_idx) carrying the caller's
+    * `aggs` over `ts_sec` and the events frame's `payload` column, so
+    * per-session flags ride the same grouping (no extra shuffle). */
+  private[graft] def sessionFrame(ev: DataFrame, payload: String, aggs: Column*): DataFrame = {
     val byUser = Window.partitionBy("user_id").orderBy(col("ts_sec").asc, col("event_id").asc)
-    events(spark, dir)
-      .select(col("user_id"), col("event_id"),
-        unix_timestamp(col("ts")).as("ts_sec"), col("value"))
+    ev.select(col("user_id"), col("event_id"), unix_timestamp(col("ts")).as("ts_sec"), col(payload))
       .withColumn("prev_sec", lag(col("ts_sec"), 1).over(byUser))
       .withColumn("new_session",
         when(col("prev_sec").isNull || col("ts_sec") - col("prev_sec") >= lit(1800L), lit(1L))
           .otherwise(lit(0L)))
       .withColumn("session_idx", sum(col("new_session")).over(byUser))
       .groupBy("user_id", "session_idx")
-      .agg(
-        count(lit(1)).as("n_events"),
-        min(col("ts_sec")).as("start_sec"),
-        max(col("ts_sec")).as("end_sec"),
-        dsum(col("value")).as("sum_value"))
+      .agg(aggs.head, aggs.tail: _*)
   }
+
+  /** The standard session frame (the one sessionize reports, ev_concurrency
+    * sweeps and ev_survival / ev_overlap_join / the as-of keys read):
+    * n_events, start_sec, end_sec, sum_value per session. */
+  private[graft] def sessionFrame(spark: SparkSession, dir: String): DataFrame =
+    sessionFrame(events(spark, dir), "value",
+      count(lit(1)).as("n_events"),
+      min(col("ts_sec")).as("start_sec"),
+      max(col("ts_sec")).as("end_sec"),
+      dsum(col("value")).as("sum_value"))
 
   def sessionize(spark: SparkSession, dir: String): DataFrame =
     sessionFrame(spark, dir).orderBy("user_id", "session_idx")
@@ -1098,8 +1103,7 @@ object Events {
   /** Row-hash bucket of the CMS: deterministic md5 over (row, user).
     * Expects columns `r` and `user_id` in scope. */
   private val CmsBucketSql: String =
-    "CAST(conv(substring(md5(concat('cms', r, ':', " +
-      s"CAST(user_id AS STRING))), 1, 4), 16, 10) AS BIGINT) % $CmsWidth"
+    md5Int("concat('cms', r, ':', CAST(user_id AS STRING))", 4) + s" % $CmsWidth"
 
   /** COUNT-MIN SKETCH heavy hitters (ev_heavy_hitters) — the bounded-state
     * frequency sketch (Cormode & Muthu 2005):
@@ -1198,8 +1202,7 @@ object Events {
   def reservoir(spark: SparkSession, dir: String): DataFrame = {
     val h = events(spark, dir)
       .select(col("user_id"), col("event_id"), col("event_type"))
-      .withColumn("hv", expr(
-        "CAST(conv(substring(md5(concat('rv:', CAST(event_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"))
+      .withColumn("hv", expr(md5Int("concat('rv:', CAST(event_id AS STRING))", 8)))
       .withColumn("ord", lit(4294967296L) - col("hv"))
     val sampled = graft.plans.TopKPerKeyNative
       .topK(h, "user_id", "ord", "event_id", ReservoirK)
@@ -1294,20 +1297,10 @@ object Events {
     * sessions, one map-side-combinable groupBy collapses to O(distinct
     * minutes) rows, and the cumulative windows run on that tiny frame
     * only (single-partition by design, never on raw rows). */
-  def survivalStrat(spark: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy("user_id").orderBy(col("ts_sec").asc, col("event_id").asc)
-    survivalStratOn(events(spark, dir)
-      .select(col("user_id"), col("event_id"),
-        unix_timestamp(col("ts")).as("ts_sec"), col("event_type"))
-      .withColumn("prev_sec", lag(col("ts_sec"), 1).over(byUser))
-      .withColumn("new_session",
-        when(col("prev_sec").isNull || col("ts_sec") - col("prev_sec") >= lit(1800L), lit(1L))
-          .otherwise(lit(0L)))
-      .withColumn("session_idx", sum(col("new_session")).over(byUser))
-      .groupBy("user_id", "session_idx")
-      .agg(min(col("ts_sec")).as("start_sec"), max(col("ts_sec")).as("end_sec"),
-        max(when(col("event_type") === "purchase", lit(1L)).otherwise(lit(0L))).as("conv")))
-  }
+  def survivalStrat(spark: SparkSession, dir: String): DataFrame =
+    survivalStratOn(sessionFrame(events(spark, dir), "event_type",
+      min(col("ts_sec")).as("start_sec"), max(col("ts_sec")).as("end_sec"),
+      max(when(col("event_type") === "purchase", lit(1L)).otherwise(lit(0L))).as("conv")))
 
   /** Same operator over any (start_sec, end_sec, conv) session frame —
     * Round17Spec pins the per-stratum risk split and the lr_num sign on
@@ -1432,21 +1425,10 @@ object Events {
     *
     * Scale: identical to ev_sessionize (one user shuffle, day rollup is
     * map-side-combinable). */
-  def cartAbandon(spark: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy("user_id").orderBy(col("ts_sec").asc, col("event_id").asc)
-    val sess = events(spark, dir)
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        unix_timestamp(col("ts")).as("ts_sec"))
-      .withColumn("prev_sec", lag(col("ts_sec"), 1).over(byUser))
-      .withColumn("new_session",
-        when(col("prev_sec").isNull || col("ts_sec") - col("prev_sec") >= lit(1800L), lit(1L))
-          .otherwise(lit(0L)))
-      .withColumn("session_idx", sum(col("new_session")).over(byUser))
-      .groupBy("user_id", "session_idx")
-      .agg(min(col("ts_sec")).as("start_sec"),
+  def cartAbandon(spark: SparkSession, dir: String): DataFrame =
+    sessionFrame(events(spark, dir), "event_type", min(col("ts_sec")).as("start_sec"),
         max(when(col("event_type") === "click", lit(1L)).otherwise(lit(0L))).as("has_click"),
         max(when(col("event_type") === "purchase", lit(1L)).otherwise(lit(0L))).as("has_purchase"))
-    sess
       .select(expr("start_sec div 86400").as("day"), col("has_click"), col("has_purchase"))
       .groupBy("day")
       .agg(count(lit(1)).as("n_sessions"),
@@ -1456,7 +1438,6 @@ object Events {
         "CASE WHEN n_click_sessions = 0 THEN 0L " +
           "ELSE (n_abandoned * 10000) div n_click_sessions END"))
       .orderBy("day")
-  }
 
   /** MULTI-WINDOW BURN-RATE ALERTS (ev_burn_rate) — the Google-SRE
     * error-budget alerting rule: page only when BOTH a fast window (1h)

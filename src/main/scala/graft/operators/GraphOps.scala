@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.ModelStore
+import graft.sources.Tables.md5Int
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -571,9 +572,8 @@ object GraphOps {
     * recovered planted edge on a hand-worked graph. */
   def linkpredEvalOn(edgesIn: DataFrame): DataFrame = {
     val keyed = edgesIn.withColumn("ho", expr(
-      s"""CAST(conv(substring(md5(concat('lp:', CAST(a AS STRING), ':',
-         |CAST(b AS STRING))), 1, 4), 16, 10) AS BIGINT)
-         |% $LinkpredHoldoutMod = 0""".stripMargin.replace("\n", " ")))
+      md5Int("concat('lp:', CAST(a AS STRING), ':', CAST(b AS STRING))", 4) +
+        s" % $LinkpredHoldoutMod = 0"))
       .localCheckpoint() // consumers: train side (x4) + holdout side (x2)
     val train = keyed.filter(!col("ho")).select("a", "b")
     val holdout = keyed.filter(col("ho")).select("a", "b")

@@ -412,7 +412,7 @@ object Multimodal {
     val assigned = (0 until ShuffleEpochs).map { ep =>
       docs.withColumn("epoch", lit(ep.toLong))
         .withColumn("shard", expr(
-          s"CAST(conv(substring(md5(concat('ep:$ep:', CAST(doc_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % $EpochShards"))
+          md5Int(s"concat('ep:$ep:', CAST(doc_id AS STRING))", 6) + s" % $EpochShards"))
     }.reduce(_.unionByName(_))
       .localCheckpoint() // rollup side + previous-epoch lookup side
     val prev = assigned.select((col("epoch") + 1L).as("epoch"),

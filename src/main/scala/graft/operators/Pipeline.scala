@@ -194,12 +194,7 @@ object Pipeline {
       .select(col("doc_id"), col("lang"), col("n_chars").cast("long").as("n_chars"),
         col("gk"), col("split"), col("text"))
       .localCheckpoint() // consumers: train gram index + test candidates
-    def grams(d: DataFrame): DataFrame = d
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .filter(size(col("ws")) >= 8)
-      .select(col("doc_id"), explode(array_distinct(expr(
-        "transform(sequence(0, size(ws) - 8), " +
-          "i -> md5(concat_ws(' ', slice(ws, i + 1, 8))))"))).as("sh"))
+    def grams(d: DataFrame): DataFrame = Dedup.gramHashes(d, 8)
     val test = docs.filter(col("split") === "test")
     val trainSh = grams(docs.filter(col("split") === "train"))
       .select("sh").distinct()

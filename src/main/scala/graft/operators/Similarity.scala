@@ -347,8 +347,8 @@ object Similarity {
     val nTot = c.agg(count(lit(1)).as("n"))
     c.select(col("vec_id").as("src")).crossJoin(broadcast(nTot))
       .select(col("src"), col("n"), explode(expr(s"sequence(0, ${k - 1})")).as("j"))
-      .withColumn("h", expr(s"CAST(conv(substring(md5(concat('$tag:', " +
-        "CAST(src AS STRING), ':', CAST(j AS STRING))), 1, 6), 16, 10) AS BIGINT) % n"))
+      .withColumn("h", expr(
+        md5Int(s"concat('$tag:', CAST(src AS STRING), ':', CAST(j AS STRING))", 6) + " % n"))
       .withColumn("dst", expr("CASE WHEN h = src THEN (h + 1) % n ELSE h END"))
       .select("src", "dst").distinct()
   }
@@ -592,8 +592,8 @@ object Similarity {
       .select(col("vec_id").as("src")).crossJoin(broadcast(nTot))
       .withColumn("nh", expr(s"(n + ${GsHubMod - 1}) div $GsHubMod"))
       .select(col("src"), col("nh"), explode(expr(s"sequence(0, ${GsOutK - 1})")).as("j"))
-      .withColumn("h", expr("CAST(conv(substring(md5(concat('ly:', " +
-        "CAST(src AS STRING), ':', CAST(j AS STRING))), 1, 6), 16, 10) AS BIGINT) % nh"))
+      .withColumn("h", expr(
+        md5Int("concat('ly:', CAST(src AS STRING), ':', CAST(j AS STRING))", 6) + " % nh"))
       .withColumn("dst", expr(s"CASE WHEN h * $GsHubMod = src " +
         s"THEN ((h + 1) % nh) * $GsHubMod ELSE h * $GsHubMod END"))
       .select("src", "dst").distinct()
@@ -1688,7 +1688,7 @@ object Similarity {
 
   /** DuckDB SQL: first 6 md5 hex chars (column `mh`) as an integer —
     * must encode the same convention as the Spark-side
-    * conv(substring(md5(...), 1, 6), 16, 10); shared by the
+    * md5Int(..., 6); shared by the
     * ann_nndescent and ann_graph_search graph-init oracles. */
   private def md5Hex6Sql: String = {
     val hex = (k: Int) => s"(strpos('0123456789abcdef', substr(mh, $k, 1)) - 1)"

@@ -63,10 +63,56 @@ object TextAnalysis {
           + expr("(30000 * (n_words - n_stop)) div n_words")
           + least(expr("(30000 * (n_chars - n_words + 1)) div (8 * n_words)"), lit(30000L)))
 
+  /** THE word-window rule of the text family — every word n-gram,
+    * shingle, span and hashed feature stream is cut here, so the rule is
+    * a one-place edit. Words are the one-space split of the text
+    * ([[words]]); a doc yields windows only when size(ws) >= n; window
+    * starts are 0-based, i = 0, stride, 2 * stride, ... <= size(ws) - n
+    * (a stride > 1 drops the tail remainder); `value` is the caller's
+    * per-window SQL over `ws` and the start `i` ([[windowText]] is the
+    * window's words joined by one space). This is the row-wise ARRAY
+    * form: `ws` must be in scope and the size gate is the caller's.
+    * DuckDB's lists are 1-based: the oracles spell it with range(1, …). */
+  private[graft] def windowArr(n: Int, value: String, stride: Int = 1): Column = {
+    val step = if (stride == 1) "" else s", $stride"
+    expr(s"transform(sequence(0, size(ws) - $n$step), i -> $value)")
+  }
+
+  /** The text family's one tokenization: split on one space. */
+  private[graft] def words(text: String = "text"): Column = split(col(text), " ")
+
+  /** Word k (0-based) of window i, as SQL over `ws` and `i`. */
+  private def wordAt(k: Int): String = if (k == 0) "ws[i]" else s"ws[i + $k]"
+
+  /** Window i's n words joined by one space, as SQL over `ws` and `i`. */
+  private[graft] def windowText(n: Int): String =
+    (0 until n).map(wordAt).mkString("concat(", ", ' ', ", ")")
+
+  /** The exploding FRAME form of [[windowArr]]: (keep…, `as`) with one
+    * row per window of every doc of at least max(n, minWords) words
+    * (`minWords` is for a caller whose own rule needs more than one
+    * window). `ws` is the words column (default: [[words]] of `text`);
+    * `distinct` drops a doc's repeated window values before the explode. */
+  private[graft] def wordWindows(docs: DataFrame, keep: Seq[Column], n: Int, value: String,
+      as: String, ws: Column = words(), stride: Int = 1, distinct: Boolean = false,
+      minWords: Int = 0): DataFrame = {
+    val gated = docs.select(keep :+ ws.as("ws"): _*)
+      .filter(size(col("ws")) >= math.max(n, minWords))
+    val arr = windowArr(n, value, stride)
+    gated.select(gated.columns.init.map(col).toSeq :+
+      explode(if (distinct) array_distinct(arr) else arr).as(as): _*)
+  }
+
+  /** (keep…, w1 … wn): the word n-gram stream, one row per window. */
+  private def gramsOf(docs: DataFrame, keep: Seq[String], n: Int): DataFrame = {
+    val fields = (0 until n).map(k => s"${wordAt(k)} AS w${k + 1}")
+    wordWindows(docs, keep.map(col), n, fields.mkString("struct(", ", ", ")"), "g")
+      .select(keep.map(col) ++ (1 to n).map(k => col(s"g.w$k").as(s"w$k")): _*)
+  }
+
   /** md5 window hashes of the doc's word 4-grams as an ARRAY column —
     * row-wise, shared by ta_fingerprint and ta_corpus_clean. */
-  private def windowHashArr: Column = expr(
-    "transform(sequence(0, size(ws)-4), i -> md5(concat(ws[i], ' ', ws[i+1], ' ', ws[i+2], ' ', ws[i+3])))")
+  private def windowHashArr: Column = windowArr(4, s"md5(${windowText(4)})")
 
   /** Quality scoring aggregated per source. */
   def quality(spark: SparkSession, dir: String): DataFrame =
@@ -194,12 +240,8 @@ object TextAnalysis {
     * the signal); one shuffle on (doc_id, bigram), one per-doc aggregate,
     * all counts integer-exact. */
   def repetition(spark: SparkSession, dir: String): DataFrame =
-    documents(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .filter(size(col("ws")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(0, size(ws)-2), i -> concat(ws[i], ' ', ws[i+1]))")).as("bg"))
+    wordWindows(documents(spark, dir).repartition(spark.sparkContext.defaultParallelism),
+        Seq(col("doc_id")), 2, windowText(2), "bg")
       .groupBy("doc_id", "bg").agg(count(lit(1)).as("cnt"))
       .groupBy("doc_id")
       .agg(sum(col("cnt")).as("n_bigrams"),
@@ -624,15 +666,8 @@ object TextAnalysis {
   def nbTrainOn(docs: DataFrame): DataFrame = {
     val labeled = withQualityScore(docs)
       .select(col("doc_id"), (col("score") >= NbLabelThreshold).as("pos"))
-    val feats = docs
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .filter(size(col("ws")) >= 2)
-      .select(col("doc_id"),
-        explode(expr("transform(sequence(0, size(ws) - 2), " +
-          "i -> concat(element_at(ws, i + 1), ' ', element_at(ws, i + 2)))")).as("f"))
-      .withColumn("bucket", expr(
-        s"CAST(conv(substring(md5(concat('hc:', f)), 1, 4), 16, 10) AS BIGINT) % $HcBuckets"))
-    feats.join(labeled, Seq("doc_id"))
+    hashedBigrams(docs, Seq("doc_id"), "hc:", HcBuckets)
+      .join(labeled, Seq("doc_id"))
       .groupBy("bucket")
       .agg(
         sum(when(col("pos"), 1L).otherwise(0L)).as("cnt_pos"),
@@ -958,8 +993,7 @@ object TextAnalysis {
     docs
       .select(col("doc_id"), col("source"), size(split(col("text"), " ")).cast("long").as("toks"))
       .join(broadcast(w), Seq("source"))
-      .withColumn("h", expr(
-        "CAST(conv(substring(md5(concat('rs:', CAST(doc_id AS STRING))), 1, 4), 16, 10) AS BIGINT) % 10000"))
+      .withColumn("h", expr(md5Int("concat('rs:', CAST(doc_id AS STRING))", 4) + " % 10000"))
       .withColumn("n_copies", expr(
         "weight_x10000 div 10000 + (CASE WHEN h < weight_x10000 % 10000 THEN 1 ELSE 0 END)"))
       .filter(col("n_copies") >= 1L)
@@ -1002,8 +1036,7 @@ object TextAnalysis {
     * exact-dup group key) and split. Pure per-row function — no state. */
   private[graft] def splitDocs(docs: DataFrame): DataFrame = docs
     .withColumn("gk", md5(concat(lit("sg:"), col("text"))))
-    .withColumn("b", expr(
-      s"CAST(conv(substring(md5(concat('sp:', gk)), 1, 4), 16, 10) AS BIGINT) % $SplitBuckets"))
+    .withColumn("b", expr(md5Int("concat('sp:', gk)", 4) + s" % $SplitBuckets"))
     .withColumn("split",
       when(col("b") <= 7L, "train").when(col("b") === 8L, "val").otherwise("test"))
 
@@ -1108,17 +1141,30 @@ object TextAnalysis {
     lmScoreOn(documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism))
 
+  /** The bigram LM's transition stream (doc_id, source, w1, w2) — one
+    * frame for the same-corpus model (lmDocScores) and the capped
+    * deployed one (ta_lm_topv). Checkpointed: each model has three
+    * consumers (unigram counts, bigram counts, scoring). */
+  private def lmBigrams(docs: DataFrame): DataFrame =
+    gramsOf(docs, Seq("doc_id", "source"), 2).localCheckpoint()
+
+  /** ta_lm_score's per-source rollup of per-doc LM scores — shared with
+    * the deployed ta_lm_topv. */
+  private def lmRollup(docScores: DataFrame): DataFrame =
+    docScores
+      .groupBy("source")
+      .agg(
+        count(lit(1)).as("n_docs"),
+        sum(col("n_bg")).as("n_transitions"),
+        expr("sum(doc_lm_x10000) div count(1)").as("avg_lm_x10000"),
+        min(col("doc_lm_x10000")).as("min_lm_x10000"),
+        max(col("doc_lm_x10000")).as("max_lm_x10000"))
+      .orderBy("source")
+
   /** Per-doc LM scores (doc_id, source, n_bg, doc_lm_x10000) — the shared
     * core of ta_lm_score's rollup and ta_ppl_bucket's terciles. */
   private[graft] def lmDocScores(docs: DataFrame): DataFrame = {
-    val bg = docs
-      .select(col("doc_id"), col("source"), split(col("text"), " ").as("ws"))
-      .filter(size(col("ws")) >= 2)
-      .select(col("doc_id"), col("source"),
-        explode(expr("transform(sequence(0, size(ws) - 2), " +
-          "i -> struct(element_at(ws, i + 1) AS w1, element_at(ws, i + 2) AS w2))")).as("b"))
-      .select(col("doc_id"), col("source"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .localCheckpoint() // three consumers: unigram counts, bigram counts, scoring
+    val bg = lmBigrams(docs)
     val ug = bg.groupBy("w1").agg(count(lit(1)).as("cu"))
     val cb = bg.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
     bg
@@ -1133,16 +1179,7 @@ object TextAnalysis {
   /** Same operator over any (doc_id, source, text) frame — Round7Spec
     * pins the conditional-probability arithmetic on a hand-worked
     * corpus. */
-  def lmScoreOn(docs: DataFrame): DataFrame =
-    lmDocScores(docs)
-      .groupBy("source")
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("n_bg")).as("n_transitions"),
-        expr("sum(doc_lm_x10000) div count(1)").as("avg_lm_x10000"),
-        min(col("doc_lm_x10000")).as("min_lm_x10000"),
-        max(col("doc_lm_x10000")).as("max_lm_x10000"))
-      .orderBy("source")
+  def lmScoreOn(docs: DataFrame): DataFrame = lmRollup(lmDocScores(docs))
 
   /** Perplexity bucketing — the CCNet corpus split: every doc lands in
     * head / middle / tail by EXACT global terciles of its LM score (head
@@ -1213,14 +1250,7 @@ object TextAnalysis {
 
   /** Same operator over any (doc_id, source, text) frame. */
   def lmScoreTopVOn(docs: DataFrame, topV: Int): DataFrame = {
-    val bg = docs
-      .select(col("doc_id"), col("source"), split(col("text"), " ").as("ws"))
-      .filter(size(col("ws")) >= 2)
-      .select(col("doc_id"), col("source"),
-        explode(expr("transform(sequence(0, size(ws) - 2), " +
-          "i -> struct(element_at(ws, i + 1) AS w1, element_at(ws, i + 2) AS w2))")).as("b"))
-      .select(col("doc_id"), col("source"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .localCheckpoint() // consumers: unigram counts, capped bigram counts, scoring
+    val bg = lmBigrams(docs)
     val vocab = bg.groupBy("w1").agg(count(lit(1)).as("cu"))
       .orderBy(col("cu").desc, col("w1").asc)
       .limit(topV)
@@ -1229,23 +1259,14 @@ object TextAnalysis {
       .join(broadcast(vocab.select("w1")), Seq("w1"))
       .join(broadcast(vocab.select(col("w1").as("w2"))), Seq("w2"))
       .groupBy("w1", "w2").agg(count(lit(1)).as("cb")) // <= V^2 rows
-    val docScores = bg
+    lmRollup(bg
       .join(broadcast(vocab), Seq("w1"))
       .join(broadcast(vocab.select(col("w1").as("w2"))), Seq("w2"))
       .join(broadcast(cbTop), Seq("w1", "w2"), "left")
       .withColumn("p_x10000", expr("(10000 * coalesce(cb, 0)) div cu"))
       .groupBy("doc_id", "source")
       .agg(count(lit(1)).as("n_bg"), sum(col("p_x10000")).as("sp"))
-      .withColumn("doc_lm_x10000", expr("sp div n_bg"))
-    docScores
-      .groupBy("source")
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("n_bg")).as("n_transitions"),
-        expr("sum(doc_lm_x10000) div count(1)").as("avg_lm_x10000"),
-        min(col("doc_lm_x10000")).as("min_lm_x10000"),
-        max(col("doc_lm_x10000")).as("max_lm_x10000"))
-      .orderBy("source")
+      .withColumn("doc_lm_x10000", expr("sp div n_bg")))
   }
 
   /** Trigram stupid-backoff scoring on a HELD-OUT split — the deployment
@@ -1278,15 +1299,7 @@ object TextAnalysis {
 
   /** Row-wise trigram stream (doc_id, source, w1, w2, w3) of a corpus. */
   private def trigramsOf(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), col("source"), split(col("text"), " ").as("ws"))
-      .filter(size(col("ws")) >= 3)
-      .select(col("doc_id"), col("source"),
-        explode(expr("transform(sequence(0, size(ws) - 3), " +
-          "i -> struct(element_at(ws, i + 1) AS w1, element_at(ws, i + 2) AS w2, " +
-          "element_at(ws, i + 3) AS w3))")).as("t"))
-      .select(col("doc_id"), col("source"),
-        col("t.w1").as("w1"), col("t.w2").as("w2"), col("t.w3").as("w3"))
+    gramsOf(docs, Seq("doc_id", "source"), 3)
 
   /** Same operator over any (doc_id, source, text) frame — Round9Spec
     * pins the three-tier arithmetic and the train/held-out split on a
@@ -1332,6 +1345,17 @@ object TextAnalysis {
   /** Feature-hash bucket count of ta_hash_classify. */
   val HcBuckets = 256L
 
+  /** The hashed-bigram feature table (keep…, bucket): one row per word
+    * bigram, hashed by the salted md5 rule into `buckets` — the ONE
+    * feature expression of ta_nb_train and ta_hash_classify (salt 'hc:',
+    * so a trained table drops into the deployed scorer unchanged) and of
+    * ta_dsir ('ds:'). */
+  private def hashedBigrams(docs: DataFrame, keep: Seq[String], salt: String,
+      buckets: Long): DataFrame =
+    wordWindows(docs, keep.map(col), 2, windowText(2), "f")
+      .select(keep.map(col) :+
+        expr(md5Int(s"concat('$salt', f)", 4) + s" % $buckets").as("bucket"): _*)
+
   /** Hashed-feature linear classifier gate — the fastText shape
     * (Joulin et al. 2016) every big-corpus pipeline deploys as its
     * model-based quality filter (the GPT-3 WebText-similarity gate,
@@ -1359,17 +1383,8 @@ object TextAnalysis {
   def hashClassifyOn(spark: SparkSession, docs: DataFrame): DataFrame = {
     // the "pretrained model": bucket -> weight, md5-derived, 256 rows
     val model = spark.range(0, HcBuckets).toDF("bucket")
-      .withColumn("wt", expr(
-        "CAST(conv(substring(md5(concat('wt:', CAST(bucket AS STRING))), 1, 4), 16, 10) AS BIGINT) % 2001"))
-    val feats = docs
-      .select(col("doc_id"), col("source"), split(col("text"), " ").as("ws"))
-      .filter(size(col("ws")) >= 2)
-      .select(col("doc_id"), col("source"),
-        explode(expr("transform(sequence(0, size(ws) - 2), " +
-          "i -> concat(element_at(ws, i + 1), ' ', element_at(ws, i + 2)))")).as("f"))
-      .withColumn("bucket", expr(
-        s"CAST(conv(substring(md5(concat('hc:', f)), 1, 4), 16, 10) AS BIGINT) % $HcBuckets"))
-    feats
+      .withColumn("wt", expr(md5Int("concat('wt:', CAST(bucket AS STRING))", 4) + " % 2001"))
+    hashedBigrams(docs, Seq("doc_id", "source"), "hc:", HcBuckets)
       .join(broadcast(model), Seq("bucket"))
       .groupBy("doc_id", "source")
       .agg(count(lit(1)).as("n_feat"), sum(col("wt")).as("swt"))
@@ -1416,15 +1431,7 @@ object TextAnalysis {
     * Round9Spec pins the ratio arithmetic and the smoothing on a
     * hand-worked corpus. */
   def dsirOn(docs: DataFrame): DataFrame = {
-    val feats = docs
-      .select(col("doc_id"), col("source"), col("lang"), split(col("text"), " ").as("ws"))
-      .filter(size(col("ws")) >= 2)
-      .select(col("doc_id"), col("source"), col("lang"),
-        explode(expr("transform(sequence(0, size(ws) - 2), " +
-          "i -> concat(element_at(ws, i + 1), ' ', element_at(ws, i + 2)))")).as("f"))
-      .withColumn("bucket", expr(
-        s"CAST(conv(substring(md5(concat('ds:', f)), 1, 4), 16, 10) AS BIGINT) % $DsirBuckets"))
-      .select("doc_id", "source", "lang", "bucket")
+    val feats = hashedBigrams(docs, Seq("doc_id", "source", "lang"), "ds:", DsirBuckets)
       .localCheckpoint() // consumers: raw counts, target counts, scoring
     val raw = feats.groupBy("bucket").agg(count(lit(1)).as("cr"))
     val tgt = feats.filter(col("lang") === "en")
@@ -1594,8 +1601,7 @@ object TextAnalysis {
       .withColumn("weight_x10000", expr("total_tokens * 10000 div (n_sources * n_tokens)"))
       .select("source", "weight_x10000")
     val s5 = s4.join(broadcast(w), Seq("source"))
-      .withColumn("h", expr(
-        "CAST(conv(substring(md5(concat('rs:', CAST(doc_id AS STRING))), 1, 4), 16, 10) AS BIGINT) % 10000"))
+      .withColumn("h", expr(md5Int("concat('rs:', CAST(doc_id AS STRING))", 4) + " % 10000"))
       .withColumn("n_copies", expr(
         "weight_x10000 div 10000 + (CASE WHEN h < weight_x10000 % 10000 THEN 1 ELSE 0 END)"))
     def stat(df: DataFrame, id: Int, name: String): DataFrame =
@@ -1647,11 +1653,9 @@ object TextAnalysis {
       .groupBy("wd").agg(count(lit(1)).as("cu"))
       .localCheckpoint() // consumers: two pair-side joins + the total
     val nt = ug.agg(sum(col("cu")).as("n_tot"))
-    def pairsAt(d: Int) = ws
-      .filter(size(col("ws")) >= d + 1)
-      .select(explode(expr(s"transform(sequence(0, size(ws) - ${d + 1}), " +
-        s"i -> struct(element_at(ws, i + 1) AS a, element_at(ws, i + 1 + $d) AS b))")).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
+    def pairsAt(d: Int) =
+      wordWindows(ws, Seq(), d + 1, s"struct(ws[i] AS a, ${wordAt(d)} AS b)", "p", col("ws"))
+        .select(col("p.a").as("a"), col("p.b").as("b"))
     pairsAt(1).unionAll(pairsAt(2))
       .select(least(col("a"), col("b")).as("w1"), greatest(col("a"), col("b")).as("w2"))
       .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))

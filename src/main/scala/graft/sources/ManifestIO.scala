@@ -783,22 +783,6 @@ object ManifestIO {
       .orderBy("grp")
   }
 
-  /** KEY-SKEW PROFILE (io_skew_profile) — the "should I salt this join"
-    * gauge run before any large shuffle lands in production: for each
-    * candidate shuffle key, the exact key cardinality, the hottest key's
-    * row count, the top-10 coverage, scaled key-share ratios, and a salt
-    * hint (hottest key >10x the uniform per-key average — the point where
-    * one reducer partition holds an order of magnitude more than its
-    * peers and AQE skew-split or salting is warranted). This is the
-    * diagnostic that motivated ta_lm_topv's broadcast top-V design and
-    * the AQE skew harness (SkewSpec): measure the skew, then pick the
-    * mitigation.
-    *
-    * Scale: each profile is one map-side-combinable groupBy(key) count;
-    * the counts frame is checkpointed once and read by a one-row rollup
-    * and a TakeOrdered(10) (orderBy+limit — never a global window sort);
-    * everything after is one-row x one-row. Keys are profiled as strings
-    * (nulls to '') so heterogeneous key types share one report schema. */
   /** Audit thresholds of io_wap. */
   val WapMinRows = 800L
   val WapNegDenom = 4L
@@ -906,6 +890,22 @@ object ManifestIO {
     bins.unionByName(keep).orderBy("op", "bin_id")
   }
 
+  /** KEY-SKEW PROFILE (io_skew_profile) — the "should I salt this join"
+    * gauge run before any large shuffle lands in production: for each
+    * candidate shuffle key, the exact key cardinality, the hottest key's
+    * row count, the top-10 coverage, scaled key-share ratios, and a salt
+    * hint (hottest key >10x the uniform per-key average — the point where
+    * one reducer partition holds an order of magnitude more than its
+    * peers and AQE skew-split or salting is warranted). This is the
+    * diagnostic that motivated ta_lm_topv's broadcast top-V design and
+    * the AQE skew harness (SkewSpec): measure the skew, then pick the
+    * mitigation.
+    *
+    * Scale: each profile is one map-side-combinable groupBy(key) count;
+    * the counts frame is checkpointed once and read by a one-row rollup
+    * and a TakeOrdered(10) (orderBy+limit — never a global window sort);
+    * everything after is one-row x one-row. Keys are profiled as strings
+    * (nulls to '') so heterogeneous key types share one report schema. */
   def skewProfileQuery(spark: SparkSession, dir: String): DataFrame = {
     def profile(name: String, df: DataFrame, key: String): DataFrame = {
       val cnt = df

@@ -97,6 +97,15 @@ object Tables {
   /** The identical expression in DuckDB SQL. */
   def r4Sql(e: String): String = s"floor(($e) * 10000.0 + 0.5) / 10000.0"
 
+  /** The salted-md5 integer — the engine half of the md5-only hashing
+    * rule (SURVEY.md §4): the first `hexDigits` lowercase hex chars of
+    * md5(e) read as a base-16 BIGINT, as a Spark SQL fragment. Every
+    * engine-side hash bucket, sample draw and pseudo-random pick is this
+    * expression (the oracles spell it out in DuckDB, e.g.
+    * TextAnalysis.hex4Sql). */
+  def md5Int(e: String, hexDigits: Int): String =
+    s"CAST(conv(substring(md5($e), 1, $hexDigits), 16, 10) AS BIGINT)"
+
   /** Exact sum of a double column: decimal-accumulated, returned as double. */
   def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 4))).cast("double")
 

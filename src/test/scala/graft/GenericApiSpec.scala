@@ -197,4 +197,68 @@ class GenericApiSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cand.contains((0L, 1L)), cand.toString) // identical docs always collide
   }
+
+  test("word-window rule: size gate, 0-based windows joined by one space, stride drops the tail") {
+    import spark.implicits._
+    import graft.operators.TextAnalysis.{windowArr, windowText, wordWindows, words}
+    val docs = Seq(
+      (1L, "a b"),       // shorter than n = 3: no rows
+      (2L, "a b c d e"),
+      (3L, "x  y z"))    // double space: an empty word is still a word
+      .toDF("id", "body")
+    def windows(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[String]] =
+      df.collect().groupBy(_.getLong(0)).map { case (k, rs) => k -> rs.map(_.getString(1)).toSeq }
+    val tri = windows(wordWindows(docs, Seq(col("id")), 3, windowText(3), "w", words("body")))
+    assert(tri == Map(2L -> Seq("a b c", "b c d", "c d e"), 3L -> Seq("x  y", " y z")), tri)
+    // stride 2 over 5 words: windows start at 0 and 2; the lone tail word is dropped
+    val strided = windows(wordWindows(docs, Seq(col("id")), 2, windowText(2), "w", words("body"),
+      stride = 2))
+    assert(strided == Map(1L -> Seq("a b"), 2L -> Seq("a b", "c d"), 3L -> Seq("x ", "y z")),
+      strided)
+    // minWords raises the gate without changing the windows; distinct drops repeats
+    val gated = windows(wordWindows(docs, Seq(col("id")), 2, windowText(2), "w", words("body"),
+      minWords = 5))
+    assert(gated == Map(2L -> Seq("a b", "b c", "c d", "d e")), gated)
+    val rep = Seq((9L, "u v u v u")).toDF("id", "body")
+    assert(windows(wordWindows(rep, Seq(col("id")), 2, windowText(2), "w", words("body"),
+      distinct = true)) == Map(9L -> Seq("u v", "v u")))
+    // the row-wise array form is the same windows, unexploded
+    val arr = docs.filter(col("id") === 2L).select(words("body").as("ws"))
+      .select(windowArr(3, windowText(3))).collect()(0).getSeq[String](0)
+    assert(arr == Seq("a b c", "b c d", "c d e"))
+  }
+
+  test("nb_train and hash_classify put the same bigram in the same bucket") {
+    import spark.implicits._
+    import graft.operators.TextAnalysis
+    // one bigram per doc: nb_train's only bucket is that bigram's bucket,
+    // and hash_classify's score is that bucket's weight
+    for (bigram <- Seq("alpha beta", "the cat", "x y")) {
+      val bucket = TextAnalysis.nbTrainOn(Seq((1L, bigram, bigram.length.toLong))
+        .toDF("doc_id", "text", "n_chars")).collect().map(_.getLong(0)).toSeq
+      val hex = java.security.MessageDigest.getInstance("MD5")
+        .digest(s"hc:$bigram".getBytes("UTF-8")).map("%02x".format(_)).mkString
+      assert(bucket == Seq(Integer.parseInt(hex.take(4), 16) % TextAnalysis.HcBuckets), bigram)
+      val wt = spark.sql(s"SELECT ${graft.sources.Tables.md5Int(
+        s"concat('wt:', CAST(${bucket.head} AS STRING))", 4)} % 2001").collect()(0).getLong(0)
+      val score = TextAnalysis.hashClassifyOn(spark, Seq((1L, "s", bigram))
+        .toDF("doc_id", "source", "text")).collect()(0).getLong(4)
+      assert(score == wt, bigram)
+    }
+  }
+
+  test("md5Int(e, 4) equals the oracle's hex4Sql twin, both evaluated in Spark") {
+    import graft.operators.TextAnalysis
+    import graft.sources.Tables
+    // hex4Sql is DuckDB SQL; Spark lacks DuckDB's strpos (1-based position
+    // of the first match, 0 when absent), so a private session defines it
+    val duck = spark.newSession()
+    duck.udf.register("strpos", (s: String, sub: String) => s.indexOf(sub) + 1)
+    for (s <- Seq("", "a", "hc:alpha beta", "sp:0123abcd", "ünïcode")) {
+      val e = s"'$s'"
+      val row = duck.sql(s"SELECT ${Tables.md5Int(e, 4)}, " +
+        s"CAST(${TextAnalysis.hex4Sql(s"md5($e)")} AS BIGINT)").collect()(0)
+      assert(row.getLong(0) == row.getLong(1), s)
+    }
+  }
 }
