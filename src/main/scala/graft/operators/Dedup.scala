@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ModelStore
 import graft.sources.Tables._
-import TextAnalysis.{windowText, wordWindows, words}
+import TextAnalysis.{windowSlice, windowText, wordWindows, words}
 
 /** Deduplication suite over the `documents` table (SURVEY.md §2.C).
   *
@@ -598,7 +598,7 @@ object Dedup {
   def spanDedupOn(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", spanWords: Int = 10): DataFrame = {
     val spans = wordWindows(docs, Seq(col(idCol).as("doc_id")), spanWords,
-        s"md5(${windowText(spanWords)})", "h", words(textCol), stride = spanWords)
+        s"md5(${windowSlice(spanWords)})", "h", words(textCol), stride = spanWords)
       // referenced by both the df aggregate and the join probe side —
       // materialize so the corpus-wide split/slice/md5 explode runs once
       // (the two subtrees differ, so ReuseExchange cannot dedupe them)
@@ -635,7 +635,7 @@ object Dedup {
       textCol: String = "text", spanWords: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spans = wordWindows(docs, Seq(col(idCol).as("doc_id")), spanWords,
-        s"struct(cast(i div $spanWords as bigint) as g, md5(${windowText(spanWords)}) as h)",
+        s"struct(cast(i div $spanWords as bigint) as g, md5(${windowSlice(spanWords)}) as h)",
         "s", words(textCol), stride = spanWords)
       .select(col("doc_id"), col("s.g").as("g"), col("s.h").as("h"))
       .localCheckpoint() // consumers: df aggregate + join probe side
@@ -677,11 +677,13 @@ object Dedup {
   def winnowOn(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", gramWords: Int = 4, winGrams: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val grams = wordWindows(docs, Seq(col(idCol).as("doc_id")), gramWords,
+    val full = docs.select(col(idCol).as("doc_id"), words(textCol).as("ws"))
+      .filter(size(col("ws")) >= gramWords + winGrams - 1) // one full window of grams
+    val grams = wordWindows(full, Seq(col("doc_id")), gramWords,
         s"struct(cast(i as bigint) as p, " +
-          s"concat(substring(md5(${windowText(gramWords)}), 1, 8), " +
+          s"concat(substring(md5(${windowSlice(gramWords)}), 1, 8), " +
           s"lpad(cast(999999 - i as string), 6, '0')) as key)",
-        "g", words(textCol), minWords = gramWords + winGrams - 1) // one full window of grams
+        "g", col("ws"))
       .select(col("doc_id"), col("g.p").as("p"), col("g.key").as("key"))
     val byDoc = Window.partitionBy("doc_id").orderBy(col("p").asc)
     val perDoc = Window.partitionBy("doc_id")

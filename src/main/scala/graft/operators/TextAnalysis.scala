@@ -51,7 +51,7 @@ object TextAnalysis {
     * behavior differs between Spark (HALF_UP) and DuckDB (HALF_EVEN). */
   private def withQualityScore(docs: DataFrame): DataFrame =
     docs
-      .withColumn("ws", split(col("text"), " "))
+      .withColumn("ws", words())
       .withColumn("n_words", size(col("ws")).cast("long"))
       .withColumn("n_stop", expr(
         s"aggregate(ws, 0L, (acc, w) -> acc + IF(w IN $stopwordsSqlList, 1L, 0L))"))
@@ -70,34 +70,40 @@ object TextAnalysis {
     * starts are 0-based, i = 0, stride, 2 * stride, ... <= size(ws) - n
     * (a stride > 1 drops the tail remainder); `value` is the caller's
     * per-window SQL over `ws` and the start `i` ([[windowText]] is the
-    * window's words joined by one space). This is the row-wise ARRAY
-    * form: `ws` must be in scope and the size gate is the caller's.
+    * window's words joined by one space, [[wordAt]] one word of it).
+    * This is the row-wise ARRAY form: `ws` must be in scope and the size
+    * gate is the caller's.
     * DuckDB's lists are 1-based: the oracles spell it with range(1, …). */
   private[graft] def windowArr(n: Int, value: String, stride: Int = 1): Column = {
     val step = if (stride == 1) "" else s", $stride"
     expr(s"transform(sequence(0, size(ws) - $n$step), i -> $value)")
   }
 
-  /** The text family's one tokenization: split on one space. */
+  /** The words column the window rule cuts: `text` split on one space. */
   private[graft] def words(text: String = "text"): Column = split(col(text), " ")
 
-  /** Word k (0-based) of window i, as SQL over `ws` and `i`. */
-  private def wordAt(k: Int): String = if (k == 0) "ws[i]" else s"ws[i + $k]"
+  /** Word k (0-based) of window i as a single value, as SQL over `ws`
+    * and `i` — the form of the struct fields and bigram features. */
+  private def wordAt(k: Int): String = s"element_at(ws, i + ${k + 1})"
 
-  /** Window i's n words joined by one space, as SQL over `ws` and `i`. */
+  /** Window i's n words joined by one space, as SQL over `ws` and `i`
+    * (subscripts: the one-concat form the fingerprint, shingle and
+    * gram-hash windows take). */
   private[graft] def windowText(n: Int): String =
-    (0 until n).map(wordAt).mkString("concat(", ", ' ', ", ")")
+    (0 until n).map(k => if (k == 0) "ws[i]" else s"ws[i + $k]").mkString("concat(", ", ' ', ", ")")
+
+  /** The same joined window through one slice — the span and winnow
+    * hashes keep this form: their keys timed slower with [[windowText]]. */
+  private[graft] def windowSlice(n: Int): String = s"concat_ws(' ', slice(ws, i + 1, $n))"
 
   /** The exploding FRAME form of [[windowArr]]: (keep…, `as`) with one
-    * row per window of every doc of at least max(n, minWords) words
-    * (`minWords` is for a caller whose own rule needs more than one
-    * window). `ws` is the words column (default: [[words]] of `text`);
-    * `distinct` drops a doc's repeated window values before the explode. */
+    * row per window of every doc of at least n words. `ws` is the words
+    * column (default: [[words]] of `text`); `distinct` drops a doc's
+    * repeated window values before the explode. */
   private[graft] def wordWindows(docs: DataFrame, keep: Seq[Column], n: Int, value: String,
-      as: String, ws: Column = words(), stride: Int = 1, distinct: Boolean = false,
-      minWords: Int = 0): DataFrame = {
+      as: String, ws: Column = words(), stride: Int = 1, distinct: Boolean = false): DataFrame = {
     val gated = docs.select(keep :+ ws.as("ws"): _*)
-      .filter(size(col("ws")) >= math.max(n, minWords))
+      .filter(size(col("ws")) >= n)
     val arr = windowArr(n, value, stride)
     gated.select(gated.columns.init.map(col).toSeq :+
       explode(if (distinct) array_distinct(arr) else arr).as(as): _*)
@@ -106,8 +112,8 @@ object TextAnalysis {
   /** (keep…, w1 … wn): the word n-gram stream, one row per window. */
   private def gramsOf(docs: DataFrame, keep: Seq[String], n: Int): DataFrame = {
     val fields = (0 until n).map(k => s"${wordAt(k)} AS w${k + 1}")
-    wordWindows(docs, keep.map(col), n, fields.mkString("struct(", ", ", ")"), "g")
-      .select(keep.map(col) ++ (1 to n).map(k => col(s"g.w$k").as(s"w$k")): _*)
+    wordWindows(docs, keep.map(col), n, fields.mkString("struct(", ", ", ")"), "b")
+      .select(keep.map(col) ++ (1 to n).map(k => col(s"b.w$k").as(s"w$k")): _*)
   }
 
   /** md5 window hashes of the doc's word 4-grams as an ARRAY column —
@@ -147,7 +153,7 @@ object TextAnalysis {
     * (array_min over the window-hash array): no explode, no shuffle. */
   def fingerprint(spark: SparkSession, dir: String): DataFrame =
     documents(spark, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
+      .select(col("doc_id"), words().as("ws"))
       .filter(size(col("ws")) >= 4)
       .select(col("doc_id"),
         array_min(windowHashArr).as("fingerprint"),
@@ -1352,7 +1358,7 @@ object TextAnalysis {
     * ta_dsir ('ds:'). */
   private def hashedBigrams(docs: DataFrame, keep: Seq[String], salt: String,
       buckets: Long): DataFrame =
-    wordWindows(docs, keep.map(col), 2, windowText(2), "f")
+    wordWindows(docs, keep.map(col), 2, s"concat(${wordAt(0)}, ' ', ${wordAt(1)})", "f")
       .select(keep.map(col) :+
         expr(md5Int(s"concat('$salt', f)", 4) + s" % $buckets").as("bucket"): _*)
 
@@ -1647,14 +1653,14 @@ object TextAnalysis {
   /** Same operator over any (doc_id, text) frame — Round9Spec pins the
     * window shape and the lift arithmetic on a hand-worked corpus. */
   def cooccurOn(docs: DataFrame): DataFrame = {
-    val ws = docs.select(col("doc_id"), split(col("text"), " ").as("ws"))
+    val ws = docs.select(col("doc_id"), words().as("ws"))
       .localCheckpoint() // consumers: unigram counts + two pair explodes
     val ug = ws.select(explode(col("ws")).as("wd"))
       .groupBy("wd").agg(count(lit(1)).as("cu"))
       .localCheckpoint() // consumers: two pair-side joins + the total
     val nt = ug.agg(sum(col("cu")).as("n_tot"))
     def pairsAt(d: Int) =
-      wordWindows(ws, Seq(), d + 1, s"struct(ws[i] AS a, ${wordAt(d)} AS b)", "p", col("ws"))
+      wordWindows(ws, Seq(), d + 1, s"struct(${wordAt(0)} AS a, ${wordAt(d)} AS b)", "p", col("ws"))
         .select(col("p.a").as("a"), col("p.b").as("b"))
     pairsAt(1).unionAll(pairsAt(2))
       .select(least(col("a"), col("b")).as("w1"), greatest(col("a"), col("b")).as("w2"))

@@ -200,7 +200,7 @@ class GenericApiSpec extends SparkSpecBase {
 
   test("word-window rule: size gate, 0-based windows joined by one space, stride drops the tail") {
     import spark.implicits._
-    import graft.operators.TextAnalysis.{windowArr, windowText, wordWindows, words}
+    import graft.operators.TextAnalysis.{windowArr, windowSlice, windowText, wordWindows, words}
     val docs = Seq(
       (1L, "a b"),       // shorter than n = 3: no rows
       (2L, "a b c d e"),
@@ -215,10 +215,10 @@ class GenericApiSpec extends SparkSpecBase {
       stride = 2))
     assert(strided == Map(1L -> Seq("a b"), 2L -> Seq("a b", "c d"), 3L -> Seq("x ", "y z")),
       strided)
-    // minWords raises the gate without changing the windows; distinct drops repeats
-    val gated = windows(wordWindows(docs, Seq(col("id")), 2, windowText(2), "w", words("body"),
-      minWords = 5))
-    assert(gated == Map(2L -> Seq("a b", "b c", "c d", "d e")), gated)
+    // the span/winnow slice form joins the same words
+    assert(windows(wordWindows(docs, Seq(col("id")), 2, windowSlice(2), "w", words("body"),
+      stride = 2)) == strided)
+    // distinct drops a doc's repeated windows
     val rep = Seq((9L, "u v u v u")).toDF("id", "body")
     assert(windows(wordWindows(rep, Seq(col("id")), 2, windowText(2), "w", words("body"),
       distinct = true)) == Map(9L -> Seq("u v", "v u")))
