@@ -992,37 +992,6 @@ object Dedup {
       .orderBy("bucket")
   }
 
-  /** SUFFIX-ADJACENCY SUBSTRING DEDUP (dd_substring) — the exact
-    * cross-document repeated-substring detector (the suffix-array pass of
-    * Lee et al., "Deduplicating Training Data Makes Language Models
-    * Better", re-expressed relationally): every suffix of a STRIDED
-    * SAMPLE of 64-char document windows (offsets 1, 1+stride, ... —
-    * SubstringMaxWindows of them, so mid-document duplicates are seen,
-    * not just the head; suffix positions stay GLOBAL so cut ranges are
-    * character-precise) is sorted globally; any cross-document pair
-    * sharing a >= 16-char substring inside sampled windows is witnessed
-    * by two SORT-ADJACENT suffixes from different docs (for any
-    * cross-doc pair (i, j) in suffix order, some adjacent cross-doc pair
-    * between them has LCP >= LCP(i, j)), so adjacent-lag comparison
-    * finds every duplicated substring without ever generating the
-    * quadratic pair set. A duplicate straddling a window boundary is
-    * honestly outside the sample — coverage is slice/stride of each doc,
-    * the knob a deployment turns (stride = slice is Lee et al.'s full
-    * pass; suffix count stays O(windows x slice) per doc either way).
-    *
-    * The LCP of adjacent suffixes is computed by a 7-step doubling probe
-    * (64/32/16/8/4/2/1) — flat chained CASE arithmetic, whole-stage codegen,
-    * never a per-char HOF loop (SURVEY §6: interpreted HOFs on the hot
-    * path are 25x slower). Equal-when-truncated steps can overshoot only
-    * when both remainders are exhausted and identical, so the final clamp
-    * to min(suffix lengths) restores exactness.
-    *
-    * Scale: the global suffix sort is re-expressed as a shuffle on the
-    * 16-char suffix prefix (adjacent pairs with LCP >= 16 NEVER straddle
-    * a prefix16 boundary, so per-group windows lose no qualifying pair) —
-    * the same bounded-bucket shape as every other near-dup operator here;
-    * hot prefixes are AQE-skew-split. Suffix fan-out is bounded at
-    * 49 x SubstringMaxWindows rows per doc by construction. */
   /** Window stride / count of the sampled suffix pass: 64-char windows at
     * offsets 1, 161, 321, 481 — mid-document duplicates are sampled (the
     * head-only slice missed a duplicated paragraph at position 200), the
@@ -1141,6 +1110,37 @@ object Dedup {
       topK: Int = 25): DataFrame =
     substringDedupOnWitness(substringWitnessOn(docs, minLcp, slice), topK)
 
+  /** SUFFIX-ADJACENCY SUBSTRING DEDUP (dd_substring) — the exact
+    * cross-document repeated-substring detector (the suffix-array pass of
+    * Lee et al., "Deduplicating Training Data Makes Language Models
+    * Better", re-expressed relationally): every suffix of a STRIDED
+    * SAMPLE of 64-char document windows (offsets 1, 1+stride, ... —
+    * SubstringMaxWindows of them, so mid-document duplicates are seen,
+    * not just the head; suffix positions stay GLOBAL so cut ranges are
+    * character-precise) is sorted globally; any cross-document pair
+    * sharing a >= 16-char substring inside sampled windows is witnessed
+    * by two SORT-ADJACENT suffixes from different docs (for any
+    * cross-doc pair (i, j) in suffix order, some adjacent cross-doc pair
+    * between them has LCP >= LCP(i, j)), so adjacent-lag comparison
+    * finds every duplicated substring without ever generating the
+    * quadratic pair set. A duplicate straddling a window boundary is
+    * honestly outside the sample — coverage is slice/stride of each doc,
+    * the knob a deployment turns (stride = slice is Lee et al.'s full
+    * pass; suffix count stays O(windows x slice) per doc either way).
+    *
+    * The LCP of adjacent suffixes is computed by a 7-step doubling probe
+    * (64/32/16/8/4/2/1) — flat chained CASE arithmetic, whole-stage codegen,
+    * never a per-char HOF loop (SURVEY §6: interpreted HOFs on the hot
+    * path are 25x slower). Equal-when-truncated steps can overshoot only
+    * when both remainders are exhausted and identical, so the final clamp
+    * to min(suffix lengths) restores exactness.
+    *
+    * Scale: the global suffix sort is re-expressed as a shuffle on the
+    * 16-char suffix prefix (adjacent pairs with LCP >= 16 NEVER straddle
+    * a prefix16 boundary, so per-group windows lose no qualifying pair) —
+    * the same bounded-bucket shape as every other near-dup operator here;
+    * hot prefixes are AQE-skew-split. Suffix fan-out is bounded at
+    * 49 x SubstringMaxWindows rows per doc by construction. */
   def substringDedup(spark: SparkSession, dir: String): DataFrame =
     substringDedupOnWitness(substringWitnessFor(spark, dir), 25)
 

@@ -27,11 +27,6 @@ object Events {
         dsum(col("value")).as("sum_value"))
       .orderBy("hour_epoch", "event_type")
 
-  /** HOPPING (sliding) windows — 1-hour window, 30-minute hop — via Spark's
-    * native sliding `window()`: every event lands in exactly two windows.
-    * Window boundaries are whole multiples of 1800s, so Spark's
-    * microsecond-precision assignment and the oracle's floor-second
-    * arithmetic (unnest of the two starts) agree exactly. */
   /** Exact DISTINCT USERS per sliding window (1-hour window, 30-min hop) —
     * the reach/active-users metric, computed dedup-before-count: project to
     * (window, user), `distinct()`, then a plain count per window. The naive
@@ -49,6 +44,11 @@ object Events {
       .agg(count(lit(1)).as("n_users"))
       .orderBy("win_start")
 
+  /** HOPPING (sliding) windows — 1-hour window, 30-minute hop — via Spark's
+    * native sliding `window()`: every event lands in exactly two windows.
+    * Window boundaries are whole multiples of 1800s, so Spark's
+    * microsecond-precision assignment and the oracle's floor-second
+    * arithmetic (unnest of the two starts) agree exactly. */
   def hoppingAgg(spark: SparkSession, dir: String): DataFrame =
     events(spark, dir)
       .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
@@ -296,10 +296,9 @@ object Events {
     * One window shuffle on user_id; order within user is (ts, event_id) so
     * same-timestamp events are deterministic on both engines. */
   def trajectory(spark: SparkSession, dir: String): DataFrame = {
+    val (a100, b100) = Geo.centredX100(col("event_id"))
     val pts = events(spark, dir).select(col("user_id"), col("event_id"),
-        unix_timestamp(col("ts")).as("sec"),
-        ((col("event_id") * lit(7919L)) % lit(36000L) - lit(18000L)).as("a100"),
-        ((col("event_id") * lit(104729L)) % lit(7000L) - lit(3500L)).as("b100"))
+        unix_timestamp(col("ts")).as("sec"), a100.as("a100"), b100.as("b100"))
     val w = Window.partitionBy("user_id").orderBy(col("sec"), col("event_id"))
     pts
       .withColumn("pa", lag(col("a100"), 1).over(w))

@@ -32,17 +32,45 @@ object Geo {
 
   // -- synthetic geometry (integer-derived => identical in Spark & DuckDB) --
 
+  /** The ONE point-coordinate rule: a key's position as nonnegative
+    * integer hundredths of a degree, (slon, slat) in [0, lonSpan) x
+    * [0, latSpan) — lon = slon/100 - 180, lat = slat/100 - 35 over the
+    * default [0, 36000) x [0, 7000) band. Every synthetic point derives
+    * from it: `lonLat` (points, zs_epoch_delta, zs_line_clip's segment
+    * starts), `centredX100` (zs_nearest_zone, ev_trajectory, and doubled,
+    * zs_idw/zs_kde's stations), and the shifted integers themselves
+    * (zs_buffer, io_zorder). zs_bilinear's query points run the same rule
+    * over a band one cell narrower, so their 2x2 stencil stays inside
+    * the grid. The oracles spell it `event_id * 7919 % 36000`. */
+  private[graft] def hundredths(key: Column, lonSpan: Long = 36000L,
+      latSpan: Long = 7000L): (Column, Column) =
+    ((key * lit(7919L)) % lit(lonSpan), (key * lit(104729L)) % lit(latSpan))
+
+  /** The rule's (lon, lat) doubles — one division of an exact integer,
+    * the same expression as pointsSql's CAST(.. AS DOUBLE) / 100.0 - 180.0. */
+  private[graft] def lonLat(key: Column): (Column, Column) = {
+    val (s, t) = hundredths(key)
+    (s.cast("double").divide(lit(100.0)).minus(lit(180.0)),
+      t.cast("double").divide(lit(100.0)).minus(lit(35.0)))
+  }
+
+  /** The rule's exact centred x100 integers (a100 = lon*100,
+    * b100 = lat*100). Rebuilt from the key, never from the double lon:
+    * lon*100 is 3566.999... for some keys and truncates wrong. */
+  private[graft] def centredX100(key: Column): (Column, Column) = {
+    val (s, t) = hundredths(key)
+    (s - lit(18000L), t - lit(3500L))
+  }
+
   /** events -> points: lon in [-180, 180), lat in [-35, 35) — the
     * reference's clip band (batch/processing/config.py:18-21). */
-  def points(spark: SparkSession, dir: String): DataFrame =
+  def points(spark: SparkSession, dir: String): DataFrame = {
+    val (lon, lat) = lonLat(col("event_id"))
     events(spark, dir).select(
-      col("event_id"), col("event_type"), col("value"),
-      ((col("event_id") * lit(7919L)) % lit(36000L)).cast("double").divide(lit(100.0))
-        .minus(lit(180.0)).as("lon"),
-      ((col("event_id") * lit(104729L)) % lit(7000L)).cast("double").divide(lit(100.0))
-        .minus(lit(35.0)).as("lat"))
+      col("event_id"), col("event_type"), col("value"), lon.as("lon"), lat.as("lat"))
+  }
 
-  private[operators] val pointsSql =
+  private[graft] val pointsSql =
     """SELECT event_id, event_type, value,
       |  CAST(event_id * 7919 % 36000 AS DOUBLE) / 100.0 - 180.0 AS lon,
       |  CAST(event_id * 104729 % 7000 AS DOUBLE) / 100.0 - 35.0 AS lat
@@ -242,27 +270,86 @@ object Geo {
       .orderBy("zone_id")
   }
 
+  // -- the raster core: the 1-degree cell table the terrain keys build and
+  //    walk (the reference's ST_DumpAsPolygons pixels, inputs.py:7-17) --
+
+  /** The ONE 1-degree density grid: (fx, fy, n) per occupied cell, BIGINT
+    * keys floor(lon)/floor(lat) — the elevation raster of every terrain
+    * key. (`cellKeys` stays the INT-keyed zonal twin.) */
+  private def densityGrid(spark: SparkSession, dir: String): DataFrame =
+    points(spark, dir)
+      .withColumn("fx", floor(col("lon")).cast("long"))
+      .withColumn("fy", floor(col("lat")).cast("long"))
+      .groupBy("fx", "fy").agg(count(lit(1)).as("n"))
+
+  /** The value grid: (fx, fy, cell_sum, cell_n) per occupied 1-degree
+    * cell, keys shifted nonnegative (fx + 180, fy + 35) so Spark `div` =
+    * DuckDB `//`, values summed as exact DECIMAL(18,4). */
+  private def valueGrid(spark: SparkSession, dir: String): DataFrame =
+    points(spark, dir)
+      .withColumn("fx", (floor(col("lon")).cast("long") + lit(180L)))
+      .withColumn("fy", (floor(col("lat")).cast("long") + lit(35L)))
+      .groupBy("fx", "fy")
+      .agg(sum(col("value").cast(DecimalType(18, 4))).as("cell_sum"),
+        count(lit(1)).as("cell_n"))
+
+  /** The ONE neighbor-offset window: each row fans out map-side onto the
+    * (2rx + 1) x (2ry + 1) integer offsets (dx, dy) around it — a literal
+    * window, no join. */
+  private def offsetWindow(df: DataFrame, rx: Int, ry: Int): DataFrame =
+    df.withColumn("dx", explode(sequence(lit(-rx), lit(rx))))
+      .withColumn("dy", explode(sequence(lit(-ry), lit(ry))))
+
+  /** The ONE copy of the D8 neighbor direction tables (index d = 0..7,
+    * E counter-clockwise); the oracle-side dirs VALUES lists must stay in
+    * this order. */
+  private val D8dxA = "array(1, 1, 0, -1, -1, -1, 0, 1)"
+  private val D8dyA = "array(0, 1, 1, 1, 0, -1, -1, -1)"
+
+  /** Direction d's entry of a D8 table (element_at is 1-based). */
+  private def d8At(table: String): Column = expr(s"element_at($table, CAST(d + 1 AS INT))")
+
+  /** The ONE D8 neighbor step: each cell of an (fx, fy, n) grid explodes
+    * onto its 8 neighbors d = 0..7 and probes the grid for the neighbor's
+    * count on the computed key (nx, ny) — one equi-join on the cell table,
+    * never a theta join. Columns (nx, ny, fx, fy, n, d, nn); under a
+    * `left_outer` probe nn is NULL for an absent neighbor. */
+  private def d8Step(cells: DataFrame, how: String): DataFrame =
+    cells
+      .withColumn("d", explode(expr("sequence(0, 7)")))
+      .withColumn("nx", col("fx") + d8At(D8dxA))
+      .withColumn("ny", col("fy") + d8At(D8dyA))
+      .join(cells.select(col("fx").as("nx"), col("fy").as("ny"), col("n").as("nn")),
+        Seq("nx", "ny"), how)
+
+  /** The ONE east/north adjacency probe: every 4-adjacent pair of occupied
+    * cells once — each cell joins its east (fx + 1, fy) and north
+    * (fx, fy + 1) neighbor on the computed key. Returns `cols` of the cell
+    * and of the neighbor, the latter suffixed "2". */
+  private def eastNorthPairs(cells: DataFrame, cols: String*): DataFrame = {
+    def probe(dx: Long, dy: Long) = cells
+      .withColumn("ax", col("fx") + lit(dx))
+      .withColumn("ay", col("fy") + lit(dy))
+      .join(cells.select(Seq(col("fx").as("ax"), col("fy").as("ay")) ++
+        cols.map(c => col(c).as(c + "2")): _*), Seq("ax", "ay"))
+      .select(cols.map(col) ++ cols.map(c => col(c + "2")): _*)
+    probe(1L, 0L).unionByName(probe(0L, 1L))
+  }
+
   /** Grid downsample (raster block aggregation, gdal BLOCKXSIZE): fine
     * 1-degree cells -> coarse 4x4 blocks. Partial decimal sums carry up the
     * pyramid so the coarse aggregate reuses fine-level work — one shuffle
     * per level keyed by the parent cell. */
-  def gridDownsample(spark: SparkSession, dir: String): DataFrame = {
-    val fine = points(spark, dir)
-      .withColumn("fx", (floor(col("lon")).cast("long") + lit(180L)))
-      .withColumn("fy", (floor(col("lat")).cast("long") + lit(35L)))
-      .groupBy("fx", "fy")
-      .agg(sum(col("value").cast(DecimalType(18, 4))).as("cell_sum_dec"),
-        count(lit(1)).as("cell_n"))
-    fine
+  def gridDownsample(spark: SparkSession, dir: String): DataFrame =
+    valueGrid(spark, dir)
       .withColumn("cx", (col("fx") / lit(4L)).cast("long"))
       .withColumn("cy", (col("fy") / lit(4L)).cast("long"))
       .groupBy("cx", "cy")
       .agg(
         count(lit(1)).as("n_cells"),
         sum(col("cell_n")).as("n_points"),
-        (sum(col("cell_sum_dec")).cast("double") / sum(col("cell_n"))).as("mean_value"))
+        (sum(col("cell_sum")).cast("double") / sum(col("cell_n"))).as("mean_value"))
       .orderBy("cx", "cy")
-  }
 
   /** Focal (neighborhood) statistics — the raster convolution the GDAL
     * toolchain runs as focal mean / kernel smoothing: each 1-degree cell's
@@ -277,21 +364,14 @@ object Geo {
     * division of exact integers). Empty neighborhoods simply don't exist:
     * only cells reachable from an occupied cell appear — same sparse
     * semantics as a sparse-matrix convolution. */
-  def focalMean(spark: SparkSession, dir: String): DataFrame = {
-    val cells = points(spark, dir)
-      .withColumn("fx", floor(col("lon")).cast("long"))
-      .withColumn("fy", floor(col("lat")).cast("long"))
-      .groupBy("fx", "fy").agg(count(lit(1)).as("n"))
-    cells
-      .withColumn("dx", explode(array(lit(-1L), lit(0L), lit(1L))))
-      .withColumn("dy", explode(array(lit(-1L), lit(0L), lit(1L))))
+  def focalMean(spark: SparkSession, dir: String): DataFrame =
+    offsetWindow(densityGrid(spark, dir), 1, 1)
       .select((col("fx") + col("dx")).as("tx"), (col("fy") + col("dy")).as("ty"),
         (col("n") * (lit(2L) - abs(col("dx"))) * (lit(2L) - abs(col("dy")))).as("w"))
       .groupBy("tx", "ty")
       .agg(sum(col("w")).as("wsum"), count(lit(1)).as("n_contrib"))
       .withColumn("smooth", col("wsum").cast("double") / lit(16.0))
       .orderBy("tx", "ty")
-  }
 
   /** D8 FLOW DIRECTION (zs_flowdir) — the drainage primitive of raster
     * terrain analysis (GDAL DEM / hydrology tooling — the reference's
@@ -312,35 +392,17 @@ object Geo {
     * table, never on raw points (the focal_mean posture); per-cell
     * argmax fans in exactly 8 rows; the rollup is 9 keys. */
   def flowDir(spark: SparkSession, dir: String): DataFrame =
-    flowDirOn(points(spark, dir)
-      .withColumn("fx", floor(col("lon")).cast("long"))
-      .withColumn("fy", floor(col("lat")).cast("long"))
-      .groupBy("fx", "fy").agg(count(lit(1)).as("n")))
+    flowDirOn(densityGrid(spark, dir))
 
   /** Per-cell D8 selection (fx, fy, n, d, nx, ny, nn, eff at the argmax
     * direction) — shared by zs_flowdir's histogram and zs_flowaccum's
     * drainage forest. */
-  /** The ONE copy of the D8 neighbor direction tables (index d = 0..7,
-    * E counter-clockwise) — flowSel, costDistanceOn, and triOn all expand
-    * neighbors through these, and the oracle-side dirs VALUES lists must
-    * stay in this order. */
-  private val D8dxA = "array(1, 1, 0, -1, -1, -1, 0, 1)"
-  private val D8dyA = "array(0, 1, 1, 1, 0, -1, -1, -1)"
-
   private[graft] def flowSel(cellsIn: DataFrame): DataFrame = {
     val cells = cellsIn
       .localCheckpoint() // grid base + neighbor lookup side
-    val dxA = D8dxA
-    val dyA = D8dyA
-    val wA = "array(10, 7, 10, 7, 10, 7, 10, 7)"
     val wSel = Window.partitionBy("fx", "fy").orderBy(col("eff").desc, col("d").asc)
-    cells
-      .withColumn("d", explode(expr("sequence(0, 7)")))
-      .withColumn("nx", expr(s"fx + element_at($dxA, CAST(d + 1 AS INT))"))
-      .withColumn("ny", expr(s"fy + element_at($dyA, CAST(d + 1 AS INT))"))
-      .withColumn("w", expr(s"element_at($wA, CAST(d + 1 AS INT))"))
-      .join(cells.select(col("fx").as("nx"), col("fy").as("ny"), col("n").as("nn")),
-        Seq("nx", "ny"), "left_outer")
+    d8Step(cells, "left_outer")
+      .withColumn("w", d8At("array(10, 7, 10, 7, 10, 7, 10, 7)"))
       .withColumn("nn", coalesce(col("nn"), lit(0L)))
       .withColumn("eff", expr("(n - nn) * w"))
       .withColumn("rn", row_number().over(wSel))
@@ -381,10 +443,7 @@ object Geo {
     * rounds localCheckpointed; edges are cell-table-sized, never
     * point-sized. */
   def flowAccum(spark: SparkSession, dir: String): DataFrame =
-    flowAccumOn(points(spark, dir)
-      .withColumn("fx", floor(col("lon")).cast("long"))
-      .withColumn("fy", floor(col("lat")).cast("long"))
-      .groupBy("fx", "fy").agg(count(lit(1)).as("n")))
+    flowAccumOn(densityGrid(spark, dir))
 
   /** Same operator over any (fx, fy, n) cell grid — Round12Spec pins a
     * hand-worked chain (path longer than R shows the cap). */
@@ -437,10 +496,7 @@ object Geo {
     * loop's per-round traffic is O(#cells) label rows (the polygonize
     * audit), never points. */
   def watershed(spark: SparkSession, dir: String): DataFrame =
-    watershedOn(points(spark, dir)
-      .withColumn("fx", floor(col("lon")).cast("long"))
-      .withColumn("fy", floor(col("lat")).cast("long"))
-      .groupBy("fx", "fy").agg(count(lit(1)).as("n")))
+    watershedOn(densityGrid(spark, dir))
 
   /** Per-cell basin labels (the flowSel frame + its component id) —
     * shared by zs_watershed's basin rollup and zs_ridge's boundary
@@ -492,22 +548,13 @@ object Geo {
     * bounded pair frame, rollups map-side-combinable on 4 keys; the
     * level spine keeps empty levels visible. */
   def contour(spark: SparkSession, dir: String): DataFrame =
-    contourOn(points(spark, dir)
-      .withColumn("fx", floor(col("lon")).cast("long"))
-      .withColumn("fy", floor(col("lat")).cast("long"))
-      .groupBy("fx", "fy").agg(count(lit(1)).as("n")))
+    contourOn(densityGrid(spark, dir))
 
   /** Same operator over any (fx, fy, n) cell grid. */
   def contourOn(cellsIn: DataFrame): DataFrame = {
     val c = cellsIn.localCheckpoint() // both probe sides x2 + area counts
-    def adj(dx: Long, dy: Long) = c
-      .withColumn("ax", col("fx") + lit(dx))
-      .withColumn("ay", col("fy") + lit(dy))
-      .join(c.select(col("fx").as("ax"), col("fy").as("ay"), col("n").as("n2")),
-        Seq("ax", "ay"))
-      .select(col("n"), col("n2"))
     val lv = array(ContourLevels.map(lit): _*)
-    val segs = adj(1L, 0L).unionByName(adj(0L, 1L))
+    val segs = eastNorthPairs(c, "n")
       .withColumn("level", explode(lv))
       .filter(least(col("n"), col("n2")) < col("level")
         && greatest(col("n"), col("n2")) >= col("level"))
@@ -539,26 +586,17 @@ object Geo {
     * (fx+1, fy) / (fx, fy+1) keys — co-partitionable, cell-table-sized;
     * the pair rollup is map-side-combinable. */
   def ridge(spark: SparkSession, dir: String): DataFrame =
-    ridgeOn(points(spark, dir)
-      .withColumn("fx", floor(col("lon")).cast("long"))
-      .withColumn("fy", floor(col("lat")).cast("long"))
-      .groupBy("fx", "fy").agg(count(lit(1)).as("n")))
+    ridgeOn(densityGrid(spark, dir))
 
   /** Same operator over any (fx, fy, n) cell grid — Round12Spec pins
     * the two-channel grid's single divide. */
   def ridgeOn(cellsIn: DataFrame): DataFrame = {
     val lab = basinLabels(cellsIn).select(col("fx"), col("fy"), col("comp"))
       .localCheckpoint() // both sides of both adjacency joins
-    def adj(dx: Long, dy: Long) = lab
-      .withColumn("ax", col("fx") + lit(dx))
-      .withColumn("ay", col("fy") + lit(dy))
-      .join(lab.select(col("fx").as("ax"), col("fy").as("ay"),
-        col("comp").as("comp2")), Seq("ax", "ay"))
+    eastNorthPairs(lab, "comp")
       .filter(col("comp") =!= col("comp2"))
-      .select(least(col("comp"), col("comp2")).as("basin_a"),
+      .groupBy(least(col("comp"), col("comp2")).as("basin_a"),
         greatest(col("comp"), col("comp2")).as("basin_b"))
-    adj(1L, 0L).unionByName(adj(0L, 1L))
-      .groupBy("basin_a", "basin_b")
       .agg(count(lit(1)).as("n_segments"))
       .orderBy(col("n_segments").desc, col("basin_a"), col("basin_b"))
       .limit(15)
@@ -1014,11 +1052,7 @@ object Geo {
     * unique integer cell label. lon in [-180,180), lat in [-35,35) =>
     * label = (fx+180)*70 + (fy+35) is injective. */
   private def classedCells(spark: SparkSession, dir: String): DataFrame =
-    points(spark, dir)
-      .withColumn("fx", floor(col("lon")).cast("long"))
-      .withColumn("fy", floor(col("lat")).cast("long"))
-      .groupBy("fx", "fy")
-      .agg(count(lit(1)).as("n"))
+    densityGrid(spark, dir)
       .withColumn("cls", col("n") % lit(4L))
       .withColumn("lbl", (col("fx") + lit(180L)) * lit(70L) + (col("fy") + lit(35L)))
 
@@ -1051,16 +1085,9 @@ object Geo {
     * adjacency-invariant spec. */
   private[graft] def cellRegions(spark: SparkSession, dir: String): DataFrame = {
     val cells = classedCells(spark, dir).localCheckpoint()
-    val a = cells.select(col("fx"), col("fy"), col("cls"), col("lbl"))
-    val right = a.as("a").join(a.as("b"),
-      col("a.fx") + lit(1L) === col("b.fx") && col("a.fy") === col("b.fy")
-        && col("a.cls") === col("b.cls"))
-      .select(col("a.lbl").as("src"), col("b.lbl").as("dst"))
-    val up = a.as("a").join(a.as("b"),
-      col("a.fx") === col("b.fx") && col("a.fy") + lit(1L) === col("b.fy")
-        && col("a.cls") === col("b.cls"))
-      .select(col("a.lbl").as("src"), col("b.lbl").as("dst"))
-    val half = right.unionByName(up)
+    val half = eastNorthPairs(cells, "cls", "lbl")
+      .filter(col("cls") === col("cls2"))
+      .select(col("lbl").as("src"), col("lbl2").as("dst"))
     val edges = half.unionByName(half.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint()
     // pointer doubling (O(log d) rounds), NOT hash-min (O(d)): same-class
@@ -1137,17 +1164,12 @@ object Geo {
     val z = zones(spark, dir).select(col("zone_id"),
         ((col("xmin") + lit(10.0)) * 100).cast("long").as("zcx"),
         ((col("ymin") + lit(5.0)) * 100).cast("long").as("zcy"))
-    val zc = z
-      .withColumn("dx", explode(array(lit(-1), lit(0), lit(1))))
-      .withColumn("dy", explode(array(lit(-1), lit(0), lit(1))))
+    val zc = offsetWindow(z, 1, 1)
       .select(col("zone_id"), col("zcx"), col("zcy"),
         (floorDiv(col("zcx"), cellW) + col("dx")).as("cx"),
         (floorDiv(col("zcy"), cellH) + col("dy")).as("cy"))
-    // x100 coords rebuilt from the key in INTEGER arithmetic — lon*100 of
-    // the double lon is 3566.999... for some keys and truncates wrong
-    val p = events(spark, dir).select(col("event_id"),
-        ((col("event_id") * lit(7919L)) % lit(36000L) - lit(18000L)).as("a100"),
-        ((col("event_id") * lit(104729L)) % lit(7000L) - lit(3500L)).as("b100"))
+    val (a100, b100) = centredX100(col("event_id"))
+    val p = events(spark, dir).select(col("event_id"), a100.as("a100"), b100.as("b100"))
       .withColumn("cx", floorDiv(col("a100"), cellW))
       .withColumn("cy", floorDiv(col("b100"), cellH))
     p.join(sizeGated(z, zc, 9L), Seq("cx", "cy"))
@@ -1224,19 +1246,14 @@ object Geo {
     * GDAL nodata convention. At 100 TB the grid hash-partitions on (fx,
     * fy) and the query side shuffles once — never a crossJoin. */
   def bilinear(spark: SparkSession, dir: String): DataFrame = {
-    val grid = points(spark, dir)
-      .withColumn("fx", (floor(col("lon")).cast("long") + lit(180L)))
-      .withColumn("fy", (floor(col("lat")).cast("long") + lit(35L)))
-      .groupBy("fx", "fy")
-      .agg(sum(col("value").cast(DecimalType(18, 4))).as("cell_sum"),
-        count(lit(1)).as("cell_n"))
+    val grid = valueGrid(spark, dir)
       .withColumn("v10k",
         floor((col("cell_sum").cast("double") / col("cell_n").cast("double"))
           * lit(10000.0) + lit(0.5)).cast("long"))
       .select("fx", "fy", "v10k")
+    val (a100, b100) = hundredths(col("s_suppkey"), 35900L, 6900L)
     val q = supplier(spark, dir).select(col("s_suppkey").as("q_id"),
-        ((col("s_suppkey") * lit(7919L)) % lit(35900L)).as("a100"),
-        ((col("s_suppkey") * lit(104729L)) % lit(6900L)).as("b100"))
+        a100.as("a100"), b100.as("b100"))
       .withColumn("gx0", expr("a100 div 100")).withColumn("dx", col("a100") % lit(100L))
       .withColumn("gy0", expr("b100 div 100")).withColumn("dy", col("b100") % lit(100L))
     val nbrs = q
@@ -1274,9 +1291,8 @@ object Geo {
     val t1 = "LEAST(CAST(1 AS DOUBLE), " +
       "CASE WHEN dx > 0 THEN (60.0 - x0) / dx WHEN dx < 0 THEN (-60.0 - x0) / dx ELSE CAST(1 AS DOUBLE) END, " +
       "CASE WHEN dy > 0 THEN (20.0 - y0) / dy WHEN dy < 0 THEN (-20.0 - y0) / dy ELSE CAST(1 AS DOUBLE) END)"
-    orders(spark, dir).select(col("o_orderkey").as("seg_id"),
-        (((col("o_orderkey") * 7919L) % 36000L).cast("double") / 100.0 - 180.0).as("x0"),
-        (((col("o_orderkey") * 104729L) % 7000L).cast("double") / 100.0 - 35.0).as("y0"),
+    val (x0, y0) = lonLat(col("o_orderkey"))
+    orders(spark, dir).select(col("o_orderkey").as("seg_id"), x0.as("x0"), y0.as("y0"),
         (((col("o_orderkey") * 131L) % 2000L).cast("double") / 100.0 - 10.0).as("dx"),
         (((col("o_orderkey") * 241L) % 1000L).cast("double") / 100.0 - 5.0).as("dy"))
       .filter(expr(
@@ -1303,34 +1319,11 @@ object Geo {
     * overflow silently in Spark while DuckDB promotes to HUGEINT). One
     * double division + shared r4 rounding at the end.
     *
-    * Plan: the exploded query-cell table is a few thousand rows —
-    * broadcast; stations are scanned once, keyed to their cell map-side,
-    * and aggregated per query point. At 100 TB with a large query grid
-    * both sides hash-partition on the cell key instead (same shape as
-    * zs_nearest_zone). */
-  def idw(spark: SparkSession, dir: String): DataFrame = {
-    val q = spark.range(1)
-      .select(explode(expr("sequence(0, 19)")).as("ga"))
-      .select(col("ga"), explode(expr("sequence(0, 6)")).as("gb"))
-      .select(
-        (col("ga") * 10 + col("gb")).cast("long").as("qid"),
-        (col("ga") * 3600L - 36000L + 1L).as("qa200"),
-        (col("gb") * 2000L - 7000L + 1L).as("qb200"))
-      .withColumn("dx", explode(array(lit(-1), lit(0), lit(1))))
-      .withColumn("dy", explode(array(lit(-1), lit(0), lit(1))))
-      .select(col("qid"), col("qa200"), col("qb200"),
-        (floorDiv(col("qa200"), 400L) + col("dx")).as("cx"),
-        (floorDiv(col("qb200"), 200L) + col("dy")).as("cy"))
-    val s = events(spark, dir).select(
-        (((col("event_id") * lit(7919L)) % lit(36000L) - lit(18000L)) * lit(2L)).as("sa200"),
-        (((col("event_id") * lit(104729L)) % lit(7000L) - lit(3500L)) * lit(2L)).as("sb200"),
-        valueCents.as("v100"))
-      .withColumn("cx", floorDiv(col("sa200"), 400L))
-      .withColumn("cy", floorDiv(col("sb200"), 200L))
-    s.join(broadcast(q), Seq("cx", "cy"))
-      .withColumn("d2",
-        (col("sa200") - col("qa200")) * (col("sa200") - col("qa200"))
-          + (col("sb200") - col("qb200")) * (col("sb200") - col("qb200")))
+    * Plan: `stationProbe`, aggregated per query point. At 100 TB with a
+    * large query grid both sides hash-partition on the cell key instead
+    * (same shape as zs_nearest_zone). */
+  def idw(spark: SparkSession, dir: String): DataFrame =
+    stationProbe(spark, dir, 1)
       .withColumn("w", expr("CAST(1000000000000 AS BIGINT) div d2"))
       .groupBy("qid", "qa200", "qb200")
       .agg(
@@ -1340,6 +1333,34 @@ object Geo {
       .select(col("qid"), col("qa200"), col("qb200"), col("n_stations"),
         r4(col("num").cast("double") / col("den").cast("double") / lit(100.0)).as("idw_value"))
       .orderBy("qid")
+
+  /** zs_idw / zs_kde's shared probe: the 20x7 query grid (qid, qa200,
+    * qb200 — odd x200 coordinates) against the stations (sa200, sb200 —
+    * the doubled `centredX100`, even — and value cents v100), with each
+    * pair's exact squared distance d2. The query points' windows of
+    * 400x200-unit cells (+-1 in x, +-ry in y) are a few thousand rows —
+    * broadcast; stations are scanned once, keyed to their cell map-side. */
+  private def stationProbe(spark: SparkSession, dir: String, ry: Int): DataFrame = {
+    val grid = spark.range(1)
+      .select(explode(expr("sequence(0, 19)")).as("ga"))
+      .select(col("ga"), explode(expr("sequence(0, 6)")).as("gb"))
+      .select(
+        (col("ga") * 10 + col("gb")).cast("long").as("qid"),
+        (col("ga") * 3600L - 36000L + 1L).as("qa200"),
+        (col("gb") * 2000L - 7000L + 1L).as("qb200"))
+    val q = offsetWindow(grid, 1, ry)
+      .select(col("qid"), col("qa200"), col("qb200"),
+        (floorDiv(col("qa200"), 400L) + col("dx")).as("cx"),
+        (floorDiv(col("qb200"), 200L) + col("dy")).as("cy"))
+    val (a100, b100) = centredX100(col("event_id"))
+    events(spark, dir).select((a100 * lit(2L)).as("sa200"), (b100 * lit(2L)).as("sb200"),
+        valueCents.as("v100"))
+      .withColumn("cx", floorDiv(col("sa200"), 400L))
+      .withColumn("cy", floorDiv(col("sb200"), 200L))
+      .join(broadcast(q), Seq("cx", "cy"))
+      .withColumn("d2",
+        (col("sa200") - col("qa200")) * (col("sa200") - col("qa200"))
+          + (col("sb200") - col("qb200")) * (col("sb200") - col("qb200")))
   }
 
   /** Kernel density estimate at the same query grid zs_idw uses — the
@@ -1355,27 +1376,7 @@ object Geo {
     * hash-partition on the cell key. */
   def kde(spark: SparkSession, dir: String): DataFrame = {
     val h2 = 300L * 300L // bandwidth 1.5 deg = 300 x200-units, squared
-    val q = spark.range(1)
-      .select(explode(expr("sequence(0, 19)")).as("ga"))
-      .select(col("ga"), explode(expr("sequence(0, 6)")).as("gb"))
-      .select(
-        (col("ga") * 10 + col("gb")).cast("long").as("qid"),
-        (col("ga") * 3600L - 36000L + 1L).as("qa200"),
-        (col("gb") * 2000L - 7000L + 1L).as("qb200"))
-      .withColumn("dx", explode(array(lit(-1), lit(0), lit(1))))
-      .withColumn("dy", explode(array(lit(-2), lit(-1), lit(0), lit(1), lit(2))))
-      .select(col("qid"), col("qa200"), col("qb200"),
-        (floorDiv(col("qa200"), 400L) + col("dx")).as("cx"),
-        (floorDiv(col("qb200"), 200L) + col("dy")).as("cy"))
-    val s = events(spark, dir).select(
-        (((col("event_id") * lit(7919L)) % lit(36000L) - lit(18000L)) * lit(2L)).as("sa200"),
-        (((col("event_id") * lit(104729L)) % lit(7000L) - lit(3500L)) * lit(2L)).as("sb200"))
-      .withColumn("cx", floorDiv(col("sa200"), 400L))
-      .withColumn("cy", floorDiv(col("sb200"), 200L))
-    s.join(broadcast(q), Seq("cx", "cy"))
-      .withColumn("d2",
-        (col("sa200") - col("qa200")) * (col("sa200") - col("qa200"))
-          + (col("sb200") - col("qb200")) * (col("sb200") - col("qb200")))
+    stationProbe(spark, dir, 2)
       .filter(col("d2") < lit(h2))
       .withColumn("contrib", expr(s"(($h2 - d2) * 1000000) div $h2"))
       .groupBy("qid", "qa200", "qb200")
@@ -1414,24 +1415,22 @@ object Geo {
     * ONE distinct shuffle keyed by (event_type, cell) with map-side
     * partials, output bounded by the grid (360 x 70 x types), never by
     * the corpus. */
-  def buffer(spark: SparkSession, dir: String): DataFrame =
+  def buffer(spark: SparkSession, dir: String): DataFrame = {
+    val (slon, slat) = hundredths(col("event_id"))
     bufferOn(events(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
-      .select(col("event_type"),
-        expr("event_id * 7919 % 36000").as("slon"),
-        expr("event_id * 104729 % 7000").as("slat")))
+      .select(col("event_type"), slon.as("slon"), slat.as("slat")))
+  }
 
   /** Same dilation over any (event_type, slon, slat) point frame in the
     * shifted integer-hundredths frame — Round20Spec pins the 3x3 disk of
     * a cell-centered point, band clipping, and the dissolve overlap. */
   def bufferOn(pts: DataFrame): DataFrame = {
     val r2 = BufferR100 * BufferR100
-    val cells = pts
-      .withColumn("ox", explode(expr("sequence(-2, 2)")))
-      .withColumn("oy", explode(expr("sequence(-2, 2)")))
+    val cells = offsetWindow(pts, 2, 2)
       .select(col("event_type"),
-        (expr("slon div 100") + col("ox")).as("cx"),
-        (expr("slat div 100") + col("oy")).as("cy"),
+        (expr("slon div 100") + col("dx")).as("cx"),
+        (expr("slat div 100") + col("dy")).as("cy"),
         col("slon"), col("slat"))
       .filter(col("cx") >= 0 && col("cx") < 360
         && col("cy") >= 0 && col("cy") < 70)
@@ -1599,12 +1598,9 @@ object Geo {
     * midpoint is a one-row collect (the seeds/N precedent); the top-20
     * is a TakeOrdered on (|delta| desc, fx, fy) — a total order. */
   def epochDelta(spark: SparkSession, dir: String): DataFrame = {
-    val pts = graft.sources.Tables.events(spark, dir).select(
-      expr("unix_timestamp(ts) div 86400").as("day"),
-      ((col("event_id") * lit(7919L)) % lit(36000L)).cast("double")
-        .divide(lit(100.0)).minus(lit(180.0)).as("lon"),
-      ((col("event_id") * lit(104729L)) % lit(7000L)).cast("double")
-        .divide(lit(100.0)).minus(lit(35.0)).as("lat"))
+    val (lon, lat) = lonLat(col("event_id"))
+    val pts = events(spark, dir).select(
+      expr("unix_timestamp(ts) div 86400").as("day"), lon.as("lon"), lat.as("lat"))
     val b = pts.agg(min("day").as("d0"), max("day").as("d1")).collect()(0)
     val mid = (b.getLong(0) + b.getLong(1) + 1L) / 2L
     pts
@@ -1645,10 +1641,7 @@ object Geo {
     * chained round-CTEs are AS MATERIALIZED — each d_{r-1} is referenced
     * twice, the §6 DuckDB-inlining rule. */
   def costDistance(spark: SparkSession, dir: String): DataFrame =
-    costDistanceOn(points(spark, dir)
-      .withColumn("fx", floor(col("lon")).cast("long"))
-      .withColumn("fy", floor(col("lat")).cast("long"))
-      .groupBy("fx", "fy").agg(count(lit(1)).as("n")))
+    costDistanceOn(densityGrid(spark, dir))
 
   /** Same operator over any (fx, fy, n) cell grid — Round16Spec pins the
     * diagonal-vs-two-cardinals choice and the unreached cap on a hand
@@ -1656,18 +1649,9 @@ object Geo {
   def costDistanceOn(cellsIn: DataFrame, nSources: Int = 5): DataFrame = {
     val cells = cellsIn
       .localCheckpoint() // consumers: edge build (2 sides), sources, final spine
-    val dxA = D8dxA
-    val dyA = D8dyA
-    val wA = "array(10, 14, 10, 14, 10, 14, 10, 14)"
-    val edges = cells
-      .withColumn("d", explode(expr("sequence(0, 7)")))
-      .withColumn("vx", expr(s"fx + element_at($dxA, CAST(d + 1 AS INT))"))
-      .withColumn("vy", expr(s"fy + element_at($dyA, CAST(d + 1 AS INT))"))
-      .withColumn("wstep", expr(s"element_at($wA, CAST(d + 1 AS INT))"))
-      .join(cells.select(col("fx").as("vx"), col("fy").as("vy"), col("n").as("nv")),
-        Seq("vx", "vy"))
-      .select(col("fx").as("ux"), col("fy").as("uy"), col("vx"), col("vy"),
-        (col("wstep") + col("nv")).as("wcost"))
+    val edges = d8Step(cells, "inner")
+      .select(col("fx").as("ux"), col("fy").as("uy"), col("nx").as("vx"), col("ny").as("vy"),
+        (d8At("array(10, 14, 10, 14, 10, 14, 10, 14)") + col("nn")).as("wcost"))
       .localCheckpoint() // one join per round
     var dist = cells.orderBy(col("n").desc, col("fx"), col("fy")).limit(nSources)
       .select(col("fx"), col("fy"), lit(0L).as("cost"))
@@ -1705,10 +1689,7 @@ object Geo {
     * zs_focal_mean — cell-table-sized, never points; the final rollup
     * is 3 keys. */
   def tri(spark: SparkSession, dir: String): DataFrame =
-    triOn(points(spark, dir)
-      .withColumn("fx", floor(col("lon")).cast("long"))
-      .withColumn("fy", floor(col("lat")).cast("long"))
-      .groupBy("fx", "fy").agg(count(lit(1)).as("n")))
+    triOn(densityGrid(spark, dir))
 
   /** Same operator over any (fx, fy, n) cell grid — the driver corpus
     * never reaches the rugged band (max TRI ~43 at sf0.1), so Round16Spec
@@ -1716,14 +1697,7 @@ object Geo {
   def triOn(cellsIn: DataFrame): DataFrame = {
     val cells = cellsIn
       .localCheckpoint() // self-join both sides
-    val dxA = D8dxA
-    val dyA = D8dyA
-    cells
-      .withColumn("d", explode(expr("sequence(0, 7)")))
-      .withColumn("nx", expr(s"fx + element_at($dxA, CAST(d + 1 AS INT))"))
-      .withColumn("ny", expr(s"fy + element_at($dyA, CAST(d + 1 AS INT))"))
-      .join(cells.select(col("fx").as("nx"), col("fy").as("ny"), col("n").as("nn")),
-        Seq("nx", "ny"), "left_outer")
+    d8Step(cells, "left_outer")
       .withColumn("nn", coalesce(col("nn"), lit(0L)))
       .groupBy("fx", "fy")
       .agg(max(col("n")).as("n"), sum(abs(col("n") - col("nn"))).as("tri"))
@@ -1750,13 +1724,9 @@ object Geo {
     * block) and a per-block argmax window over ≤4 class rows; nonneg
     * shift before div so Spark div = DuckDB //. */
   def resampleMajority(spark: SparkSession, dir: String): DataFrame = {
-    val fine = points(spark, dir)
-      .withColumn("fx", floor(col("lon")).cast("long") + lit(180L))
-      .withColumn("fy", floor(col("lat")).cast("long") + lit(35L))
-      .groupBy("fx", "fy").agg(count(lit(1)).as("n"))
-      .withColumn("cls", col("n") % lit(4L))
-    val byClass = fine
-      .select(expr("fx div 4").as("cx"), expr("fy div 4").as("cy"), col("cls"))
+    val byClass = densityGrid(spark, dir)
+      .select(expr("(fx + 180) div 4").as("cx"), expr("(fy + 35) div 4").as("cy"),
+        (col("n") % lit(4L)).as("cls"))
       .groupBy("cx", "cy", "cls").agg(count(lit(1)).as("n_cells"))
     val wMaj = Window.partitionBy("cx", "cy")
       .orderBy(col("n_cells").desc, col("cls").asc)

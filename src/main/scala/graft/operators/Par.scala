@@ -24,6 +24,12 @@ private[graft] object Par {
     * Fan-outs larger than the cap queue on the pool in input order. */
   private val MaxInFlight = 3
 
+  /** Measurement knob: GRAFT_SEQ=1 runs every Par call site sequentially
+    * (same thunks, same order — results identical by construction), so a
+    * single binary can interleave overlapped/sequential bench samples on
+    * a drifting host without recompiles between them. */
+  private val forceSeq = sys.env.get("GRAFT_SEQ").contains("1")
+
   /** Run the thunks concurrently (at most MaxInFlight at once), return
     * results in input order. The first failure cancels the remaining
     * futures and shuts the pool down hard — sibling Spark jobs must not
@@ -31,12 +37,6 @@ private[graft] object Par {
     * the cluster and pollute the next query's timing) — then rethrows its
     * original cause (so Bench/Verify error capture sees the real exception,
     * not an ExecutionException wrapper). */
-  /** Measurement knob: GRAFT_SEQ=1 runs every Par call site sequentially
-    * (same thunks, same order — results identical by construction), so a
-    * single binary can interleave overlapped/sequential bench samples on
-    * a drifting host without recompiles between them. */
-  private val forceSeq = sys.env.get("GRAFT_SEQ").contains("1")
-
   def run[A](thunks: Seq[() => A]): Seq[A] = {
     if (forceSeq || thunks.lengthCompare(1) <= 0) thunks.map(_())
     else {

@@ -815,23 +815,6 @@ object Similarity {
       .orderBy("qid", "rank")
   }
 
-  /** EXACT distributed k-means (two Lloyd rounds, k = 10, label-seeded) —
-    * the trained-codebook upgrade §9 queued for the IVF/PQ quantizers.
-    * The usual reason k-means can't be oracle-checked is float centroid
-    * drift; here EVERY round stays in exact integer arithmetic: with
-    * milli-unit coordinates xq and a centroid held as (sum S, count n),
-    * the distance comparison d_j = p_j / n_j^2, p_j = sum_i
-    * (xq_i*n_j - S_ij)^2, needs only ONE correctly-rounded double
-    * division per candidate (both operands exact integers under 2^53) —
-    * so assignments, and therefore the next round's integer centroid
-    * sums, are bit-identical on both engines, round after round. The
-    * oracle unrolls the same two rounds as chained CTEs.
-    *
-    * Plan shape per round: one co-partitioned join (dims x assignment)
-    * + groupBy for centroids (k x 64 rows, broadcast back), one probe
-    * + groupBy for reassignment, one per-vector argmin window over k
-    * candidates. Rounds are a fixed small constant — the driver loop
-    * carries no data, only plan construction. */
   /** Final (vec_id, cluster, p, n) assignment after two Lloyd rounds —
     * shared by the kmeans summary query and the recall evaluation. */
   private[graft] def kmeansAssignments(spark: SparkSession, dir: String): DataFrame =
@@ -948,6 +931,23 @@ object Similarity {
     (dims, assignFull)
   }
 
+  /** EXACT distributed k-means (two Lloyd rounds, k = 10, label-seeded) —
+    * the trained-codebook upgrade §9 queued for the IVF/PQ quantizers.
+    * The usual reason k-means can't be oracle-checked is float centroid
+    * drift; here EVERY round stays in exact integer arithmetic: with
+    * milli-unit coordinates xq and a centroid held as (sum S, count n),
+    * the distance comparison d_j = p_j / n_j^2, p_j = sum_i
+    * (xq_i*n_j - S_ij)^2, needs only ONE correctly-rounded double
+    * division per candidate (both operands exact integers under 2^53) —
+    * so assignments, and therefore the next round's integer centroid
+    * sums, are bit-identical on both engines, round after round. The
+    * oracle unrolls the same two rounds as chained CTEs.
+    *
+    * Plan shape per round: one co-partitioned join (dims x assignment)
+    * + groupBy for centroids (k x 64 rows, broadcast back), one probe
+    * + groupBy for reassignment, one per-vector argmin window over k
+    * candidates. Rounds are a fixed small constant — the driver loop
+    * carries no data, only plan construction. */
   def kmeans(spark: SparkSession, dir: String): DataFrame =
     kmeansAssignments(spark, dir)
       .withColumn("pf", expr("p div (n * n)"))
@@ -1820,8 +1820,6 @@ object Similarity {
        |  CAST(approx_rank AS BIGINT) AS approx_rank
        |FROM r WHERE rank <= 3 ORDER BY qid, rank""".stripMargin
 
-  /** The WITH-body producing as2 (final kmeans assignment) — shared by
-    * the kmeans summary oracle and the recall oracle. */
   /** ann_refresh oracle: the train(stale)→deploy(full)→refresh(full)
     * Lloyd chain replayed verbatim — same exact-integer machinery as
     * kmeansCtes, with the train and assignment target decoupled per
@@ -1881,6 +1879,8 @@ object Similarity {
        |ORDER BY cluster""".stripMargin
   }
 
+  /** The WITH-body producing as2 (final kmeans assignment) — shared by
+    * the kmeans summary oracle and the recall oracle. */
   private def kmeansCtes: String = {
     def round(cbIn: String, asgOut: String, prev: String) =
       s"""cb_$asgOut AS (

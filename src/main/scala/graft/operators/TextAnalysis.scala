@@ -1088,23 +1088,6 @@ object TextAnalysis {
        |FROM s ORDER BY lang, split""".stripMargin
   }
 
-  /** Bigram language-model scoring — the model-based quality filter
-    * (CCNet/KenLM shape) next to ta_quality's rule-based gates: train
-    * bigram/unigram counts on the corpus, score every document by the
-    * average conditional probability of its word transitions,
-    * p(w2|w1) = c(w1,w2)/c(w1), as a scaled integer
-    * (10000*cb div cu per transition, per-doc mean by integer div) —
-    * fluent/common phrasing scores high, disfluent or off-distribution
-    * text scores low. Per-source rollup: scored docs, transitions, and
-    * the mean/min/max per-doc score.
-    *
-    * Scale: bigram pairs are built ROW-WISE (transform over the word
-    * array — no window shuffle); the count tables shuffle once each on
-    * their natural key and join back co-partitioned on the same key
-    * (a deployed filter would df-cap the model to the top-V vocabulary
-    * and broadcast it, the ta_boilerplate pattern); the two rollups are
-    * standard map-side-combinable groupBys. Everything stays in
-    * nonneg integers, so Spark `div` = DuckDB `//` exactly. */
   /** VOCABULARY COVERAGE / OOV RATE (ta_oov) — the deploy-side sizing
     * gauge next to ta_heaps' growth curve: build the top-V word vocab on
     * the train split (doc_id % 10 != 0), measure what fraction of
@@ -1143,6 +1126,23 @@ object TextAnalysis {
       .orderBy("v_cut")
   }
 
+  /** Bigram language-model scoring — the model-based quality filter
+    * (CCNet/KenLM shape) next to ta_quality's rule-based gates: train
+    * bigram/unigram counts on the corpus, score every document by the
+    * average conditional probability of its word transitions,
+    * p(w2|w1) = c(w1,w2)/c(w1), as a scaled integer
+    * (10000*cb div cu per transition, per-doc mean by integer div) —
+    * fluent/common phrasing scores high, disfluent or off-distribution
+    * text scores low. Per-source rollup: scored docs, transitions, and
+    * the mean/min/max per-doc score.
+    *
+    * Scale: bigram pairs are built ROW-WISE (transform over the word
+    * array — no window shuffle); the count tables shuffle once each on
+    * their natural key and join back co-partitioned on the same key
+    * (a deployed filter would df-cap the model to the top-V vocabulary
+    * and broadcast it, the ta_boilerplate pattern); the two rollups are
+    * standard map-side-combinable groupBys. Everything stays in
+    * nonneg integers, so Spark `div` = DuckDB `//` exactly. */
   def lmScore(spark: SparkSession, dir: String): DataFrame =
     lmScoreOn(documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism))
@@ -1870,9 +1870,6 @@ object TextAnalysis {
   def wordpiece(spark: SparkSession, dir: String): DataFrame =
     wordpieceOn(documents(spark, dir))
 
-  /** Same encoder over any frame with a `text` column — Round18Spec pins
-    * greedy longest-match-first, the continuation flag, and the
-    * single-char floor on a toy corpus. */
   /** Longest word in a (word, cnt) frame; 0 on an empty corpus (the max
     * of nothing is NULL — a bare getInt would NPE; zero DP rounds then
     * yield the correct empty histogram). Bounds all tokenizer DP loops. */
@@ -1890,6 +1887,9 @@ object TextAnalysis {
     .groupBy("word").agg(count(lit(1)).as("cnt"))
     .localCheckpoint()
 
+  /** Same encoder over any frame with a `text` column — Round18Spec pins
+    * greedy longest-match-first, the continuation flag, and the
+    * single-char floor on a toy corpus. */
   def wordpieceOn(docs: DataFrame): DataFrame =
     wordpieceState(tokWords(docs, WpMaxWordLen))
       .groupBy("n_pieces")
@@ -2268,12 +2268,6 @@ object TextAnalysis {
     "ta_tokens" -> (tokens _),
     "ta_fingerprint" -> (fingerprint _))
 
-  /** ta_bpe_train oracle: the same rounds unrolled as chained CTEs (the
-    * ann_kmeans precedent — every comparison is exact integers/strings,
-    * so the unroll is bit-identical). Only dialect split: `div` vs `//`
-    * is not needed here (no integer division), but DuckDB's window SUM
-    * over INTEGER yields HUGEINT — harmless, run_id is only a partition
-    * key. */
   /** Symbol-table base CTE of a 40-char slice starting at `off`. */
   private def bpeBaseCte(name: String, off: Int): String =
     // the 40-char slice is projected BEFORE the range cross join: carrying
@@ -2310,7 +2304,6 @@ object TextAnalysis {
        |  CASE WHEN mg THEN bl || br ELSE sym END AS sym
        |  FROM ${pre}c$r WHERE NOT consumed)""".stripMargin
 
-  /** One training round: pair counts + argmax + application. */
   /** The full WordPiece oracle chain (words -> vocab -> greedy-encode
     * rounds), every CTE name prefixed with `p` so two tokenizer chains
     * can share one WITH clause (ta_tok_compare). Final state:
@@ -2407,6 +2400,7 @@ object TextAnalysis {
        |), ${(1 to UgMaxWordLen).map(round).mkString(",\n")}""".stripMargin
   }
 
+  /** One training round: pair counts + argmax + application. */
   private def bpeTrainRoundCtes(r: Int): String = {
     val prev = if (r == 1) "base" else s"p${r - 1}"
     s"""n$r AS MATERIALIZED (SELECT doc_id, pos, sym,
@@ -2417,6 +2411,12 @@ object TextAnalysis {
        |${bpeApplyCtes("", r, s"n$r", s"b$r")}""".stripMargin
   }
 
+  /** ta_bpe_train oracle: the same rounds unrolled as chained CTEs (the
+    * ann_kmeans precedent — every comparison is exact integers/strings,
+    * so the unroll is bit-identical). Only dialect split: `div` vs `//`
+    * is not needed here (no integer division), but DuckDB's window SUM
+    * over INTEGER yields HUGEINT — harmless, run_id is only a partition
+    * key. */
   private def bpeOracleSql: String = {
     val rounds = (1 to BpeRounds).map { r =>
       s"""${bpeTrainRoundCtes(r)},
@@ -2433,10 +2433,6 @@ object TextAnalysis {
        |ORDER BY round""".stripMargin
   }
 
-  /** ta_bpe_encode oracle: the full training chain (to re-derive each
-    * round's learned pair), plus an encode chain over the chars-41..80
-    * slice applying b$r in round order — the same two folds the Spark
-    * side runs. */
   /** ta_fertility oracle: train rounds + held-out replay (shared CTE
     * machinery), then the per-doc token/word score off the final
     * stream. */
@@ -2496,6 +2492,10 @@ object TextAnalysis {
        |FROM tk CROSS JOIN w ORDER BY n_merges""".stripMargin
   }
 
+  /** ta_bpe_encode oracle: the full training chain (to re-derive each
+    * round's learned pair), plus an encode chain over the chars-41..80
+    * slice applying b$r in round order — the same two folds the Spark
+    * side runs. */
   private def bpeEncodeOracleSql: String = {
     val rounds = (1 to BpeRounds).map { r =>
       val prevE = if (r == 1) "basee" else s"ep${r - 1}"

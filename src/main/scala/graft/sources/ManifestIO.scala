@@ -225,10 +225,9 @@ object ManifestIO {
   def zorderQuery(spark: SparkSession, dir: String): DataFrame = {
     // native mask-spread expression (graft.functions.MortonInterleave);
     // bit-for-bit equal to the portable fold — ZOrderSpec asserts parity
+    val (gx, gy) = graft.operators.Geo.hundredths(col("event_id"))
     Tables.events(spark, dir)
-      .select(col("event_id"),
-        ((col("event_id") * lit(7919L)) % lit(36000L)).as("gx"),
-        ((col("event_id") * lit(104729L)) % lit(7000L)).as("gy"))
+      .select(col("event_id"), gx.as("gx"), gy.as("gy"))
       .select(col("event_id"), expr("morton_interleave(gx, gy)").as("zkey"))
       .groupBy(shiftright(col("zkey"), 16).as("zbucket"))
       .agg(
@@ -239,17 +238,6 @@ object ManifestIO {
       .orderBy("zbucket")
   }
 
-  /** Data-quality constraint report — the Deequ/Great-Expectations gate a
-    * pipeline runs BEFORE building on a table: each constraint is a
-    * violation count (0 = pass) so the report is one exact aggregate per
-    * table, unpivoted to a row per constraint. The language-allowlist
-    * constraint legitimately FAILS on this corpus (zh/es/de docs) —
-    * surfacing violations is the point of the report, and the gate
-    * consumer decides which constraints block. Scale: ONE scan + one
-    * map-side-combined aggregate per table, no shuffle beyond the final
-    * one-row exchange; countDistinct is the only expensive member (exact
-    * two-phase) — a 100 TB deployment swaps it for approx_count_distinct
-    * at a documented tolerance. */
   /** Batch MERGE (upsert-with-delete) — the lakehouse write primitive
     * (Delta/Iceberg MERGE INTO) re-expressed as one FULL OUTER JOIN plus a
     * rewrite: base = orders, updates = per-order lineitem rollups (plus
@@ -418,6 +406,17 @@ object ManifestIO {
       .orderBy("event_type")
   }
 
+  /** Data-quality constraint report — the Deequ/Great-Expectations gate a
+    * pipeline runs BEFORE building on a table: each constraint is a
+    * violation count (0 = pass) so the report is one exact aggregate per
+    * table, unpivoted to a row per constraint. The language-allowlist
+    * constraint legitimately FAILS on this corpus (zh/es/de docs) —
+    * surfacing violations is the point of the report, and the gate
+    * consumer decides which constraints block. Scale: ONE scan + one
+    * map-side-combined aggregate per table, no shuffle beyond the final
+    * one-row exchange; countDistinct is the only expensive member (exact
+    * two-phase) — a 100 TB deployment swaps it for approx_count_distinct
+    * at a documented tolerance. */
   def dqReportQuery(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
       .agg(
@@ -592,18 +591,6 @@ object ManifestIO {
       .orderBy("bucket")
   }
 
-  /** Catalog time travel (iceberg-lite on plain parquet): an append-only
-    * log of (version, key, op, payload) rows — inserts/updates as 'u',
-    * deletes as 'd' — reconstructs EVERY historical snapshot in one pass:
-    * each log row fans out to the versions it is visible in, a (v, key)
-    * window keeps the newest op (delete-beats-update on a same-version
-    * tie, deterministically), and surviving 'u' rows aggregate per
-    * version. The log here is derived from `part` with deterministic
-    * v2/v3 edits so the oracle rebuilds it exactly.
-    *
-    * Scale: the fan-out is bounded by the retained version count (a real
-    * catalog compacts old versions); the only full shuffle is the
-    * (v, key) window — the same one a single as-of read would pay. */
   /** Shared versioned update log over `part` (3 versions): the base of
     * io_time_travel (snapshot reads) and io_cdf (the change feed). */
   private def partLog(spark: SparkSession, dir: String): DataFrame = {
@@ -672,6 +659,18 @@ object ManifestIO {
           .otherwise(lit(0.0))).as("reclaim_price"))
       .orderBy("version", "op")
 
+  /** Catalog time travel (iceberg-lite on plain parquet): an append-only
+    * log of (version, key, op, payload) rows — inserts/updates as 'u',
+    * deletes as 'd' — reconstructs EVERY historical snapshot in one pass:
+    * each log row fans out to the versions it is visible in, a (v, key)
+    * window keeps the newest op (delete-beats-update on a same-version
+    * tie, deterministically), and surviving 'u' rows aggregate per
+    * version. The log here is derived from `part` with deterministic
+    * v2/v3 edits so the oracle rebuilds it exactly.
+    *
+    * Scale: the fan-out is bounded by the retained version count (a real
+    * catalog compacts old versions); the only full shuffle is the
+    * (v, key) window — the same one a single as-of read would pay. */
   def timeTravelQuery(spark: SparkSession, dir: String): DataFrame = {
     val log = partLog(spark, dir)
     val w = org.apache.spark.sql.expressions.Window
@@ -682,6 +681,17 @@ object ManifestIO {
       .groupBy("v")
       .agg(count(lit(1)).as("n_keys"), Tables.dsum(col("price")).as("sum_price"))
       .orderBy("v")
+  }
+
+  /** Live rows of the part log's snapshot `v` (newest op per key,
+    * delete-beats-update on same-version ties): (key, price). */
+  private def snapshotAt(log: DataFrame, v: Long): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("key").orderBy(col("version").desc, col("op").asc)
+    log.filter(col("version") <= v)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1 && col("op") === "u")
+      .select(col("key"), col("price"))
   }
 
   /** CHANGE DATA FEED read (the Delta CDF / Iceberg changelog shape) —
@@ -697,17 +707,6 @@ object ManifestIO {
     * (same (key) shuffle), one full-outer join on the key, and the
     * four change classes are projections of that ONE joined frame
     * (localCheckpoint — four consumers). */
-  /** Live rows of the part log's snapshot `v` (newest op per key,
-    * delete-beats-update on same-version ties): (key, price). */
-  private def snapshotAt(log: DataFrame, v: Long): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("key").orderBy(col("version").desc, col("op").asc)
-    log.filter(col("version") <= v)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("op") === "u")
-      .select(col("key"), col("price"))
-  }
-
   def cdfQuery(spark: SparkSession, dir: String): DataFrame = {
     val log = partLog(spark, dir).localCheckpoint() // two snapshot reads
     val j = snapshotAt(log, 1L).select(col("key"), col("price").as("p1"))
@@ -964,29 +963,6 @@ object ManifestIO {
        |ORDER BY table_key""".stripMargin
   }
 
-  /** DELETION VECTORS (io_deletion_vectors) — Iceberg-v3/Delta-DV
-    * row-level deletes WITHOUT rewriting data files: the base table
-    * lands once as 8 file groups (bucket by l_orderkey % 8) with an
-    * explicit in-file position column (real DVs address physical parquet
-    * row positions; a stored position is the portable stand-in, stated),
-    * a DELETE predicate (returned small lines: l_returnflag = 'R' AND
-    * l_quantity < 10) is executed by writing ONLY a positional sidecar
-    * `_deletes` (file_id, pos) — the data files never rewrite — and the
-    * read path applies the DV as an anti-join on (file_id, pos). The
-    * checked output is the per-file accounting (rows / deleted / live /
-    * live quantity mass); the ORACLE applies the logical predicate to
-    * raw lineitem directly, proving the positional path reproduces the
-    * logical delete exactly — the equivalence a lakehouse DV
-    * implementation must maintain.
-    *
-    * Scale: the DV sidecar is deletes-sized (the point: a 100 TB base
-    * with a 0.1% delete takes a GB-scale sidecar and zero data-file
-    * churn until compaction); the anti-join SIZE-GATES the broadcast
-    * hint on the sidecar's own stats (dvGated) — broadcast while it
-    * fits, co-partitioned on (file_id, pos) under AQE once it doesn't;
-    * the write is one pass with a per-bucket position window
-    * (bucket-partitioned sort, never global). Scratch path is
-    * per-invocation unique (the mergeQuery race rule). */
   /** Lands the DV demo layout (8 file groups + the positional `_deletes`
     * sidecar) under a fresh scratch root; shared by io_deletion_vectors
     * and io_dv_compact. Returns (base, dv, root). */
@@ -1011,6 +987,29 @@ object ManifestIO {
     org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
       .deleteOnExit(new org.apache.hadoop.fs.Path(root))
 
+  /** DELETION VECTORS (io_deletion_vectors) — Iceberg-v3/Delta-DV
+    * row-level deletes WITHOUT rewriting data files: the base table
+    * lands once as 8 file groups (bucket by l_orderkey % 8) with an
+    * explicit in-file position column (real DVs address physical parquet
+    * row positions; a stored position is the portable stand-in, stated),
+    * a DELETE predicate (returned small lines: l_returnflag = 'R' AND
+    * l_quantity < 10) is executed by writing ONLY a positional sidecar
+    * `_deletes` (file_id, pos) — the data files never rewrite — and the
+    * read path applies the DV as an anti-join on (file_id, pos). The
+    * checked output is the per-file accounting (rows / deleted / live /
+    * live quantity mass); the ORACLE applies the logical predicate to
+    * raw lineitem directly, proving the positional path reproduces the
+    * logical delete exactly — the equivalence a lakehouse DV
+    * implementation must maintain.
+    *
+    * Scale: the DV sidecar is deletes-sized (the point: a 100 TB base
+    * with a 0.1% delete takes a GB-scale sidecar and zero data-file
+    * churn until compaction); the anti-join SIZE-GATES the broadcast
+    * hint on the sidecar's own stats (dvGated) — broadcast while it
+    * fits, co-partitioned on (file_id, pos) under AQE once it doesn't;
+    * the write is one pass with a per-bucket position window
+    * (bucket-partitioned sort, never global). Scratch path is
+    * per-invocation unique (the mergeQuery race rule). */
   def deletionVectorsQuery(spark: SparkSession, dir: String): DataFrame = {
     val (base, dv, root) = writeDvLayout(spark, dir)
     val out = dvAccounting(base, dv)

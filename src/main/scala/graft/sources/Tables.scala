@@ -3,6 +3,12 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
+  ParquetToSparkSchemaConverter}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Parquet table loaders + numeric-determinism helpers.
   *
@@ -15,8 +21,23 @@ import org.apache.spark.sql.types.DecimalType
   *  - nothing relies on engine-native hash functions: md5 only.
   */
 object Tables {
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A corpus table, read with its schema given (a schema-less
+    * `spark.read.parquet` runs one inference job per call): the footer of
+    * the file — in a directory, its first data file, Spark's own pick —
+    * read on the driver and converted by Spark's parquet schema converter
+    * under the session conf, so `normalizeTs`/`normalizeId` still branch
+    * on the real dtype of every testdata generation. */
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = new Path(s"$dir/$name.parquet")
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = path.getFileSystem(conf)
+    val file = if (fs.getFileStatus(path).isFile) path else fs.listStatus(path).map(_.getPath)
+      .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith(".")).minBy(_.toString)
+    val footer = new Footer(file, ParquetFooterReader.readFooter(
+      HadoopInputFile.fromPath(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
+    spark.read.schema(ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))).parquet(path.toString)
+  }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = t(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame   = t(spark, dir, "orders")

@@ -261,4 +261,25 @@ class GenericApiSpec extends SparkSpecBase {
       assert(row.getLong(0) == row.getLong(1), s)
     }
   }
+
+  test("corpus table reads run no Spark job and keep the inferred schema") {
+    import graft.sources.Tables
+    val group = s"table_reads_${System.nanoTime()}"
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, "corpus table reads")
+    val frames = try Seq("events", "documents", "embeddings", "lineitem", "orders", "part")
+        .map(t => t -> Tables.t(spark, sfDir, t))
+      finally sc.clearJobGroup()
+    org.apache.spark.sql.graft.GraftSqlBridge.drainListeners(sc)
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty)
+    // the same schema (types, nullability, metadata) inference finds
+    frames.foreach { case (t, df) =>
+      assert(df.schema == spark.read.parquet(s"$sfDir/$t.parquet").schema, t)
+    }
+    // a directory of part files (Spark's own layout) reads the same way
+    val dir = scratch("table_dir")
+    spark.range(3).selectExpr("id AS doc_id", "'x' AS text").write.parquet(s"$dir/documents.parquet")
+    assert(Tables.documents(spark, dir).orderBy("doc_id").collect().map(_.getLong(0)).toSeq
+      == Seq(0L, 1L, 2L))
+  }
 }

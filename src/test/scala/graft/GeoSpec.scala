@@ -257,4 +257,54 @@ class GeoSpec extends SparkSpecBase {
     // zoom 0 is a single world tile
     assert(Geo.tilePyramidFull(spark, sfDir).filter(col("zoom") === 0).count() == 1)
   }
+
+  test("one coordinate rule: lon/lat equal pointsSql bit for bit, x100/x200 the shifted forms") {
+    import spark.implicits._
+    // event_ids at each modulus wrap (slon/slat = 0 and span - 1), one
+    // either side, and a large key whose products still fit a long
+    def wrapIds(mult: Long, span: Long): Seq[Long] = {
+      val top = (span - BigInt(mult).modInverse(span).toLong) % span // id * mult = -1 (mod span)
+      Seq(0L, span, 7 * span, top, top + span, 3 * span + top).flatMap(i => Seq(i, i + 1))
+        .flatMap(i => Seq(i - 1, i)).filter(_ >= 0)
+    }
+    val ids = (wrapIds(7919L, 36000L) ++ wrapIds(104729L, 7000L) :+ 87960930222L).distinct
+    val keys = ids.toDF("event_id")
+    val (lon, lat) = Geo.lonLat(col("event_id"))
+    val (slon, slat) = Geo.hundredths(col("event_id"))
+    val (a100, b100) = Geo.centredX100(col("event_id"))
+    val got = keys.select(col("event_id"), lon.as("lon"), lat.as("lat"),
+        slon.as("slon"), slat.as("slat"), a100.as("a100"), b100.as("b100"),
+        (a100 * 2L).as("sa200"), (b100 * 2L).as("sb200"))
+    assert(got.schema.fields.drop(1).map(_.dataType.simpleString).toSeq ==
+      Seq("double", "double") ++ Seq.fill(6)("bigint"))
+    // the oracle spells the rule in SQL; run it through Spark SQL
+    val view = s"coord_events_${System.nanoTime()}"
+    keys.select(col("event_id"), lit("t").as("event_type"), lit(1.0).as("value"))
+      .createOrReplaceTempView(view)
+    val sqlLonLat = spark.sql(Geo.pointsSql.replace("FROM events", s"FROM $view"))
+      .select("event_id", "lon", "lat").as[(Long, Double, Double)].collect()
+      .map(r => r._1 -> (r._2, r._3)).toMap
+    // nearestZone / trajectory (a100, b100), idw / kde (sa200, sb200) and
+    // io_zorder (gx, gy), as their own oracles spell them
+    val shifted = keys.selectExpr("event_id",
+        "event_id * 7919 % 36000 AS gx", "event_id * 104729 % 7000 AS gy",
+        "CAST(event_id * 7919 % 36000 AS BIGINT) - 18000 AS a100",
+        "CAST(event_id * 104729 % 7000 AS BIGINT) - 3500 AS b100",
+        "2 * (CAST(event_id * 7919 % 36000 AS BIGINT) - 18000) AS sa200",
+        "2 * (CAST(event_id * 104729 % 7000 AS BIGINT) - 3500) AS sb200")
+      .as[(Long, Long, Long, Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
+    val rows = got.as[(Long, Double, Double, Long, Long, Long, Long, Long, Long)].collect()
+    assert(rows.length == ids.length && sqlLonLat.size == ids.length)
+    rows.foreach { case (id, lo, la, s, t, a, b, sa, sb) =>
+      val (elo, ela) = sqlLonLat(id)
+      assert(java.lang.Double.doubleToRawLongBits(lo) == java.lang.Double.doubleToRawLongBits(elo)
+        && java.lang.Double.doubleToRawLongBits(la) == java.lang.Double.doubleToRawLongBits(ela),
+        s"event_id $id: ($lo, $la) vs pointsSql ($elo, $ela)")
+      val (_, gx, gy, ea, eb, esa, esb) = shifted(id)
+      assert((s, t, a, b, sa, sb) == ((gx, gy, ea, eb, esa, esb)), s"event_id $id")
+    }
+    // the ids reach both ends of both spans
+    val ss = rows.map(_._4).toSet; val ts = rows.map(_._5).toSet
+    assert(ss.contains(0L) && ss.contains(35999L) && ts.contains(0L) && ts.contains(6999L))
+  }
 }
