@@ -264,8 +264,8 @@ class GeoSpec extends SparkSpecBase {
     // either side, and a large key whose products still fit a long
     def wrapIds(mult: Long, span: Long): Seq[Long] = {
       val top = (span - BigInt(mult).modInverse(span).toLong) % span // id * mult = -1 (mod span)
-      Seq(0L, span, 7 * span, top, top + span, 3 * span + top).flatMap(i => Seq(i, i + 1))
-        .flatMap(i => Seq(i - 1, i)).filter(_ >= 0)
+      Seq(0L, span, 7 * span, top, top + span, 3 * span + top)
+        .flatMap(i => Seq(i - 1, i, i + 1)).filter(_ >= 0)
     }
     val ids = (wrapIds(7919L, 36000L) ++ wrapIds(104729L, 7000L) :+ 87960930222L).distinct
     val keys = ids.toDF("event_id")

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Source-text rules no compiler checks. */
 class SourceLintSpec extends AnyFunSuite {
@@ -10,8 +11,7 @@ class SourceLintSpec extends AnyFunSuite {
     // documents nothing: only the second one attaches to the def below
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, root.getAbsolutePath)
-    val files = java.nio.file.Files.walk(root.toPath).iterator()
-    val stacked = scala.jdk.CollectionConverters.IteratorHasAsScala(files).asScala
+    val stacked = java.nio.file.Files.walk(root.toPath).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq.sorted.flatMap { p =>
         val lines = java.nio.file.Files.readAllLines(p).toArray(Array.empty[String])
         lines.indices.filter(i => lines(i).trim.endsWith("*/")).flatMap { i =>
